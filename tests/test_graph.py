@@ -208,3 +208,112 @@ def test_ledger_adaptive_cc_switches_to_star_past_threshold(spark):
     )
     assert used == [False, True]
     assert small == big == _labels(connected_components(pairs))
+
+
+def test_adaptive_cc_small_path_keeps_string_ids(spark):
+    """The driver union-find (small path) and the star CC must agree on
+    non-integer ids: same rows and same column types, with the min id
+    (string order) labelling each component."""
+    from twitter_flink_spark.operators.graph import (
+        connected_components_adaptive,
+    )
+
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("x", "y"), ("zz", "zz")],
+        "doc_a string, doc_b string",
+    )
+    used: list[bool] = []
+    small = connected_components_adaptive(
+        pairs, 4, threshold=1_000, used_star=used
+    )
+    star = connected_components_adaptive(
+        pairs, 4, threshold=0, used_star=used
+    )
+    assert used == [False, True]
+    assert small.dtypes == star.dtypes == [
+        ("doc_id", "string"),
+        ("cluster_id", "string"),
+    ]
+    assert _labels(small) == _labels(star) == [
+        ("a", "a"), ("b", "a"), ("c", "a"),
+        ("x", "x"), ("y", "x"), ("zz", "zz"),
+    ]
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_release_frees_only_its_own_checkpoint(spark):
+    """Two checkpoints alive at once (what two concurrent callers
+    produce): releasing the later one must leave the earlier one
+    persisted and readable — a before/after diff of the global RDD set
+    taken around `b` would also have caught any `a` landing in between."""
+    from pyspark.sql import functions as F
+
+    from twitter_flink_spark.operators.graph import _release
+
+    def rdd_id(cp):
+        return cp._jdf.queryExecution().analyzed().rdd().id()
+
+    a = spark.range(50).withColumn("x", F.col("id") * 2).localCheckpoint()
+    b = spark.range(30).withColumn("y", F.col("id") + 1).localCheckpoint()
+    assert {rdd_id(a), rdd_id(b)} <= _persisted_ids(spark)
+    _release(b)
+    left = _persisted_ids(spark)
+    assert rdd_id(a) in left and rdd_id(b) not in left
+    assert a.agg(F.sum("x")).first()[0] == 2 * sum(range(50))
+    _release(a)
+
+
+def test_iterative_operators_leave_only_their_contracted_blocks(spark):
+    """CC and k-core free every round's checkpoint but the last, which
+    their returned plan still reads (star CC: edges + node set)."""
+    from twitter_flink_spark.operators.graph import k_core_peel
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
+    )
+    # results stay referenced while counting: the blocks they read are
+    # then strongly reachable and cannot be swept by the context cleaner
+    before = _persisted_ids(spark)
+    cc = connected_components_star(pairs)
+    assert _labels(cc) == [(i, 0) for i in range(21)]
+    assert len(_persisted_ids(spark) - before) == 2
+    before = _persisted_ids(spark)
+    kc = k_core_peel(pairs.toDF("a", "b"), k=2, rounds=3)
+    # a path loses both endpoints per round
+    assert sorted(r.v for r in kc.collect()) == list(range(3, 18))
+    assert len(_persisted_ids(spark) - before) == 1
+
+
+def test_no_slow_frame_or_global_rdd_diff_in_package():
+    """Guard: every list-built frame in the package goes through
+    `session.local_frame` (one slice; `createDataFrame(list)` spreads
+    rows over one slice per core and a one-task write then reads them
+    all in turn), and only `graph._release` may touch persisted RDDs —
+    no global before/after diffs of `getPersistentRDDs`."""
+    import ast
+    import pathlib
+
+    owner = {"createDataFrame": "local_frame", "getPersistentRDDs": "_release"}
+    root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
+    bad = []
+
+    def visit(node, path, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in owner
+            and owner[node.attr] not in scope
+        ):
+            bad.append(f"{path.name}:{node.lineno} {node.attr}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, scope)
+
+    files = sorted(root.rglob("*.py"))
+    assert files
+    for path in files:
+        visit(ast.parse(path.read_text()), path, ())
+    assert bad == []

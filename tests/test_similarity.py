@@ -582,3 +582,96 @@ def test_ivf_refit_on_imbalance_fires_and_noops(spark, tmp_path):
     assert imb2 < imb1  # the refit genuinely rebalanced
     r3 = ivf_refit_on_imbalance(spark, idx, allv, threshold=thr)
     assert r3["fired"] is False and abs(r3["imbalance"] - imb2) < 1e-9
+
+
+def test_local_frame_is_one_slice(spark):
+    """`local_frame` holds a driver-built frame in ONE slice whatever the
+    core count, and round-trips rows under a DDL schema, a StructType
+    and an empty list."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from twitter_flink_spark.session import local_frame
+
+    ddl = local_frame(spark, [(1, "a"), (2, "b")], "k long, v string")
+    assert ddl.rdd.getNumPartitions() == 1
+    assert ddl.dtypes == [("k", "bigint"), ("v", "string")]
+    assert sorted(map(tuple, ddl.collect())) == [(1, "a"), (2, "b")]
+
+    st = StructType(
+        [
+            StructField("cid", LongType()),
+            StructField("cent", ArrayType(DoubleType())),
+        ]
+    )
+    rows = [(0, [0.5, 1.5]), (1, [2.0, -1.0])]
+    cents = local_frame(spark, rows, st)
+    assert cents.rdd.getNumPartitions() == 1
+    assert cents.schema == st
+    assert [(r.cid, r.cent) for r in cents.orderBy("cid").collect()] == rows
+
+    empty = local_frame(spark, [], "vec_id long")
+    assert empty.rdd.getNumPartitions() == 1
+    assert empty.dtypes == [("vec_id", "bigint")] and empty.count() == 0
+
+
+def test_kmeans_fit_leaves_no_persisted_rdd(spark):
+    """`kmeans_fit` releases its corpus checkpoint before returning: its
+    result is a driver-built frame that reads no checkpoint blocks."""
+    from twitter_flink_spark.operators.clustering import kmeans_fit
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    cents = kmeans_fit(_vectors(spark, 40), k=3, iters=2)
+    assert persisted() - before == set()
+    assert cents.rdd.getNumPartitions() == 1
+    assert sum(r.n_vecs for r in cents.collect()) == 40
+
+
+def test_ivf_stream_survives_empty_first_batch(spark, tmp_path, monkeypatch):
+    """A zero-row first micro-batch leaves the `_assign` dir holding only
+    `_SUCCESS`; the next batch must treat it as empty (not fail schema
+    inference on it), and every vector must still get indexed — the
+    full-table redelivery afterwards stays a no-op."""
+    import os
+    import shutil
+
+    from twitter_flink_spark.queries import streaming
+
+    sf = "/root/testdata/sf0.001"
+    real = streaming._ensure_vecid_split_embeddings(spark, sf)
+    parts = sorted(
+        (os.path.join(real, f) for f in os.listdir(real)
+         if f.endswith(".parquet")),
+        key=os.path.getmtime,
+    )
+    staged = tmp_path / "staged"
+    spark.read.parquet(real).limit(0).coalesce(1).write.parquet(
+        str(tmp_path / "empty")
+    )
+    (empty,) = [
+        f for f in os.listdir(tmp_path / "empty") if f.endswith(".parquet")
+    ]
+    staged.mkdir()
+    # the file source replays files in mtime order: the empty one first
+    order = [str(tmp_path / "empty" / empty)] + parts
+    for i, src in enumerate(order):
+        dst = staged / f"part-{i:05d}.parquet"
+        shutil.copyfile(src, dst)
+        os.utime(dst, (1_000_000 + 60 * i, 1_000_000 + 60 * i))
+    monkeypatch.setattr(
+        streaming, "_ensure_vecid_split_embeddings", lambda *_: str(staged)
+    )
+
+    out = streaming.streaming_ivf_assign_maintenance(spark, sf).collect()
+    assert len(out) == 5
+    assert all(r.redelivery_noop for r in out)
+    # four batches, the first one empty: not the 3-batch shape
+    assert not any(r.streamed_in_batches for r in out)

@@ -38,10 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from twitter_flink_spark.operators.graph import (
-    _persistent_rdd_ids,
-    _unpersist_ids,
-)
+from twitter_flink_spark.operators.graph import _release
 
 
 def char_symbol_table(words: DataFrame) -> DataFrame:
@@ -123,10 +120,7 @@ def bpe_learn(words: DataFrame, n_merges: int) -> DataFrame:
     """Learn ``n_merges`` BPE merge rules from a (word, weight) frequency
     table. Returns (step, left_sym, right_sym, merged, cnt) — one row per
     learned rule, in learning order."""
-    sc = words.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
     t = char_symbol_table(words).localCheckpoint()
-    t_ids = _persistent_rdd_ids(sc) - before
     merges: list[DataFrame] = []
     for step in range(1, n_merges + 1):
         # the 1-row argmax is checkpointed EAGERLY: it feeds both the next
@@ -154,11 +148,9 @@ def bpe_learn(words: DataFrame, n_merges: int) -> DataFrame:
         )
         if step == n_merges:
             break
-        before = _persistent_rdd_ids(sc)
         new_t = apply_merge(t, best).localCheckpoint()
-        new_ids = _persistent_rdd_ids(sc) - before
-        _unpersist_ids(sc, t_ids)
-        t, t_ids = new_t, new_ids
+        _release(t)
+        t = new_t
     if not merges:  # no pair anywhere (all 1-char words)
         return (
             pair_stats(t)
@@ -186,10 +178,7 @@ def bpe_encode(words: DataFrame, n_merges: int) -> DataFrame:
     NEW corpus with frozen rules is the same loop with ``best`` replaced
     by each stored rule — the application operator is shared either
     way."""
-    sc = words.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
     t = char_symbol_table(words).localCheckpoint()
-    t_ids = _persistent_rdd_ids(sc) - before
     for _ in range(n_merges):
         best = (
             pair_stats(t)
@@ -201,9 +190,7 @@ def bpe_encode(words: DataFrame, n_merges: int) -> DataFrame:
         # than cross-join an empty `best` (which would empty the table)
         if not best.take(1):
             break
-        before = _persistent_rdd_ids(sc)
         new_t = apply_merge(t, best).localCheckpoint()
-        new_ids = _persistent_rdd_ids(sc) - before
-        _unpersist_ids(sc, t_ids)
-        t, t_ids = new_t, new_ids
+        _release(t)
+        t = new_t
     return t

@@ -29,39 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from twitter_flink_spark.operators.graph import (
-    _persistent_rdd_ids,
-    _unpersist_ids,
-)
+from twitter_flink_spark.operators.graph import _release
 from twitter_flink_spark.operators.similarity import dot
+from twitter_flink_spark.session import local_frame
 
 #: decimal scale for centroid component accumulation
 _COMP_SCALE = 7
-
-
-def checkpointed_write(
-    df: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    """Parquet-write a DRIVER-BUILT frame (`createDataFrame`-backed — a
-    fitted codebook, a `_meta` manifest) through a localCheckpoint.
-
-    With Arrow enabled, a file-write job over a Python-local relation
-    re-serves the Arrow batches from the driver and stalls ~4-5 s per
-    write REGARDLESS of row count (measured r16: a 4-row centroid write
-    took 4.5-6.5 s; the identical frame localCheckpointed first, 0.4-
-    0.8 s — and half of the r15 streaming-IVF regression was exactly
-    this stall inside the centroid freeze). Materializing to JVM blocks
-    first turns the write into a block read; the blocks are freed as
-    soon as the write commits. Only worth it for driver-built frames —
-    scan-backed frames never pay the stall."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    cp = df.localCheckpoint()
-    ids = _persistent_rdd_ids(sc) - before
-    try:
-        cp.coalesce(1).write.mode(mode).parquet(path)
-    finally:
-        _unpersist_ids(sc, ids)
 
 
 def _pack_rows(spark, rows, g: list, fields: dict) -> DataFrame:
@@ -87,9 +60,8 @@ def _pack_rows(spark, rows, g: list, fields: dict) -> DataFrame:
             )
         ]
     )
-    return spark.createDataFrame(
-        [(*key, cands) for key, cands in groups.items()], schema
-    )
+    packed = [(*key, cands) for key, cands in groups.items()]
+    return local_frame(spark, packed, schema)
 
 
 def _scored_expr(vec_col: str):
@@ -245,23 +217,19 @@ def kmeans_fit(
     )
 
     spark = vectors.sparkSession
-    sc = spark.sparkContext
     g = [group_col] if group_col else []
     v = vectors.select(
         *g, id_col, F.col(vec_col).cast("array<double>").alias("e")
-    )
-    before = _persistent_rdd_ids(sc)
-    v = v.localCheckpoint()
-    v_ids = _persistent_rdd_ids(sc) - before
+    ).localCheckpoint()
     # centroids are k-row driver-sized BY DEFINITION (the session
     # codebook caches hold them as collected rows for the same reason),
     # so the Lloyd loop round-trips them through the driver: each round
     # is ONE job — scan the checkpointed corpus, per-row array argmin
     # (map-side, no shuffle, no sort), the decimal means aggregate over
     # the vector the argmin kept on the row, collect k rows — and the
-    # next round's candidate array enters the plan as a LocalTableScan
-    # broadcast (built driver-side, no distributed broadcast-build
-    # sub-job). The previous shape paid per round: a window Exchange +
+    # next round's candidate array enters the plan as a one-slice
+    # `local_frame` broadcast (packed driver-side, a one-task build).
+    # The previous shape paid per round: a window Exchange +
     # sort for the argmin, an id-keyed join back to the corpus, a
     # localCheckpoint materialization AND a broadcast-build job — all
     # for the same bits (A/B: cold fit 8.2 -> 3.4 s, steady-state ~par).
@@ -300,8 +268,8 @@ def kmeans_fit(
             F.col("e").alias("_tfs_e"),
         )
         rows = _centroid_means(members, g).collect()
-    _unpersist_ids(sc, v_ids)
-    return spark.createDataFrame(rows, cent_schema)
+    _release(v)
+    return local_frame(spark, rows, cent_schema)
 
 
 # -- drift-triggered refit (the incremental IVF index's weekly fit) ---------
@@ -314,7 +282,8 @@ def ivf_meta_df(
     mean assignment distance (the drift baseline) plus the fit
     parameters, riding the index like the Bloom manifest's m/k so a
     refit can never re-fit with skewed settings."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(fit_mean_dist), int(k), int(iters))],
         "fit_mean_dist double, k int, iters int",
     )
@@ -442,14 +411,16 @@ def _ivf_full_refit(
     ).select("cid", "cent")
     for t in (tmp_c, tmp_a, tmp_m):
         shutil.rmtree(t, ignore_errors=True)
-    checkpointed_write(new_cents, tmp_c)
+    new_cents.write.mode("overwrite").parquet(tmp_c)
     disk_cents = spark.read.parquet(tmp_c)  # freeze doubles on disk
     new_assign = assign_clusters(v, disk_cents, id_col=id_col)
     new_assign.write.mode("overwrite").partitionBy("cid").parquet(tmp_a)
     new_baseline = assigned_mean_dist(
         v, disk_cents, spark.read.parquet(tmp_a), id_col=id_col
     )
-    checkpointed_write(ivf_meta_df(spark, new_baseline, k, iters), tmp_m)
+    ivf_meta_df(spark, new_baseline, k, iters).write.mode(
+        "overwrite"
+    ).parquet(tmp_m)
     _swap_dirs(tmp_a, assign_dir)
     _swap_dirs(tmp_c, cents_dir)
     _swap_dirs(tmp_m, meta_dir)

@@ -41,6 +41,7 @@ from twitter_flink_spark.operators.skipping import (
     _replace_dir,
     _scratch_name,
 )
+from twitter_flink_spark.session import local_frame
 
 #: Diagnostic: Spark job count of the LAST ``compact_table`` merge write
 #: (None until a merge has run). The distributed executor writes every
@@ -159,8 +160,8 @@ def compact_table(
         for gid, group in enumerate(plan)
         for p in group
     ]
-    gid_map = spark.createDataFrame(
-        gid_rows, "__compact_file string, __compact_gid int"
+    gid_map = local_frame(
+        spark, gid_rows, "__compact_file string, __compact_gid int"
     )
     # input_file_name() is non-deterministic: Catalyst rejects it inside
     # a join condition, so materialize the basename as a column first

@@ -23,33 +23,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """IDs of currently-persisted RDDs (includes localCheckpoint blocks)."""
-    try:
-        return set(sc._jsc.getPersistentRDDs().keys())
-    except Exception:  # pragma: no cover - py4j surface drift
-        return set()
+from twitter_flink_spark.session import local_frame
 
 
-def _unpersist_ids(sc, ids: set[int]) -> None:
-    """Free the storage blocks of the given RDD ids (non-blocking).
+def _release(cp: DataFrame) -> None:
+    """Free the storage blocks of ONE localCheckpoint (non-blocking).
 
     `localCheckpoint` pins its blocks in executor storage until the Python
     DataFrame is garbage-collected; an iterate-to-fixed-point loop that
     checkpoints per round would otherwise hold every round's blocks live at
     once, stealing execution memory from whatever runs next in the session.
-    Only call this on checkpoints no later computation references — a
+    The RDD freed is the checkpoint's own (the `LogicalRDD` under its
+    plan), so concurrent callers never free each other's blocks. Only call
+    this on checkpoints no later computation references — a
     truncated-lineage DataFrame whose blocks are dropped cannot recompute.
     """
-    if not ids:
-        return
-    try:
-        for rid, rdd in sc._jsc.getPersistentRDDs().items():
-            if rid in ids:
-                rdd.unpersist(False)
-    except Exception:  # pragma: no cover
-        pass
+    cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def connected_components(
@@ -66,7 +55,6 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sc = pairs.sparkSession.sparkContext
 
     def _signature(lbl: DataFrame):
         # Labels only ever DECREASE under min-propagation, so the label
@@ -78,29 +66,24 @@ def connected_components(
         return row["h"]
 
     # round 0 fused into initialization: label(u) = min(u, min neighbors(u))
-    before = _persistent_rdd_ids(sc)
     labels = (
         bidir.groupBy(F.col("src").alias("node"))
         .agg(F.least(F.first("src"), F.min("dst")).alias("label"))
         .localCheckpoint()
     )
-    labels_ids = _persistent_rdd_ids(sc) - before
     sig = _signature(labels)
     for _ in range(max_iter):
         neighbor_labels = bidir.join(
             labels, bidir.dst == labels.node
         ).select(F.col("src").alias("node"), "label")
-        before = _persistent_rdd_ids(sc)
         new_labels = (
             labels.unionAll(neighbor_labels)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
             .localCheckpoint()  # eager: materializes + truncates lineage
         )
-        new_ids = _persistent_rdd_ids(sc) - before
         # previous round's checkpoint blocks are dead now — free them
-        _unpersist_ids(sc, labels_ids)
-        labels_ids = new_ids
+        _release(labels)
         labels = new_labels
         new_sig = _signature(labels)
         if new_sig == sig:
@@ -162,18 +145,20 @@ def connected_components_adaptive(
     dominate at small grain. Both return the MIN NODE ID reachable
     through the pair graph for every endpoint, so downstream results
     are identical either way — only the physical strategy changes
-    (pinned by the ledger switchover test). ``used_star``, if given,
-    receives which path ran."""
+    (pinned by the ledger switchover test). Ids keep the pair columns'
+    type (long, string, ...) on both paths; the two columns share one
+    type. ``used_star``, if given, receives which path ran."""
     if n_pairs > threshold:
         if used_star is not None:
             used_star.append(True)
         return connected_components_star(pairs, a_col=a_col, b_col=b_col)
     if used_star is not None:
         used_star.append(False)
-    spark = pairs.sparkSession
-    parent: dict[int, int] = {}
+    from pyspark.sql.types import StructField, StructType
 
-    def find(x: int) -> int:
+    parent: dict = {}
+
+    def find(x):
         root = x
         while parent[root] != root:
             root = parent[root]
@@ -182,7 +167,7 @@ def connected_components_adaptive(
         return root
 
     for r in pairs.select(a_col, b_col).collect():
-        a, b = int(r[a_col]), int(r[b_col])
+        a, b = r[a_col], r[b_col]
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -193,7 +178,11 @@ def connected_components_adaptive(
             else:
                 parent[ra] = rb
     rows = sorted((n, find(n)) for n in parent)
-    return spark.createDataFrame(rows, "doc_id long, cluster_id long")
+    id_type = pairs.schema[a_col].dataType
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
+    )
+    return local_frame(pairs.sparkSession, rows, schema)
 
 
 def connected_components_star(
@@ -212,8 +201,6 @@ def connected_components_star(
     leaves the edge set unchanged, every component is a star centered on
     its min node. `rounds_out`, if given, receives the round count (tests
     pin the O(log n) bound with it)."""
-    sc = pairs.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
     edges = (
         pairs.select(
             F.least(a_col, b_col).alias("src"), F.greatest(a_col, b_col).alias("dst")
@@ -222,7 +209,6 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    edges_ids = _persistent_rdd_ids(sc) - before
     # node universe from the ORIGINAL pairs, not the self-loop-filtered
     # edges: a node appearing only as (x, x) still owns a singleton row
     nodes = (
@@ -243,11 +229,9 @@ def connected_components_star(
     sig = signature(edges)
     rounds = 0
     for _ in range(max_iter):
-        before = _persistent_rdd_ids(sc)
         new_edges = _small_star(_large_star(edges)).localCheckpoint()
-        new_ids = _persistent_rdd_ids(sc) - before
-        _unpersist_ids(sc, edges_ids)  # old round's blocks are dead
-        edges, edges_ids = new_edges, new_ids
+        _release(edges)  # old round's blocks are dead
+        edges = new_edges
         rounds += 1
         new_sig = signature(edges)
         if new_sig == sig:
@@ -298,10 +282,16 @@ def pagerank(
     Cross-engine determinism: each in-neighbor contribution is rounded to
     8 decimals and accumulated as DECIMAL — exact and order-independent —
     then one double multiply/add per node; float summation order can
-    never change a rank."""
-    sc = edges.sparkSession.sparkContext
+    never change a rank.
+
+    Release contract (caller sweep): the returned plan is lazy and reads
+    two localCheckpoints (edge+outdeg, node set), which stay pinned in
+    executor storage after return — freeing them here would drop blocks
+    the plan still needs. The caller frees them after its last action on
+    the result by sweeping the persistent-RDD registry, as bench.py does
+    between queries (`catalog.clearCache()` does not reach checkpoint
+    blocks); repeated calls without that sweep accumulate blocks."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    before = _persistent_rdd_ids(sc)
     # ``edges_distinct=True`` is the caller ATTESTING the edge list holds
     # each edge once (problem knowledge the optimizer cannot derive —
     # e.g. a distinct bipartite pair set unioned with its flip under
@@ -311,7 +301,6 @@ def pagerank(
     if not edges_distinct:
         e = e.distinct()
     e = e.localCheckpoint()
-    e_ids = _persistent_rdd_ids(sc) - before
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -323,7 +312,7 @@ def pagerank(
     esrc = e.join(outdeg, "src").localCheckpoint()
     # esrc/nodes are materialized (localCheckpoint is eager): the raw
     # deduped edge blocks have no remaining consumer
-    _unpersist_ids(sc, e_ids)
+    _release(e)
     pr = nodes.select("node", F.lit(1.0).alias("pr"))
     for _ in range(iters):
         contribs = (
@@ -345,11 +334,7 @@ def pagerank(
                 * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
             ).alias("pr"),
         )
-    # the checkpointed inputs stay pinned until the caller's action has
-    # consumed the returned (lazy) plan; freeing them here would drop
-    # blocks the plan still references. bench.py / callers sweep
-    # persisted blocks between queries, which reclaims them.
-    return pr
+    return pr  # esrc/nodes stay pinned: see the release contract above
 
 
 def triangle_counts(
@@ -435,12 +420,9 @@ def k_core_peel(
     against the survivor set — the edge set only shrinks, so per-round
     cost falls; ``localCheckpoint`` truncates lineage exactly like the
     other iterative operators in this module."""
-    sc = edges.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
     e = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
     ).localCheckpoint()
-    e_ids = _persistent_rdd_ids(sc) - before
     for _ in range(rounds):
         deg = (
             e.select(F.col("a").alias("v"))
@@ -449,15 +431,13 @@ def k_core_peel(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.where(F.col("d") >= k).select("v")
-        before = _persistent_rdd_ids(sc)
         new_e = (
             e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
             .localCheckpoint()
         )
-        new_ids = _persistent_rdd_ids(sc) - before
-        _unpersist_ids(sc, e_ids)
-        e, e_ids = new_e, new_ids
+        _release(e)
+        e = new_e
     return (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))

@@ -28,6 +28,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.session import local_frame
+
 TOMBS_DIR = "_tombs"
 
 
@@ -35,17 +37,25 @@ def _tombs_path(index_dir: str) -> str:
     return os.path.join(index_dir, TOMBS_DIR)
 
 
+def has_parquet(path: str) -> bool:
+    """Whether ``path`` holds a parquet file, at any partition depth. A
+    zero-row append still creates its dir (holding only ``_SUCCESS``),
+    and Spark cannot infer a schema from such a dir: guard every read
+    of an append-grown dir with this, not with ``os.path.isdir``."""
+    return any(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
+    )
+
+
 def ivf_tombstones(spark: SparkSession, index_dir: str) -> DataFrame:
     """The current tombstone set (empty frame if none). Robust to a
     ``_tombs`` dir holding no parquet files yet (a delete batch that
     turned out to be fully redelivered appends nothing but may have
-    created the dir) — Spark cannot infer a schema from an empty dir."""
+    created the dir)."""
     p = _tombs_path(index_dir)
-    if os.path.isdir(p) and any(
-        f.endswith(".parquet") for f in os.listdir(p)
-    ):
+    if has_parquet(p):
         return spark.read.parquet(p).select("vec_id")
-    return spark.createDataFrame([], "vec_id long")
+    return local_frame(spark, [], "vec_id long")
 
 
 def ivf_index_delete(

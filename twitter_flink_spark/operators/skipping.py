@@ -53,6 +53,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.session import local_frame
+
 STATS_DIR = "_filestats"
 BLOOM_DIR = "_filebloom"  #: per-column suffix appended: _filebloom_<col>
 
@@ -320,7 +322,7 @@ def _with_zero_file_coverage(
     if not listed:
         return per_file
     spark = df.sparkSession
-    ghost = spark.createDataFrame([(p,) for p in listed], "file string")
+    ghost = local_frame(spark, [(p,) for p in listed], "file string")
     for f in per_file.schema.fields:
         if f.name != "file":
             ghost = ghost.withColumn(
@@ -511,7 +513,7 @@ def select_files(
 
 
 def _empty_like(spark: SparkSession, root: str) -> DataFrame:
-    return spark.createDataFrame([], spark.read.parquet(root).schema)
+    return local_frame(spark, [], spark.read.parquet(root).schema)
 
 
 def read_where(
@@ -674,8 +676,8 @@ def _keep_live(
     the same canonical form (``_norm_path`` / ``_norm_sql``), so the
     semi-join agrees on any filesystem — authority-bearing URIs
     included."""
-    live_df = spark.createDataFrame(
-        [(_norm_path(f),) for f in live], "path string"
+    live_df = local_frame(
+        spark, [(_norm_path(f),) for f in live], "path string"
     )
     keep = manifest.join(
         F.broadcast(live_df), _norm_sql("file") == F.col("path"), "left_semi"
@@ -1172,7 +1174,8 @@ def _vacuum_shards(
     schema-bearing dir so partition discovery keeps working), leave
     every other shard byte-identical. Returns rows dropped; the caller
     recommits its parent manifest."""
-    live_df = spark.createDataFrame(
+    live_df = local_frame(
+        spark,
         [
             (_norm_path(f),)
             for f in spark.read.parquet(root).inputFiles()
@@ -1957,9 +1960,7 @@ def _bloom2_shard_rows(
     listed = _listed_files(df)
     if listed:
         ghost = (
-            df.sparkSession.createDataFrame(
-                [(p,) for p in listed], "file string"
-            )
+            local_frame(df.sparkSession, [(p,) for p in listed], "file string")
             .withColumn("shard", F.lit(-1).cast("int"))
             .withColumn("bloom", F.lit(None).cast("map<int,bigint>"))
         )
@@ -2139,7 +2140,8 @@ def vacuum_bloom_two_level(
         # update): keep a parameter-carrying sentinel so m/k/n_shards —
         # which ride the parent — survive to re-anchor the next update;
         # probes see zero probeable shards and select nothing
-        new_parent = spark.createDataFrame(
+        new_parent = local_frame(
+            spark,
             [(-1, 0, m, k, n_shards, total_files, 0.0, 0.0)],
             "shard int, n_files long, m int, k int, n_shards int, "
             "total_files long, est_sum_file_keys double, "

@@ -9,6 +9,7 @@ from pyspark.storagelevel import StorageLevel
 
 from twitter_flink_spark.operators.dedup import MINHASH_K, simhash16
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table, spread
 
@@ -2002,7 +2003,8 @@ def dedup_cluster_size_histogram(
         .join(F.broadcast(cl.select("doc_id")), "doc_id", "left_anti")
         .count()
     )
-    singles = spark.createDataFrame(
+    singles = local_frame(
+        spark,
         [(1, n_single, n_single, 0)],
         "cluster_size long, n_clusters long, n_docs long, "
         "docs_removed long",

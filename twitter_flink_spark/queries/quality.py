@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table
 
@@ -679,7 +680,8 @@ def expectations_quarantine_routing(
         for k in ledger
         if k.startswith("rule_")
     ] + [(k, "route", ledger[k]) for k in ledger if k.startswith("route_")]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, a, n, bool(matches)) for r, a, n in rows],
         "rule string, action string, n long, persisted_matches boolean",
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from twitter_flink_spark.operators.bucketing import read_bucketed, write_bucketed
 from twitter_flink_spark.operators.joins import salted_equi_join
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -480,8 +481,8 @@ def mixture_resample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mixture spec."""
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    shares = spark.createDataFrame(
-        list(_MIX_SHARES.items()), "lang string, share double"
+    shares = local_frame(
+        spark, list(_MIX_SHARES.items()), "lang string, share double"
     )
     tcap = (
         counts.join(F.broadcast(shares), "lang")
@@ -757,7 +758,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     before, after = _files_per_part(staged), _files_per_part(compacted)
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [
             (et, before.get(et, 0), after.get(et, 0))
             for et in sorted(before)
@@ -845,7 +847,7 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = spark.read.parquet(
         _ensure_type_partitioned_events(spark, sf_dir)
     )
-    dim = spark.createDataFrame(_DPP_TIERS, "event_type string, tier string")
+    dim = local_frame(spark, _DPP_TIERS, "event_type string, tier string")
     return (
         fact.join(F.broadcast(dim), "event_type")
         .where(F.col("tier") == "high")
@@ -1210,9 +1212,7 @@ def compact_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, compacted, "event_type"
         ).items()
     ]
-    obs_df = spark.createDataFrame(
-        observed, "event_type string, files_after int"
-    )
+    obs_df = local_frame(spark, observed, "event_type string, files_after int")
     back = spark.read.parquet(compacted)
     per_file = back.groupBy(
         "event_type", F.input_file_name().alias("f")
@@ -1996,7 +1996,7 @@ def era_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (day, incremental_ok and evolved)
         for day, evolved in sorted(serving.items())
     ]
-    flags_df = spark.createDataFrame(flags, "day string, evolved boolean")
+    flags_df = local_frame(spark, flags, "day string, evolved boolean")
     r0 = spark.read.parquet(mig).where(F.col("event_type") == "purchase")
     r1 = spark.read.parquet(era1).where(F.col("event_type") == "purchase")
     cols = ["day", "value"]
@@ -2641,7 +2641,8 @@ def metadata_count_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt, scanned, total = skipping.count_between(spark, dest, "ts", lo, hi)
     candidates, _total = skipping.select_files(spark, dest, [("ts", lo, hi)])
     n_intersecting = len(candidates)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 cnt,
@@ -2690,7 +2691,8 @@ def metadata_minmax_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, dest, "ts", lo, hi
     )
     candidates, _total = skipping.select_files(spark, dest, [("ts", lo, hi)])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(mn, mx, scanned < len(candidates), 0 < scanned < total)],
         "min_ts timestamp, max_ts timestamp, used_metadata boolean,"
         " partial_scan_subset boolean",
@@ -2817,7 +2819,8 @@ def twolevel_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, _ft, _pr, _pt = skipping.select_files_two_level(
         spark, dest, "ts", lo, hi
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 cnt,
@@ -3294,7 +3297,8 @@ def twolevel_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, _ft, _pr, _pt = skipping.select_files_two_level(
         spark, dest, "ts", lo, hi
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 mn,
@@ -4476,7 +4480,8 @@ def exact_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             cum += here
         passes += 1
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(median, n, passes >= 1)],
         "median_cents long, n_rows long, narrowed_not_sorted boolean",
     )
@@ -4544,7 +4549,8 @@ def _grouped_exact_select(
             del state[g]
     passes = 0
     while state:
-        bounds = spark.createDataFrame(
+        bounds = local_frame(
+            spark,
             [(g, lo, hi) for g, (lo, hi, _r) in state.items()],
             "g string, lo long, hi long",
         )
@@ -4634,7 +4640,8 @@ def exact_median_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     found, n_rows, passes = _grouped_exact_select(
         spark, s, lambda n: (n + 1) // 2
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(g, found[g], n_rows[g], passes >= 1) for g in sorted(found)],
         "event_type string, median_cents long, n_rows long, "
         "narrowed_not_sorted boolean",
@@ -4676,7 +4683,8 @@ def exact_p95_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     found, n_rows, passes = _grouped_exact_select(
         spark, s, lambda n: (19 * n + 19) // 20
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(g, found[g], n_rows[g], passes >= 1) for g in sorted(found)],
         "event_type string, p95_cents long, n_rows long, "
         "narrowed_not_sorted boolean",

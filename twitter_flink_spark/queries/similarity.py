@@ -16,6 +16,7 @@ from twitter_flink_spark.operators.similarity import (
     topk_neighbors,
 )
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 #: shared by the Spark query and the generated oracle — identical literals
@@ -860,8 +861,8 @@ def _coarse_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.cid, [float(x) for x in r.cent], r.n_vecs)
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
-        _KM_CACHE[key], "cid long, cent array<double>, n_vecs long"
+    return local_frame(
+        spark, _KM_CACHE[key], "cid long, cent array<double>, n_vecs long"
     )
 
 
@@ -1117,7 +1118,8 @@ def _pq_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.sub, r.cid, [float(x) for x in r.cent], r.n_vecs)
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _PQ_CACHE[key], "sub int, cid long, cent array<double>, n_vecs long"
     )
 
@@ -1412,8 +1414,8 @@ def _residual_pq_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.sub, r.cid, [float(x) for x in r.cent])
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
-        _RPQ_CACHE[key], "sub int, cid long, cent array<double>"
+    return local_frame(
+        spark, _RPQ_CACHE[key], "sub int, cid long, cent array<double>"
     )
 
 
@@ -2512,7 +2514,6 @@ def _ensure_ivf_inc_index(
 
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
-        checkpointed_write,
         kmeans_fit,
     )
     from twitter_flink_spark.sources.staging import stage_once
@@ -2532,7 +2533,7 @@ def _ensure_ivf_inc_index(
         cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
             "cid", "cent"
         )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
+        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
         disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
         assign_dir = os.path.join(p, "_assign")
         assign_clusters(vecs, disk_cents).write.mode(
@@ -2878,7 +2879,6 @@ def _ensure_ivf_refit_index(
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         assigned_mean_dist,
-        checkpointed_write,
         ivf_meta_df,
         ivf_refit_on_drift,
         kmeans_fit,
@@ -2898,7 +2898,7 @@ def _ensure_ivf_refit_index(
         cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
             "cid", "cent"
         )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
+        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
         disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
         vc = corpus.select("vec_id", F.col("embedding").alias("e"))
         assign_dir = os.path.join(p, "_assign")
@@ -2908,10 +2908,9 @@ def _ensure_ivf_refit_index(
         baseline = assigned_mean_dist(
             vc, disk_cents, spark.read.parquet(assign_dir)
         )
-        checkpointed_write(
-            ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS),
-            os.path.join(p, "_meta"),
-        )
+        ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(p, "_meta"))
         # the streaming path: drifted arrivals assigned to the FROZEN
         # centroids, appended into their cell dirs
         newv = allv.where(F.col("vec_id") > split).select(
@@ -3032,7 +3031,6 @@ def _ensure_ivf_imbal_index(
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         assigned_mean_dist,
-        checkpointed_write,
         ivf_meta_df,
         ivf_refit_on_imbalance,
         kmeans_fit,
@@ -3052,7 +3050,7 @@ def _ensure_ivf_imbal_index(
         cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
             "cid", "cent"
         )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
+        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
         disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
         vc = corpus.select("vec_id", F.col("embedding").alias("e"))
         assign_dir = os.path.join(p, "_assign")
@@ -3062,10 +3060,9 @@ def _ensure_ivf_imbal_index(
         baseline = assigned_mean_dist(
             vc, disk_cents, spark.read.parquet(assign_dir)
         )
-        checkpointed_write(
-            ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS),
-            os.path.join(p, "_meta"),
-        )
+        ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(p, "_meta"))
         newv = allv.where(F.col("vec_id") > split).select(
             "vec_id", F.col("embedding").alias("e")
         )
@@ -3292,8 +3289,8 @@ def ivf_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .first()
     )  # 1-row: probe vector + its label (the filter literal)
-    probe = spark.createDataFrame(
-        [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
+    probe = local_frame(
+        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
     )
     cents = spark.read.parquet(os.path.join(dest, "_centroids"))
     cells = [
@@ -3389,8 +3386,8 @@ def ivf_filtered_ann_escalating(
         )
         .first()
     )  # 1-row: probe vector + its label (the filter literal)
-    probe = spark.createDataFrame(
-        [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
+    probe = local_frame(
+        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
     )
     cents = spark.read.parquet(os.path.join(dest, "_centroids"))
     n_cells = cents.count()  # tiny: the codebook
@@ -3443,7 +3440,7 @@ def ivf_filtered_ann_escalating(
         n_match += _count_cell(order[nprobe - 1])
     cands = _cands(order[:nprobe])
     if cands is None:
-        cands = spark.createDataFrame([], "vec_id long, e array<double>")
+        cands = local_frame(spark, [], "vec_id long, e array<double>")
     probe_vec = probe.select(F.col("e").alias("pe"))
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
@@ -3644,7 +3641,8 @@ def ann_recall_curve_ivf_inverted(
         )
         for n in (1, 2)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         data,
         "nprobe int, n_hits long, recall_at_5 double, rbo double, "
         "curve_monotone boolean",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -763,7 +764,8 @@ def ams_f2_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("c") * F.col("c")))
         .first()[0]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n,

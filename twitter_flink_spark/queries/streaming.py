@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.streaming.pipeline import (
     TopNFeedback,
@@ -1636,7 +1637,8 @@ def streaming_expectations_gate(
         for k, n in totals.items()
         if k.startswith("rule_")
     ] + [(k, "route", n) for k, n in totals.items() if k.startswith("route_")]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, a, int(n), bool(matches)) for r, a, n in rows],
         "rule string, action string, n long, persisted_matches boolean",
     )
@@ -1959,7 +1961,7 @@ def streaming_watermark_frontier(
     rows = [
         (_dt.datetime.strptime(w, "%Y-%m-%dT%H:%M:%S.%fZ"),) for w in seen
     ]
-    return spark.createDataFrame(rows, "watermark timestamp")
+    return local_frame(spark, rows, "watermark timestamp")
 
 
 _SINK_IDX_DRAINED: dict = {}
@@ -2475,6 +2477,7 @@ def streaming_ivf_assign_maintenance(
         assign_clusters,
         kmeans_fit,
     )
+    from twitter_flink_spark.operators.ivf import has_parquet
     from twitter_flink_spark.queries.similarity import (
         _KM_ITERS,
         _KM_K,
@@ -2492,16 +2495,9 @@ def streaming_ivf_assign_maintenance(
     # the offline fit: corpus half, frozen to disk before the stream
     work = scratch_dir("ivfstream")
     corpus = spread(emb, "vec_id").where(F.col("vec_id") <= split)
-    from twitter_flink_spark.operators.clustering import (
-        checkpointed_write,
-    )
-
-    checkpointed_write(
-        kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        ),
-        os.path.join(work, "_centroids"),
-    )
+    kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
+        "cid", "cent"
+    ).write.mode("overwrite").parquet(os.path.join(work, "_centroids"))
     cents = spark.read.parquet(os.path.join(work, "_centroids"))
     assign_dir = os.path.join(work, "_assign")
 
@@ -2514,7 +2510,7 @@ def streaming_ivf_assign_maintenance(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("e"),
         )
-        if os.path.isdir(assign_dir):
+        if has_parquet(assign_dir):  # a zero-row batch leaves _SUCCESS
             known = spark.read.parquet(assign_dir).select("vec_id")
             vecs = vecs.join(known, "vec_id", "left_anti")
         fresh = assign_clusters(vecs, cents)
@@ -2858,9 +2854,7 @@ def streaming_dedup_impact_ledger(
                 spark.read.parquet(pairs_dir).distinct(), pair_total[0]
             )
         else:
-            cl = spark.createDataFrame(
-                [], "doc_id long, cluster_id long"
-            )
+            cl = local_frame(spark, [], "doc_id long, cluster_id long")
         last_cluster[:] = [cl]
         return cl
 

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -1071,9 +1072,7 @@ def daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
-    lags = spark.createDataFrame(
-        [(lag,) for lag in _ACF_LAGS], "lag int"
-    )
+    lags = local_frame(spark, [(lag,) for lag in _ACF_LAGS], "lag int")
     lagged = daily.crossJoin(F.broadcast(lags))
     w = Window.partitionBy("event_type", "lag").orderBy("day")
     pairs = (

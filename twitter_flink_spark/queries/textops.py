@@ -11,6 +11,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table, spread
 
 _STOPWORDS = ("the", "a", "of", "to", "and")
@@ -1049,7 +1050,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    q = spark.createDataFrame([(term,) for term in _BM25_TERMS], "term string")
+    q = local_frame(spark, [(term,) for term in _BM25_TERMS], "term string")
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
     idf = F.log(
         1

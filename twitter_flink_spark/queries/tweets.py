@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table, spread
 from twitter_flink_spark.sources.tweets import parse_statuses
 
@@ -46,8 +47,8 @@ def status_json_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("entities"),
     )
     good = docs.select(F.to_json(status).alias("value"))
-    bad = spark.createDataFrame(
-        [(line,) for line in MALFORMED_LINES], "value string"
+    bad = local_frame(
+        spark, [(line,) for line in MALFORMED_LINES], "value string"
     )
     return good.unionAll(bad)
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that are safe (and required) to set on an already-running session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -54,6 +54,21 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame built on the driver from a Python list (centroids,
+    manifests, top-N keys, file lists), held in ONE slice.
+
+    ``createDataFrame(list)`` splits its rows into one slice per core;
+    a later one-task stage (a ``coalesce(1)`` write, a broadcast build)
+    then reads every slice in turn, and that costs seconds on many
+    cores even for a 4-row frame. One slice costs one task, whatever
+    the core count. ``schema`` is a DDL string or a ``StructType``.
+    """
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema
+    )
 
 
 def get_spark(

@@ -16,6 +16,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from twitter_flink_spark.session import local_frame
+
 #: pinned so CSV timestamps survive a write→read round-trip losslessly
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -170,7 +172,8 @@ def binpack_write(
         key = r[part_col]
         offsets.append((key, r["__f"], run.get(key, 0)))
         run[key] = run.get(key, 0) + r["c"]
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         offsets,
         StructType(
             [

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.streaming.sources import stream_table
 
 
@@ -567,7 +568,7 @@ class TopNFeedback:
         if os.path.isdir(self._out_dir):
             return self.spark.read.parquet(self._out_dir)
         schema = "event_id long, " + self.key_col + " string, user_id long"
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], schema)
 
 
 class IncrementalMV:
@@ -1091,8 +1092,8 @@ class IncrementalMV:
                 f"lookup keys must have {len(join_cols)} element(s) "
                 f"({join_cols}); got {len(rows[0])}"
             )
-        key_df = self.spark.createDataFrame(
-            rows, self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
+        key_df = local_frame(
+            self.spark, rows, self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
         )
         wanted = {
             r["b"]
@@ -1107,8 +1108,8 @@ class IncrementalMV:
         ]
         if not dirs:
             key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
+            return local_frame(
+                self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
             )
         return self.spark.read.parquet(*dirs).join(
             F.broadcast(key_df), join_cols
@@ -1151,8 +1152,8 @@ class IncrementalMV:
                 chosen = m  # manifests sort oldest-first; keep the latest
         if chosen is None:
             key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
+            return local_frame(
+                self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
             )
         dirs = [
             self._bucket_dir(int(b), v)
@@ -1167,8 +1168,8 @@ class IncrementalMV:
         dirs = [self._bucket_dir(b, v) for b, v in self._buckets.items()]
         if not dirs:
             key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
+            return local_frame(
+                self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
             )
         return self.spark.read.parquet(*dirs)
 
