@@ -568,3 +568,44 @@ def test_band_parallel_spreads_single_partition_losslessly(spark):
     # an input already at >= default parallelism passes through untouched
     wide = docs.repartition(n, F.col("doc_id"))
     assert _band_parallel(wide) is wide
+
+
+def test_observed_count_zero_rows_only_for_missing_metrics(spark, tmp_path):
+    """`_observed_count` maps to 0 exactly the documented AQE case: an
+    empty other side of a join lets empty-relation propagation replace
+    the observed subtree, its CollectMetrics never runs and the metrics
+    row has no fields (``Observation.get`` itself fails). Any other
+    failure — here a metric name the observation does not carry — must
+    propagate instead of reading as an empty batch."""
+    import pytest
+    from pyspark.sql import Observation
+
+    from twitter_flink_spark.operators.dedup import _observed_count
+
+    keys = spark.range(100).withColumnRenamed("id", "k")
+    empty = spark.range(100).where("id > 1000").withColumnRenamed("id", "k")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        obs = Observation()
+        keys.observe(obs, F.count(F.lit(1)).alias("n")).join(
+            empty, "k"
+        ).write.parquet(str(tmp_path / "replaced"))
+        with pytest.raises(Exception):
+            obs.get  # the documented failure, reproduced
+        assert _observed_count(obs) == 0
+
+        obs = Observation()
+        keys.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(
+            str(tmp_path / "present")
+        )
+        assert _observed_count(obs) == 100
+
+        obs = Observation()
+        keys.observe(obs, F.count(F.lit(1)).alias("m")).write.parquet(
+            str(tmp_path / "misnamed")
+        )
+        with pytest.raises(KeyError):
+            _observed_count(obs)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -483,6 +483,171 @@ def test_feedback_log_compacts_in_run(spark, tmp_path):
     assert fb2.snapshot == fb1.snapshot
 
 
+def _log_parts(log_dir):
+    import os
+
+    if not os.path.isdir(log_dir):
+        return 0
+    return sum(f.endswith(".parquet") for f in os.listdir(log_dir))
+
+
+def _count_micro_batches(spark, fb):
+    """Wrap ``fb``'s leaderboard sink; the returned list gets one
+    (jobs submitted, WAL files appended) pair per micro-batch."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    inner = fb._update_leaderboard
+    calls = []
+
+    def counted(batch_df, batch_id):
+        jobs, parts = dag.numTotalJobs(), _log_parts(fb._log_dir)
+        inner(batch_df, batch_id)
+        calls.append(
+            (dag.numTotalJobs() - jobs, _log_parts(fb._log_dir) - parts)
+        )
+
+    fb._update_leaderboard = counted
+    return calls
+
+
+def test_feedback_job_budget_per_micro_batch(spark, tmp_path):
+    """Each leaderboard micro-batch runs the stateful plan ONCE: the
+    foreachBatch frame is RDD-backed, so every extra action on it re-runs
+    the state-store stage. A data micro-batch may submit at most 2 jobs
+    (the cut collect, which also observes the frontier, plus the
+    driver-built WAL append), a no-data micro-batch at most 1."""
+    full = str(tmp_path / "full")
+    _split_events(spark, full, n_chunks=4)
+    ck = str(tmp_path / "ck")
+    fb = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3,
+        src_path=full, checkpoint_dir=ck, max_files_per_trigger=1,
+        compact_every=None,
+    )
+    calls = _count_micro_batches(spark, fb)
+    fb.run_leaderboard()
+    assert fb.snapshot
+    data = [jobs for jobs, appended in calls if appended]
+    idle = [jobs for jobs, appended in calls if not appended]
+    assert len(data) == 4, calls  # one WAL file per data micro-batch
+    assert all(jobs <= 2 for jobs in data), calls
+    assert all(jobs <= 1 for jobs in idle), calls
+
+
+def _log_set(df, max_ts=None):
+    """(window_start, window_end, key, cnt, max_ts) rows of a counts log
+    — or of a `_live_top` cut, with its frontier as ``max_ts``."""
+    return {
+        (r["window_start"], r["window_end"], r["event_type"], r["cnt"],
+         max_ts or r["max_ts"])
+        for r in df.collect()
+    }
+
+
+def test_feedback_mirror_compaction_equals_log_reduction(spark, tmp_path):
+    """In-run compaction writes the driver mirror instead of re-reducing
+    the log: after every micro-batch's compaction the log must hold
+    exactly what the distributed reduction (`_live_top`) derives from the
+    full uncompacted log of the same files, and a restore from either
+    log gives the same snapshot and KV."""
+    full = str(tmp_path / "full")
+    _split_events(spark, full, n_chunks=4)
+    ck_c, ck_u = str(tmp_path / "ck_c"), str(tmp_path / "ck_u")
+    runs = {}
+    for ck, every in ((ck_c, 1), (ck_u, None)):
+        runs[ck] = TopNFeedback(
+            spark, SF_DIR, key_col="event_type", n=3,
+            src_path=full, checkpoint_dir=ck, max_files_per_trigger=1,
+            compact_every=every,
+        )
+        runs[ck].run_leaderboard()
+    assert runs[ck_c].snapshot and runs[ck_c].snapshot == runs[ck_u].snapshot
+
+    compacted = spark.read.parquet(ck_c + "/counts_log")
+    top, frontier = runs[ck_u]._live_top(
+        spark.read.parquet(ck_u + "/counts_log")
+    )
+    expected = _log_set(top.drop("rank"), max_ts=frontier)
+    assert _log_set(compacted) == expected
+    assert compacted.count() == len(expected)  # no duplicate rows either
+
+    restored = [
+        TopNFeedback(
+            spark, SF_DIR, key_col="event_type", n=3,
+            src_path=full, checkpoint_dir=ck, max_files_per_trigger=1,
+        )
+        for ck in (ck_c, ck_u)
+    ]
+    assert restored[0].snapshot == restored[1].snapshot == runs[ck_c].snapshot
+    assert restored[0].kv.data == restored[1].kv.data == runs[ck_c].kv.data
+    assert restored[0]._top == restored[1]._top
+    # the restore compacted the long log to the same rows, from the mirror
+    assert _log_set(spark.read.parquet(ck_u + "/counts_log")) == expected
+
+
+def test_feedback_zero_row_first_file(spark, tmp_path):
+    """A source whose first file holds zero rows: that micro-batch's
+    observed frontier is None, so it writes no WAL file (and reading the
+    observation does not raise); the final snapshot and KV equal a run
+    without the empty file."""
+    import os
+    import time
+
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=2)
+    with_empty = str(tmp_path / "with_empty")
+    os.makedirs(with_empty)
+    stage = str(tmp_path / "empty-stage")
+    spark.read.parquet(full).limit(0).coalesce(1).write.parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    sources = [os.path.join(stage, part)] + files
+    for i, f in enumerate(sources):  # mtime order: the empty file first
+        target = os.path.join(with_empty, f"{i:02d}.parquet")
+        os.link(f, target)
+        t = time.time() - (len(sources) - i) * 10
+        os.utime(target, (t, t))
+
+    ref = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3,
+        src_path=full, max_files_per_trigger=1,
+    )
+    ref.run_leaderboard()
+
+    ck = str(tmp_path / "ck")
+    fb = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3,
+        src_path=with_empty, checkpoint_dir=ck, max_files_per_trigger=1,
+        compact_every=None,
+    )
+    calls = _count_micro_batches(spark, fb)
+    fb.run_leaderboard()
+    appended = [parts for _, parts in calls]
+    assert appended[0] == 0  # the zero-row micro-batch logged nothing
+    assert sum(appended) == len(files)
+    assert fb.snapshot and fb.snapshot == ref.snapshot
+    assert fb.kv.data == ref.kv.data
+
+
+def test_feedback_filter_key_col_user_id(spark):
+    """key_col may itself be one of the match output's columns: with
+    key_col="user_id" the output holds event_id, user_id once each, typed
+    from the source — both on a cold start (no snapshot) and on a run
+    with matches."""
+    cold = TopNFeedback(spark, SF_DIR, key_col="user_id", n=3)
+    out = cold.run_filter()
+    assert out.count() == 0
+    src = load_table(spark, SF_DIR, "events")
+    expected = [(c, src.schema[c].dataType) for c in ("event_id", "user_id")]
+    assert [(f.name, f.dataType) for f in out.schema.fields] == expected
+
+    fb = TopNFeedback(spark, SF_DIR, key_col="user_id", n=3)
+    fb.run_leaderboard()
+    assert fb.snapshot
+    out = fb.run_filter()
+    assert [(f.name, f.dataType) for f in out.schema.fields] == expected
+    assert out.count() > 0
+    assert {r["user_id"] for r in out.collect()} <= set(fb.snapshot)
+
+
 # ---------------------------------------------------------------------------
 # Streaming source connectors (reference O1): file replay, socket, kafka
 

@@ -523,15 +523,15 @@ def _index_meta(idx: DataFrame):
 def _observed_count(obs) -> int:
     """Count from an `Observation` attached to a maintenance write,
     robust to the ZERO-ROW case: AQE's empty-relation propagation can
-    replace the whole observed subtree with an empty LocalTableScan, so
-    the CollectMetrics node never executes and ``obs.get`` raises from
-    the JVM (null metrics row in PythonSQLUtils.toPyRow) — which happens
-    exactly when zero rows flowed through the write. A present metrics
-    row is always authoritative."""
-    try:
-        return int(obs.get["n"] or 0)
-    except Exception:
+    replace the whole observed subtree with an empty LocalTableScan (an
+    empty other side of a join above it), so the CollectMetrics node
+    never executes, the metrics row has no fields and ``obs.get`` fails
+    in PythonSQLUtils.toPyRow — which happens exactly when zero rows
+    flowed through the write. That case alone is mapped to 0; a present
+    metrics row is authoritative and any other failure propagates."""
+    if obs._jo.getRow().size() == 0:  # waits for the action, like get
         return 0
+    return int(obs.get["n"] or 0)
 
 
 def _move_parquet_into(

@@ -261,6 +261,8 @@ class TopNFeedback:
             self.checkpoint_dir + "/counts_log" if self.checkpoint_dir else None
         )
         self._batches_since_compact = 0
+        #: counts log schema: from a logged micro-batch or the restored log
+        self._log_schema = None
         if self._log_dir:
             self._restore()
 
@@ -283,16 +285,13 @@ class TopNFeedback:
 
     def _restore(self) -> None:
         """Rebuild the driver mirror from the write-ahead counts log, at
-        O(windows x n) driver cost: the latest-value dedup (`max(cnt)` per
-        (window, key) — counts only grow, which also absorbs at-least-once
-        replays) and the per-window top-N rank run DISTRIBUTED on the log.
-        Restored windows are filtered by the logged frontier watermark FIRST
-        (open windows + the single most recent closed one — everything
-        `_recompute_snapshot` can ever use), so only <= live windows x n rows
-        reach the driver even when the log spans the job's whole history.
-        After a successful restore the log is COMPACTED down to exactly the
-        mirror's contents, so restore cost stays O(live windows x n) instead
-        of growing with every micro-batch ever run."""
+        O(windows x n) driver cost: `_live_top` reduces the log DISTRIBUTED
+        (live-window filter, latest-value dedup, per-window top-N), so only
+        <= live windows x n rows reach the driver even when the log spans
+        the job's whole history. After a successful restore the log is
+        COMPACTED down to exactly the mirror's contents, so restore cost
+        stays O(live windows x n) instead of growing with every micro-batch
+        ever run."""
         import os
 
         if not self._log_dir:
@@ -322,27 +321,23 @@ class TopNFeedback:
         if reduced is None:
             return
         top, frontier = reduced
-        top = top.persist()
-        try:
-            rows = top.collect()  # <= (live windows + 1) x n rows
-            for row in rows:
-                self._merge(
-                    row["window_start"], row["window_end"],
-                    row[self.key_col], row["cnt"],
-                )
-            self._max_ts = frontier
-            self._recompute_snapshot()
-            # skip the rewrite when the log already IS the bounded cut
-            # (e.g. a restart with no new micro-batches since the last
-            # restore) — compaction would pay a Spark write + three
-            # directory mutations to reproduce the same contents
-            if log.count() > len(rows):
-                self._compact_log(top, frontier, log.schema)
-        finally:
-            top.unpersist()
+        rows = top.collect()  # <= (live windows + 1) x n rows
+        for row in rows:
+            self._merge(
+                row["window_start"], row["window_end"],
+                row[self.key_col], row["cnt"],
+            )
+        self._max_ts = frontier
+        self._log_schema = log.schema
+        self._recompute_snapshot()
+        # skip the rewrite when the log already IS the bounded cut (e.g. a
+        # restart with no new micro-batches since the last restore)
+        if log.count() > len(rows):
+            self._compact_log()
 
     def _live_top(self, log: DataFrame):
-        """Reduce the WAL DISTRIBUTED to the rows the mirror can ever use:
+        """Reduce a possibly long WAL DISTRIBUTED to the rows the mirror can
+        ever use (restart only — in a run the mirror already holds them):
         filter to live windows + the single most recent closed one FIRST
         (everything `_recompute_snapshot` can see), then latest-value dedup
         (`max(cnt)` per (window, key) — counts only grow, which also absorbs
@@ -372,29 +367,39 @@ class TopNFeedback:
         )
         return top, frontier
 
-    def _compact_log(self, top: DataFrame, frontier, log_schema) -> None:
-        """Rewrite the append-only counts log to the live top cut
-        (<= (open windows + 1) x n rows), written straight from the
-        distributed ``top`` frame — no driver-side row rebuild, and the
-        column names/types come from the log's OWN schema (a non-string
-        key_col compacts to exactly the type it was logged with).
-        Crash-safe without a manifest: the old generation moves aside to
-        ``.gc`` before the compacted one takes its place, and ``_restore``
-        re-adopts a stranded ``.gc`` dir — at worst a crash costs one
-        compaction, never the log."""
-        import os
+    def _log_frame(self, entries, frontier) -> DataFrame:
+        """WAL rows built on the driver from ``(window_start, window_end,
+        key, cnt)`` entries, ``max_ts`` set to ``frontier``, typed by the
+        log's own schema (the column order `windowed_stream_counts` fixes;
+        a non-string key_col logs exactly the type it streams with)."""
+        return local_frame(
+            self.spark, [(*e, frontier) for e in entries], self._log_schema
+        )
+
+    def _compact_log(self) -> None:
+        """Rewrite the append-only counts log to the driver mirror: after
+        `_recompute_snapshot` it holds exactly open windows ∪ {last closed},
+        <= n keys each — the row set `_live_top` would derive from the log
+        (monotone-count argument in `_merge`) — so compaction is one
+        driver-built write with ``max_ts`` = the mirror's frontier, no
+        re-read of the log. Crash-safe without a manifest: the old
+        generation moves aside to ``.gc`` before the compacted one takes
+        its place, and ``_restore`` re-adopts a stranded ``.gc`` dir — at
+        worst a crash costs one compaction, never the log."""
         import shutil
 
-        compacted = (
-            top.drop("rank")
-            .withColumn("max_ts", F.lit(frontier))
-            .select(*[f.name for f in log_schema.fields])
-        )
         from twitter_flink_spark.operators.skipping import _replace_dir
 
+        entries = [
+            (ws, self._wend[ws], key, cnt)
+            for ws, d in self._top.items()
+            for key, cnt in d.items()
+        ]
         tmp = self._log_dir + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        compacted.coalesce(1).write.mode("overwrite").parquet(tmp)
+        self._log_frame(entries, self._max_ts).write.mode(
+            "overwrite"
+        ).parquet(tmp)
         # pointer swap (symlink renamed in one atomic step): a reader —
         # or a restore racing this compaction — sees the old or the new
         # log at every instant, never a missing dir
@@ -403,73 +408,63 @@ class TopNFeedback:
     def _maybe_compact_in_run(self) -> None:
         """In-run WAL compaction (every ``compact_every`` micro-batches):
         without it the log grows with every micro-batch until the next
-        restart, and only restore-time filtering bounds the DRIVER cost —
-        the log scan itself would grow unboundedly in a long-running job.
-        The rewrite is the same distributed reduction `_restore` uses
-        (read log → live-window filter → dedup → top-N cut → swap dirs);
-        foreachBatch calls are serialized on the driver, so no append can
-        race the directory swap."""
-        log = self.spark.read.parquet(self._log_dir)
-        reduced = self._live_top(log)
-        if reduced is None:
-            return
-        top, frontier = reduced
-        self._compact_log(top, frontier, log.schema)
+        restart. The rewrite is `_compact_log` — the mirror, written from
+        the driver; the log is not read. foreachBatch calls are serialized
+        on the driver, so no append can race the directory swap."""
+        self._batches_since_compact += 1
+        if self._batches_since_compact >= self.compact_every:
+            self._compact_log()
+            self._batches_since_compact = 0
 
     # -- leaderboard side (reference O6-O9 + O13) --
 
     def _update_leaderboard(self, batch_df: DataFrame, batch_id: int) -> None:
         record_batch_df_plan(f"leaderboard-b{batch_id}", batch_df)
+        from pyspark.sql import Observation
+
         from twitter_flink_spark.operators.topn import topn_per_group
 
-        # The driver only ever sees <= (windows-in-batch x n) rows: the
-        # event-time frontier is a 1-row distributed max, and the update-mode
-        # deltas are cut to the per-window top-N BEFORE collect (row_number
-        # over (window_start) → WindowGroupLimit: per-partition heaps ship at
-        # most n rows per window to the rank shuffle). The cut is lossless
-        # for monotone counts — see `_merge`. This is the reference's own
-        # bound: its broadcast carries exactly N rows
+        # ONE execution of the stateful plan per micro-batch: foreachBatch
+        # hands over an RDD-backed frame, so every action on it re-runs the
+        # state-store stage. The event-time frontier is therefore OBSERVED
+        # (max over every delta row) inside the same job that collects the
+        # per-window top-N cut (row_number over window_start →
+        # WindowGroupLimit: per-partition heaps ship at most n rows per
+        # window). The driver only ever sees <= (windows-in-batch x n) rows;
+        # the cut is lossless for monotone counts — see `_merge`. This is
+        # the reference's own bound: its broadcast carries exactly N rows
         # (`TopNHashtags.java:131,284-288`).
-        frontier = batch_df.agg(F.max("max_ts")).collect()[0][0]
+        obs = Observation()
+        rows = topn_per_group(
+            batch_df.observe(obs, F.max("max_ts").alias("frontier")),
+            ("window_start",), "cnt", (self.key_col,), n=self.n,
+        ).collect()
+        frontier = obs.get["frontier"]
         if frontier is None:  # empty micro-batch
             return
-        cut = topn_per_group(
-            batch_df, ("window_start",), "cnt", (self.key_col,), n=self.n
-        ).drop("rank")
+        entries = [
+            (r["window_start"], r["window_end"], r[self.key_col], r["cnt"])
+            for r in rows
+        ]
         if self._log_dir:
-            # Persist so the WAL write and the mirror collect share one
-            # evaluation of the rank cut (no second pass over the batch, no
-            # driver round-trip rebuilding the cut row-by-row).
-            cut = cut.persist()
-        try:
-            if self._log_dir:
-                # write-ahead: log the cut (not the full delta) before
-                # mutating the mirror, so a crash between the two replays the
-                # batch (at-least-once) and _restore's max(cnt) dedups.
-                # max_ts is rewritten to the BATCH frontier: the per-row max
-                # could sit on a cut-away row, and _restore needs the true
-                # watermark. The cut is written DISTRIBUTED, straight from
-                # the executors — column order pinned to the batch schema.
-                cut.withColumn("max_ts", F.lit(frontier)).select(
-                    *[f.name for f in batch_df.schema.fields]
-                ).write.mode("append").parquet(self._log_dir)
-            rows = cut.collect()
-        finally:
-            if self._log_dir:
-                cut.unpersist()
-        for row in rows:
-            self._merge(
-                row["window_start"], row["window_end"],
-                row[self.key_col], row["cnt"],
+            # write-ahead: log the cut (not the full delta) before mutating
+            # the mirror, so a crash between the two replays the batch
+            # (at-least-once) and _restore's max(cnt) dedups. max_ts is the
+            # BATCH frontier: the per-row max could sit on a cut-away row,
+            # and _restore needs the true watermark. The <= windows x n rows
+            # are already on the driver, so the append is one driver-built
+            # file, not a second pass over the batch.
+            self._log_schema = batch_df.schema
+            self._log_frame(entries, frontier).write.mode("append").parquet(
+                self._log_dir
             )
+        for e in entries:
+            self._merge(*e)
         if self._max_ts is None or frontier > self._max_ts:
             self._max_ts = frontier
         self._recompute_snapshot()
         if self._log_dir and self.compact_every:
-            self._batches_since_compact += 1
-            if self._batches_since_compact >= self.compact_every:
-                self._maybe_compact_in_run()
-                self._batches_since_compact = 0
+            self._maybe_compact_in_run()
 
     def _recompute_snapshot(self) -> None:
         import datetime
@@ -550,9 +545,13 @@ class TopNFeedback:
             return
         matched = batch_df.where(F.col(self.key_col).isin(*snap))
         record_batch_df_plan(f"filter-b{batch_id}", matched)
-        matched.select("event_id", self.key_col, "user_id").write.mode(
-            "append"
-        ).parquet(self._out_dir)
+        matched.select(*self._out_cols()).write.mode("append").parquet(
+            self._out_dir
+        )
+
+    def _out_cols(self) -> list[str]:
+        """event_id, key_col, user_id — each once (key_col may be either)."""
+        return list(dict.fromkeys(("event_id", self.key_col, "user_id")))
 
     def run_filter(self, timeout_s: int = 300) -> DataFrame:
         src = stream_table(self.spark, self.sf_dir, "events")
@@ -567,7 +566,7 @@ class TopNFeedback:
 
         if os.path.isdir(self._out_dir):
             return self.spark.read.parquet(self._out_dir)
-        schema = "event_id long, " + self.key_col + " string, user_id long"
+        schema = src.select(*self._out_cols()).schema
         return local_frame(self.spark, [], schema)
 
 
