@@ -317,3 +317,58 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     for path in files:
         visit(ast.parse(path.read_text()), path, ())
     assert bad == []
+
+
+def test_mv_bucket_versions_read_only_through_read():
+    """Guard: `IncrementalMV` and its subclasses read bucket-version dirs
+    only through `IncrementalMV._read`, which passes the schema the
+    manifest records — any other `read.parquet` there would be a
+    schema-inference job per call. The one other read they may make is
+    the changelog, which is not a bucket version."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
+    classes = {
+        node.name: (path, node)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.ClassDef)
+    }
+    family = {"IncrementalMV"}
+    grew = True
+    while grew:  # subclasses of subclasses too
+        grew = False
+        for name, (_, node) in classes.items():
+            bases = {ast.unparse(b).rsplit(".", 1)[-1] for b in node.bases}
+            if name not in family and bases & family:
+                family.add(name)
+                grew = True
+    assert {"PresenceMV", "GroupedCountMV", "SketchMV"} <= family
+
+    def on_reader(expr) -> bool:
+        """``expr`` is a `spark.read[...]` chain (not merely a frame
+        derived from one: call arguments are not followed)."""
+        while isinstance(expr, (ast.Attribute, ast.Call)):
+            if isinstance(expr, ast.Attribute) and expr.attr == "read":
+                return True
+            expr = expr.value if isinstance(expr, ast.Attribute) else expr.func
+        return False
+
+    bad = []
+    for name in sorted(family):
+        path, cls = classes[name]
+        for fn in cls.body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name == "_read":
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("parquet", "load")
+                    and on_reader(node.func.value)
+                    and [ast.unparse(a) for a in node.args]
+                    != ["self.changelog_dir"]
+                ):
+                    bad.append(f"{path.name}:{node.lineno} {name}.{fn.name}")
+    assert bad == []

@@ -284,6 +284,80 @@ def test_grouped_kmeans_fits_independent_codebooks(spark):
             assert grouped[(sub, cid)] == cent
 
 
+def _sql_centroid_means(rows, g):
+    """Reference for `clustering._centroid_means`: the all-SQL
+    re-assembly — a second aggregate that sorts the (dim, c) structs of
+    each cluster with ``sort_array(collect_list(...))`` — collected."""
+    from twitter_flink_spark.operators.clustering import _COMP_SCALE
+
+    comp = rows.select(
+        *g, "cid", F.posexplode(F.col("_tfs_e")).alias("pos0", "val")
+    ).select(
+        *g,
+        "cid",
+        (F.col("pos0") + 1).alias("dim"),
+        F.round("val", _COMP_SCALE)
+        .cast(f"decimal(28,{_COMP_SCALE})")
+        .alias("val"),
+    )
+    dims = comp.groupBy(*g, "cid", "dim").agg(
+        F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
+    )
+    return (
+        dims.select(
+            *g,
+            "cid",
+            "n",
+            F.struct(
+                "dim", (F.col("s").cast("double") / F.col("n")).alias("c")
+            ).alias("dc"),
+        )
+        .groupBy(*g, "cid")
+        .agg(
+            F.expr(
+                "transform(sort_array(collect_list(dc)), s -> s.c)"
+            ).alias("cent"),
+            F.max("n").alias("n_vecs"),
+        )
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("group_col", [None, "sub"])
+def test_kmeans_driver_reassembly_bit_identical(spark, monkeypatch, group_col):
+    """Re-assembling the centroids on the driver from the collected
+    (cid, dim, n, c) rows gives, value for value, the centroids of the
+    SQL re-assembly (`_sql_centroid_means`), ungrouped and grouped."""
+    import random
+
+    from twitter_flink_spark.operators import clustering
+
+    rng = random.Random(11)
+    df = spark.createDataFrame(
+        [
+            (i, sub, [rng.uniform(-50, 50) / 3 for _ in range(6)])
+            for i in range(60)
+            for sub in (0, 1)
+        ],
+        "vec_id LONG, sub INT, e ARRAY<DOUBLE>",
+    )
+    if group_col is None:
+        df = df.where(F.col("sub") == 0).drop("sub")
+    key = ["sub", "cid"] if group_col else ["cid"]
+
+    def fit():
+        out = clustering.kmeans_fit(
+            df, k=4, iters=3, vec_col="e", group_col=group_col
+        ).collect()
+        return {tuple(r[c] for c in key): (r.cent, r.n_vecs) for r in out}
+
+    driver = fit()
+    monkeypatch.setattr(clustering, "_centroid_means", _sql_centroid_means)
+    reference = fit()
+    assert len(reference) >= 3  # a non-trivial fit
+    assert driver == reference
+
+
 def test_codebook_cache_isolated_by_sf(spark):
     """The session fit cache must key on sf_dir — centroids fitted at one
     scale must never serve another (and the rebuilt frame must match a

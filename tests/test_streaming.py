@@ -1393,3 +1393,204 @@ def test_incremental_mv_lookup_composite_keys(spark):
 
     shutil.rmtree(mv._root, ignore_errors=True)
     shutil.rmtree(single._root, ignore_errors=True)
+
+
+def _count_sink_jobs(spark, monkeypatch):
+    """Wrap every foreachBatch sink started from here on; the returned
+    list gets one (batch_id, jobs submitted, schema-less parquet reads)
+    triple per micro-batch. A `read.parquet` without a schema is one
+    footer-inference job (launched while the frame is built, before any
+    action), so a read that passes its schema launches none."""
+    from pyspark.sql.readwriter import DataFrameReader
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    real_parquet = DataFrameReader.parquet
+    real_sink = DataStreamWriter.foreachBatch
+    schemaless = []
+    calls = []
+
+    def parquet(self, *paths, **options):
+        if self._jreader.userSpecifiedSchema().isEmpty():
+            schemaless.append(paths)
+        return real_parquet(self, *paths, **options)
+
+    def counting(self, func):
+        def counted(batch_df, batch_id):
+            jobs, reads = dag.numTotalJobs(), len(schemaless)
+            func(batch_df, batch_id)
+            calls.append((
+                batch_id,
+                dag.numTotalJobs() - jobs,
+                schemaless[reads:],
+            ))
+
+        return real_sink(self, counted)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", counting)
+    return calls
+
+
+def test_ivf_sink_job_budget_per_micro_batch(spark, monkeypatch):
+    """The streaming IVF sink reads only artifacts its own query wrote
+    (the `_assign` inverted lists, against the centroids), so it never
+    reads without a schema, and a data micro-batch runs at most 4 jobs:
+    the anti-join and assignment plan, observed during its append."""
+    from twitter_flink_spark.queries.streaming import (
+        streaming_ivf_assign_maintenance,
+    )
+
+    calls = _count_sink_jobs(spark, monkeypatch)
+    out = streaming_ivf_assign_maintenance(spark, SF_DIR).collect()
+    assert out and all(r.streamed_in_batches for r in out)
+    assert all(r.redelivery_noop for r in out)
+    assert [b for b, _, _ in calls] == [0, 1, 2]
+    assert all(jobs <= 4 and reads == [] for _, jobs, reads in calls), calls
+
+
+def test_mv_merge_job_budget_per_micro_batch(spark, monkeypatch):
+    """`IncrementalMV.merge_batch` reads the prior bucket versions with
+    the schema its manifest records: a micro-batch with a prior snapshot
+    runs at most 6 jobs and reads nothing without a schema."""
+    from twitter_flink_spark.queries.streaming import streaming_incremental_mv
+
+    calls = _count_sink_jobs(spark, monkeypatch)
+    assert streaming_incremental_mv(spark, SF_DIR).count() > 0
+    assert [b for b, _, _ in calls] == [0, 1, 2, 3]
+    # every batch after the first has a prior snapshot
+    assert all(jobs <= 6 and reads == [] for _, jobs, reads in calls[1:]), (
+        calls
+    )
+
+
+def _mv_batches(spark):
+    return [
+        spark.createDataFrame(
+            [(i, float(i * step)) for i in range(lo, lo + 40)],
+            "user_id long, value double",
+        )
+        for lo, step in ((0, 1), (20, 2), (30, 3))
+    ]
+
+
+def _snapshot_rows(mv):
+    return sorted(tuple(r) for r in mv.snapshot().collect())
+
+
+def test_incremental_mv_resumes_with_manifest_schema(spark):
+    """The manifest records the snapshot schema, and a resumed MV reads
+    every bucket version with it — the frame inference would give,
+    without a single schema-inference job."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from twitter_flink_spark.streaming.pipeline import IncrementalMV
+
+    b0, b1, _ = _mv_batches(spark)
+    mv = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    mv.merge_batch(b0, 0)
+    mv.merge_batch(b1, 1)
+    with open(mv._manifest_path()) as fh:
+        recorded = StructType.fromJson(json.load(fh)["schema"])
+    assert recorded.simpleString() == (
+        "struct<user_id:bigint,cnt:bigint,val:double>"
+    )
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    mv2 = IncrementalMV(spark, key_col="user_id", n_buckets=4, root=mv._root)
+    assert mv2._schema == recorded
+    first = dag.numTotalJobs()
+    snap = mv2.snapshot()
+    assert dag.numTotalJobs() == first  # no inference job to plan it
+    dirs = [mv._bucket_dir(b, v) for b, v in mv._buckets.items()]
+    assert snap.schema == spark.read.parquet(*dirs).schema  # as inferred
+    assert _snapshot_rows(mv2) == _snapshot_rows(mv)
+
+
+def test_incremental_mv_manifest_without_schema_resumes(spark):
+    """A manifest written before the schema field existed still resumes
+    (reads fall back to inference) and merges to the same snapshot as
+    an MV that never lost the field; its next commit records it again."""
+    import json
+
+    from twitter_flink_spark.streaming.pipeline import IncrementalMV
+
+    b0, b1, b2 = _mv_batches(spark)
+    control = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    mv = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    for m in (control, mv):
+        m.merge_batch(b0, 0)
+        m.merge_batch(b1, 1)
+    with open(mv._manifest_path()) as fh:
+        manifest = json.load(fh)
+    del manifest["schema"]
+    with open(mv._manifest_path(), "w") as fh:
+        json.dump(manifest, fh)
+
+    legacy = IncrementalMV(
+        spark, key_col="user_id", n_buckets=4, root=mv._root
+    )
+    assert legacy._schema is None
+    assert _snapshot_rows(legacy) == _snapshot_rows(control)
+    legacy.merge_batch(b2, 2)
+    control.merge_batch(b2, 2)
+    assert _snapshot_rows(legacy) == _snapshot_rows(control)
+    with open(mv._manifest_path()) as fh:
+        assert "schema" in json.load(fh)
+
+
+def test_incremental_mv_schema_recorded_for_every_variant(spark):
+    """Every MV variant records exactly the schema inference reads back
+    from its bucket files, so `_read` never changes a snapshot's type."""
+    from twitter_flink_spark.streaming.pipeline import (
+        GroupedCountMV,
+        IncrementalMV,
+        PresenceMV,
+        SketchMV,
+    )
+
+    ev = load_table(spark, SF_DIR, "events").withColumn(
+        "d", F.to_date("ts")
+    )
+    mvs = [
+        IncrementalMV(spark, key_col="user_id", n_buckets=4),
+        PresenceMV(spark, key_col="user_id", field_col="d", n_buckets=4),
+        GroupedCountMV(
+            spark, ["event_type", "user_id"],
+            key_schema="event_type string, user_id long", n_buckets=4,
+        ),
+        SketchMV(spark, key_col="d", value_col="user_id", n_buckets=4),
+    ]
+    for mv in mvs:
+        mv.merge_batch(ev, 0)
+        mv.merge_batch(ev, 1)
+        dirs = [mv._bucket_dir(b, v) for b, v in mv._buckets.items()]
+        assert mv.snapshot().schema == spark.read.parquet(*dirs).schema
+
+
+def test_incremental_mv_one_file_per_bucket_version(spark):
+    """The bucket write runs one task per core, not one per bucket, yet
+    hash partitioning still puts each bucket in exactly one task: with
+    more buckets than cores every touched version holds one file."""
+    import os
+
+    from twitter_flink_spark.streaming.pipeline import IncrementalMV
+
+    cores = spark.sparkContext.defaultParallelism
+    mv = IncrementalMV(spark, key_col="user_id", n_buckets=max(16, 2 * cores))
+    for batch_id in range(3):
+        mv.merge_batch(
+            spark.range(100 * batch_id, 100 * batch_id + 300).select(
+                F.col("id").alias("user_id"), F.lit(1.0).alias("value")
+            ),
+            batch_id,
+        )
+    assert len(mv._buckets) == mv.n_buckets  # every bucket was touched
+    for b, v in mv._buckets.items():
+        files = [
+            f for f in os.listdir(mv._bucket_dir(b, v))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (b, v, files)

@@ -104,13 +104,12 @@ def assign_clusters(
     array-argmin rewrite (pack the k candidates into one broadcast
     array, array_min over struct(dist, cid) per row — see `kmeans_fit`,
     which keeps that shape internally) was interleaved-A/B'd against
-    this in r15: result-identical, at par for standalone batch
-    consumers (the window's exchange is k-row-per-vector metadata, not
-    payload), but 1.5-2x SLOWER for foreachBatch sinks that evaluate
-    the assignment twice (count + write re-pay the candidate-packing
-    stage, and the per-call centroid collect serializes against the
-    micro-batch machinery). The window form stays because it is lazy,
-    single-stage to plan, and every caller's centroid side is a k-row
+    this: result-identical and at par (the window's exchange is
+    k-row-per-vector metadata, not payload), but it needs the centroids
+    collected to the driver on every call, a job the caller pays before
+    its own action runs. The window form stays because it is lazy —
+    the caller's one action (e.g. a sink's observed append write) runs
+    the whole assignment — and every caller's centroid side is a k-row
     broadcast either way."""
     joined = (
         vectors.join(F.broadcast(centroids), on=group_col)
@@ -135,14 +134,21 @@ def assign_clusters(
     )
 
 
-def _centroid_means(rows: DataFrame, g: list) -> DataFrame:
-    """([group,] cid, cent, n_vecs) from (*g, cid, _tfs_e) member rows:
-    the decimal-exact posexplode -> (cid, dim) aggregate -> sort_array
-    re-assembly. (A 64-sum single-aggregate variant was A/B-measured
-    2.2x SLOWER per Lloyd round — its generated aggregate code never
-    amortizes — and is therefore not used; this explode shape compiles
-    small and its exchange carries only k x dim decimal partials after
-    map-side combine.)"""
+def _centroid_means(rows: DataFrame, g: list) -> list:
+    """([group,] cid, cent, n_vecs) Rows from (*g, cid, _tfs_e) member
+    rows: ONE decimal-exact posexplode -> (cid, dim) aggregate; its
+    k x dim ``(cid, dim, n, c)`` rows are collected and re-assembled into
+    dim-ordered arrays on the driver, which needs the rows for the next
+    round's `_pack_rows` anyway — re-assembling in SQL would cost a
+    second exchange per Lloyd round. ``c = s / n`` is computed in Spark,
+    so the components are the same doubles either way. (A 64-sum
+    single-aggregate variant was A/B-measured 2.2x SLOWER per Lloyd
+    round — its generated aggregate code never amortizes — and is
+    therefore not used; this explode shape compiles small and its
+    exchange carries only k x dim decimal partials after map-side
+    combine.)"""
+    from pyspark.sql import Row
+
     comp = rows.select(
         *g,
         "cid",
@@ -155,43 +161,32 @@ def _centroid_means(rows: DataFrame, g: list) -> DataFrame:
         .cast(f"decimal(28,{_COMP_SCALE})")
         .alias("val"),
     )
-    dims = comp.groupBy(*g, "cid", "dim").agg(
-        F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    return (
-        dims.select(
+    dims = (
+        comp.groupBy(*g, "cid", "dim")
+        .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+        .select(
             *g,
             "cid",
+            "dim",
             "n",
-            F.struct(
-                "dim", (F.col("s").cast("double") / F.col("n")).alias("c")
-            ).alias("dc"),
+            (F.col("s").cast("double") / F.col("n")).alias("c"),
         )
-        .groupBy(*g, "cid")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(dc)), s -> s.c)"
-            ).alias("cent"),
-            F.max("n").alias("n_vecs"),
+        .collect()
+    )
+    parts: dict[tuple, list] = {}
+    for r in dims:
+        parts.setdefault(tuple(r[c] for c in g) + (r["cid"],), []).append(
+            (r["dim"], r["c"], r["n"])
         )
-    )
-
-
-def update_centroids(
-    vectors: DataFrame,
-    assigned: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    group_col: str | None = None,
-) -> DataFrame:
-    """([group,] cid, cent, n_vecs): decimal-exact per-dimension means.
-    With ``group_col``, means are computed independently per group in the
-    SAME aggregation pipeline — subspace count never multiplies jobs."""
-    g = [group_col] if group_col else []
-    members = assigned.join(vectors, on=[id_col] + g).select(
-        *g, "cid", F.col(vec_col).alias("_tfs_e")
-    )
-    return _centroid_means(members, g)
+    cent_row = Row(*g, "cid", "cent", "n_vecs")
+    return [
+        cent_row(
+            *key,
+            [c for _, c, _ in sorted(dcn)],  # dims are unique per key
+            max(n for _, _, n in dcn),
+        )
+        for key, dcn in parts.items()
+    ]
 
 
 def kmeans_fit(
@@ -226,9 +221,10 @@ def kmeans_fit(
     # so the Lloyd loop round-trips them through the driver: each round
     # is ONE job — scan the checkpointed corpus, per-row array argmin
     # (map-side, no shuffle, no sort), the decimal means aggregate over
-    # the vector the argmin kept on the row, collect k rows — and the
-    # next round's candidate array enters the plan as a one-slice
-    # `local_frame` broadcast (packed driver-side, a one-task build).
+    # the vector the argmin kept on the row, collect its k x dim
+    # component rows and re-assemble k centroids — and the next round's
+    # candidate array enters the plan as a one-slice `local_frame`
+    # broadcast (packed driver-side, a one-task build).
     # The previous shape paid per round: a window Exchange +
     # sort for the argmin, an id-keyed join back to the corpus, a
     # localCheckpoint materialization AND a broadcast-build job — all
@@ -267,7 +263,7 @@ def kmeans_fit(
             F.array_min(_scored_expr("e"))["cid"].alias("cid"),
             F.col("e").alias("_tfs_e"),
         )
-        rows = _centroid_means(members, g).collect()
+        rows = _centroid_means(members, g)
     _release(v)
     return local_frame(spark, rows, cent_schema)
 

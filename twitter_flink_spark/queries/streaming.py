@@ -2415,24 +2415,27 @@ def streaming_repair_ledger_stateful(
     )
 
 
-def _ensure_vecid_split_embeddings(
+def _stage_vecid_split_embeddings(
     spark: SparkSession, sf_dir: str
-) -> str:
-    """embeddings split into 3 vec_id-ordered parquet files — the
-    replayable arrival order for the streaming IVF maintenance query
-    (vectors arrive id-ordered the way an ingest assigns them).
-    Cross-process write-once."""
+) -> tuple[str, dict]:
+    """(dest, ledger) of the embeddings split into 3 vec_id-ordered
+    parquet files — the replayable arrival order for the streaming IVF
+    maintenance query (vectors arrive id-ordered the way an ingest
+    assigns them). The ledger carries the table's vec_id bounds and row
+    count ``{mn, mx, n}`` from the one aggregate the split needs anyway,
+    so callers never re-scan for them. Cross-process write-once."""
     from twitter_flink_spark.sources.staging import stage_once
     from twitter_flink_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.agg(
-        F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")
-    ).first()
-    split = (int(b["mn"]) + int(b["mx"])) // 2
-    q3 = (split + int(b["mx"])) // 2
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        b = emb.agg(
+            F.min("vec_id").alias("mn"),
+            F.max("vec_id").alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        split = (int(b["mn"]) + int(b["mx"])) // 2
+        q3 = (split + int(b["mx"])) // 2
         for lo, hi in (
             (None, split),
             (split, q3),
@@ -2444,9 +2447,18 @@ def _ensure_vecid_split_embeddings(
             if hi is not None:
                 part = part.where(F.col("vec_id") <= hi)
             part.coalesce(1).write.mode("append").parquet(p)
+        return {"mn": int(b["mn"]), "mx": int(b["mx"]), "n": int(b["n"])}
 
-    dest, _ = stage_once("ivfstream3", sf_dir, _build)
-    return dest
+    # the ledger is part of the tag's contract: layouts staged before it
+    # carried {mn, mx, n} live under the old tag and are never read here
+    return stage_once("ivfstream3n", sf_dir, _build)
+
+
+def _ensure_vecid_split_embeddings(
+    spark: SparkSession, sf_dir: str
+) -> str:
+    """The staged replay dir of `_stage_vecid_split_embeddings`."""
+    return _stage_vecid_split_embeddings(spark, sf_dir)[0]
 
 
 @register("streaming_ivf_assign_maintenance")  # oracle attached below
@@ -2473,6 +2485,8 @@ def streaming_ivf_assign_maintenance(
     import os
     import tempfile
 
+    from pyspark.sql.types import StructField, StructType
+
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         kmeans_fit,
@@ -2485,20 +2499,24 @@ def streaming_ivf_assign_maintenance(
     )
     from twitter_flink_spark.sources.tables import load_table, spread
 
+    # the replay source through its own helper (a test swaps it); the
+    # bounds and row count from the staging ledger — a marker read, no job
     staged = _ensure_vecid_split_embeddings(spark, sf_dir)
+    b = _stage_vecid_split_embeddings(spark, sf_dir)[1]
+    split = (b["mn"] + b["mx"]) // 2
     emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.agg(
-        F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")
-    ).first()
-    split = (int(b["mn"]) + int(b["mx"])) // 2
+    # every artifact below is written here, so every read passes its
+    # known schema: a schema-less read is one footer-inference job
+    ids = StructType([StructField("vec_id", emb.schema["vec_id"].dataType)])
 
     # the offline fit: corpus half, frozen to disk before the stream
     work = scratch_dir("ivfstream")
     corpus = spread(emb, "vec_id").where(F.col("vec_id") <= split)
-    kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-        "cid", "cent"
-    ).write.mode("overwrite").parquet(os.path.join(work, "_centroids"))
-    cents = spark.read.parquet(os.path.join(work, "_centroids"))
+    fit = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select("cid", "cent")
+    fit.write.mode("overwrite").parquet(os.path.join(work, "_centroids"))
+    cents = spark.read.schema(fit.schema).parquet(
+        os.path.join(work, "_centroids")
+    )
     assign_dir = os.path.join(work, "_assign")
 
     ledger: list[int] = []
@@ -2511,7 +2529,9 @@ def streaming_ivf_assign_maintenance(
             F.col("embedding").cast("array<double>").alias("e"),
         )
         if has_parquet(assign_dir):  # a zero-row batch leaves _SUCCESS
-            known = spark.read.parquet(assign_dir).select("vec_id")
+            known = spark.read.schema(ids).parquet(assign_dir).select(
+                "vec_id"
+            )
             vecs = vecs.join(known, "vec_id", "left_anti")
         fresh = assign_clusters(vecs, cents)
         # the freshly-indexed count is OBSERVED during the append write:
@@ -2527,9 +2547,8 @@ def streaming_ivf_assign_maintenance(
 
         ledger.append(_observed_count(obs))
 
-    schema = spark.read.parquet(staged).schema
     q = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
         .writeStream.foreachBatch(sink)
@@ -2545,20 +2564,21 @@ def streaming_ivf_assign_maintenance(
     streamed_ok = (
         len(ledger) == 3
         and all(n > 0 for n in ledger)
-        and n_streamed == emb.count()
+        and n_streamed == b["n"]
     )
     # redeliver the whole table: the anti-join must make it a no-op
     sink(emb, batch_id=-1)
     redelivery_noop = ledger[-1] == 0
 
-    probe_id = int(b["mx"])
+    probe_id = b["mx"]
     probe = emb.where(F.col("vec_id") == probe_id).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     pcid = int(assign_clusters(probe, cents).first()["cid"])
     probe_vec = probe.select(F.col("e").alias("pe"))
     cands = (
-        spark.read.parquet(os.path.join(assign_dir, f"cid={pcid}"))
+        spark.read.schema(ids)
+        .parquet(os.path.join(assign_dir, f"cid={pcid}"))
         .where(F.col("vec_id") != probe_id)
         .select("vec_id")
         .join(emb, "vec_id")

@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.streaming.sources import stream_table
@@ -596,6 +597,12 @@ class IncrementalMV:
     current version AND the last-merged ``batch_id``; a replayed batch id
     is skipped, and a crash mid-write leaves only orphan version dirs that
     the manifest never references (re-merge reads the old versions).
+
+    The manifest also records the snapshot ``schema``, and every read of
+    a bucket version goes through `_read` with it: the engine wrote those
+    files, so a schema-less read (one footer-inference job per call) would
+    only re-derive what is already known. A manifest written without the
+    field falls back to inference until the next merge records it.
     """
 
     def __init__(
@@ -632,6 +639,8 @@ class IncrementalMV:
         #: bucket id -> current committed version (1-based); manifest mirror
         self._buckets: dict[int, int] = {}
         self._last_batch_id: int | None = None
+        #: the bucket files' schema (manifest mirror; None until known)
+        self._schema: StructType | None = None
         if os.path.isfile(self._manifest_path()):
             # a restarted process resumes from the last committed manifest —
             # the state the reference loses on restart, kept durable here
@@ -649,6 +658,8 @@ class IncrementalMV:
                     )
             self._last_batch_id = m["last_batch_id"]
             self._buckets = {int(b): v for b, v in m["buckets"].items()}
+            if "schema" in m:
+                self._schema = StructType.fromJson(m["schema"])
 
     # -- layout helpers ----------------------------------------------------
     def _bucket_dir(self, b: int, v: int) -> str:
@@ -673,6 +684,7 @@ class IncrementalMV:
                     "buckets": {str(b): v for b, v in self._buckets.items()},
                     "n_buckets": self.n_buckets,
                     "key_col": self.key_col,
+                    "schema": self._schema.jsonValue(),
                 },
                 fh,
             )
@@ -688,6 +700,15 @@ class IncrementalMV:
                     hist, f"m{self._last_batch_id:012d}.json"
                 ),
             )
+
+    def _read(self, dirs: list[str]):
+        """Bucket-version dirs as one frame, read with the manifest's
+        schema when it records one (no inference job), inferred
+        otherwise. The only reader of bucket versions."""
+        reader = self.spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
+        return reader.parquet(*dirs)
 
     def _bucket_expr(self):
         from pyspark.sql import functions as F
@@ -753,7 +774,7 @@ class IncrementalMV:
         ]
         snap = None
         if prior:
-            snap = self.spark.read.parquet(*prior).drop("bucket")
+            snap = self._read(prior).drop("bucket")
             merged = self._merge(
                 snap, partial.drop("bucket")
             ).withColumn("bucket", self._bucket_expr())
@@ -765,12 +786,17 @@ class IncrementalMV:
             merged = merged.persist()
         # one job writes every touched bucket into a staging dir; the
         # hive-style bucket=<b> subdirs then slot in as new versions.
-        # Repartition BY BUCKET first: each bucket then lands in exactly
-        # one task → one file per bucket version, instead of
-        # shuffle-partition-count tiny files per bucket
+        # Hash-repartition BY BUCKET first: each bucket then lands in
+        # exactly one task → one file per bucket version, instead of
+        # shuffle-partition-count tiny files per bucket. One task per core
+        # is enough for that — n_buckets tasks would mostly queue behind
+        # each other to write a handful of rows each
         stage = os.path.join(self._root, f"_stage_{batch_id}")
+        write_tasks = min(
+            self.n_buckets, self.spark.sparkContext.defaultParallelism
+        )
         (
-            merged.repartition(self.n_buckets, "bucket")
+            merged.repartition(write_tasks, "bucket")
             .write.partitionBy("bucket")
             .mode("overwrite")
             .parquet(stage)
@@ -797,6 +823,7 @@ class IncrementalMV:
             os.rename(src_dir, dst)
             self._buckets[b] = new_v
         self._last_batch_id = batch_id
+        self._schema = merged.drop("bucket").schema
         self._commit_manifest()
         # only after the commit is durable, drop superseded versions —
         # unless history is retained for time travel (then a past
@@ -1110,9 +1137,7 @@ class IncrementalMV:
             return local_frame(
                 self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
             )
-        return self.spark.read.parquet(*dirs).join(
-            F.broadcast(key_df), join_cols
-        )
+        return self._read(dirs).join(F.broadcast(key_df), join_cols)
 
     def _history_manifests(self) -> list[dict]:
         """All archived manifests (retain_history mode), oldest first."""
@@ -1158,7 +1183,7 @@ class IncrementalMV:
             self._bucket_dir(int(b), v)
             for b, v in chosen["buckets"].items()
         ]
-        return self.spark.read.parquet(*dirs)
+        return self._read(dirs)
 
     #: overridden where the key is composite or non-long
     _EMPTY_KEY_SCHEMA: str | None = None
@@ -1170,7 +1195,7 @@ class IncrementalMV:
             return local_frame(
                 self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
             )
-        return self.spark.read.parquet(*dirs)
+        return self._read(dirs)
 
 
 class PresenceMV(IncrementalMV):
