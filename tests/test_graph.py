@@ -291,24 +291,33 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     """Guard: every list-built frame in the package goes through
     `session.local_frame` (one slice; `createDataFrame(list)` spreads
     rows over one slice per core and a one-task write then reads them
-    all in turn), and only `graph._release` may touch persisted RDDs —
-    no global before/after diffs of `getPersistentRDDs`."""
+    all in turn), only `graph._release` may touch persisted RDDs — no
+    global before/after diffs of `getPersistentRDDs` — and only
+    `session.get_spark` and `pipeline.state_partitions` (state store
+    sizing) name ``spark.sql.shuffle.partitions``."""
     import ast
     import pathlib
 
-    owner = {"createDataFrame": "local_frame", "getPersistentRDDs": "_release"}
+    owner = {
+        "createDataFrame": {"local_frame"},
+        "getPersistentRDDs": {"_release"},
+        "spark.sql.shuffle.partitions": {"get_spark", "state_partitions"},
+    }
     root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
     bad = []
 
     def visit(node, path, scope):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             scope = scope + (node.name,)
-        if (
-            isinstance(node, ast.Attribute)
-            and node.attr in owner
-            and owner[node.attr] not in scope
+        name = (
+            node.attr if isinstance(node, ast.Attribute)
+            else node.value if isinstance(node, ast.Constant)
+            else None
+        )
+        if isinstance(name, str) and name in owner and not (
+            owner[name] & set(scope)
         ):
-            bad.append(f"{path.name}:{node.lineno} {node.attr}")
+            bad.append(f"{path.name}:{node.lineno} {name}")
         for child in ast.iter_child_nodes(node):
             visit(child, path, scope)
 

@@ -512,9 +512,10 @@ def _count_micro_batches(spark, fb):
 def test_feedback_job_budget_per_micro_batch(spark, tmp_path):
     """Each leaderboard micro-batch runs the stateful plan ONCE: the
     foreachBatch frame is RDD-backed, so every extra action on it re-runs
-    the state-store stage. A data micro-batch may submit at most 2 jobs
-    (the cut collect, which also observes the frontier, plus the
-    driver-built WAL append), a no-data micro-batch at most 1."""
+    the state-store stage. A data micro-batch may submit at most 1 job
+    (the cut collect, which also observes the frontier) and appends
+    exactly one WAL file, which the driver writes without a job; a
+    no-data micro-batch submits at most 1 job."""
     full = str(tmp_path / "full")
     _split_events(spark, full, n_chunks=4)
     ck = str(tmp_path / "ck")
@@ -526,10 +527,10 @@ def test_feedback_job_budget_per_micro_batch(spark, tmp_path):
     calls = _count_micro_batches(spark, fb)
     fb.run_leaderboard()
     assert fb.snapshot
-    data = [jobs for jobs, appended in calls if appended]
+    data = [(jobs, appended) for jobs, appended in calls if appended]
     idle = [jobs for jobs, appended in calls if not appended]
-    assert len(data) == 4, calls  # one WAL file per data micro-batch
-    assert all(jobs <= 2 for jobs in data), calls
+    assert len(data) == 4, calls
+    assert all(jobs <= 1 and appended == 1 for jobs, appended in data), calls
     assert all(jobs <= 1 for jobs in idle), calls
 
 
@@ -646,6 +647,249 @@ def test_feedback_filter_key_col_user_id(spark):
     assert [(f.name, f.dataType) for f in out.schema.fields] == expected
     assert out.count() > 0
     assert {r["user_id"] for r in out.collect()} <= set(fb.snapshot)
+
+
+def _restart_runs(spark, tmp_path, files, name, between=None, **kw):
+    """Run the leaderboard on the first half of ``files`` with a
+    checkpoint, call ``between(first_instance)``, then restart a FRESH
+    instance on the same checkpoint after the rest arrived. Returns both
+    instances."""
+    import shutil
+
+    grow = tmp_path / f"{name}-grow"
+    grow.mkdir()
+    half = len(files) // 2
+    for f in files[:half]:
+        shutil.copy2(f, grow)
+    args = dict(
+        key_col="event_type", n=3, src_path=str(grow),
+        checkpoint_dir=str(tmp_path / f"{name}-ck"), max_files_per_trigger=1,
+    )
+    args.update(kw)
+    fb1 = TopNFeedback(spark, SF_DIR, **args)
+    fb1.run_leaderboard()
+    if between is not None:
+        between(fb1)
+    for f in files[half:]:
+        shutil.copy2(f, grow)
+    fb2 = TopNFeedback(spark, SF_DIR, **args)
+    assert fb2.snapshot == fb1.snapshot  # restored, not cold-started
+    fb2.run_leaderboard()
+    return fb1, fb2
+
+
+def _state_versions(ck):
+    """partition id -> highest committed ``.delta`` version of the
+    leaderboard's aggregation state."""
+    import os
+    import re
+
+    root = ck + "/leaderboard/state/0"
+    return {
+        int(p): max(
+            int(m.group(1))
+            for f in os.listdir(os.path.join(root, p))
+            if (m := re.fullmatch(r"(\d+)\.delta", f))
+        )
+        for p in os.listdir(root)
+        if p.isdigit()
+    }
+
+
+def test_feedback_state_partitions_per_task_slot(spark, tmp_path, monkeypatch):
+    """The leaderboard's state store gets one partition per task slot, at
+    most 8 (`state_partitions`). A checkpoint built under 8 partitions
+    resumes under that rule with its own 8 — Spark reuses the count its
+    offset log recorded — and gives the same snapshot and KV as an
+    uninterrupted run."""
+    import contextlib
+
+    from twitter_flink_spark.streaming import pipeline
+
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=4)
+    baseline = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3, src_path=full,
+        checkpoint_dir=str(tmp_path / "ck0"), max_files_per_trigger=1,
+    )
+    baseline.run_leaderboard()
+    slots = min(8, spark.sparkContext.defaultParallelism)
+    assert len(_state_versions(baseline.checkpoint_dir)) == slots
+
+    real = pipeline.state_partitions
+
+    @contextlib.contextmanager
+    def eight(session):  # the sizing before one-partition-per-slot
+        with real(session):
+            session.conf.set("spark.sql.shuffle.partitions", "8")
+            yield
+
+    before = {}
+
+    def back_to_real(fb1):
+        before.update(_state_versions(fb1.checkpoint_dir))
+        monkeypatch.setattr(pipeline, "state_partitions", real)
+
+    monkeypatch.setattr(pipeline, "state_partitions", eight)
+    _, fb2 = _restart_runs(spark, tmp_path, files, "eight", back_to_real)
+    assert len(before) == 8
+    after = _state_versions(fb2.checkpoint_dir)
+    assert set(after) == set(before)  # all 8 resumed, none added
+    assert len(set(after.values())) == 1  # ... and every one committed
+    assert min(after.values()) > max(before.values())
+    assert fb2.snapshot == baseline.snapshot
+    assert fb2.kv.data == baseline.kv.data
+
+
+def _log_micros(spark, log_dir):
+    """The counts log as (window_start, window_end, key, cnt, max_ts)
+    tuples, timestamps as UTC micros read by Spark — independent of the
+    driver's local time zone."""
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(log_dir).select(
+            F.unix_micros("window_start"), F.unix_micros("window_end"),
+            "event_type", "cnt", F.unix_micros("max_ts"),
+        ).collect()
+    )
+
+
+def test_feedback_log_ignores_stranded_tmp(spark, tmp_path):
+    """The driver writes each WAL file hidden (``.part-*.parquet.tmp``)
+    and renames it into place; a crash mid-write strands the hidden file.
+    Neither `_restore` nor Spark's listing may read it: a log holding only
+    a stranded file cold-starts, and one beside committed files restores
+    the committed state."""
+    import os
+    import uuid
+
+    ck = str(tmp_path / "ck")
+    os.makedirs(ck + "/counts_log")
+    stray = f"/counts_log/.part-{uuid.uuid4()}.parquet.tmp"
+    with open(ck + stray, "wb") as f:
+        f.write(b"not a parquet file")  # read, it would raise
+    fb = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3, checkpoint_dir=ck,
+    )
+    assert fb.snapshot == [] and not fb._top
+
+    full = str(tmp_path / "full")
+    _split_events(spark, full, n_chunks=2)
+    ck2 = str(tmp_path / "ck2")
+    fb1 = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3,
+        src_path=full, checkpoint_dir=ck2, compact_every=None,
+    )
+    fb1.run_leaderboard()
+    parts = _log_parts(fb1._log_dir)
+    with open(ck2 + stray, "wb") as f:
+        f.write(b"not a parquet file")
+    assert _log_parts(fb1._log_dir) == parts
+    fb2 = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3,
+        src_path=full, checkpoint_dir=ck2,
+    )
+    assert fb2.snapshot == fb1.snapshot and fb2._top == fb1._top
+
+
+def test_feedback_restores_mixed_spark_and_driver_log(spark, tmp_path):
+    """A log written by an older version holds Spark-written files (INT96
+    timestamps, ``part-00000-<uuid>-c000.snappy.parquet``); new batches
+    append driver-written ones (INT64 micros). A log mixing both restores
+    to the same mirror as the same log written by the driver alone."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from twitter_flink_spark.session import local_frame
+
+    full = str(tmp_path / "full")
+    _split_events(spark, full, n_chunks=4)
+    fb = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3, src_path=full,
+        checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1,
+        compact_every=None,
+    )
+    fb.run_leaderboard()
+    mixed = str(tmp_path / "mixed")
+    shutil.copytree(fb._log_dir, mixed + "/counts_log")
+    log = mixed + "/counts_log"
+    driver_files = sorted(f for f in os.listdir(log) if f.endswith(".parquet"))
+    assert len(driver_files) == 4
+    for f in driver_files[:2]:  # rewrite half as the older version did
+        df = spark.read.parquet(os.path.join(log, f))
+        rows, schema = df.collect(), df.schema
+        os.remove(os.path.join(log, f))
+        local_frame(spark, rows, schema).write.mode("append").parquet(log)
+    spark_files = [f for f in os.listdir(log) if f.endswith(".snappy.parquet")]
+    assert len(spark_files) == 2
+    physical = {
+        name: pq.ParquetFile(os.path.join(log, name)).metadata.schema.column(
+            0
+        ).physical_type
+        for name in spark_files + driver_files[2:]
+    }
+    assert sorted(physical.values()) == ["INT64", "INT64", "INT96", "INT96"]
+
+    restored = [
+        TopNFeedback(
+            spark, SF_DIR, key_col="event_type", n=3, src_path=full,
+            checkpoint_dir=ck, max_files_per_trigger=1,
+        )
+        for ck in (fb.checkpoint_dir, mixed)
+    ]
+    assert restored[0]._top == restored[1]._top
+    assert restored[0]._max_ts == restored[1]._max_ts
+    assert restored[0].snapshot == restored[1].snapshot == fb.snapshot
+    assert restored[0].kv.data == restored[1].kv.data == fb.kv.data
+
+
+def test_feedback_restart_non_utc_local_time(spark, tmp_path, monkeypatch):
+    """The driver converts collected timestamps (naive, in the Python
+    process's local time zone) back to UTC micros for the WAL. Under a
+    non-UTC ``TZ`` the log and a restarted run must equal the UTC ones."""
+    import time
+
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=4)
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            monkeypatch.setenv("TZ", tz)
+            time.tzset()
+            logs = []
+            fb1, fb2 = _restart_runs(
+                spark, tmp_path, files, tz.replace("/", "-"),
+                lambda fb: logs.append(_log_micros(spark, fb._log_dir)),
+                compact_every=None,
+            )
+            logs.append(_log_micros(spark, fb2._log_dir))
+            out[tz] = (logs, fb1.snapshot, fb2.snapshot, fb2.kv.data)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert out["UTC"][0][0] and out["UTC"][2]
+    assert out["America/New_York"] == out["UTC"]
+
+
+def test_feedback_restart_key_col_user_id(spark, tmp_path):
+    """A non-string key_col: the WAL logs user_id with the type it
+    streams with, and a restart equals an uninterrupted run."""
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=4)
+    baseline = TopNFeedback(
+        spark, SF_DIR, key_col="user_id", n=3, src_path=full,
+        max_files_per_trigger=1,
+    )
+    baseline.run_leaderboard()
+    assert baseline.snapshot
+    _, fb2 = _restart_runs(spark, tmp_path, files, "uid", key_col="user_id")
+    assert fb2.snapshot == baseline.snapshot
+    assert fb2.kv.data == baseline.kv.data
+    src = load_table(spark, SF_DIR, "events")
+    logged = spark.read.parquet(fb2._log_dir).schema["user_id"].dataType
+    assert logged == src.schema["user_id"].dataType
 
 
 # ---------------------------------------------------------------------------

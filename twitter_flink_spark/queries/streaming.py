@@ -24,6 +24,7 @@ from twitter_flink_spark.streaming.pipeline import (
     TopNFeedback,
     await_or_raise,
     run_to_memory,
+    state_partitions,
     windowed_stream_counts,
 )
 from twitter_flink_spark.streaming.sources import stream_table
@@ -1934,13 +1935,11 @@ def streaming_watermark_frontier(
         .groupBy(F.window("ts", "60 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # size the stream's state like run_to_memory does (8 instances, not
-    # the session's 32): 3 micro-batches x 32 state-store commits was
-    # this query's whole cost, and the frontier telemetry it returns is
+    # state sized by state_partitions, not the session's 32 shuffle
+    # partitions: 3 micro-batches x 32 state-store commits was this
+    # query's whole cost, and the frontier telemetry it returns is
     # partitioning-independent
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with state_partitions(spark):
         q = (
             agg.writeStream.format("noop")
             .outputMode("append")
@@ -1950,8 +1949,6 @@ def streaming_watermark_frontier(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     await_or_raise(q, 300)
     seen = []
     for prog in q.recentProgress:

@@ -31,6 +31,7 @@ reference's `String[] topN`.
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -123,26 +124,40 @@ def windowed_stream_counts(
     )
 
 
-def run_to_memory(stream_df: DataFrame, output_mode: str = "append",
-                  timeout_s: int = 300,
-                  state_partitions: int | None = 8) -> DataFrame:
-    """Run a finite stream to completion (availableNow) into a uniquely-named
-    memory sink; return the materialized result as a DataFrame.
+@contextmanager
+def state_partitions(spark: SparkSession):
+    """Size the state store of the streams started inside the block: one
+    partition (= state store instance) per task slot, at most 8.
 
-    ``state_partitions`` sizes the stream's shuffle (= state store instance
-    count): unlike batch shuffles, streaming state partitioning should track
-    STATE size — live (window x key) rows bounded by watermark eviction —
-    not input size, and each instance pays fixed load/commit/maintenance
-    cost per micro-batch. The default (8) fits the fixtures' <=200 k state
-    rows; pass None to inherit the session's shuffle partitions (what a
-    production job sized for wide state would do). Set only for the stream's
-    own planning, then restored."""
+    Unlike batch shuffles, streaming state partitioning should track STATE
+    size — live (window x key) rows bounded by watermark eviction — not
+    input size, and each instance pays a fixed load/commit cost per
+    micro-batch (a ``.delta`` file and a checkpoint checksum file): more
+    instances than task slots only add task waves. Eight fit the
+    fixtures' <=200 k state rows. Spark records the count in the
+    checkpoint's offset log and reuses it on restart, so a checkpoint
+    built under another count resumes unchanged. Only the queries'
+    ``start()`` should run inside the block; the session's shuffle
+    partitions are restored on exit."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(8, spark.sparkContext.defaultParallelism)),
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_to_memory(stream_df: DataFrame, output_mode: str = "append",
+                  timeout_s: int = 300) -> DataFrame:
+    """Run a finite stream to completion (availableNow) into a uniquely-named
+    memory sink, its state sized by `state_partitions`; return the
+    materialized result as a DataFrame."""
     spark = stream_df.sparkSession
     name = f"tfs_mem_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with state_partitions(spark):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -150,8 +165,6 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "append",
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     await_or_raise(q, timeout_s)
     return spark.table(name)
 
@@ -305,8 +318,9 @@ class TopNFeedback:
         if not os.path.isdir(self._log_dir):
             return
         # A crash can leave the log dir existing but with NO committed
-        # parquet part files (only a _temporary dir from the first WAL
-        # write): that exact condition is a recoverable cold start. It is
+        # parquet part files (only a hidden .part-*.parquet.tmp from the
+        # first WAL write, or a _temporary dir from a log Spark wrote):
+        # that exact condition is a recoverable cold start. It is
         # detected explicitly — any other read failure (corrupt footer,
         # schema conflict, IO error) propagates, because silently cold-
         # starting on those would serve wrong snapshots with no error.
@@ -368,25 +382,51 @@ class TopNFeedback:
         )
         return top, frontier
 
-    def _log_frame(self, entries, frontier) -> DataFrame:
-        """WAL rows built on the driver from ``(window_start, window_end,
-        key, cnt)`` entries, ``max_ts`` set to ``frontier``, typed by the
-        log's own schema (the column order `windowed_stream_counts` fixes;
-        a non-string key_col logs exactly the type it streams with)."""
-        return local_frame(
-            self.spark, [(*e, frontier) for e in entries], self._log_schema
+    def _write_log(self, entries, frontier, dest_dir: str) -> None:
+        """Write WAL rows — ``(window_start, window_end, key, cnt)``
+        entries, ``max_ts`` set to ``frontier`` — into ``dest_dir`` as ONE
+        parquet file, from the driver, with no Spark job: the rows are
+        already here and the log dir is driver-local (the way Spark writes
+        its own offset and commit logs). Typed by the log's own schema
+        (the column order `windowed_stream_counts` fixes; a non-string
+        key_col logs exactly the type it streams with). Values go through
+        each type's ``toInternal`` — the inverse of what ``collect()``
+        applied — so timestamps land as UTC micros whatever the driver's
+        local time zone. The file is written hidden and renamed into
+        place: readers (Spark's listing, `_restore`) skip dot files, so a
+        crash mid-write leaves nothing they read."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._log_schema)
+        rows = [(*e, frontier) for e in entries]
+        table = pa.Table.from_arrays(
+            [
+                pa.array([f.dataType.toInternal(r[i]) for r in rows],
+                         type=schema.field(i).type)
+                for i, f in enumerate(self._log_schema.fields)
+            ],
+            schema=schema,
         )
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(dest_dir, f".{name}.tmp")
+        os.makedirs(dest_dir, exist_ok=True)
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(dest_dir, name))
 
     def _compact_log(self) -> None:
         """Rewrite the append-only counts log to the driver mirror: after
         `_recompute_snapshot` it holds exactly open windows ∪ {last closed},
         <= n keys each — the row set `_live_top` would derive from the log
         (monotone-count argument in `_merge`) — so compaction is one
-        driver-built write with ``max_ts`` = the mirror's frontier, no
-        re-read of the log. Crash-safe without a manifest: the old
-        generation moves aside to ``.gc`` before the compacted one takes
-        its place, and ``_restore`` re-adopts a stranded ``.gc`` dir — at
-        worst a crash costs one compaction, never the log."""
+        driver-written file (`_write_log`, ``max_ts`` = the mirror's
+        frontier) and no re-read of the log. Crash-safe without a manifest:
+        the old generation moves aside to ``.gc`` before the compacted one
+        takes its place, and ``_restore`` re-adopts a stranded ``.gc`` dir
+        — at worst a crash costs one compaction, never the log."""
         import shutil
 
         from twitter_flink_spark.operators.skipping import _replace_dir
@@ -398,9 +438,7 @@ class TopNFeedback:
         ]
         tmp = self._log_dir + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        self._log_frame(entries, self._max_ts).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        self._write_log(entries, self._max_ts, tmp)
         # pointer swap (symlink renamed in one atomic step): a reader —
         # or a restore racing this compaction — sees the old or the new
         # log at every instant, never a missing dir
@@ -453,12 +491,11 @@ class TopNFeedback:
             # (at-least-once) and _restore's max(cnt) dedups. max_ts is the
             # BATCH frontier: the per-row max could sit on a cut-away row,
             # and _restore needs the true watermark. The <= windows x n rows
-            # are already on the driver, so the append is one driver-built
-            # file, not a second pass over the batch.
+            # are already on the driver, so the append is one file the
+            # driver writes itself: no Spark job, no second pass over the
+            # batch.
             self._log_schema = batch_df.schema
-            self._log_frame(entries, frontier).write.mode("append").parquet(
-                self._log_dir
-            )
+            self._write_log(entries, frontier, self._log_dir)
         for e in entries:
             self._merge(*e)
         if self._max_ts is None or frontier > self._max_ts:
@@ -516,10 +553,7 @@ class TopNFeedback:
             src, key_cols=(self.key_col,), with_max_ts=True,
             watermark=f"{self.watermark_s} second",
         )
-        # same state-partition sizing rationale as run_to_memory
-        prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with state_partitions(self.spark):
             writer = (
                 agg.writeStream.outputMode("update")
                 .foreachBatch(self._update_leaderboard)
@@ -530,8 +564,6 @@ class TopNFeedback:
                     "checkpointLocation", self.checkpoint_dir + "/leaderboard"
                 )
             q = writer.start()
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev)
         await_or_raise(q, timeout_s)
 
     # -- filter side (reference O10-O12) --
