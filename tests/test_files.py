@@ -1633,17 +1633,17 @@ def test_replace_dir_pointer_swap_atomic(tmp_path):
     step — dest exists (and resolves to a complete generation) at every
     instant, fixing the between-renames window the old rename-aside
     dance had. Legacy real-dir dests migrate on first commit; superseded
-    generations survive a reader grace; ``_rm_committed`` removes both
+    generations survive a reader grace; ``rm_committed`` removes both
     pointer and generation."""
     import time
 
-    from twitter_flink_spark.operators import skipping as sk
+    from twitter_flink_spark import commit as sk
 
     dest = str(tmp_path / "man")
     g1 = str(tmp_path / "g1")
     os.makedirs(g1)
     open(os.path.join(g1, "a"), "w").write("1")
-    sk._replace_dir(g1, dest)
+    sk.replace_dir(g1, dest)
     assert os.path.islink(dest)
     assert open(os.path.join(dest, "a")).read() == "1"
     target1 = os.path.realpath(dest)
@@ -1651,16 +1651,16 @@ def test_replace_dir_pointer_swap_atomic(tmp_path):
     g2 = str(tmp_path / "g2")
     os.makedirs(g2)
     open(os.path.join(g2, "a"), "w").write("2")
-    sk._replace_dir(g2, dest)
+    sk.replace_dir(g2, dest)
     assert os.path.islink(dest)
     assert open(os.path.join(dest, "a")).read() == "2"
     # the superseded generation outlives the swap (reader grace): a scan
     # that resolved the pointer just before the commit can finish
     assert os.path.isdir(target1)
     # ...and is swept once aged past the grace
-    past = time.time() - sk._GEN_GRACE_S - 5
+    past = time.time() - sk.GEN_GRACE_S - 5
     os.utime(target1, (past, past))
-    sk._sweep_gens(dest)
+    sk.sweep_gens(dest)
     assert not os.path.isdir(target1)
     assert open(os.path.join(dest, "a")).read() == "2"  # current untouched
 
@@ -1671,13 +1671,13 @@ def test_replace_dir_pointer_swap_atomic(tmp_path):
     g3 = str(tmp_path / "g3")
     os.makedirs(g3)
     open(os.path.join(g3, "a"), "w").write("3")
-    sk._replace_dir(g3, legacy)
+    sk.replace_dir(g3, legacy)
     assert os.path.islink(legacy)
     assert open(os.path.join(legacy, "a")).read() == "3"
 
     # removal of a committed dest drops pointer AND generation
     gen = os.path.realpath(dest)
-    sk._rm_committed(dest)
+    sk.rm_committed(dest)
     assert not os.path.lexists(dest) and not os.path.isdir(gen)
 
 
@@ -1687,7 +1687,7 @@ def test_scratch_sweep_gated_on_dead_pid(tmp_path):
     long manifest write) is never rmtree'd from under it."""
     import time
 
-    from twitter_flink_spark.operators import skipping as sk
+    from twitter_flink_spark import commit as sk
 
     dest = str(tmp_path / "man")
     old = time.time() - 7200
@@ -1698,7 +1698,7 @@ def test_scratch_sweep_gated_on_dead_pid(tmp_path):
     dead = f"{dest}.tmp-99999999-1"
     os.makedirs(dead)
     os.utime(dead, (old, old))
-    sk._scratch_name(dest, "tmp")
+    sk.scratch_name(dest, "tmp")
     assert os.path.isdir(live), "live committer's scratch must survive"
     assert not os.path.isdir(dead), "dead pid's stale scratch is swept"
 
@@ -1799,13 +1799,13 @@ def test_replace_dir_concurrent_reader_never_sees_missing(tmp_path):
     import sys
     import time
 
-    from twitter_flink_spark.operators import skipping as sk
+    from twitter_flink_spark import commit as sk
 
     dest = str(tmp_path / "man")
     g0 = str(tmp_path / "g0")
     os.makedirs(g0)
     open(os.path.join(g0, "payload"), "w").write("gen-0")
-    sk._replace_dir(g0, dest)
+    sk.replace_dir(g0, dest)
 
     writer = subprocess.Popen(
         [
@@ -1813,7 +1813,7 @@ def test_replace_dir_concurrent_reader_never_sees_missing(tmp_path):
             "-c",
             f"""
 import os, time
-from twitter_flink_spark.operators import skipping as sk
+from twitter_flink_spark import commit as sk
 dest = {dest!r}
 deadline = time.monotonic() + 6
 i = 0
@@ -1822,7 +1822,7 @@ while time.monotonic() < deadline:
     g = dest + f".next-{{i}}"
     os.makedirs(g)
     open(os.path.join(g, "payload"), "w").write(f"gen-{{i}}")
-    sk._replace_dir(g, dest)
+    sk.replace_dir(g, dest)
 print(i)
 """,
         ],
@@ -1853,30 +1853,30 @@ def test_pin_generation_survives_post_grace_sweep(tmp_path):
     delete it; dead-pid pins are litter the sweeper clears."""
     import time
 
-    from twitter_flink_spark.operators import skipping as sk
+    from twitter_flink_spark import commit as sk
 
     dest = str(tmp_path / "man")
     g1 = str(tmp_path / "g1")
     os.makedirs(g1)
     open(os.path.join(g1, "a"), "w").write("1")
-    sk._replace_dir(g1, dest)
+    sk.replace_dir(g1, dest)
 
     with sk.pin_generation(dest) as snap:
         assert open(os.path.join(snap, "a")).read() == "1"
         g2 = str(tmp_path / "g2")
         os.makedirs(g2)
         open(os.path.join(g2, "a"), "w").write("2")
-        sk._replace_dir(g2, dest)  # concurrent commit mid-scan
+        sk.replace_dir(g2, dest)  # concurrent commit mid-scan
         # age the pinned generation well past the grace and sweep
-        past = time.time() - sk._GEN_GRACE_S - 5
+        past = time.time() - sk.GEN_GRACE_S - 5
         os.utime(snap, (past, past))
-        sk._sweep_gens(dest)
+        sk.sweep_gens(dest)
         assert os.path.isdir(snap)  # pin held it
         assert open(os.path.join(snap, "a")).read() == "1"  # snapshot
         assert open(os.path.join(dest, "a")).read() == "2"  # new current
     # pin released: the next sweep reclaims it
     os.utime(snap, (past, past))
-    sk._sweep_gens(dest)
+    sk.sweep_gens(dest)
     assert not os.path.isdir(snap)
 
     # a pin whose reader died is litter: swept, generation reclaimed
@@ -1885,9 +1885,9 @@ def test_pin_generation_survives_post_grace_sweep(tmp_path):
     g4 = str(tmp_path / "g4")
     os.makedirs(g4)
     open(os.path.join(g4, "a"), "w").write("3")
-    sk._replace_dir(g4, dest)
+    sk.replace_dir(g4, dest)
     os.utime(g3, (past, past))
-    sk._sweep_gens(dest)
+    sk.sweep_gens(dest)
     assert not os.path.isdir(g3)
     assert not os.path.exists(f"{g3}.pin-99999999-1")
 
@@ -1909,6 +1909,7 @@ def test_parent_histogram_orders_thin_slice_first(spark, tmp_path):
     selection."""
     from pyspark.sql import functions as F
 
+    from twitter_flink_spark.commit import commit_swap
     from twitter_flink_spark.operators import skipping
 
     root = str(tmp_path / "tbl")
@@ -1970,7 +1971,7 @@ def test_parent_histogram_orders_thin_slice_first(spark, tmp_path):
     # legacy parents (written before histograms) fall back to the
     # count bound — consult still works, estimate == bound
     legacy = spark.read.parquet(parent).drop("hist_min", "hist_max")
-    skipping._commit_swap(legacy, parent)
+    commit_swap(legacy, parent)
     plan = {}
     paths, _, _ = skipping.select_files_multi(
         spark, root, [("zslice", 0, 100)], plan_out=plan
@@ -2588,7 +2589,7 @@ def test_compact_table_reader_snapshot_across_swap(spark, tmp_path):
     import os
     import time
 
-    from twitter_flink_spark.operators import skipping as sk
+    from twitter_flink_spark import commit as sk
     from twitter_flink_spark.operators.compaction import compact_table
     from twitter_flink_spark.operators.skipping import _norm_path
     from twitter_flink_spark.sources.tables import load_table
@@ -2626,9 +2627,9 @@ def test_compact_table_reader_snapshot_across_swap(spark, tmp_path):
         assert ng >= 1 and na < nb
         # pinned snapshot: same files, full pre-compact row count, even
         # after a commit + aged sweep lands mid-scan
-        past = time.time() - sk._GEN_GRACE_S - 5
+        past = time.time() - sk.GEN_GRACE_S - 5
         os.utime(snap, (past, past))
-        sk._sweep_gens(t)
+        sk.sweep_gens(t)
         assert sorted(
             f for f in os.listdir(snap) if f.endswith(".parquet")
         ) == files_in_snap

@@ -80,9 +80,9 @@ def test_incremental_index_recovers_torn_append(spark, tmp_path):
     # keep the segmented layout — this simulates a torn MOVE, not a
     # legacy index; seg rides along as the partition column
     kept.write.partitionBy("seg").mode("overwrite").parquet(tmp)
-    from twitter_flink_spark.operators.skipping import _rm_committed
+    from twitter_flink_spark.commit import rm_committed
 
-    _rm_committed(idx)  # the committed dest is a pointer symlink
+    rm_committed(idx)  # the committed dest is a pointer symlink
     os.rename(tmp, idx)
     torn = spark.read.parquet(idx)
     assert torn.where(F.col("doc_id") == victim).count() == 1
@@ -323,9 +323,9 @@ def test_legacy_index_backfills_markers_once(spark, tmp_path):
     )
     tmp = idx + ".rewrite"
     legacy.write.mode("overwrite").parquet(tmp)
-    from twitter_flink_spark.operators.skipping import _rm_committed
+    from twitter_flink_spark.commit import rm_committed
 
-    _rm_committed(idx)
+    rm_committed(idx)
     os.rename(tmp, idx)
     band_rows_before = spark.read.parquet(idx).count()
 
@@ -430,9 +430,9 @@ def test_legacy_index_delete_uses_fallback_coverage(spark, tmp_path):
     )
     tmp = idx + ".rewrite"
     legacy.write.mode("overwrite").parquet(tmp)
-    from twitter_flink_spark.operators.skipping import _rm_committed
+    from twitter_flink_spark.commit import rm_committed
 
-    _rm_committed(idx)
+    rm_committed(idx)
     os.rename(tmp, idx)
 
     victim = int(docs.agg(F.min("doc_id")).first()[0])
@@ -571,7 +571,7 @@ def test_band_parallel_spreads_single_partition_losslessly(spark):
 
 
 def test_observed_count_zero_rows_only_for_missing_metrics(spark, tmp_path):
-    """`_observed_count` maps to 0 exactly the documented AQE case: an
+    """`observed_count` maps to 0 exactly the documented AQE case: an
     empty other side of a join lets empty-relation propagation replace
     the observed subtree, its CollectMetrics never runs and the metrics
     row has no fields (``Observation.get`` itself fails). Any other
@@ -580,7 +580,7 @@ def test_observed_count_zero_rows_only_for_missing_metrics(spark, tmp_path):
     import pytest
     from pyspark.sql import Observation
 
-    from twitter_flink_spark.operators.dedup import _observed_count
+    from twitter_flink_spark.commit import observed_count
 
     keys = spark.range(100).withColumnRenamed("id", "k")
     empty = spark.range(100).where("id > 1000").withColumnRenamed("id", "k")
@@ -593,19 +593,143 @@ def test_observed_count_zero_rows_only_for_missing_metrics(spark, tmp_path):
         ).write.parquet(str(tmp_path / "replaced"))
         with pytest.raises(Exception):
             obs.get  # the documented failure, reproduced
-        assert _observed_count(obs) == 0
+        assert observed_count(obs) == 0
 
         obs = Observation()
         keys.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(
             str(tmp_path / "present")
         )
-        assert _observed_count(obs) == 100
+        assert observed_count(obs) == 100
 
         obs = Observation()
         keys.observe(obs, F.count(F.lit(1)).alias("m")).write.parquet(
             str(tmp_path / "misnamed")
         )
         with pytest.raises(KeyError):
-            _observed_count(obs)
+            observed_count(obs)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+class _CrashAfter:
+    """Stands in for the ``os`` module inside `twitter_flink_spark.commit`:
+    the first ``k`` renames succeed and every later one raises — a crash
+    between two renames. Records the basenames it moved."""
+
+    def __init__(self, k: int):
+        self.k, self.moved = k, []
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    def rename(self, src, dst):
+        if len(self.moved) >= self.k:
+            raise OSError("injected crash")
+        os.rename(src, dst)
+        self.moved.append(os.path.basename(dst))
+
+
+def _pairs(spark, idx):
+    return sorted(
+        (r["doc_a"], r["doc_b"])
+        for r in lsh_index_candidates(spark, idx).collect()
+    )
+
+
+def test_update_crash_between_any_two_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `lsh_index_update` between two renames of its staged append
+    — at the first and the last band file, and at the first and the
+    last coverage-marker file — then re-run it: the index serves exactly
+    the candidate pairs of an uninterrupted update. Band files rename
+    before any marker (`commit.append_files` phase order), so a torn
+    append only ever leaves docs marker-less, which the re-run indexes
+    again."""
+    import shutil
+
+    import pytest
+
+    from twitter_flink_spark import commit
+
+    docs, split = _split_docs(spark)
+    base = str(tmp_path / "base")
+    lsh_index_build(spark, docs.where(F.col("doc_id") <= split), base)
+    new = docs.where(F.col("doc_id") > split)
+
+    def fresh(name: str) -> str:
+        d = str(tmp_path / name)
+        shutil.copytree(base, d)  # follows the pointer symlink
+        return d
+
+    clean = fresh("clean")
+    counting = _CrashAfter(1 << 30)
+    monkeypatch.setattr(commit, "os", counting)
+    n_clean = lsh_index_update(spark, new, clean)
+    monkeypatch.setattr(commit, "os", os)
+    want = _pairs(spark, clean)
+    n_bands = sum(m.startswith("inc-") for m in counting.moved)
+    n_all = len(counting.moved)
+    assert n_clean > 0 and 0 < n_bands < n_all
+    assert all(m.startswith("cov-") for m in counting.moved[n_bands:])
+
+    for k in sorted({0, n_bands - 1, n_bands, n_all - 1}):
+        idx = fresh(f"crash-{k}")
+        monkeypatch.setattr(commit, "os", _CrashAfter(k))
+        with pytest.raises(OSError, match="injected crash"):
+            lsh_index_update(spark, new, idx)
+        monkeypatch.setattr(commit, "os", os)
+        n_again = lsh_index_update(spark, new, idx)
+        # no marker landed: every new doc is re-indexed; some did: fewer
+        assert n_again == n_clean if k <= n_bands else 0 < n_again < n_clean
+        assert _pairs(spark, idx) == want, k
+
+
+def test_ivf_delete_crash_between_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """The IVF tombstone append shares the one mover: crash
+    `ivf_index_delete` at its first and its last tombstone file, re-run
+    it, and the tombstone set equals an uninterrupted delete's."""
+    import pytest
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators.ivf import (
+        ivf_index_delete,
+        ivf_tombstones,
+    )
+
+    def fresh(name: str) -> str:
+        d = str(tmp_path / name)
+        spark.range(400).select(
+            F.col("id").alias("vec_id"), (F.col("id") % 4).alias("cid")
+        ).write.partitionBy("cid").parquet(os.path.join(d, "_assign"))
+        return d
+
+    def tombs(d: str) -> list[int]:
+        return sorted(r["vec_id"] for r in ivf_tombstones(spark, d).collect())
+
+    # several tombstone files: one per shuffle partition of the delete
+    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        doomed = spark.range(0, 400, 3).withColumnRenamed("id", "vec_id")
+        clean = fresh("clean")
+        counting = _CrashAfter(1 << 30)
+        monkeypatch.setattr(commit, "os", counting)
+        n_clean = ivf_index_delete(spark, doomed, clean)
+        monkeypatch.setattr(commit, "os", os)
+        want = tombs(clean)
+        n_files = len(counting.moved)
+        assert n_clean == len(want) > 0 and n_files > 1
+
+        for k in (0, n_files - 1):
+            idx = fresh(f"crash-{k}")
+            monkeypatch.setattr(commit, "os", _CrashAfter(k))
+            with pytest.raises(OSError, match="injected crash"):
+                ivf_index_delete(spark, doomed, idx)
+            monkeypatch.setattr(commit, "os", os)
+            ivf_index_delete(spark, doomed, idx)
+            assert tombs(idx) == want, k
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)

@@ -502,17 +502,70 @@ def test_ivf_refit_on_drift_fires_heals_and_noops(spark, tmp_path):
 
     # 3. torn cutover: old centroids resurface under the new assignments
     good = os.path.join(idx, "_centroids")
-    from twitter_flink_spark.operators.skipping import _rm_committed
+    from twitter_flink_spark.commit import rm_committed
 
     shutil.rmtree(good + ".save", ignore_errors=True)
     shutil.copytree(good, good + ".save")  # follows the pointer symlink
-    _rm_committed(good)  # the committed dest is a pointer symlink
+    rm_committed(good)  # the committed dest is a pointer symlink
     # rebuild STALE centroids (the pre-refit fit) in place
     cents.coalesce(1).write.parquet(good)
     r4 = ivf_refit_on_drift(spark, idx, allv, threshold=1.5)
     assert r4["fired"] is True  # mixed generation reads as drift
     r5 = ivf_refit_on_drift(spark, idx, allv, threshold=1.5)
     assert r5["fired"] is False and abs(r5["ratio"] - 1.0) < 1e-9
+
+
+def test_ivf_full_refit_scratch_is_writer_unique(
+    spark, tmp_path, monkeypatch
+):
+    """`_ivf_full_refit` stages into pid/thread-unique scratch siblings
+    (`commit.scratch_name`), not fixed ones: refit B pauses with its
+    generation staged, refit A of the same index runs to completion
+    meanwhile — B's live scratch survives A, B then finishes with the
+    same (deterministic) result, and neither leaves scratch behind."""
+    import os
+    import threading
+
+    from twitter_flink_spark.operators import clustering
+
+    vecs = spark.range(0, 40).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *((F.col("id") % m).cast("double") for m in (3, 5, 7))
+        ).alias("embedding"),
+    )
+    idx = str(tmp_path / "idx")
+    os.makedirs(idx)
+    staged, resume = threading.Event(), threading.Event()
+    measure = clustering.assigned_mean_dist
+
+    def paused_measure(*args, **kwargs):
+        if threading.current_thread().name == "refit-b":
+            staged.set()  # B's assign + centroids are staged on disk
+            resume.wait(300)
+        return measure(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "assigned_mean_dist", paused_measure)
+    out = {}
+
+    def refit_b():
+        try:
+            out["b"] = clustering._ivf_full_refit(spark, idx, vecs, 3, 2)
+        except Exception as exc:  # noqa: BLE001
+            out["b"] = exc
+
+    b = threading.Thread(target=refit_b, name="refit-b")
+    b.start()
+    try:
+        assert staged.wait(300)
+        a = clustering._ivf_full_refit(spark, idx, vecs, 3, 2)
+    finally:
+        resume.set()
+        b.join(timeout=300)
+    assert not b.is_alive()
+    assert out["b"] == a
+    assert [e for e in os.listdir(idx) if ".tmp-" in e] == []
+    assert spark.read.parquet(os.path.join(idx, "_assign")).count() == 40
 
 
 def _labeled_embeddings_dir(spark, tmp_path, rows):

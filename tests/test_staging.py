@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+from twitter_flink_spark.commit import write_json
 from twitter_flink_spark.sources import staging
 
 
@@ -116,7 +117,7 @@ def test_stage_once_waits_for_young_unmarked_dest(tmp_path, monkeypatch):
 
     def commit_late():
         time.sleep(1.0)
-        staging._write_marker(
+        write_json(
             os.path.join(dest, staging.MARKER), {"late": True}
         )
 
@@ -141,7 +142,7 @@ def test_stage_once_heals_crashed_finalize_immediately(
     os.makedirs(dest)  # young: age alone would have said "await"
     with open(os.path.join(dest, "torn"), "w") as f:
         f.write("crashed mid-finalize")
-    staging._write_marker(
+    write_json(
         os.path.join(dest, staging.FINALIZING), {"pid": 99999999}
     )
 
@@ -261,3 +262,70 @@ def test_stage_once_records_build_outcomes(tmp_path, monkeypatch):
     monkeypatch.setattr(staging, "BUILD_OUTCOMES", {})
     staging.stage_once("outc", "/sf", build)
     assert staging.BUILD_OUTCOMES["outc"] == "cached"
+
+
+def test_build_id_changes_when_the_base_is_rebuilt(tmp_path, monkeypatch):
+    """`build_id` is stable while one build of a staged layout stands
+    and changes when the layout is rebuilt, so a sidecar staged under a
+    tag carrying it is staged afresh for the new build instead of
+    serving manifests that name the old build's files."""
+    import shutil
+    import time
+
+    _tag(tmp_path, monkeypatch)
+
+    def build(p):
+        open(os.path.join(p, "part-0.parquet"), "w").close()
+
+    base, _ = staging.stage_once("base", "/sf", build)
+    first = staging.build_id(base)
+    assert staging.stage_once("base", "/sf", build)[0] == base
+    assert staging.build_id(base) == first
+    shutil.rmtree(base)  # e.g. a crashed build replaced, or a new layout
+    time.sleep(0.05)
+    base, _ = staging.stage_once("base", "/sf", build)
+    assert staging.build_id(base) != first
+
+
+def test_write_json_concurrent_writers_never_tear(tmp_path):
+    """`commit.write_json` from more threads than cores to ONE path:
+    every read in between parses and equals one writer's whole payload
+    (each writer stages its own tmp file, so none truncates or moves
+    another's before its rename), no writer fails, and no tmp file is
+    left behind."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "marker.json")
+    payloads = [
+        {"writer": i, "pad": "x" * (1 << 16) * (i + 1)}
+        for i in range(2 * (os.cpu_count() or 4))
+    ]
+    write_json(path, payloads[0])
+    stop = threading.Event()
+    errors = []
+
+    def write(obj):
+        try:
+            while not stop.is_set():
+                write_json(path, obj)
+        except OSError as exc:  # another writer moved our tmp file away
+            errors.append(exc)
+
+    writers = [threading.Thread(target=write, args=(p,)) for p in payloads]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in writers:
+            t.start()
+        for _ in range(500):
+            with open(path) as f:
+                assert json.load(f) in payloads
+    finally:
+        stop.set()
+        for t in writers:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in writers)
+    assert errors == []
+    assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []

@@ -385,11 +385,13 @@ def _ivf_full_refit(
     index over assign -> centroids -> meta (each a tmp-write +
     rename-swap; a crash-torn mix measures as inflated drift/skew on
     the next run and the deterministic refit refires idempotently).
+    The scratch generations are pid/thread-unique, so two concurrent
+    refits of one index never delete each other's staged output.
     Returns the new `_meta` baseline mean distance."""
     import os
     import shutil
 
-    from twitter_flink_spark.operators.skipping import _swap_dirs
+    from twitter_flink_spark.commit import replace_dir, scratch_name
 
     v = vectors.select(
         id_col, F.col(vec_col).cast("array<double>").alias("e")
@@ -398,9 +400,7 @@ def _ivf_full_refit(
     assign_dir = os.path.join(index_dir, "_assign")
     meta_dir = os.path.join(index_dir, "_meta")
     tmp_c, tmp_a, tmp_m = (
-        cents_dir + ".refit",
-        assign_dir + ".refit",
-        meta_dir + ".refit",
+        scratch_name(d, "tmp") for d in (cents_dir, assign_dir, meta_dir)
     )
     new_cents = kmeans_fit(
         vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col
@@ -417,9 +417,9 @@ def _ivf_full_refit(
     ivf_meta_df(spark, new_baseline, k, iters).write.mode(
         "overwrite"
     ).parquet(tmp_m)
-    _swap_dirs(tmp_a, assign_dir)
-    _swap_dirs(tmp_c, cents_dir)
-    _swap_dirs(tmp_m, meta_dir)
+    replace_dir(tmp_a, assign_dir)
+    replace_dir(tmp_c, cents_dir)
+    replace_dir(tmp_m, meta_dir)
     return new_baseline
 
 

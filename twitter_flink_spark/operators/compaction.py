@@ -16,11 +16,11 @@ deliberately separate here:
   copied, the object-store analogue is reusing the same immutable
   object keys in a new manifest), every planned group read once and
   written as one merged file — and publishing it with the same atomic
-  pointer swap the skipping manifests use (`_replace_dir`): readers see
-  the old or the new file set at every instant, a crash strands only a
-  uniquely-named scratch generation, and rows are never duplicated or
-  lost mid-compact (the failure mode of delete-originals-after-merge
-  protocols).
+  pointer swap the skipping manifests use (`commit.new_generation`,
+  `commit.replace_dir`): readers see the old or the new file set at
+  every instant, a crash strands only a uniquely-named scratch
+  generation, and rows are never duplicated or lost mid-compact (the
+  failure mode of delete-originals-after-merge protocols).
 
 Only the planned small files are ever opened: the I/O bill is the small
 fraction being fixed, not the table.
@@ -36,11 +36,12 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from twitter_flink_spark.operators.skipping import (
-    _norm_path,
-    _replace_dir,
-    _scratch_name,
+from twitter_flink_spark.commit import (
+    new_generation,
+    replace_dir,
+    scratch_name,
 )
+from twitter_flink_spark.operators.skipping import _norm_path
 from twitter_flink_spark.session import local_frame
 
 #: Diagnostic: Spark job count of the LAST ``compact_table`` merge write
@@ -138,13 +139,8 @@ def compact_table(
         ),
         default=0,
     )
-    gen = _scratch_name(root, "tmp")
-    shutil.rmtree(gen, ignore_errors=True)
-    os.makedirs(gen, exist_ok=True)
-    for p, _ in sizes:
-        if p not in planned:
-            os.link(p, os.path.join(gen, os.path.basename(p)))
-    stage = _scratch_name(root, "merge")
+    gen = new_generation(root, [p for p, _ in sizes if p not in planned])
+    stage = scratch_name(root, "merge")
     shutil.rmtree(stage, ignore_errors=True)
     # input_file_name() renders the URI-ENCODED path (space -> %20,
     # % -> %25, '+' kept), so the map keys must carry the same encoding
@@ -226,5 +222,5 @@ def compact_table(
     n_after = sum(
         1 for f in os.listdir(gen) if f.endswith(".parquet")
     )
-    _replace_dir(gen, root)
+    replace_dir(gen, root)
     return len(live), n_after, len(plan)

@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from twitter_flink_spark.commit import (
+    append_files,
+    commit_swap,
+    observed_count,
+    publish_partitions,
+)
+
 MINHASH_K = 16  #: number of hash functions (signature length)
 LSH_BANDS = 8  #: bands of r = K/BANDS rows each; catch-prob at J=0.8 ≈ 0.9997
 
@@ -494,6 +501,12 @@ def _seg_expr(nseg: int):
     )
 
 
+def _segmented(df: DataFrame, nseg: int) -> DataFrame:
+    """``df`` with each row's ``seg`` column, hash-partitioned on it so
+    a segmented write puts one file per segment."""
+    return df.withColumn("seg", _seg_expr(nseg)).repartition(F.col("seg"))
+
+
 def _index_nseg(idx: DataFrame) -> int | None:
     """The segment count a segmented index's rows were placed with
     (None = legacy flat layout). An EMPTY segmented index (everything
@@ -518,145 +531,6 @@ def _index_meta(idx: DataFrame):
         # with zero rows — the module default applies
         return LSH_SEGMENTS, None
     return int(row["nseg"]), row
-
-
-def _observed_count(obs) -> int:
-    """Count from an `Observation` attached to a maintenance write,
-    robust to the ZERO-ROW case: AQE's empty-relation propagation can
-    replace the whole observed subtree with an empty LocalTableScan (an
-    empty other side of a join above it), so the CollectMetrics node
-    never executes, the metrics row has no fields and ``obs.get`` fails
-    in PythonSQLUtils.toPyRow — which happens exactly when zero rows
-    flowed through the write. That case alone is mapped to 0; a present
-    metrics row is authoritative and any other failure propagates."""
-    if obs._jo.getRow().size() == 0:  # waits for the action, like get
-        return 0
-    return int(obs.get["n"] or 0)
-
-
-def _move_parquet_into(
-    df: DataFrame, index_dir: str, label: str, nseg: int | None = None
-) -> None:
-    """Append ``df``'s rows to ``index_dir`` via stage-write + per-file
-    rename — the index's multi-writer append protocol (pid/thread-unique
-    stage dir; each os.rename is atomic, so readers see whole files or
-    nothing; a crash strands only uniquely-named stage litter).
-
-    With ``nseg`` the append targets a SEGMENTED layout: rows are
-    staged partitioned by their doc's segment (hash-repartitioned on
-    seg first, so an append adds ~one file per touched segment instead
-    of tasks x segments small files) and each staged file renames into
-    its ``seg=N/`` subdir. The seg exchange carries NO pinned partition
-    count: AQE coalesces a micro-batch-sized append down to a task or
-    two (each seg still hashes to exactly one task, so the file count
-    stays = touched segments) while a corpus-sized build spreads across
-    the session's shuffle parallelism — the previous pinned
-    ``repartition(nseg, seg)`` forced ``nseg`` near-empty tasks per
-    append, pure scheduling overhead at micro-batch grain (the r15
-    streaming-maintenance regression). Without ``nseg`` the append is
-    flat (legacy indexes keep their layout until a compaction migrates
-    them)."""
-    import os
-    import shutil
-    import threading
-    import uuid
-
-    ident = f"{os.getpid()}-{threading.get_ident()}"
-    tag = uuid.uuid4().hex[:8]
-    stage = index_dir + f".stage-{label}-{ident}"
-    shutil.rmtree(stage, ignore_errors=True)
-    if nseg is None:
-        df.write.mode("overwrite").parquet(stage)
-        for f in os.listdir(stage):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(stage, f),
-                    os.path.join(index_dir, f"{label}-{tag}-{f}"),
-                )
-    else:
-        (
-            df.withColumn("seg", _seg_expr(nseg))
-            .repartition(F.col("seg"))
-            .write.partitionBy("seg")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        for d in os.listdir(stage):
-            if not d.startswith("seg="):
-                continue
-            seg_dst = os.path.join(index_dir, d)
-            os.makedirs(seg_dst, exist_ok=True)
-            for f in os.listdir(os.path.join(stage, d)):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(stage, d, f),
-                        os.path.join(seg_dst, f"{label}-{tag}-{f}"),
-                    )
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def _move_parquet_into_ordered(
-    first: DataFrame,
-    last: DataFrame,
-    index_dir: str,
-    label_first: str,
-    label_last: str,
-    nseg: int | None = None,
-) -> None:
-    """ONE staged write for two append phases whose RENAME ORDER is the
-    index's commit protocol (band rows strictly before coverage
-    markers): the union stages partitioned by a phase column ``mk``
-    (+ ``seg`` in segmented layouts), then every ``mk=0`` file renames
-    in before any ``mk=1`` file. Identical torn-move posture to two
-    sequential `_move_parquet_into` calls — a crash mid-rename still
-    leaves docs marker-less and re-indexable, never marker-before-bands
-    — at HALF the Spark jobs per micro-batch (the r15
-    streaming-maintenance regression was job-submission bound). ``mk``
-    is a staging partition column only; it never reaches the index's
-    files."""
-    import os
-    import shutil
-    import threading
-    import uuid
-
-    ident = f"{os.getpid()}-{threading.get_ident()}"
-    tag = uuid.uuid4().hex[:8]
-    stage = index_dir + f".stage-{label_first}-{ident}"
-    shutil.rmtree(stage, ignore_errors=True)
-    both = first.withColumn("mk", F.lit(0)).unionByName(
-        last.withColumn("mk", F.lit(1))
-    )
-    part_cols = ["mk"]
-    if nseg is not None:
-        both = both.withColumn("seg", _seg_expr(nseg)).repartition(
-            F.col("seg")
-        )
-        part_cols.append("seg")
-    both.write.partitionBy(*part_cols).mode("overwrite").parquet(stage)
-    for mk, label in ((0, label_first), (1, label_last)):
-        mk_dir = os.path.join(stage, f"mk={mk}")
-        if not os.path.isdir(mk_dir):
-            continue
-        if nseg is None:
-            for f in os.listdir(mk_dir):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(mk_dir, f),
-                        os.path.join(index_dir, f"{label}-{tag}-{f}"),
-                    )
-        else:
-            for d in os.listdir(mk_dir):
-                if not d.startswith("seg="):
-                    continue
-                seg_dst = os.path.join(index_dir, d)
-                os.makedirs(seg_dst, exist_ok=True)
-                for f in os.listdir(os.path.join(mk_dir, d)):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(mk_dir, d, f),
-                            os.path.join(seg_dst, f"{label}-{tag}-{f}"),
-                        )
-    shutil.rmtree(stage, ignore_errors=True)
 
 
 def _param_cols(
@@ -759,8 +633,6 @@ def lsh_index_build(
     fully-banded doc also gets a COVERAGE-MARKER row (`COVER_BAND`),
     the cheap "is it indexed" bit updates consult. Commits via tmp
     write + atomic rename. Returns the number of indexed docs."""
-    import shutil
-
     from pyspark.sql import Observation
 
     docs = _band_parallel(docs)
@@ -780,22 +652,9 @@ def lsh_index_build(
             obs, F.count(F.lit(1)).alias("n")
         )
     )
-    from twitter_flink_spark.operators.skipping import (
-        _replace_dir,
-        _scratch_name,
-    )
-
-    tmp = _scratch_name(index_dir, "tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        rows.withColumn("seg", _seg_expr(nseg))
-        .repartition(F.col("seg"))
-        .write.partitionBy("seg")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    _replace_dir(tmp, index_dir)  # pid-unique scratch, last-commit-wins
-    return _observed_count(obs)
+    # pid-unique scratch, last-commit-wins
+    commit_swap(_segmented(rows, nseg), index_dir, partition_by=["seg"])
+    return observed_count(obs)
 
 
 def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
@@ -830,7 +689,7 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
     (params + nseg ride every row), one marker-existence ``head(1)``,
     and ONE staged write — band rows and coverage markers union into a
     single job partitioned by a phase column, renamed bands-first
-    (`_move_parquet_into_ordered`), with the new-doc count OBSERVED on
+    (`commit.append_files`), with the new-doc count OBSERVED on
     the marker branch during that write instead of paying a separate
     distinct-count job. A redelivered batch evaluates to zero rows and
     appends nothing — still a pure no-op."""
@@ -865,10 +724,7 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
         F.size(F.split(F.col("text"), " ")) >= int(p["ngram"])
     )
     new_docs = _band_parallel(eligible).join(fully, "doc_id", "left_anti")
-
-    def _move_in(df, label: str) -> None:
-        _move_parquet_into(df, index_dir, label, nseg=seg_nseg)
-
+    seg = None if seg_nseg is None else _seg_expr(seg_nseg)
     sh = doc_shingles(new_docs, ngram=int(p["ngram"]))
     rows = lsh_bands(
         minhash_signature(sh, k=int(p["k"])),
@@ -893,10 +749,8 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
     # one staged write; markers still rename LAST (the per-doc commit
     # point), and the marker count IS the newly-indexed-doc count
     # (_coverage_rows is one distinct row per band-eligible new doc)
-    _move_parquet_into_ordered(
-        rows, cov, index_dir, "inc", "cov", nseg=seg_nseg
-    )
-    n_new = _observed_count(obs)
+    append_files([("inc", rows), ("cov", cov)], index_dir, seg=seg)
+    n_new = observed_count(obs)
     if legacy_fully is not None:
         # one-time legacy repair: backfill a marker per legacy-covered
         # doc so the NEXT update's markers.head(1) fast path sees the
@@ -906,15 +760,21 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
         # docs marker-less; they get harmlessly re-indexed next update
         # (duplicate band rows never change distinct candidate pairs),
         # and the backfill then completes for the rest.
-        _move_in(
-            _marker_rows(
-                legacy_fully,
-                int(p["ngram"]),
-                int(p["k"]),
-                int(p["bands"]),
-                seg_nseg,
-            ),
-            "covfill",
+        append_files(
+            [
+                (
+                    "covfill",
+                    _marker_rows(
+                        legacy_fully,
+                        int(p["ngram"]),
+                        int(p["k"]),
+                        int(p["bands"]),
+                        seg_nseg,
+                    ),
+                )
+            ],
+            index_dir,
+            seg=seg,
         )
     return n_new
 
@@ -974,8 +834,9 @@ def lsh_index_delete(spark, doc_ids: DataFrame, index_dir: str) -> int:
             int(p["ngram"]), int(p["k"]), int(p["bands"]), seg_nseg
         ),
     )
-    _move_parquet_into(rows, index_dir, "tomb", nseg=seg_nseg)
-    return _observed_count(obs)
+    seg = None if seg_nseg is None else _seg_expr(seg_nseg)
+    append_files([("tomb", rows)], index_dir, seg=seg)
+    return observed_count(obs)
 
 
 def lsh_index_compact(spark, index_dir: str) -> int:
@@ -986,7 +847,7 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     ``seg=N/`` dir its doc_id hash selects, so the tombstones' own
     segments are exactly the segments with anything to reclaim. Each
     touched segment is anti-join-rewritten and swapped atomically
-    (`_replace_dir` per segment); untouched segments' files are never
+    (`commit.publish_partitions`); untouched segments' files are never
     opened — compaction cost tracks TOMBSTONE-BEARING SEGMENT MASS,
     not index size (at 100 TB a 0.1% delete touches ~min(segments,
     batch) segments, not the whole band table). Crash posture: per-seg
@@ -1002,13 +863,6 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     only forgets. Returns the number of docs reclaimed; 0 is a pure
     no-op (no rewrite)."""
     import os
-    import shutil
-
-    from twitter_flink_spark.operators.skipping import (
-        _replace_dir,
-        _rm_committed,
-        _scratch_name,
-    )
 
     idx = spark.read.parquet(index_dir)
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id").distinct()
@@ -1020,16 +874,9 @@ def lsh_index_compact(spark, index_dir: str) -> int:
         kept = idx.join(tombs, "doc_id", "left_anti").withColumn(
             "nseg", F.lit(LSH_SEGMENTS)
         )
-        tmp = _scratch_name(index_dir, "tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            kept.withColumn("seg", _seg_expr(LSH_SEGMENTS))
-            .repartition(F.col("seg"))
-            .write.partitionBy("seg")
-            .mode("overwrite")
-            .parquet(tmp)
+        commit_swap(
+            _segmented(kept, LSH_SEGMENTS), index_dir, partition_by=["seg"]
         )
-        _replace_dir(tmp, index_dir)
         return n
     # tombstone rows carry their doc's segment (placed with the index's
     # own stored nseg at delete time) — collecting their distinct segs
@@ -1045,24 +892,9 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     kept = idx.where(F.col("seg").isin(affected)).join(
         tombs, "doc_id", "left_anti"
     )
-    stage = _scratch_name(index_dir, "tmp")
-    shutil.rmtree(stage, ignore_errors=True)
-    (
-        kept.repartition(F.col("seg"))
-        .write.partitionBy("seg")
-        .mode("overwrite")
-        .parquet(stage)
+    survivors = publish_partitions(
+        kept.repartition(F.col("seg")), index_dir, "seg", affected
     )
-    survivors = 0
-    for s in affected:
-        src = os.path.join(stage, f"seg={s}")
-        dst = os.path.join(index_dir, f"seg={s}")
-        if os.path.isdir(src):
-            _replace_dir(src, dst)
-            survivors += 1
-        else:
-            _rm_committed(dst)  # every doc in the segment was deleted
-    shutil.rmtree(stage, ignore_errors=True)
     if not survivors and not any(
         d.startswith("seg=") for d in os.listdir(index_dir)
     ):
@@ -1070,11 +902,9 @@ def lsh_index_compact(spark, index_dir: str) -> int:
         # segment dir so the index stays readable (and still reads as
         # segmented) instead of a dir Spark cannot infer a schema from;
         # `_index_nseg` falls back to the module default on zero rows
-        empty = idx.limit(0).drop("seg")
-        tmp = _scratch_name(index_dir, "tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        empty.write.mode("overwrite").parquet(tmp)
-        _replace_dir(tmp, os.path.join(index_dir, "seg=0"))
+        commit_swap(
+            idx.limit(0).drop("seg"), os.path.join(index_dir, "seg=0")
+        )
     return n
 
 

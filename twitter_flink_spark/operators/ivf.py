@@ -28,6 +28,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.commit import (
+    append_files,
+    has_parquet,
+    observed_count,
+    publish_partitions,
+)
 from twitter_flink_spark.session import local_frame
 
 TOMBS_DIR = "_tombs"
@@ -35,16 +41,6 @@ TOMBS_DIR = "_tombs"
 
 def _tombs_path(index_dir: str) -> str:
     return os.path.join(index_dir, TOMBS_DIR)
-
-
-def has_parquet(path: str) -> bool:
-    """Whether ``path`` holds a parquet file, at any partition depth. A
-    zero-row append still creates its dir (holding only ``_SUCCESS``),
-    and Spark cannot infer a schema from such a dir: guard every read
-    of an append-grown dir with this, not with ``os.path.isdir``."""
-    return any(
-        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
-    )
 
 
 def ivf_tombstones(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -71,11 +67,6 @@ def ivf_index_delete(
     Returns the number of newly tombstoned vectors."""
     from pyspark.sql import Observation
 
-    from twitter_flink_spark.operators.dedup import (
-        _move_parquet_into,
-        _observed_count,
-    )
-
     assign = spark.read.parquet(os.path.join(index_dir, "_assign"))
     obs = Observation()
     todo = (
@@ -87,8 +78,8 @@ def ivf_index_delete(
     )
     p = _tombs_path(index_dir)
     os.makedirs(p, exist_ok=True)
-    _move_parquet_into(todo, p, "tomb")
-    return _observed_count(obs)
+    append_files([("tomb", todo)], p)
+    return observed_count(obs)
 
 
 def ivf_index_compact(spark: SparkSession, index_dir: str) -> tuple[int, int]:
@@ -101,12 +92,6 @@ def ivf_index_compact(spark: SparkSession, index_dir: str) -> tuple[int, int]:
     still in place, so serving stays correct (the anti-join still hides
     the not-yet-reclaimed rows) and the next compact finishes the rest.
     Returns (vectors reclaimed, cells rewritten); (0, 0) is a no-op."""
-    from twitter_flink_spark.operators.skipping import (
-        _replace_dir,
-        _rm_committed,
-        _scratch_name,
-    )
-
     tombs = ivf_tombstones(spark, index_dir)
     assign_dir = os.path.join(index_dir, "_assign")
     assign = spark.read.parquet(assign_dir)
@@ -130,16 +115,6 @@ def ivf_index_compact(spark: SparkSession, index_dir: str) -> tuple[int, int]:
         .join(tombs, "vec_id", "left_anti")
         .repartition(F.col("cid"))
     )
-    stage = _scratch_name(assign_dir, "tmp")
-    shutil.rmtree(stage, ignore_errors=True)
-    kept.write.partitionBy("cid").mode("overwrite").parquet(stage)
-    for c in cells:
-        src = os.path.join(stage, f"cid={c}")
-        dst = os.path.join(assign_dir, f"cid={c}")
-        if os.path.isdir(src):
-            _replace_dir(src, dst)
-        else:
-            _rm_committed(dst)  # every vector in the cell was deleted
-    shutil.rmtree(stage, ignore_errors=True)
+    publish_partitions(kept, assign_dir, "cid", cells)
     shutil.rmtree(_tombs_path(index_dir), ignore_errors=True)
     return n, len(cells)

@@ -19,10 +19,12 @@ plain parquet directories, two index kinds:
   layout): ~m bits per file regardless of row count, k xxhash64 probes
   select candidate files. The Iceberg-puffin / Delta bloom sidecar story.
 
-All manifests commit via write-to-tmp + atomic rename swap (a concurrent
-reader never sees a half manifest) and live under the data root with an
-underscore prefix (``_filestats``, ``_filebloom_<col>``) so Spark's input
-listing ignores them — the ``_manifests`` convention. ``update`` maintains
+All manifests commit through `twitter_flink_spark.commit` (write a
+complete generation to pid/thread-unique scratch, publish it with the
+atomic pointer swap, ``commit_swap``), so a concurrent reader never sees
+a half manifest. They live under the data root with an underscore
+prefix (``_filestats``, ``_filebloom_<col>``) so Spark's input listing
+ignores them — the ``_manifests`` convention. ``update`` maintains
 the stats manifest INCREMENTALLY on append: only files absent from the
 committed manifest are scanned, O(new data) not O(table), the maintenance
 shape a streaming sink needs.
@@ -42,17 +44,13 @@ the scan-side pruning story a 100 TB engine needs.
 
 from __future__ import annotations
 
-import glob
 import os
 import re
-import shutil
-import threading
-import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.commit import commit_swap, rm_committed
 from twitter_flink_spark.session import local_frame
 
 STATS_DIR = "_filestats"
@@ -62,218 +60,6 @@ BLOOM_DIR = "_filebloom"  #: per-column suffix appended: _filebloom_<col>
 #: (manifest-of-manifests) shape — beyond it the O(files) flat consult
 #: on the driver is the planning bottleneck the sharded form exists for.
 AUTO_TWO_LEVEL_FILES = 65536
-
-#: a superseded manifest generation outlives its pointer this long, so a
-#: reader that resolved the pointer just before a commit finishes its scan
-_GEN_GRACE_S = 120
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return True  # EPERM etc.: alive, just not ours
-    return True
-
-
-def _scratch_name(dest: str, kind: str) -> str:
-    """Pid/thread-unique scratch sibling for ``dest`` (`.tmp-…`/`.gc-…`):
-    two processes maintaining one shared manifest must never write into
-    the same scratch dir. Crashed processes leave uniquely-named litter;
-    sweep it only when it is unambiguously abandoned — the embedded pid
-    is DEAD *and* the dir is >1 h old — so a legitimately long-running
-    commit (a huge manifest write) can never lose its live scratch to an
-    unrelated committer."""
-    for leftover in glob.glob(f"{dest}.tmp-*") + glob.glob(f"{dest}.gc-*"):
-        try:
-            m = re.search(r"\.(?:tmp|gc)-(\d+)-", leftover)
-            if m is not None and _pid_alive(int(m.group(1))):
-                continue
-            if time.time() - os.lstat(leftover).st_mtime > 3600:
-                shutil.rmtree(leftover, ignore_errors=True)
-        except OSError:
-            pass
-    return f"{dest}.{kind}-{os.getpid()}-{threading.get_ident()}"
-
-
-def _commit_swap(df: DataFrame, dest: str) -> None:
-    """Atomically replace ``dest`` with ``df``'s rows (tmp write, rename
-    swap, old generation aside then removed) — same crash-safe protocol
-    as the MV manifests: a reader sees the old or the new manifest, never
-    a mix, and stranded tmp/gc dirs are garbage a later commit ignores.
-    The scratch names are pid/thread-unique so two processes committing
-    the same manifest (a driver sweep and a bench run maintaining one
-    shared layout) can never write into each other's tmp dir; if both
-    race the final rename, the retry loop makes last-committer-win —
-    each candidate is a COMPLETE generation, so readers are safe under
-    either outcome."""
-    tmp = _scratch_name(dest, "tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _replace_dir(tmp, dest)
-
-
-def _sweep_gens(dest: str) -> None:
-    """GC superseded generations of ``dest``: hidden gen dirs no longer
-    reachable through the pointer are removed once older than
-    ``_GEN_GRACE_S`` (a reader that resolved the pointer just before a
-    commit can still be mid-scan of the old generation) — unless a LIVE
-    ``pin_generation`` breadcrumb holds them; stranded ``.lnk`` files
-    from crashed commits and dead-pid pins age out the same way."""
-    d, base = os.path.split(dest)
-    current = os.path.realpath(dest) if os.path.islink(dest) else None
-    entries = glob.glob(os.path.join(d or ".", f".{base}.gen-*"))
-    pinned: set[str] = set()
-    for g in entries:
-        m = re.match(r"^(.+\.gen-[^./]+)\.pin-(\d+)-\d+$", g)
-        if m is None:
-            continue
-        if _pid_alive(int(m.group(2))):
-            pinned.add(m.group(1))
-        else:
-            try:
-                os.remove(g)  # pin whose reader died: litter
-            except OSError:
-                pass
-    for g in entries:
-        if ".pin-" in g:
-            continue
-        try:
-            age = time.time() - os.lstat(g).st_mtime
-            if age <= _GEN_GRACE_S:
-                continue
-            if os.path.islink(g):
-                os.unlink(g)
-            elif (
-                g not in pinned
-                and (current is None or os.path.realpath(g) != current)
-            ):
-                shutil.rmtree(g, ignore_errors=True)
-        except OSError:
-            pass
-
-
-@contextmanager
-def pin_generation(dest: str):
-    """Hold the CURRENT generation of a committed dest alive for the
-    duration of a long scan: yields a stable path to read (the resolved
-    generation for a pointer dest; the dest itself for a legacy real
-    dir) and drops a ``.pin-<pid>-<tid>`` breadcrumb beside the
-    generation so ``_sweep_gens`` skips it past the reader grace while
-    this pid lives. Readers that finish inside ``_GEN_GRACE_S`` don't
-    need this; it exists for scans that legitimately outlive it — a
-    full-manifest audit at millions of files, a straggling executor —
-    where the post-grace sweep could otherwise delete the generation
-    mid-read. Concurrent commits keep publishing; the pinned reader
-    just keeps its own consistent snapshot (exactly the snapshot-
-    isolation posture a table format's pinned-version read gives)."""
-    if not os.path.islink(dest):
-        yield dest
-        return
-    gen = os.path.realpath(dest)
-    pin = f"{gen}.pin-{os.getpid()}-{threading.get_ident()}"
-    open(pin, "w").close()
-    try:
-        yield gen
-    finally:
-        try:
-            os.remove(pin)
-        except OSError:
-            pass
-
-
-def _rm_committed(path: str) -> None:
-    """Remove a committed dest that may be a pointer symlink (the
-    ``_replace_dir`` protocol) or a legacy real dir.
-    ``shutil.rmtree(link, ignore_errors=True)`` silently no-ops on a
-    symlink, which would leak both the pointer and its generation."""
-    try:
-        if os.path.islink(path):
-            target = os.path.realpath(path)
-            os.unlink(path)
-            shutil.rmtree(target, ignore_errors=True)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
-    except OSError:
-        pass
-
-
-def move_committed(src: str, dst: str) -> None:
-    """Relocate a committed manifest from ``src`` to ``dst`` — the
-    carry-across a data-dir-level compaction swap performs when it
-    renames the whole table dir aside and moves the manifests into the
-    rewritten dir. A committed dest is a pointer SYMLINK whose hidden
-    generation dir lives beside it (``_replace_dir``): moving only the
-    link (what ``shutil.move`` does) would strand the generation in the
-    swapped-aside dir and the subsequent ``rmtree`` would break the
-    pointer. Move the generation first, then the link — its relative
-    target stays valid. Legacy real dirs fall back to a plain move."""
-    if os.path.islink(src):
-        gen_name = os.readlink(src)
-        if not os.path.isabs(gen_name):
-            os.rename(
-                os.path.join(os.path.dirname(src), gen_name),
-                os.path.join(os.path.dirname(dst), gen_name),
-            )
-        os.rename(src, dst)
-    else:
-        shutil.move(src, dst)
-
-
-def _replace_dir(tmp: str, dest: str) -> None:
-    """Publish the COMPLETE generation at ``tmp`` as ``dest`` via a
-    POINTER SWAP: the generation is renamed to a hidden uniquely-named
-    sibling (``.{name}.gen-<pid>-<nonce>`` — the leading dot keeps
-    Spark's input listing blind to it) and ``dest`` becomes a symlink
-    renamed over in ONE atomic step. A reader opening ``dest`` therefore
-    sees the old or the new generation at every instant — there is no
-    between-renames window where ``dest`` does not exist (the
-    cross-process flake the old rename-aside dance allowed). Concurrent
-    commits are last-committer-wins: each writes its own generation and
-    the final pointer rename serializes in the kernel. Legacy real-dir
-    dests (pre-pointer layouts) migrate on first commit — that single
-    migration keeps the rename-aside window; every commit after it is
-    atomic. Superseded generations are swept after a reader grace
-    period (``_sweep_gens``).
-
-    On an object store (no symlinks, no atomic dir rename) this maps to
-    immutable generation prefixes plus a tiny pointer manifest updated
-    by conditional put — the layout ports unchanged."""
-    d, base = os.path.split(dest)
-    gen = os.path.join(
-        d or ".", f".{base}.gen-{os.getpid()}-{time.monotonic_ns():x}"
-    )
-    os.rename(tmp, gen)
-    lnk = f"{gen}.lnk"
-    try:
-        os.remove(lnk)
-    except OSError:
-        pass
-    os.symlink(os.path.basename(gen), lnk)
-    for attempt in range(5):
-        try:
-            os.rename(lnk, dest)  # atomic over absent dest or a symlink
-            _sweep_gens(dest)
-            return
-        except OSError:
-            # dest is a legacy real dir: migrate it aside, then retry
-            # (the one-time window the pointer protocol removes)
-            old = _scratch_name(dest, "gc") + f"-{attempt}"
-            shutil.rmtree(old, ignore_errors=True)
-            try:
-                if os.path.isdir(dest) and not os.path.islink(dest):
-                    os.rename(dest, old)
-            except OSError:
-                pass  # another committer moved it first
-            shutil.rmtree(old, ignore_errors=True)
-    try:
-        os.remove(lnk)
-    except OSError:
-        pass
-    shutil.rmtree(gen, ignore_errors=True)
-    raise RuntimeError(f"commit to {dest} lost 5 swap races")
 
 
 def _file_stats(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -378,10 +164,10 @@ def build(
         _, parent = build_two_level(
             spark, root, cols[0], index_root=index_root
         )
-        _rm_committed(os.path.join(at, STATS_DIR))
+        rm_committed(os.path.join(at, STATS_DIR))
         return parent
     dest = os.path.join(at, STATS_DIR)
-    _commit_swap(_file_stats(reader, cols), dest)
+    commit_swap(_file_stats(reader, cols), dest)
     return dest
 
 
@@ -431,12 +217,12 @@ def update(
     new = [f for f in live if _norm_path(f) not in known]
     if new:
         fresh = _file_stats(spark.read.parquet(*new), cols)
-        _commit_swap(spark.read.parquet(dest).unionByName(fresh), dest)
+        commit_swap(spark.read.parquet(dest).unionByName(fresh), dest)
     if len(cols) == 1 and len(live) > threshold:
         # grown past flat viability: upgrade so the NEXT consult is
         # O(parent + touched shards), not O(files) on the driver
         build_two_level(spark, root, cols[0], index_root=index_root)
-        _rm_committed(dest)
+        rm_committed(dest)
     return len(new)
 
 
@@ -742,7 +528,7 @@ def vacuum_manifest(
     )
     if not dropped:
         return 0
-    _commit_swap(keep, dest)
+    commit_swap(keep, dest)
     return dropped
 
 
@@ -774,7 +560,7 @@ def vacuum_bloom(
     )
     if not dropped:
         return 0
-    _commit_swap(keep, dest)
+    commit_swap(keep, dest)
     return dropped
 
 
@@ -862,14 +648,11 @@ def _build_two_level_at(
     parted = stats.withColumn(
         "part", _bucket_expr(col, is_ts, lo_us, hi_us, n_parts)
     )
-    tmp = _scratch_name(parts_dest, "tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    parted.write.mode("overwrite").partitionBy("part").parquet(tmp)
-    _swap_dirs(tmp, parts_dest)
+    commit_swap(parted, parts_dest, partition_by=["part"])
     # bucketing params ride the parent (like Bloom's m/k) so incremental
     # maintenance can never re-bucket with different bounds
     parent = _parent_manifest(parted, col, lo_us, hi_us, n_parts)
-    _commit_swap(parent, root_dest)
+    commit_swap(parent, root_dest)
     return parts_dest, root_dest
 
 
@@ -1074,7 +857,7 @@ def _update_two_level_at(
     if not new:
         covered = parent.agg(F.sum("n_files")).first()[0] or 0
         if covered != len(known):  # crashed append/vacuum: repair parent
-            _commit_swap(
+            commit_swap(
                 _parent_manifest(
                     shards,
                     col,
@@ -1098,12 +881,8 @@ def _update_two_level_at(
     parent = _parent_manifest(
         all_rows, col, meta["bucket_lo"], meta["bucket_hi"], meta["n_parts"]
     )
-    _commit_swap(parent, parent_path)
+    commit_swap(parent, parent_path)
     return len(new)
-
-
-def _swap_dirs(tmp: str, dest: str) -> None:
-    _replace_dir(tmp, dest)
 
 
 def vacuum_two_level(
@@ -1151,7 +930,7 @@ def _vacuum_two_level_at(
     if not dropped:
         return 0
     survivors = spark.read.parquet(parts_path)
-    _commit_swap(
+    commit_swap(
         _parent_manifest(
             survivors,
             col,
@@ -1201,15 +980,13 @@ def _vacuum_shards(
             _norm_sql("file") == F.col("path"),
             "left_semi",
         )
-        tmp = _scratch_name(shard_dir, "tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        # coalesce(1): one task per shard REWRITE is deliberate — shard
-        # row counts are bounded by files/n_parts (metadata scale), and
-        # vacuum touches only dead-row shards; a pathological 1-shard
-        # index would serialize here, but such an index has already lost
-        # its reason to exist (build with a larger n_parts)
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dirs(tmp, shard_dir)
+        # one task per shard REWRITE (`commit_swap` writes coalesce(1))
+        # is deliberate — shard row counts are bounded by files/n_parts
+        # (metadata scale), and vacuum touches only dead-row shards; a
+        # pathological 1-shard index would serialize here, but such an
+        # index has already lost its reason to exist (build with a
+        # larger n_parts)
+        commit_swap(keep, shard_dir)
     return int(sum(dead_per_part.values()))
 
 
@@ -1767,10 +1544,10 @@ def build_bloom(
         _, parent = build_bloom_two_level(
             spark, root, col, m=m, k=k, index_root=index_root
         )
-        _rm_committed(_bloom_dir(at, col))
+        rm_committed(_bloom_dir(at, col))
         return parent
     dest = _bloom_dir(at, col)
-    _commit_swap(_bloom_manifest(reader, col, m, k), dest)
+    commit_swap(_bloom_manifest(reader, col, m, k), dest)
     return dest
 
 
@@ -1834,14 +1611,14 @@ def update_bloom(
         fresh = _bloom_manifest(
             spark.read.parquet(*new), col, int(m), int(k)
         )
-        _commit_swap(manifest.unionByName(fresh), dest)
+        commit_swap(manifest.unionByName(fresh), dest)
     if len(live) > threshold:
         # grown past flat viability: upgrade so the NEXT probe reads one
         # shard dir instead of every file's word map
         build_bloom_two_level(
             spark, root, col, m=int(m), k=int(k), index_root=index_root
         )
-        _rm_committed(dest)
+        rm_committed(dest)
     return len(new)
 
 
@@ -2043,12 +1820,9 @@ def build_bloom_two_level(
     rows = _bloom2_shard_rows(df, col, m, k, n_shards)
     at = index_root if index_root is not None else root
     parts_dest = _bloom2_parts_dir(at, col)
-    tmp = _scratch_name(parts_dest, "tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    rows.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    _swap_dirs(tmp, parts_dest)
+    commit_swap(rows, parts_dest, partition_by=["shard"])
     parent_dest = _bloom2_root_dir(at, col)
-    _commit_swap(
+    commit_swap(
         _bloom2_parent(
             spark.read.parquet(parts_dest), m, k, n_shards, total_files
         ),
@@ -2090,7 +1864,7 @@ def update_bloom_two_level(
     if not new:
         covered = parent.select("total_files").first()[0] or 0
         if covered != len(known):  # crashed append/vacuum: repair parent
-            _commit_swap(
+            commit_swap(
                 _bloom2_parent(shards, m, k, n_shards, len(known)),
                 parent_path,
             )
@@ -2098,7 +1872,7 @@ def update_bloom_two_level(
     fresh = _bloom2_shard_rows(spark.read.parquet(*new), col, m, k, n_shards)
     fresh.write.mode("append").partitionBy("shard").parquet(parts_path)
     all_rows = spark.read.parquet(parts_path)
-    _commit_swap(
+    commit_swap(
         _bloom2_parent(all_rows, m, k, n_shards, len(known) + len(new)),
         parent_path,
     )
@@ -2147,7 +1921,7 @@ def vacuum_bloom_two_level(
             "total_files long, est_sum_file_keys double, "
             "est_shard_keys double",
         )
-    _commit_swap(new_parent, parent_path)
+    commit_swap(new_parent, parent_path)
     return dropped
 
 

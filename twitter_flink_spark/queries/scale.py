@@ -9,6 +9,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.commit import (
+    new_generation,
+    replace_dir,
+    scratch_name,
+    swap_table_dir,
+    write_json,
+)
 from twitter_flink_spark.operators.bucketing import read_bucketed, write_bucketed
 from twitter_flink_spark.operators.joins import salted_equi_join
 from twitter_flink_spark.registry import register
@@ -794,8 +801,6 @@ _TYPE_PART_CACHE: dict[tuple[str, str], str] = {}
 
 def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """events written partitionBy(event_type), once per (app, sf)."""
-    import os
-
     from twitter_flink_spark.sources.files import scratch_dir
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -1918,10 +1923,7 @@ def _migrate_era_days(
         shutil.rmtree(dst, ignore_errors=True)  # orphan from a crashed run
         os.rename(src, dst)
         done.append(d)
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(done, fh)
-        os.replace(tmp, manifest)  # atomic per-day commit
+        write_json(manifest, done)  # atomic per-day commit
     shutil.rmtree(stage, ignore_errors=True)
     return todo
 
@@ -2239,10 +2241,10 @@ def _ensure_conjunction_sidecar(
     them from thrashing against the n_parts=1 histogram sidecar the
     thin-slice query stages over the same data dir."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     idx, _ = stage_once(
-        "cellconj4",
+        f"cellconj4-{build_id(dest)}",
         sf_dir,
         lambda p: skipping.build_two_level_columns(
             spark, dest, ["user_id", "ts"], n_parts=4, index_root=p
@@ -2394,7 +2396,6 @@ def _ensure_compacted_vacuumed_layout(
     cross-process reuses replay identical numbers. The whole mutation
     sequence runs in the finalize phase (manifests store absolute file
     paths; the compaction swap must target the final path)."""
-    import os
     import shutil
 
     from twitter_flink_spark.operators import skipping
@@ -2413,7 +2414,7 @@ def _ensure_compacted_vacuumed_layout(
         skipping.build(spark, dest, ["ts"])
         # compactor: rewrite 8 -> 2 files, atomic dir swap, manifest
         # carried across (now referencing only dead paths)
-        tmp, gc = dest + ".compact", dest + ".compact-gc"
+        tmp = dest + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
         (
             spark.read.parquet(dest)
@@ -2422,16 +2423,9 @@ def _ensure_compacted_vacuumed_layout(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        shutil.rmtree(gc, ignore_errors=True)
-        os.rename(dest, gc)
-        os.rename(tmp, dest)
         # the staging marker does not exist yet (stage_once writes it
         # after finalize returns, into the post-swap dest)
-        skipping.move_committed(
-            os.path.join(gc, skipping.STATS_DIR),
-            os.path.join(dest, skipping.STATS_DIR),
-        )
-        shutil.rmtree(gc, ignore_errors=True)
+        swap_table_dir(tmp, dest, [skipping.STATS_DIR])
         return {
             "n_new": skipping.update(spark, dest, ["ts"]),
             "n_dead": skipping.vacuum_manifest(spark, dest),
@@ -2506,10 +2500,6 @@ def _ensure_two_era_bloom_orders(
     """orders split at the key midpoint into two 8-file appends — era 1
     Bloom-indexed, era 2 arriving after the first manifest commit.
     Returns (dest, freshly_built)."""
-    import os
-    import shutil
-    import tempfile
-
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.sources.staging import stage_once
 
@@ -2892,10 +2882,7 @@ def _ensure_two_level_era_layout(
         )
         if mode == "overwrite":
             skipping.build_two_level(spark, dest, "ts", n_parts=8)
-    tmp = done + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write("ok")
-    os.rename(tmp, done)
+    write_json(done, "ok")
     _TWOLEVEL_ERA_FOR["sf"] = sf_dir
     return dest, True
 
@@ -2968,7 +2955,6 @@ def _ensure_twolevel_vacuumed_layout(
     reconciles the 16 dead shard rows away per shard and recommits the
     parent. Returns (dest, n_new, n_dead); cached calls replay the
     recorded counts."""
-    import os
     import shutil
 
     from twitter_flink_spark.operators import skipping
@@ -2988,7 +2974,7 @@ def _ensure_twolevel_vacuumed_layout(
 
     def _finalize(dest: str) -> dict:
         skipping.build_two_level(spark, dest, "ts", n_parts=4)
-        tmp, gc = dest + ".compact", dest + ".gc"
+        tmp = dest + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
         (
             spark.read.parquet(dest)
@@ -2997,14 +2983,9 @@ def _ensure_twolevel_vacuumed_layout(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        shutil.rmtree(gc, ignore_errors=True)
-        os.rename(dest, gc)
-        os.rename(tmp, dest)
-        for d in (skipping.PARTS_DIR, skipping.ROOT_MANIFEST):
-            skipping.move_committed(
-                os.path.join(gc, d), os.path.join(dest, d)
-            )
-        shutil.rmtree(gc, ignore_errors=True)
+        swap_table_dir(
+            tmp, dest, [skipping.PARTS_DIR, skipping.ROOT_MANIFEST]
+        )
         return {
             "n_new": skipping.update_two_level(spark, dest, "ts"),
             "n_dead": skipping.vacuum_two_level(spark, dest, "ts"),
@@ -3112,21 +3093,16 @@ def _ensure_bloom_vacuumed_layout(
         n = spark.read.parquet(dest).count()
         m = max(1 << 17, ((8 * n + 63) // 64) * 64)  # ~16 bits/key/2
         skipping.build_bloom(spark, dest, "o_orderkey", m=m)
-        tmp, gc = dest + ".compact", dest + ".compact-gc"
+        tmp = dest + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
         spark.read.parquet(dest).repartition(2).write.mode(
             "overwrite"
         ).parquet(tmp)
-        shutil.rmtree(gc, ignore_errors=True)
-        os.rename(dest, gc)
-        os.rename(tmp, dest)
-        bloom_dir = os.path.basename(
-            skipping._bloom_dir(dest, "o_orderkey")
+        swap_table_dir(
+            tmp,
+            dest,
+            [os.path.basename(skipping._bloom_dir(dest, "o_orderkey"))],
         )
-        skipping.move_committed(
-            os.path.join(gc, bloom_dir), os.path.join(dest, bloom_dir)
-        )
-        shutil.rmtree(gc, ignore_errors=True)
         return {
             "n_new": skipping.update_bloom(spark, dest, "o_orderkey"),
             "n_dead": skipping.vacuum_bloom(spark, dest, "o_orderkey"),
@@ -3161,8 +3137,6 @@ def filebloom_vacuum_after_compact(
     post-vacuum rows == live files); the max-orderkey point read serves
     from the vacuumed index (`bloom_pruned` pins it reads a strict
     subset of files) and the oracle's exact row proves no loss."""
-    import os
-
     from twitter_flink_spark.operators import skipping
 
     dest, n_new, n_dead = _ensure_bloom_vacuumed_layout(spark, sf_dir)
@@ -3323,7 +3297,6 @@ def _ensure_nightly_maintenance_layout(
     pair each family needs — incremental `update` (O(new files)) and
     `vacuum` (drop dead rows) — and a final `stale_file_count` == 0
     proof of full coverage. Counts ride the staged ledger."""
-    import os
     import shutil
 
     from twitter_flink_spark.operators import skipping
@@ -3344,7 +3317,7 @@ def _ensure_nightly_maintenance_layout(
         skipping.build_bloom(spark, dest, "user_id")
         files_before = len(spark.read.parquet(dest).inputFiles())
         # nightly compactor: exact bin packing, swap, manifests carried
-        tmp, gc = dest + ".compact", dest + ".compact-gc"
+        tmp = dest + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
         binpack_write(
             spark,
@@ -3354,14 +3327,9 @@ def _ensure_nightly_maintenance_layout(
             tmp,
             order_col="ts",
         )
-        shutil.rmtree(gc, ignore_errors=True)
-        os.rename(dest, gc)
-        os.rename(tmp, dest)
-        for carried in (skipping.STATS_DIR, "_filebloom_user_id"):
-            skipping.move_committed(
-                os.path.join(gc, carried), os.path.join(dest, carried)
-            )
-        shutil.rmtree(gc, ignore_errors=True)
+        swap_table_dir(
+            tmp, dest, [skipping.STATS_DIR, "_filebloom_user_id"]
+        )
         files_after = len(spark.read.parquet(dest).inputFiles())
         return {
             "files_before": files_before,
@@ -3739,11 +3707,11 @@ def twolevel_hist_thin_slice_order(
     import datetime
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_cell_clustered_layout(spark, sf_dir)
     idx, _ = stage_once(
-        "cellhist1",
+        f"cellhist1-{build_id(dest)}",
         sf_dir,
         lambda p: skipping.build_two_level_columns(
             spark, dest, ["user_id", "ts"], n_parts=1, index_root=p
@@ -3839,7 +3807,7 @@ def sidecar_index_readonly_serving(
     from twitter_flink_spark.queries.streaming import (
         _ensure_time_split_events3,
     )
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_time_split_events3(spark, sf_dir)
 
@@ -3852,9 +3820,9 @@ def sidecar_index_readonly_serving(
             index_root=p,
         )
 
-    # key bumped with the 3-file layout move: a staged sidecar's
-    # manifests reference the layout they were built against
-    idx, _ = stage_once("sidecaridx3", sf_dir, _build)
+    # the tag names the base's build: a staged sidecar's manifests
+    # reference the files of the build they were indexed against
+    idx, _ = stage_once(f"sidecaridx3-{build_id(dest)}", sf_dir, _build)
     data_untouched = not any(
         d.startswith(("_filestats", "_filebloom"))
         for d in os.listdir(dest)
@@ -3905,7 +3873,7 @@ def _ensure_keycount_sidecar(
     o_orderkey index (`_ensure_bloom2_layout` finalize) is never
     touched."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_bloom2_layout(spark, sf_dir)
 
@@ -3917,7 +3885,7 @@ def _ensure_keycount_sidecar(
             spark, dest, "o_orderpriority", n_shards=8, index_root=p
         )
 
-    idx, _ = stage_once("bloom2keysk", sf_dir, _build)
+    idx, _ = stage_once(f"bloom2keysk-{build_id(dest)}", sf_dir, _build)
     return dest, idx
 
 
@@ -4024,7 +3992,7 @@ def _ensure_mixed_sidecar(
     staged once per scale factor — the fixture for the mixed
     point+range planner."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_cell_clustered_layout(spark, sf_dir)
 
@@ -4036,7 +4004,7 @@ def _ensure_mixed_sidecar(
             spark, dest, "user_id", n_shards=8, index_root=p
         )
 
-    idx, _ = stage_once("cellmixed", sf_dir, _build)
+    idx, _ = stage_once(f"cellmixed-{build_id(dest)}", sf_dir, _build)
     return dest, idx
 
 
@@ -4787,13 +4755,9 @@ def zorder_incremental_recluster(
         for f in spark.read.parquet(work).inputFiles()
     )
     appended = [p for p in live if p not in era1_paths]
-    gen = skipping._scratch_name(work, "tmp")
-    shutil.rmtree(gen, ignore_errors=True)
-    os.makedirs(gen, exist_ok=True)
     inos_before = {p: os.stat(p).st_ino for p in era1_paths}
-    for p in era1_paths:
-        os.link(p, os.path.join(gen, os.path.basename(p)))
-    stage = skipping._scratch_name(work, "zmerge")
+    gen = new_generation(work, era1_paths)
+    stage = scratch_name(work, "zmerge")
     shutil.rmtree(stage, ignore_errors=True)
     zorder_layout(
         spark.read.parquet(*appended).withColumn(
@@ -4813,7 +4777,7 @@ def zorder_incremental_recluster(
             )
             zi += 1
     shutil.rmtree(stage, ignore_errors=True)
-    skipping._replace_dir(gen, work)
+    replace_dir(gen, work)
     skipping.build(spark, work, ["user_id", "ts"])  # fresh manifest
     files_after, total_after = skipping.select_files(spark, work, preds)
     after_live = {

@@ -369,73 +369,41 @@ def streaming_dedup_watermark_bounded(spark: SparkSession, sf_dir: str) -> DataF
     return run_to_memory(deduped, output_mode="append")
 
 
-def _stage_events_once(spark: SparkSession, sf_dir: str, tag: str, writer) -> str:
-    """Stage an events copy WRITE-ONCE at a fixed per-sf path: built into
-    a per-process, per-thread scratch dir and atomically renamed into
-    place, so a concurrent second process (driver sweep + builder bench
-    share this /tmp path) either wins the rename or discards its own
-    copy and reads the winner's — never overwrites a copy another
-    process is mid-read on (a module-global guard only serializes
-    within ONE process). The parquet job's own ``_SUCCESS`` is the
-    completeness marker: present -> reuse as-is; a dir without it (a
-    crashed build) is replaced. ``writer(df, path)`` performs the
-    actual layout write."""
-    import os
-    import shutil
-    import tempfile
-    import threading
-
-    from twitter_flink_spark.sources.tables import load_table
-
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        f"tfs-{tag}-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if os.path.exists(marker):
-        return dest
-    tmp = f"{dest}.build-{os.getpid()}-{threading.get_ident()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer(load_table(spark, sf_dir, "events"), tmp)
-    if os.path.isdir(dest) and not os.path.exists(marker):
-        shutil.rmtree(dest, ignore_errors=True)  # crashed prior build
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-    return dest
-
-
 def _ensure_split_events(spark: SparkSession, sf_dir: str) -> str:
     """The 4-file events copy multi-batch replays read (hash split:
-    every batch carries the full time range)."""
-    return _stage_events_once(
-        spark,
-        sf_dir,
-        "evsplit",
-        lambda df, p: df.repartition(4).write.mode("overwrite").parquet(p),
-    )
+    every batch carries the full time range), staged write-once."""
+    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.tables import load_table
+
+    def _build(p: str) -> None:
+        load_table(spark, sf_dir, "events").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(p)
+
+    return stage_once("evsplit", sf_dir, _build)[0]
 
 
 def _ensure_time_split_events3(spark: SparkSession, sf_dir: str) -> str:
-    """3-file events copy split by TIME RANGE — each replayed
-    micro-batch is one contiguous time third, the arrival order of a
-    real time-ordered ingest (and the layout whose per-batch files have
-    tight ts envelopes, so a per-commit skipping index actually
+    """3-file events copy split by TIME RANGE, staged write-once — each
+    replayed micro-batch is one contiguous time third, the arrival order
+    of a real time-ordered ingest (and the layout whose per-batch files
+    have tight ts envelopes, so a per-commit skipping index actually
     prunes). Three commits, not four: the ledger invariants the
     per-commit maintenance fixtures pin (build, >1 incremental refresh,
     final no-op) need exactly three."""
-    return _stage_events_once(
-        spark,
-        sf_dir,
-        "evtsplit3",
-        lambda df, p: (
-            df.repartitionByRange(3, "ts")
+    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.tables import load_table
+
+    def _build(p: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .repartitionByRange(3, "ts")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
             .parquet(p)
-        ),
-    )
+        )
+
+    return stage_once("evtsplit3", sf_dir, _build)[0]
 
 
 @register(
@@ -457,8 +425,6 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance invariant. No stream state at all: partials are map-side
     reduced per batch, the merge is one keyed outer join against the
     snapshot (a table-format MERGE INTO at scale)."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import IncrementalMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -501,8 +467,6 @@ def streaming_statestore_introspect(
     oracle checks. The reference's equivalent state (`String[] topN`,
     `TopNHashtags.java:303`) is invisible and lost on restart; here it is
     a queryable, checkpointed table."""
-    import tempfile
-
     ckpt = scratch_dir("ssread-ck")
     src = stream_table(spark, sf_dir, "events")
     agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1052,8 +1016,6 @@ def _drained_presence_mv(spark: SparkSession, sf_dir: str):
     MV — which is the actual production shape: one incremental
     pipeline, many readers — the same session-share discipline as
     `_drained_join_ckpt`."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import PresenceMV
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -1146,8 +1108,6 @@ def streaming_topk_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id, so the served table is deterministic on both engines;
     oracle = the batch grouped count + rank, the incremental-maintenance
     invariant."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import GroupedCountMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -1581,7 +1541,6 @@ def streaming_expectations_gate(
     directories (partition discovery over batch= and __route=) against
     the accumulated ledger, and that the run really was incremental
     (>1 batch)."""
-    import tempfile
     from collections import Counter
 
     from twitter_flink_spark.operators.expectations import (
@@ -1672,8 +1631,6 @@ def streaming_hll_actives_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At-least-once replay safety comes from the family's
     batch-id manifest (a replayed batch never re-unions), pinned for
     this subclass in tests/test_streaming.py."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import SketchMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -1921,7 +1878,6 @@ def streaming_watermark_frontier(
     query pins what the watermark DOES, this one pins where it
     STANDS."""
     import datetime as _dt
-    import tempfile
 
     staged = _ensure_late_staged(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
@@ -1977,7 +1933,6 @@ def _drained_sink_indexes(
     per session instead of once per query. Returns
     (dest, flat_ledger, percolumn_ledger)."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators import skipping
 
@@ -2225,12 +2180,11 @@ def streaming_quarantine_repair(
     story the same way the MV family does: operational state
     (quarantine, ledgers, index) lives in storage, not the driver."""
     import datetime
-    import json
     import os
-    import tempfile
 
     from pyspark.sql import Observation
 
+    from twitter_flink_spark.commit import write_json
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.operators.expectations import Rule
     from twitter_flink_spark.sources.tables import load_table
@@ -2306,10 +2260,7 @@ def streaming_quarantine_repair(
                 spark.read.parquet(good).inputFiles()
             )
         led["stale_after"] = skipping.stale_file_count(spark, good)
-        tmp = f"{mark}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(led, f)
-        os.rename(tmp, mark)  # ledger commit = the batch's commit point
+        write_json(mark, led)  # ledger commit = the batch's commit point
         batches.append(led)
 
     q = (
@@ -2480,7 +2431,6 @@ def streaming_ivf_assign_maintenance(
     inverted-list append touches k dirs at most — no maintenance step
     ever scales with the table."""
     import os
-    import tempfile
 
     from pyspark.sql.types import StructField, StructType
 
@@ -2488,7 +2438,7 @@ def streaming_ivf_assign_maintenance(
         assign_clusters,
         kmeans_fit,
     )
-    from twitter_flink_spark.operators.ivf import has_parquet
+    from twitter_flink_spark.commit import has_parquet, observed_count
     from twitter_flink_spark.queries.similarity import (
         _KM_ITERS,
         _KM_K,
@@ -2540,9 +2490,7 @@ def streaming_ivf_assign_maintenance(
         fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
             "append"
         ).partitionBy("cid").parquet(assign_dir)
-        from twitter_flink_spark.operators.dedup import _observed_count
-
-        ledger.append(_observed_count(obs))
+        ledger.append(observed_count(obs))
 
     q = (
         spark.readStream.schema(emb.schema)
@@ -2680,7 +2628,6 @@ def streaming_lsh_index_maintenance(
     append is per-file renames, crash-safe by the all-bands-present
     coverage rule."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators.dedup import (
         jaccard_verify_sets,
@@ -2830,8 +2777,8 @@ def streaming_dedup_impact_ledger(
     curator's token-reduction number is fresh after every crawl
     instead of after a monthly re-census."""
     import os
-    import tempfile
 
+    from twitter_flink_spark.commit import observed_count
     from twitter_flink_spark.operators.dedup import jaccard_verify_sets
     from twitter_flink_spark.queries.dedup import (
         _staged_minhash,
@@ -2923,9 +2870,7 @@ def streaming_dedup_impact_ledger(
             "overwrite"
         ).parquet(scratch)
         fresh = spark.read.parquet(scratch)
-        from twitter_flink_spark.operators.dedup import _observed_count
-
-        n_new = _observed_count(obs)
+        n_new = observed_count(obs)
         new_counts.append(int(n_new))
         if not n_new:
             return  # redelivered batch: nothing appends, ledger frozen
@@ -2969,7 +2914,7 @@ def streaming_dedup_impact_ledger(
         verified.observe(pobs, F.count(F.lit(1)).alias("n")).write.mode(
             "append"
         ).parquet(pairs_dir)
-        pair_total[0] += _observed_count(pobs)
+        pair_total[0] += observed_count(pobs)
         ledger.append(_census_snapshot())
 
     schema = spark.read.parquet(staged).schema
@@ -3123,8 +3068,6 @@ def streaming_lsh_delete_maintenance(
     At 100 TB: each delete batch pays one semi-join + one appended
     parquet; nothing re-signs the surviving corpus; the compaction
     amortizes over many delete batches."""
-    import os
-
     from twitter_flink_spark.operators.dedup import (
         jaccard_verify_sets,
         lsh_index_candidates,

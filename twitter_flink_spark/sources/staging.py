@@ -8,8 +8,7 @@ bench would race a bare ``shutil.rmtree`` + rewrite, each able to delete
 or overwrite a layout the other is mid-read — flaky failures that read as
 correctness regressions.
 
-``stage_once`` is the shared commit protocol (generalizing
-``queries/streaming.py::_stage_events_once``): build into a
+``stage_once`` is the shared commit protocol: build into a
 pid/thread-unique scratch dir, commit via one atomic ``os.rename``, treat
 a losing rename as "reuse the winner", and carry the builder's ledger
 (counts the queries pin) in a marker file so every process — builder or
@@ -39,7 +38,7 @@ import threading
 import time
 from collections.abc import Callable
 
-from twitter_flink_spark.operators.skipping import _pid_alive
+from twitter_flink_spark.commit import pid_alive, write_json
 
 MARKER = "_STAGED.json"
 
@@ -75,7 +74,7 @@ def scratch_dir(tag: str) -> str:
     kept on purpose — these are single-process garbage the moment the
     run ends, and bare ``mkdtemp`` left ~30 of them per bench run with
     nothing ever sweeping. First call per process sweeps abandoned
-    siblings the same way `operators.skipping._scratch_name` sweeps
+    siblings the same way `commit.scratch_name` sweeps
     manifest scratch: only the ``tfs-eph-`` namespace (never the staged
     fixtures), only when the embedded pid is DEAD *and* the dir is over
     an hour old — a live concurrent bench or a legitimately slow drain
@@ -91,7 +90,7 @@ def scratch_dir(tag: str) -> str:
         for leftover in glob.glob(os.path.join(tmp, "tfs-eph-*")):
             try:
                 m = re.search(r"-(\d+)-\d+-\d+$", leftover)
-                if m is not None and _pid_alive(int(m.group(1))):
+                if m is not None and pid_alive(int(m.group(1))):
                     continue
                 if time.time() - os.lstat(leftover).st_mtime > _EPH_TTL_S:
                     shutil.rmtree(leftover, ignore_errors=True)
@@ -116,13 +115,6 @@ def _read_marker(mark: str) -> dict | None:
         return None
 
 
-def _write_marker(mark: str, meta: dict) -> None:
-    tmp = f"{mark}.tmp-{os.getpid()}-{threading.get_ident()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(tmp, mark)  # atomic: readers see no marker, or a full one
-
-
 def _finalizing_alive(dest: str) -> bool:
     """True while a marker-less ``dest`` should still be awaited: its
     finalizing builder's pid is alive, or no breadcrumb exists yet and
@@ -130,7 +122,7 @@ def _finalizing_alive(dest: str) -> bool:
     info = _read_marker(os.path.join(dest, FINALIZING))
     if info is not None:
         try:
-            return _pid_alive(int(info["pid"]))
+            return pid_alive(int(info["pid"]))
         except (KeyError, TypeError, ValueError):
             return False
     try:
@@ -240,17 +232,26 @@ def stage_once(
                 f"staged fixture {dest} kept reappearing without "
                 f"{MARKER}; remove the directory and retry"
             ) from None
-    _write_marker(os.path.join(dest, FINALIZING), {"pid": os.getpid()})
+    write_json(os.path.join(dest, FINALIZING), {"pid": os.getpid()})
     if finalize is not None:
         # on a raise the breadcrumb stays with our (soon dead) pid: the
         # next caller replaces the torn dest immediately
         meta.update(finalize(dest) or {})
-    _write_marker(mark, meta)
+    write_json(mark, meta)
     try:
         os.remove(os.path.join(dest, FINALIZING))
     except OSError:
         pass
     return dest, meta
+
+
+def build_id(dest: str) -> str:
+    """Which build of the staged layout at ``dest`` is committed (its
+    marker's mtime). A layout staged FROM another one and storing its
+    absolute file paths (a sidecar index) puts this in its tag: a
+    rebuilt base then gets a fresh sidecar instead of one that indexes
+    the dead files of the base's previous build."""
+    return f"{os.stat(os.path.join(dest, MARKER)).st_mtime_ns:x}"
 
 
 def _wait_for_marker(mark: str) -> dict | None:

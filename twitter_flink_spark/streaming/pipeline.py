@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from twitter_flink_spark.commit import replace_dir, write_json
 from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.streaming.sources import stream_table
 
@@ -310,8 +311,10 @@ class TopNFeedback:
 
         if not self._log_dir:
             return
-        # finish a compaction interrupted between the two directory renames:
-        # the .gc dir holds the last complete log generation
+        # a log compacted by the old rename-aside protocol (before the
+        # pointer swap) could be left between its two directory renames,
+        # with the .gc dir holding the last complete log generation; such
+        # logs can still exist on disk, so the re-adoption stays
         gc_dir = self._log_dir + ".gc"
         if not os.path.isdir(self._log_dir) and os.path.isdir(gc_dir):
             os.rename(gc_dir, self._log_dir)
@@ -424,12 +427,11 @@ class TopNFeedback:
         (monotone-count argument in `_merge`) — so compaction is one
         driver-written file (`_write_log`, ``max_ts`` = the mirror's
         frontier) and no re-read of the log. Crash-safe without a manifest:
-        the old generation moves aside to ``.gc`` before the compacted one
-        takes its place, and ``_restore`` re-adopts a stranded ``.gc`` dir
-        — at worst a crash costs one compaction, never the log."""
+        the compacted generation is published by the pointer swap
+        (`commit.replace_dir`), so the log dir names the old or the new
+        generation at every instant — at worst a crash costs one
+        compaction, never the log."""
         import shutil
-
-        from twitter_flink_spark.operators.skipping import _replace_dir
 
         entries = [
             (ws, self._wend[ws], key, cnt)
@@ -442,7 +444,7 @@ class TopNFeedback:
         # pointer swap (symlink renamed in one atomic step): a reader —
         # or a restore racing this compaction — sees the old or the new
         # log at every instant, never a missing dir
-        _replace_dir(tmp, self._log_dir)
+        replace_dir(tmp, self._log_dir)
 
     def _maybe_compact_in_run(self) -> None:
         """In-run WAL compaction (every ``compact_every`` micro-batches):
@@ -705,22 +707,18 @@ class IncrementalMV:
         return os.path.join(self._root, "_manifest.json")
 
     def _commit_manifest(self) -> None:
-        import json
         import os
 
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self._last_batch_id,
-                    "buckets": {str(b): v for b, v in self._buckets.items()},
-                    "n_buckets": self.n_buckets,
-                    "key_col": self.key_col,
-                    "schema": self._schema.jsonValue(),
-                },
-                fh,
-            )
-        os.replace(tmp, self._manifest_path())  # atomic commit point
+        write_json(  # atomic commit point
+            self._manifest_path(),
+            {
+                "last_batch_id": self._last_batch_id,
+                "buckets": {str(b): v for b, v in self._buckets.items()},
+                "n_buckets": self.n_buckets,
+                "key_col": self.key_col,
+                "schema": self._schema.jsonValue(),
+            },
+        )
         if self.retain_history:
             import shutil
 
@@ -1002,13 +1000,7 @@ class IncrementalMV:
             return {k: int(v) for k, v in json.load(fh).items()}
 
     def _write_consumers(self, offsets: dict[str, int]) -> None:
-        import json
-        import os
-
-        tmp = self._consumers_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(offsets, fh)
-        os.replace(tmp, self._consumers_path())  # atomic, like the manifest
+        write_json(self._consumers_path(), offsets)  # atomic, as the manifest
 
     def register_consumer(self, name: str) -> None:
         """Register a changelog reader. A new consumer starts at offset
@@ -1117,14 +1109,12 @@ class IncrementalMV:
         )
         order = [f.name for f in log.schema.fields]
         out = net.select(*order).unionByName(keep.select(*order))
-        from twitter_flink_spark.operators.skipping import _replace_dir
-
         tmp = self.changelog_dir + ".compact"
         shutil.rmtree(tmp, ignore_errors=True)
         out.write.mode("overwrite").parquet(tmp)
         # pointer swap: CDF consumers reading the changelog concurrently
         # never observe a missing dir between generations
-        _replace_dir(tmp, self.changelog_dir)
+        replace_dir(tmp, self.changelog_dir)
 
     def lookup(self, keys: list) -> "DataFrame":
         """Point lookup: serve specific keys by opening ONLY the bucket
