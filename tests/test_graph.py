@@ -291,7 +291,10 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     """Guard: every list-built frame in the package goes through
     `session.local_frame` (one slice; `createDataFrame(list)` spreads
     rows over one slice per core and a one-task write then reads them
-    all in turn), only `graph._release` may touch persisted RDDs — no
+    all in turn), no frame is built from a ``parallelize``d RDD (its
+    rows are converted in a Python worker on every evaluation; the
+    Arrow-built local relation holds them in the plan), only
+    `graph._release` may touch persisted RDDs — no
     global before/after diffs of `getPersistentRDDs` — only
     `session.get_spark` and `pipeline.state_partitions` (state store
     sizing) name ``spark.sql.shuffle.partitions``, and symlinks,
@@ -305,6 +308,7 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
 
     owner = {
         "createDataFrame": {"local_frame"},
+        "parallelize": set(),
         "getPersistentRDDs": {"_release"},
         "spark.sql.shuffle.partitions": {"get_spark", "state_partitions"},
         "symlink": {"commit.py", "stream_table"},
@@ -333,6 +337,46 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     assert files
     for path in files:
         visit(ast.parse(path.read_text()), path, ())
+    assert bad == []
+
+
+def test_staged_replays_declare_their_schema_from_the_ledger():
+    """Guard: the streaming and connector queries never infer a staged
+    fixture's schema with ``spark.read.parquet(staged).schema`` — each
+    such read is one footer-inference job. The fixture's build records
+    the schema in its `stage_once` ledger (`staging.schema_entry`)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
+    bad = []
+
+    def read_chain(expr) -> bool:
+        """``expr`` is a `read` chain with no ``.schema(...)`` on it."""
+        seen_read = False
+        while isinstance(expr, (ast.Attribute, ast.Call)):
+            if isinstance(expr, ast.Call):
+                f = expr.func
+                if isinstance(f, ast.Attribute) and f.attr == "schema":
+                    return False
+                expr = f
+                continue
+            seen_read = seen_read or expr.attr == "read"
+            expr = expr.value
+        return seen_read
+
+    for name in ("streaming.py", "connectors.py"):
+        path = root / "queries" / name
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "schema"
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "parquet"
+                and read_chain(node.value.func.value)
+            ):
+                bad.append(f"{name}:{node.lineno}")
     assert bad == []
 
 

@@ -29,7 +29,7 @@ def test_pandas_cosine_equals_builtin(spark):
         "ida",
         "idb",
         cosine_pandas(F.col("ea"), F.col("eb")).alias("c_udf"),
-        cosine_builtin(F.col("ea"), F.col("eb")).alias("c_jvm"),
+        cosine_builtin("ea", "eb").alias("c_jvm"),
     )
     diffs = both.select(F.max(F.abs(F.col("c_udf") - F.col("c_jvm"))).alias("d"))
     assert diffs.collect()[0]["d"] < 1e-9

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from twitter_flink_spark.sources.pyds_sink import (
     SINK_NAME,
+    JsonDirBatchWriter,
     JsonEpochStreamWriter,
     register_sink,
 )
@@ -69,6 +70,56 @@ def test_epoch_commit_is_idempotent(tmp_path):
     m3 = w.write(iter([_Row(3)]))
     w.commit([m3], batchId=1)
     assert sorted(r["id"] for r in _read_all(dest, "epoch-*")) == [1, 2, 3]
+
+
+def test_markers_torn_mid_write_are_never_read(tmp_path, monkeypatch):
+    """A crash in the middle of writing a commit marker (the JSON dump
+    raises after writing half the object) leaves NO marker at its name:
+    the epoch is not read as committed, its replay publishes it once,
+    and the batch writer leaves no ``_SUCCESS``."""
+    import pytest
+
+    import twitter_flink_spark.commit as commit
+
+    class _Row:
+        def __init__(self, i):
+            self.i = i
+
+        def asDict(self):
+            return {"id": self.i}
+
+    class _TornJson:
+        @staticmethod
+        def dump(obj, fh):
+            fh.write('{"rows": ')
+            fh.flush()
+            raise OSError("crash mid-dump")
+
+    dest = str(tmp_path / "epochs")
+    os.makedirs(dest)
+    w = JsonEpochStreamWriter({"path": dest})
+    m1 = w.write(iter([_Row(1), _Row(2)]))
+    with monkeypatch.context() as mp:
+        mp.setattr(commit, "json", _TornJson)
+        with pytest.raises(OSError, match="crash mid-dump"):
+            w.commit([m1], batchId=0)
+    assert [f for f in os.listdir(dest) if "SUCCESS" in f] == []
+    # the replayed epoch is not mistaken for a committed one
+    m2 = w.write(iter([_Row(1), _Row(2)]))
+    w.commit([m2], batchId=0)
+    assert sorted(r["id"] for r in _read_all(dest, "epoch-*")) == [1, 2]
+    with open(os.path.join(dest, "_epoch_0_SUCCESS")) as fh:
+        assert json.load(fh) == {"rows": 2}
+
+    bdest = str(tmp_path / "batch")
+    os.makedirs(bdest)
+    bw = JsonDirBatchWriter({"path": bdest}, overwrite=False)
+    m = bw.write(iter([_Row(7)]))
+    with monkeypatch.context() as mp:
+        mp.setattr(commit, "json", _TornJson)
+        with pytest.raises(OSError, match="crash mid-dump"):
+            bw.commit([m])
+    assert [f for f in os.listdir(bdest) if "SUCCESS" in f] == []
 
 
 def test_abort_publishes_nothing(tmp_path):

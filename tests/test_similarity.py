@@ -802,3 +802,118 @@ def test_ivf_stream_survives_empty_first_batch(spark, tmp_path, monkeypatch):
     assert all(r.redelivery_noop for r in out)
     # four batches, the first one empty: not the 3-batch shape
     assert not any(r.streamed_in_batches for r in out)
+
+
+def _lambda_dot(a, b):
+    """The Column-lambda form `dot` had before it became SQL text — kept
+    here only as the reference the SQL form must equal bit for bit."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _lambda_sq_dist(a: str, b: str):
+    a, b = F.col(a), F.col(b)
+    return _lambda_dot(a, a) - 2 * _lambda_dot(a, b) + _lambda_dot(b, b)
+
+
+def _lambda_scored_expr(vec_col: str):
+    return F.transform(
+        F.col("_tfs_cands"),
+        lambda c: F.struct(
+            (
+                F.col("_tfs_sq")
+                - 2 * _lambda_dot(F.col(vec_col), c["cent"])
+                + _lambda_dot(c["cent"], c["cent"])
+            ).alias("dist"),
+            c["cid"].alias("cid"),
+        ),
+    )
+
+
+def _seeded_vectors(spark, n: int, dim: int, seed: int):
+    import random
+
+    rng = random.Random(seed)
+    return spark.createDataFrame(
+        [
+            (i, [rng.uniform(-40, 40) / 7 for _ in range(dim)])
+            for i in range(n)
+        ],
+        "vec_id LONG, e ARRAY<DOUBLE>",
+    )
+
+
+def test_sql_dot_and_cosine_bit_identical_to_column_lambdas(spark):
+    """`dot`, `cosine` and `sq_dist` (one SQL expression each) give the
+    same doubles as the Column-lambda form, for float and double arrays
+    and a null side."""
+    from twitter_flink_spark.operators.similarity import cosine, dot, sq_dist
+
+    v = _seeded_vectors(spark, 30, 9, seed=5)
+    pairs = (
+        v.select(F.col("vec_id").alias("i"), F.col("e").alias("a"))
+        .crossJoin(
+            v.where(F.col("vec_id") < 6).select(
+                F.col("vec_id").alias("j"),
+                F.col("e").cast("array<float>").alias("b"),
+            )
+        )
+        .unionByName(
+            spark.createDataFrame(
+                [(-1, None, [1.0])], "i LONG, a ARRAY<DOUBLE>, b ARRAY<FLOAT>"
+            ).withColumn("j", F.lit(-1).cast("long"))
+        )
+    )
+    a, b = F.col("a"), F.col("b")
+    got = pairs.select(
+        "i",
+        "j",
+        dot("a", "b").alias("d"),
+        cosine("a", "b").alias("c"),
+        sq_dist("a", "b").alias("q"),
+        _lambda_dot(a, b).alias("d0"),
+        (
+            _lambda_dot(a, b)
+            / (F.sqrt(_lambda_dot(a, a)) * F.sqrt(_lambda_dot(b, b)))
+        ).alias("c0"),
+        _lambda_sq_dist("a", "b").alias("q0"),
+    ).collect()
+    assert len(got) == 30 * 6 + 1
+    for r in got:
+        for new, old in (("d", "d0"), ("c", "c0"), ("q", "q0")):
+            assert repr(r[new]) == repr(r[old]), (r.i, r.j, new)
+
+
+def test_assign_and_kmeans_bit_identical_to_column_lambdas(
+    spark, monkeypatch
+):
+    """`assign_clusters` (distances kept) and the `kmeans_fit` centroids
+    are value-for-value the ones the Column-lambda expressions give."""
+    from twitter_flink_spark.operators import clustering
+
+    v = _seeded_vectors(spark, 80, 7, seed=17)
+
+    def run():
+        cents = clustering.kmeans_fit(v, k=5, iters=3, vec_col="e")
+        fit = sorted((r.cid, r.cent, r.n_vecs) for r in cents.collect())
+        assigned = sorted(
+            tuple(r)
+            for r in clustering.assign_clusters(
+                v, cents, keep_dist=True, top_n=2
+            ).collect()
+        )
+        return fit, assigned
+
+    sql_fit, sql_assigned = run()
+    monkeypatch.setattr(clustering, "_scored_expr", _lambda_scored_expr)
+    monkeypatch.setattr(
+        clustering, "dot", lambda a, b: _lambda_dot(F.col(a), F.col(b))
+    )
+    monkeypatch.setattr(clustering, "sq_dist", _lambda_sq_dist)
+    lam_fit, lam_assigned = run()
+    assert len(sql_fit) >= 4 and len(sql_assigned) == 160
+    assert sql_fit == lam_fit
+    assert sql_assigned == lam_assigned

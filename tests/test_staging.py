@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from twitter_flink_spark.commit import write_json
 from twitter_flink_spark.sources import staging
 
@@ -329,3 +331,43 @@ def test_write_json_concurrent_writers_never_tear(tmp_path):
     assert not any(t.is_alive() for t in writers)
     assert errors == []
     assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        "_ensure_compacted_vacuumed_layout",
+        "_ensure_twolevel_vacuumed_layout",
+        "_ensure_bloom_vacuumed_layout",
+        "_ensure_nightly_maintenance_layout",
+    ],
+)
+def test_finalize_swap_carries_the_breadcrumb(
+    spark, tmp_path, monkeypatch, layout
+):
+    """The finalize phase of each compactor layout swaps the whole table
+    dir; the ``_FINALIZING.json`` breadcrumb moves with it, so between
+    the swap and the marker commit a concurrent stager still sees a live
+    finalize (`_finalizing_alive`) — with the dir-age fallback switched
+    off, only the breadcrumb can answer."""
+    from twitter_flink_spark.queries import scale
+
+    _tag(tmp_path, monkeypatch)
+    monkeypatch.setattr(staging, "STALE_AFTER_S", -1)
+    seen = []
+    swap = scale.swap_table_dir
+
+    def watched_swap(tmp, dest, carry):
+        swap(tmp, dest, carry)
+        seen.append(
+            (
+                staging._finalizing_alive(dest),
+                os.path.exists(os.path.join(dest, staging.MARKER)),
+            )
+        )
+
+    monkeypatch.setattr(scale, "swap_table_dir", watched_swap)
+    dest = getattr(scale, layout)(spark, "/root/testdata/sf0.001")[0]
+    assert seen == [(True, False)]
+    assert os.path.exists(os.path.join(dest, staging.MARKER))
+    assert not os.path.exists(os.path.join(dest, staging.FINALIZING))

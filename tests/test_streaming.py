@@ -1583,6 +1583,28 @@ def test_ensure_split_events_concurrent_build_consistent(
     assert os.path.getmtime(os.path.join(dest, "_SUCCESS")) == mtime
 
 
+@pytest.mark.parametrize(
+    "stage",
+    [
+        "_stage_split_events",
+        "_stage_time_split_events3",
+        "_stage_late_events",
+        "_stage_docid_split_documents",
+        "_stage_delete_stream",
+        "_stage_vec_delete_stream",
+    ],
+)
+def test_staged_replay_schema_equals_inferred(spark, stage):
+    """Each staged replay fixture returns, from its ledger, exactly the
+    schema a parquet read of the staged files infers — the schema its
+    file-stream source used to pay an inference job for."""
+    import twitter_flink_spark.queries.streaming as qstreaming
+
+    dest, schema = getattr(qstreaming, stage)(spark, SF_DIR)
+    assert schema == spark.read.parquet(dest).schema
+    assert getattr(qstreaming, stage)(spark, SF_DIR) == (dest, schema)
+
+
 def test_incremental_mv_lookup_composite_keys(spark):
     """`lookup` on a composite-key MV (GroupedCountMV) must accept key
     TUPLES, route them through the same composite bucket hash the merge

@@ -39,9 +39,9 @@ def norm_pandas(a: pd.Series) -> pd.Series:
     )
 
 
-def cosine_builtin(a: Column, b: Column) -> Column:
+def cosine_builtin(a: str, b: str) -> Column:
     """Re-export of the JVM-side cosine (operators/similarity.py) for
-    side-by-side use in tests."""
+    side-by-side use in tests; ``a`` and ``b`` are SQL expressions."""
     from twitter_flink_spark.operators.similarity import cosine
 
     return cosine(a, b)

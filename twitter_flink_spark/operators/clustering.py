@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.operators.graph import _release
-from twitter_flink_spark.operators.similarity import dot
+from twitter_flink_spark.operators.similarity import dot, dot_sql, sq_dist
 from twitter_flink_spark.session import local_frame
 
 #: decimal scale for centroid component accumulation
@@ -70,16 +70,11 @@ def _scored_expr(vec_col: str):
     accumulation) the window formulation computed per joined row, with
     the struct field order making array_min / array_sort tie-break on
     the lower cid — exactly the old ``ORDER BY dist ASC, cid ASC``."""
-    return F.transform(
-        F.col("_tfs_cands"),
-        lambda c: F.struct(
-            (
-                F.col("_tfs_sq")
-                - 2 * dot(F.col(vec_col), c["cent"])
-                + dot(c["cent"], c["cent"])
-            ).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
+    cent = "cand.cent"
+    return F.expr(
+        "transform(_tfs_cands, cand -> struct("
+        f"_tfs_sq - 2 * {dot_sql(vec_col, cent)} + {dot_sql(cent, cent)}"
+        " AS dist, cand.cid AS cid))"
     )
 
 
@@ -116,12 +111,7 @@ def assign_clusters(
         if group_col
         else vectors.crossJoin(F.broadcast(centroids))
     )
-    d = joined.withColumn(
-        "dist",
-        dot(F.col(vec_col), F.col(vec_col))
-        - 2 * dot(F.col(vec_col), F.col("cent"))
-        + dot(F.col("cent"), F.col("cent")),
-    )
+    d = joined.withColumn("dist", sq_dist(vec_col, "cent"))
     keys = [id_col] + ([group_col] if group_col else [])
     w = Window.partitionBy(*keys).orderBy(
         F.col("dist").asc(), F.col("cid").asc()
@@ -252,7 +242,7 @@ def kmeans_fit(
         # rows are already in hand: pack them locally (zero jobs) —
         # round cost is exactly ONE job, the means aggregate's collect
         packed = _pack_rows(spark, rows, g, cent_fields)
-        base = v.withColumn("_tfs_sq", dot(F.col("e"), F.col("e")))
+        base = v.withColumn("_tfs_sq", dot("e", "e"))
         joined = (
             base.join(F.broadcast(packed), on=group_col)
             if group_col
@@ -302,13 +292,7 @@ def assigned_mean_dist(
         vectors.select(id_col, vec_col)
         .join(assigned.select(id_col, "cid"), id_col)
         .join(F.broadcast(centroids.select("cid", "cent")), "cid")
-        .select(
-            (
-                dot(F.col(vec_col), F.col(vec_col))
-                - 2 * dot(F.col(vec_col), F.col("cent"))
-                + dot(F.col("cent"), F.col("cent"))
-            ).alias("dist")
-        )
+        .select(sq_dist(vec_col, "cent").alias("dist"))
     )
     row = d.agg(
         F.sum(F.round("dist", 6).cast("decimal(38,6)")).alias("s"),

@@ -22,18 +22,38 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product of two array columns (left-to-right
-    accumulation — same order DuckDB's list_cosine_similarity uses)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the double-precision dot product of the array
+    expressions ``a`` and ``b``, accumulated left to right — the order
+    DuckDB's list_dot_product and list_cosine_similarity use."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(l, r) -> CAST(l AS DOUBLE) * CAST(r AS DOUBLE)), "
+        "0D, (acc, v) -> acc + v)"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def dot(a: str, b: str) -> Column:
+    """`dot_sql` as one column. ``a`` and ``b`` are SQL expressions
+    (column names, mostly): the JVM parses the expression in one call,
+    where composing the same tree from Column lambdas costs a py4j call
+    per node and lambda variable (~150 for one dot product)."""
+    return F.expr(dot_sql(a, b))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of the array expressions ``a`` and ``b``:
+    ``<a,b> / (|a| |b|)``, one expression."""
+    return F.expr(
+        f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
+    )
+
+
+def sq_dist(a: str, b: str) -> Column:
+    """Squared L2 distance of the array expressions ``a`` and ``b``
+    through the dot identity ``|a|^2 - 2<a,b> + |b|^2`` — the k-means /
+    IVF assignment distance — as one expression."""
+    return F.expr(f"{dot_sql(a, a)} - 2 * {dot_sql(a, b)} + {dot_sql(b, b)}")
 
 
 #: brute-force path cap: the query side is broadcast, so it must stay
@@ -80,7 +100,7 @@ def topk_neighbors(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__qnorm"),
+        F.sqrt(dot(vec_col, vec_col)).alias("__qnorm"),
         *([F.col(cell_col).alias("__qcell")] if cell_col else []),
     )
     # repartition the probe (corpus) side: the broadcast join preserves its
@@ -95,7 +115,7 @@ def topk_neighbors(
     c = c.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
+        F.sqrt(dot(vec_col, vec_col)).alias("__cnorm"),
         *([F.col(cell_col).alias("__ccell")] if cell_col else []),
     )
     if cell_col:
@@ -108,7 +128,7 @@ def topk_neighbors(
             "query_id",
             "neighbor_id",
             (
-                dot(F.col("__qvec"), F.col("__cvec"))
+                dot("__qvec", "__cvec")
                 / (F.col("__qnorm") * F.col("__cnorm"))
             ).alias("__cos"),
         )
@@ -147,6 +167,12 @@ def random_hyperplanes(
     ]
 
 
+def _double_array_sql(values) -> str:
+    """SQL literal of an array of doubles; ``repr`` is the shortest text
+    that parses back to the same double."""
+    return "array(" + ", ".join(f"{float(v)!r}D" for v in values) + ")"
+
+
 def lsh_sign_bands(
     vectors: DataFrame,
     planes: list[list[float]],
@@ -164,8 +190,10 @@ def lsh_sign_bands(
     """
     r = len(planes) // bands
     bits = [
-        F.when(dot(F.col(vec_col), F.array(*[F.lit(c) for c in p])) > 0, "1")
-        .otherwise("0")
+        F.expr(
+            f"CASE WHEN {dot_sql(vec_col, _double_array_sql(p))} > 0 "
+            "THEN '1' ELSE '0' END"
+        )
         for p in planes
     ]
     sigs = F.array(

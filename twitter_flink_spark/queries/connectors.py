@@ -208,14 +208,13 @@ def streaming_pyds_writer_roundtrip(
     aggregate must equal the one-shot batch aggregate over the source."""
     import os
 
-    from twitter_flink_spark.queries.streaming import _ensure_split_events
+    from twitter_flink_spark.queries.streaming import _stage_split_events
     from twitter_flink_spark.sources.pyds_sink import SINK_NAME, register_sink
     from twitter_flink_spark.streaming.pipeline import await_or_raise
 
     _require_local(spark)
     register_sink(spark)
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     # dest and checkpoint are cleared TOGETHER: a retained checkpoint over a
     # cleared dest would replay nothing and read back an empty sink
     dest = _scratch_dir("tfs-pyds-epoch", sf_dir)

@@ -20,6 +20,7 @@ from twitter_flink_spark.operators.bucketing import read_bucketed, write_buckete
 from twitter_flink_spark.operators.joins import salted_equi_join
 from twitter_flink_spark.registry import register
 from twitter_flink_spark.session import local_frame
+from twitter_flink_spark.sources.staging import FINALIZING
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -800,7 +801,8 @@ _TYPE_PART_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """events written partitionBy(event_type), once per (app, sf)."""
+    """events written partitionBy(event_type), plus the tier dimension
+    table (`_DPP_TIERS`) at ``<dest>-tiers``, once per (app, sf)."""
     from twitter_flink_spark.sources.files import scratch_dir
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -809,10 +811,14 @@ def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         load_table(spark, sf_dir, "events").write.partitionBy(
             "event_type"
         ).mode("overwrite").parquet(dest)
+        local_frame(spark, _DPP_TIERS, _DPP_TIER_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(dest + "-tiers")
         _TYPE_PART_CACHE[key] = dest
     return _TYPE_PART_CACHE[key]
 
 
+_DPP_TIER_SCHEMA = "event_type string, tier string"
 _DPP_TIERS = [
     ("purchase", "high"),
     ("signup", "high"),
@@ -849,10 +855,13 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension, but the fact scan skips whole partitions at run time —
     no manual predicate copying, no full scan. The dim broadcast is
     reused for both the pruning subquery and the join itself."""
-    fact = spark.read.parquet(
-        _ensure_type_partitioned_events(spark, sf_dir)
-    )
-    dim = local_frame(spark, _DPP_TIERS, "event_type string, tier string")
+    fact_dir = _ensure_type_partitioned_events(spark, sf_dir)
+    fact = spark.read.parquet(fact_dir)
+    # the dimension is a TABLE, as in a star schema: over a driver-built
+    # local relation the optimizer would evaluate tier='high' at plan
+    # time, and with no filter left on the build side Catalyst sees
+    # nothing selective to prune the fact with
+    dim = spark.read.schema(_DPP_TIER_SCHEMA).parquet(fact_dir + "-tiers")
     return (
         fact.join(F.broadcast(dim), "event_type")
         .where(F.col("tier") == "high")
@@ -2424,8 +2433,10 @@ def _ensure_compacted_vacuumed_layout(
             .parquet(tmp)
         )
         # the staging marker does not exist yet (stage_once writes it
-        # after finalize returns, into the post-swap dest)
-        swap_table_dir(tmp, dest, [skipping.STATS_DIR])
+        # after finalize returns, into the post-swap dest); the
+        # finalizing breadcrumb moves across first, so a concurrent
+        # stager keeps awaiting this live finalize
+        swap_table_dir(tmp, dest, [FINALIZING, skipping.STATS_DIR])
         return {
             "n_new": skipping.update(spark, dest, ["ts"]),
             "n_dead": skipping.vacuum_manifest(spark, dest),
@@ -2984,7 +2995,9 @@ def _ensure_twolevel_vacuumed_layout(
             .parquet(tmp)
         )
         swap_table_dir(
-            tmp, dest, [skipping.PARTS_DIR, skipping.ROOT_MANIFEST]
+            tmp,
+            dest,
+            [FINALIZING, skipping.PARTS_DIR, skipping.ROOT_MANIFEST],
         )
         return {
             "n_new": skipping.update_two_level(spark, dest, "ts"),
@@ -3101,7 +3114,10 @@ def _ensure_bloom_vacuumed_layout(
         swap_table_dir(
             tmp,
             dest,
-            [os.path.basename(skipping._bloom_dir(dest, "o_orderkey"))],
+            [
+                FINALIZING,
+                os.path.basename(skipping._bloom_dir(dest, "o_orderkey")),
+            ],
         )
         return {
             "n_new": skipping.update_bloom(spark, dest, "o_orderkey"),
@@ -3328,7 +3344,9 @@ def _ensure_nightly_maintenance_layout(
             order_col="ts",
         )
         swap_table_dir(
-            tmp, dest, [skipping.STATS_DIR, "_filebloom_user_id"]
+            tmp,
+            dest,
+            [FINALIZING, skipping.STATS_DIR, "_filebloom_user_id"],
         )
         files_after = len(spark.read.parquet(dest).inputFiles())
         return {
@@ -3805,11 +3823,11 @@ def sidecar_index_readonly_serving(
 
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.queries.streaming import (
-        _ensure_time_split_events3,
+        _stage_time_split_events3,
     )
     from twitter_flink_spark.sources.staging import build_id, stage_once
 
-    dest = _ensure_time_split_events3(spark, sf_dir)
+    dest = _stage_time_split_events3(spark, sf_dir)[0]
 
     def _build(p: str) -> None:
         skipping.build_two_level_columns(

@@ -12,6 +12,7 @@ from twitter_flink_spark.operators.similarity import (
     cosine,
     dot,
     lsh_sign_bands,
+    sq_dist,
     random_hyperplanes,
     topk_neighbors,
 )
@@ -137,12 +138,12 @@ def _exact_topk_from_cands(emb: DataFrame, cands: DataFrame, k: int) -> DataFram
     qv = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qv"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__qn"),
+        F.sqrt(dot("embedding", "embedding")).alias("__qn"),
     )
     nv = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__nv"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__nn"),
+        F.sqrt(dot("embedding", "embedding")).alias("__nn"),
     )
     scored = (
         cands.join(F.broadcast(qv), on="query_id")
@@ -150,7 +151,7 @@ def _exact_topk_from_cands(emb: DataFrame, cands: DataFrame, k: int) -> DataFram
         .select(
             "query_id",
             "neighbor_id",
-            (dot(F.col("__qv"), F.col("__nv")) / (F.col("__qn") * F.col("__nn"))).alias(
+            (dot("__qv", "__nv") / (F.col("__qn") * F.col("__nn"))).alias(
                 "__cos"
             ),
         )
@@ -321,13 +322,13 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"),
         F.col("label"),
         F.col("embedding").alias("__ea"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__na"),
+        F.sqrt(dot("embedding", "embedding")).alias("__na"),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("label"),
         F.col("embedding").alias("__eb"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__nb"),
+        F.sqrt(dot("embedding", "embedding")).alias("__nb"),
     )
     return (
         a.join(b, on="label")
@@ -335,7 +336,7 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            (dot(F.col("__ea"), F.col("__eb")) / (F.col("__na") * F.col("__nb"))).alias(
+            (dot("__ea", "__eb") / (F.col("__na") * F.col("__nb"))).alias(
                 "__cos"
             ),
         )
@@ -733,7 +734,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k via WindowGroupLimit. At 100 TB the corpus never shuffles —
     anchors broadcast, every task mines its partition, k rows per anchor
     survive."""
-    from twitter_flink_spark.operators.similarity import dot
     from twitter_flink_spark.sources.tables import spread
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -741,13 +741,13 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("__qlabel"),
         F.col("embedding").alias("__qv"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__qn"),
+        F.sqrt(dot("embedding", "embedding")).alias("__qn"),
     )
     corpus = spread(emb, "vec_id").select(
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("__clabel"),
         F.col("embedding").alias("__cv"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__cn"),
+        F.sqrt(dot("embedding", "embedding")).alias("__cn"),
     )
     scored = (
         corpus.join(
@@ -757,7 +757,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "negative_id",
-            (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")))
+            (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
             .alias("__cos"),
         )
     )
@@ -958,7 +958,7 @@ def semantic_dedup_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cid",
         F.col("embedding").alias("__e"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__n"),
+        F.sqrt(dot("embedding", "embedding")).alias("__n"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     a = sides.select(
         F.col("vec_id").alias("vec_a"),
@@ -977,7 +977,7 @@ def semantic_dedup_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_a") < F.col("vec_b"))
         .withColumn(
             "__cos",
-            dot(F.col("__ea"), F.col("__eb")) / (F.col("__na") * F.col("__nb")),
+            dot("__ea", "__eb") / (F.col("__na") * F.col("__nb")),
         )
         .where(F.col("__cos") >= _SEM_THRESH)
         .select(
@@ -1276,12 +1276,7 @@ def ivf_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             "sub",
             "cid",
-            F.round(
-                dot(F.col("e"), F.col("e"))
-                - 2 * dot(F.col("e"), F.col("cent"))
-                + dot(F.col("cent"), F.col("cent")),
-                7,
-            )
+            F.round(sq_dist("e", "cent"), 7)
             .cast("decimal(28,7)")
             .alias("d"),
         )
@@ -1631,12 +1626,7 @@ def ivf_pq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         "sub",
         "cid",
-        F.round(
-            dot(F.col("e"), F.col("e"))
-            - 2 * dot(F.col("e"), F.col("cent"))
-            + dot(F.col("cent"), F.col("cent")),
-            7,
-        )
+        F.round(sq_dist("e", "cent"), 7)
         .cast("decimal(28,7)")
         .alias("d"),
     )
@@ -2066,7 +2056,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "a",
             "b",
-            F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("sim"),
+            F.round(cosine("__va", "__vb"), 6).alias("sim"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -2623,14 +2613,7 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -2732,14 +2715,7 @@ def ivf_index_delete_compact(
         )
         scored = cands.crossJoin(F.broadcast(probe_vec)).select(
             "vec_id",
-            F.round(
-                dot(F.col("e"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("e"), F.col("e")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(cosine("e", "pe"), 6).alias("cosine"),
         )
         return scored.orderBy(F.desc("cosine"), "vec_id").limit(5)
 
@@ -2990,14 +2966,7 @@ def ivf_index_refit_on_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -3146,14 +3115,7 @@ def ivf_index_refit_on_imbalance(
     )
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -3223,14 +3185,7 @@ def ivf_inverted_nprobe_serving(
     )
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -3315,14 +3270,7 @@ def ivf_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -3444,14 +3392,7 @@ def ivf_filtered_ann_escalating(
     probe_vec = probe.select(F.col("e").alias("pe"))
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
-        F.round(
-            dot(F.col("e"), F.col("pe"))
-            / (
-                F.sqrt(dot(F.col("e"), F.col("e")))
-                * F.sqrt(dot(F.col("pe"), F.col("pe")))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(cosine("e", "pe"), 6).alias("cosine"),
     )
     return (
         scored.orderBy(F.desc("cosine"), "vec_id")
@@ -3563,14 +3504,7 @@ def ann_recall_curve_ivf_inverted(
     def topk(cands: DataFrame) -> list:
         scored = cands.crossJoin(F.broadcast(probe_vec)).select(
             "vec_id",
-            F.round(
-                dot(F.col("e"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("e"), F.col("e")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(cosine("e", "pe"), 6).alias("cosine"),
         )
         rows = scored.orderBy(F.desc("cosine"), "vec_id").limit(5)
         return [
@@ -3721,14 +3655,7 @@ def knn_label_vote_accuracy(
             "qlabel",
             F.col("vec_id").alias("nid"),
             F.col("label").alias("nlabel"),
-            F.round(
-                dot(F.col("e"), F.col("qe"))
-                / (
-                    F.sqrt(dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(dot(F.col("e"), F.col("e")))
-                ),
-                6,
-            ).alias("cos"),
+            F.round(cosine("e", "qe"), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.col("nid"))
@@ -3845,11 +3772,7 @@ def label_centroid_separation(
             ),
         )
     )
-    d2 = (
-        dot(F.col("e"), F.col("e"))
-        - 2 * dot(F.col("e"), F.col("c"))
-        + dot(F.col("c"), F.col("c"))
-    )
+    d2 = sq_dist("e", "c")
     scat = (
         emb.join(F.broadcast(cent.select("label", "c")), "label")
         .select("label", F.round(d2, 7).cast("decimal(28,7)").alias("d2"))
@@ -3868,11 +3791,7 @@ def label_centroid_separation(
         .select(
             "la",
             "lb",
-            F.sqrt(
-                dot(F.col("ca"), F.col("ca"))
-                - 2 * dot(F.col("ca"), F.col("cb"))
-                + dot(F.col("cb"), F.col("cb"))
-            ).alias("d"),
+            F.sqrt(sq_dist("ca", "cb")).alias("d"),
         )
     )
     wn = Window.partitionBy("la").orderBy("d", "lb")
@@ -3975,14 +3894,7 @@ def ivf_nprobe_autoselect(spark: SparkSession, sf_dir: str) -> DataFrame:
             cands.crossJoin(F.broadcast(probe_vec))
             .select(
                 "vec_id",
-                F.round(
-                    dot(F.col("e"), F.col("pe"))
-                    / (
-                        F.sqrt(dot(F.col("e"), F.col("e")))
-                        * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                    ),
-                    6,
-                ).alias("cosine"),
+                F.round(cosine("e", "pe"), 6).alias("cosine"),
             )
             .orderBy(F.desc("cosine"), "vec_id")
             .limit(5)
@@ -4157,13 +4069,7 @@ def ann_sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(probe_vec))
         .select(
             "vec_id",
-            (
-                dot(F.col("eq"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("eq"), F.col("eq")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                )
-            ).alias("acos_raw"),
+            cosine("eq", "pe").alias("acos_raw"),
         )
     )
     prelim = approx.orderBy(F.desc("acos_raw"), "vec_id").limit(32)
@@ -4172,14 +4078,7 @@ def ann_sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(probe_vec))
         .select(
             "vec_id",
-            F.round(
-                dot(F.col("e"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("e"), F.col("e")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(cosine("e", "pe"), 6).alias("cosine"),
         )
     )
     topk = rescored.orderBy(F.desc("cosine"), "vec_id").limit(5)
@@ -4188,14 +4087,7 @@ def ann_sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(probe_vec))
         .select(
             "vec_id",
-            F.round(
-                dot(F.col("e"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("e"), F.col("e")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                ),
-                6,
-            ).alias("bcos"),
+            F.round(cosine("e", "pe"), 6).alias("bcos"),
         )
         .orderBy(F.desc("bcos"), "vec_id")
         .limit(5)

@@ -16,6 +16,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from twitter_flink_spark.registry import register
 from twitter_flink_spark.session import local_frame
@@ -369,41 +370,65 @@ def streaming_dedup_watermark_bounded(spark: SparkSession, sf_dir: str) -> DataF
     return run_to_memory(deduped, output_mode="append")
 
 
+def _stage_split_events(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, StructType]:
+    """(dest, schema) of the 4-file events copy multi-batch replays read
+    (hash split: every batch carries the full time range), staged
+    write-once. The schema comes from the staging ledger, so a replay
+    source is declared without a schema-inference job."""
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
+    from twitter_flink_spark.sources.tables import load_table
+
+    def _build(p: str) -> dict:
+        ev = load_table(spark, sf_dir, "events")
+        ev.repartition(4).write.mode("overwrite").parquet(p)
+        return schema_entry(ev)
+
+    # layouts staged before the ledger carried the schema live under the
+    # old tag (``evsplit``) and are never read here
+    dest, ledger = stage_once("evsplits", sf_dir, _build)
+    return dest, staged_schema(ledger)
+
+
 def _ensure_split_events(spark: SparkSession, sf_dir: str) -> str:
-    """The 4-file events copy multi-batch replays read (hash split:
-    every batch carries the full time range), staged write-once."""
-    from twitter_flink_spark.sources.staging import stage_once
+    """The staged replay dir of `_stage_split_events`."""
+    return _stage_split_events(spark, sf_dir)[0]
+
+
+def _stage_time_split_events3(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, StructType]:
+    """(dest, schema) of the 3-file events copy split by TIME RANGE, staged
+    write-once — each replayed micro-batch is one contiguous time third,
+    the arrival order of a real time-ordered ingest (and the layout
+    whose per-batch files have tight ts envelopes, so a per-commit
+    skipping index actually prunes). Three commits, not four: the ledger
+    invariants the per-commit maintenance fixtures pin (build, >1
+    incremental refresh, final no-op) need exactly three."""
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
     from twitter_flink_spark.sources.tables import load_table
 
-    def _build(p: str) -> None:
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(p)
-
-    return stage_once("evsplit", sf_dir, _build)[0]
-
-
-def _ensure_time_split_events3(spark: SparkSession, sf_dir: str) -> str:
-    """3-file events copy split by TIME RANGE, staged write-once — each
-    replayed micro-batch is one contiguous time third, the arrival order
-    of a real time-ordered ingest (and the layout whose per-batch files
-    have tight ts envelopes, so a per-commit skipping index actually
-    prunes). Three commits, not four: the ledger invariants the
-    per-commit maintenance fixtures pin (build, >1 incremental refresh,
-    final no-op) need exactly three."""
-    from twitter_flink_spark.sources.staging import stage_once
-    from twitter_flink_spark.sources.tables import load_table
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        ev = load_table(spark, sf_dir, "events")
         (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(3, "ts")
+            ev.repartitionByRange(3, "ts")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
             .parquet(p)
         )
+        return schema_entry(ev)
 
-    return stage_once("evtsplit3", sf_dir, _build)[0]
+    dest, ledger = stage_once("evtsplit3s", sf_dir, _build)
+    return dest, staged_schema(ledger)
 
 
 @register(
@@ -427,8 +452,7 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot (a table-format MERGE INTO at scale)."""
     from twitter_flink_spark.streaming.pipeline import IncrementalMV
 
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -532,8 +556,7 @@ def streaming_mv_serve_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from twitter_flink_spark.streaming.pipeline import IncrementalMV
 
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     base = os.path.join(
         tempfile.gettempdir(),
         "tfs-mvserve-" + sf_dir.strip("/").replace("/", "-"),
@@ -1021,8 +1044,7 @@ def _drained_presence_mv(spark: SparkSession, sf_dir: str):
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _PRESENCE_MV_DRAINED:
         return _PRESENCE_MV_DRAINED[key]
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1110,8 +1132,7 @@ def streaming_topk_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant."""
     from twitter_flink_spark.streaming.pipeline import GroupedCountMV
 
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1210,8 +1231,7 @@ def _drained_cdf_mv(
     with _CDF_MV_LOCK:  # double-checked: concurrent callers share ONE drain
         if key in _CDF_MV_CACHE:
             return _CDF_MV_CACHE[key]
-        staged = _ensure_split_events(spark, sf_dir)
-        schema = spark.read.parquet(staged).schema
+        staged, schema = _stage_split_events(spark, sf_dir)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -1555,8 +1575,7 @@ def streaming_expectations_gate(
         Rule("value_at_least_1", "value >= 1", "warn"),
         Rule("user_present", "user_id IS NOT NULL", "drop"),
     ]
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1633,8 +1652,7 @@ def streaming_hll_actives_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     this subclass in tests/test_streaming.py."""
     from twitter_flink_spark.streaming.pipeline import SketchMV
 
-    staged = _ensure_split_events(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_split_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1725,38 +1743,43 @@ def streaming_dedup_then_window(
     return run_to_memory(out, output_mode="append")
 
 
-#: sf_dir the two-file late-data staging was last built for
-def _ensure_late_staged(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as THREE files with controlled arrival order:
-    00-early = days before the split date, 01-rest = the remaining
-    days (its processing advances the watermark past every early
-    window and emits them), 02-replay = a re-delivery of the oldest
-    days — arriving strictly AFTER its windows were emitted, the only
-    situation where the drop is guaranteed (a late row arriving in the
-    same batch that closes its window may legally be absorbed: the
-    watermark filter is planned a batch behind the eviction watermark
-    — measured). Modification times pin the arrival order."""
+def _stage_late_events(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, StructType]:
+    """(dest, schema) of the events staged as THREE files with controlled
+    arrival order: 00-early = days before the split date, 01-rest = the
+    remaining days (its processing advances the watermark past every
+    early window and emits them), 02-replay = a re-delivery of the
+    oldest days — arriving strictly AFTER its windows were emitted, the
+    only situation where the drop is guaranteed (a late row arriving in
+    the same batch that closes its window may legally be absorbed: the
+    watermark filter is planned a batch behind the eviction watermark —
+    measured). Modification times pin the arrival order."""
     import datetime
     import os
     import shutil
 
-    from twitter_flink_spark.sources.staging import stage_once
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
     from twitter_flink_spark.sources.tables import load_table
 
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
-    ).collect()[0]
-    split = bounds.d0 + datetime.timedelta(days=20)
-    replay_before = bounds.d0 + datetime.timedelta(days=10)
-    early = ev.where(F.to_date("ts") < F.lit(split))
-    rest = ev.where(F.to_date("ts") >= F.lit(split))
-    replay = ev.where(
-        (F.to_date("ts") < F.lit(replay_before))
-        & (F.col("event_id") % 37 == 0)
-    )
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        ev = load_table(spark, sf_dir, "events")
+        bounds = ev.agg(
+            F.min(F.to_date("ts")).alias("d0"),
+            F.max(F.to_date("ts")).alias("d1"),
+        ).collect()[0]
+        split = bounds.d0 + datetime.timedelta(days=20)
+        replay_before = bounds.d0 + datetime.timedelta(days=10)
+        early = ev.where(F.to_date("ts") < F.lit(split))
+        rest = ev.where(F.to_date("ts") >= F.lit(split))
+        replay = ev.where(
+            (F.to_date("ts") < F.lit(replay_before))
+            & (F.col("event_id") % 37 == 0)
+        )
         # plain data files + pinned mtimes: fully relocatable (rename
         # preserves mtimes), so no finalize phase is needed
         for i, part in ((0, early), (1, rest), (2, replay)):
@@ -1773,10 +1796,10 @@ def _ensure_late_staged(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(p, f"{i:02d}.parquet"),
                 (1_000_000 + i, 1_000_000 + i),
             )
+        return schema_entry(ev)
 
-    # cross-process write-once (was: process-local dict, rebuilt per run)
-    dest, _ = stage_once("latestaged", sf_dir, _build)
-    return dest
+    dest, ledger = stage_once("latestageds", sf_dir, _build)
+    return dest, staged_schema(ledger)
 
 
 @register(
@@ -1806,7 +1829,7 @@ def streaming_late_data_contract(
     batches — early days, the remaining days (advancing the watermark
     past every early window and emitting them), then a REPLAY of
     10-day-old rows arriving strictly after their windows closed
-    (`_ensure_late_staged` pins arrival order via mtime). A correct
+    (`_stage_late_events` pins arrival order via mtime). A correct
     engine drops every replayed row — append mode never re-emits an
     emitted window — so the run's output must equal the plain windowed
     counts over the ORIGINAL events under the usual emission rule: no
@@ -1820,8 +1843,7 @@ def streaming_late_data_contract(
     the late discard happens in a plain Filter before the stateful
     operator, so `numRowsDroppedByWatermark` stays 0 — that telemetry
     belongs to dedup/join state, not aggregates."""
-    staged = _ensure_late_staged(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_late_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1879,8 +1901,7 @@ def streaming_watermark_frontier(
     STANDS."""
     import datetime as _dt
 
-    staged = _ensure_late_staged(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_late_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1939,7 +1960,7 @@ def _drained_sink_indexes(
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _SINK_IDX_DRAINED:
         return _SINK_IDX_DRAINED[key]
-    staged = _ensure_time_split_events3(spark, sf_dir)
+    staged, schema = _stage_time_split_events3(spark, sf_dir)
     dest = os.path.join(
         scratch_dir("streamidx"), "table"
     )
@@ -1965,8 +1986,6 @@ def _drained_sink_indexes(
             )
             n = len(spark.read.parquet(dest).inputFiles())
             col_ledger.append({"ts": n, "user_id": n})
-
-    schema = spark.read.parquet(staged).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2190,8 +2209,7 @@ def streaming_quarantine_repair(
     from twitter_flink_spark.sources.tables import load_table
 
     cap = Rule("value_cap", "value <= 150.0", "quarantine")
-    staged = _ensure_time_split_events3(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    staged, schema = _stage_time_split_events3(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2439,11 +2457,8 @@ def streaming_ivf_assign_maintenance(
         kmeans_fit,
     )
     from twitter_flink_spark.commit import has_parquet, observed_count
-    from twitter_flink_spark.queries.similarity import (
-        _KM_ITERS,
-        _KM_K,
-        dot,
-    )
+    from twitter_flink_spark.operators.similarity import cosine
+    from twitter_flink_spark.queries.similarity import _KM_ITERS, _KM_K
     from twitter_flink_spark.sources.tables import load_table, spread
 
     # the replay source through its own helper (a test swaps it); the
@@ -2536,14 +2551,7 @@ def streaming_ivf_assign_maintenance(
         cands.crossJoin(F.broadcast(probe_vec))
         .select(
             "vec_id",
-            F.round(
-                dot(F.col("e"), F.col("pe"))
-                / (
-                    F.sqrt(dot(F.col("e"), F.col("e")))
-                    * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(cosine("e", "pe"), 6).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(5)
@@ -2574,23 +2582,26 @@ def _attach_ivf_stream_oracle() -> None:
 _attach_ivf_stream_oracle()
 
 
-def _ensure_docid_split_documents(
+def _stage_docid_split_documents(
     spark: SparkSession, sf_dir: str
-) -> str:
-    """documents split into 3 doc_id-ordered parquet files — the
-    replayable crawl-arrival order for the streaming LSH maintenance
-    query. Cross-process write-once."""
-    from twitter_flink_spark.sources.staging import stage_once
+) -> tuple[str, StructType]:
+    """(dest, schema) of the documents split into 3 doc_id-ordered
+    parquet files — the replayable crawl-arrival order for the streaming
+    LSH maintenance query. Cross-process write-once."""
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
     from twitter_flink_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    b = docs.agg(
-        F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
-    ).first()
-    split = (int(b["mn"]) + int(b["mx"])) // 2
-    q3 = (split + int(b["mx"])) // 2
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        docs = load_table(spark, sf_dir, "documents")
+        b = docs.agg(
+            F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
+        ).first()
+        split = (int(b["mn"]) + int(b["mx"])) // 2
+        q3 = (split + int(b["mx"])) // 2
         for lo, hi in ((None, split), (split, q3), (q3, None)):
             part = docs
             if lo is not None:
@@ -2598,9 +2609,10 @@ def _ensure_docid_split_documents(
             if hi is not None:
                 part = part.where(F.col("doc_id") <= hi)
             part.coalesce(1).write.mode("append").parquet(p)
+        return schema_entry(docs)
 
-    dest, _ = stage_once("docstream3", sf_dir, _build)
-    return dest
+    dest, ledger = stage_once("docstream3s", sf_dir, _build)
+    return dest, staged_schema(ledger)
 
 
 @register("streaming_lsh_index_maintenance")  # oracle attached below
@@ -2638,7 +2650,7 @@ def streaming_lsh_index_maintenance(
     from twitter_flink_spark.queries.dedup import _staged_shingle_sets
     from twitter_flink_spark.sources.tables import load_table
 
-    staged = _ensure_docid_split_documents(spark, sf_dir)
+    staged, schema = _stage_docid_split_documents(spark, sf_dir)
     index_dir = os.path.join(
         scratch_dir("lshstream"), "index"
     )
@@ -2653,8 +2665,6 @@ def streaming_lsh_index_maintenance(
             ledger.append(
                 lsh_index_build(spark, batch_df, index_dir)
             )
-
-    schema = spark.read.parquet(staged).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -2798,7 +2808,7 @@ def streaming_dedup_impact_ledger(
     sets = _staged_shingle_sets(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    staged = _ensure_docid_split_documents(spark, sf_dir)
+    staged, schema = _stage_docid_split_documents(spark, sf_dir)
     work = scratch_dir("dedupledger")
     index_dir = os.path.join(work, "index")
     stats_dir = os.path.join(work, "stats")
@@ -2916,8 +2926,6 @@ def streaming_dedup_impact_ledger(
         ).parquet(pairs_dir)
         pair_total[0] += observed_count(pobs)
         ledger.append(_census_snapshot())
-
-    schema = spark.read.parquet(staged).schema
     q = (
         spark.readStream.schema(schema)
         # TWO micro-batches (2 files, then 1), not three: build + one
@@ -3025,25 +3033,31 @@ FROM merged GROUP BY source
 _attach_dedup_ledger_oracle()
 
 
-def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> str:
-    """The GDPR delete-request feed: doc_id % 13 == 0 split into 2
-    doc_id-ordered parquet files (replayable arrival order for the
-    streaming delete maintenance). Cross-process write-once."""
-    from twitter_flink_spark.sources.staging import stage_once
+def _stage_delete_stream(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, StructType]:
+    """(dest, schema) of the GDPR delete-request feed: doc_id % 13 == 0
+    split into 2 doc_id-ordered parquet files (replayable arrival order
+    for the streaming delete maintenance). Cross-process write-once."""
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
     from twitter_flink_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    doomed = docs.where(F.col("doc_id") % 13 == 0).select("doc_id")
-    mid = doomed.agg(
-        (F.min("doc_id") + F.max("doc_id")) / 2
-    ).first()[0]
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        docs = load_table(spark, sf_dir, "documents")
+        doomed = docs.where(F.col("doc_id") % 13 == 0).select("doc_id")
+        mid = doomed.agg(
+            (F.min("doc_id") + F.max("doc_id")) / 2
+        ).first()[0]
         for pred in (F.col("doc_id") <= mid, F.col("doc_id") > mid):
             doomed.where(pred).coalesce(1).write.mode("append").parquet(p)
+        return schema_entry(doomed)
 
-    dest, _ = stage_once("delstream2", sf_dir, _build)
-    return dest
+    dest, ledger = stage_once("delstream2s", sf_dir, _build)
+    return dest, staged_schema(ledger)
 
 
 @register("streaming_lsh_delete_maintenance")  # oracle attached below
@@ -3082,13 +3096,11 @@ def streaming_lsh_delete_maintenance(
 
     docs = load_table(spark, sf_dir, "documents")
     index_dir = _fresh_lsh_index_copy(spark, sf_dir)
-    staged = _ensure_delete_stream(spark, sf_dir)
+    staged, schema = _stage_delete_stream(spark, sf_dir)
     ledger: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
         ledger.append(lsh_index_delete(spark, batch_df, index_dir))
-
-    schema = spark.read.parquet(staged).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -3141,26 +3153,34 @@ FROM pairs
 _attach_lsh_delete_stream_oracle()
 
 
-def _ensure_vec_delete_stream(spark: SparkSession, sf_dir: str) -> str:
-    """The vector delete-request feed: vec_id % 9 == 3 (minus the probe,
-    which serving needs alive) split into 2 vec_id-ordered parquet
-    files. Cross-process write-once."""
-    from twitter_flink_spark.sources.staging import stage_once
+def _stage_vec_delete_stream(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, StructType]:
+    """(dest, schema) of the vector delete-request feed: vec_id % 9 == 3
+    (minus the probe, which serving needs alive) split into 2
+    vec_id-ordered parquet files. Cross-process write-once."""
+    from twitter_flink_spark.sources.staging import (
+        schema_entry,
+        stage_once,
+        staged_schema,
+    )
     from twitter_flink_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    doomed = emb.where(
-        (F.col("vec_id") % 9 == 3) & (F.col("vec_id") != probe_id)
-    ).select("vec_id")
-    mid = doomed.agg((F.min("vec_id") + F.max("vec_id")) / 2).first()[0]
-
-    def _build(p: str) -> None:
+    def _build(p: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        probe_id = int(emb.agg(F.max("vec_id")).first()[0])
+        doomed = emb.where(
+            (F.col("vec_id") % 9 == 3) & (F.col("vec_id") != probe_id)
+        ).select("vec_id")
+        mid = doomed.agg(
+            (F.min("vec_id") + F.max("vec_id")) / 2
+        ).first()[0]
         for pred in (F.col("vec_id") <= mid, F.col("vec_id") > mid):
             doomed.where(pred).coalesce(1).write.mode("append").parquet(p)
+        return schema_entry(doomed)
 
-    dest, _ = stage_once("vecdelstream2", sf_dir, _build)
-    return dest
+    dest, ledger = stage_once("vecdelstream2s", sf_dir, _build)
+    return dest, staged_schema(ledger)
 
 
 @register("streaming_ivf_delete_maintenance")  # oracle attached below
@@ -3190,10 +3210,8 @@ def streaming_ivf_delete_maintenance(
         ivf_index_delete,
         ivf_tombstones,
     )
-    from twitter_flink_spark.queries.similarity import (
-        _ensure_ivf_inc_index,
-        dot,
-    )
+    from twitter_flink_spark.operators.similarity import cosine
+    from twitter_flink_spark.queries.similarity import _ensure_ivf_inc_index
     from twitter_flink_spark.sources.tables import load_table
 
     staged_idx, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
@@ -3201,13 +3219,11 @@ def streaming_ivf_delete_maintenance(
     shutil.copytree(os.path.realpath(staged_idx), work)
     assign_dir = os.path.join(work, "_assign")
 
-    staged = _ensure_vec_delete_stream(spark, sf_dir)
+    staged, schema = _stage_vec_delete_stream(spark, sf_dir)
     ledger: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
         ledger.append(ivf_index_delete(spark, batch_df, work))
-
-    schema = spark.read.parquet(staged).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -3249,14 +3265,7 @@ def streaming_ivf_delete_maintenance(
             cands.crossJoin(F.broadcast(probe_vec))
             .select(
                 "vec_id",
-                F.round(
-                    dot(F.col("e"), F.col("pe"))
-                    / (
-                        F.sqrt(dot(F.col("e"), F.col("e")))
-                        * F.sqrt(dot(F.col("pe"), F.col("pe")))
-                    ),
-                    6,
-                ).alias("cosine"),
+                F.round(cosine("e", "pe"), 6).alias("cosine"),
             )
             .orderBy(F.desc("cosine"), "vec_id")
             .limit(5)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Confs that are safe (and required) to set on an already-running session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -56,19 +57,39 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def arrow_table(rows, schema: StructType):
+    """``rows`` (tuples, Rows or dicts) as a ``pyarrow.Table`` typed by
+    ``schema``. Each row goes through ``StructType.toInternal`` — the
+    conversion ``createDataFrame`` applies — so a naive datetime is read
+    in the driver's local time zone and lands as UTC micros, a date as
+    days since the epoch, exactly as Spark would store them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*(schema.toInternal(r) for r in rows))) or [
+        () for _ in schema.fields
+    ]
+    return pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, arrow_schema.types)],
+        schema=arrow_schema,
+    )
+
+
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """A frame built on the driver from a Python list (centroids,
     manifests, top-N keys, file lists), held in ONE slice.
 
-    ``createDataFrame(list)`` splits its rows into one slice per core;
-    a later one-task stage (a ``coalesce(1)`` write, a broadcast build)
-    then reads every slice in turn, and that costs seconds on many
-    cores even for a 4-row frame. One slice costs one task, whatever
-    the core count. ``schema`` is a DDL string or a ``StructType``.
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
+    The rows enter the plan as an Arrow-built ``LocalRelation``: the
+    data lives in the plan itself, so reading it runs no Python worker
+    (an RDD of Python rows would convert them in one on every
+    evaluation). ``coalesce(1)`` keeps it one slice — a later one-task
+    stage (a ``coalesce(1)`` write, a broadcast build) reads one
+    partition, whatever the core count. ``schema`` is a DDL string or a
+    ``StructType``."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema).coalesce(1)
 
 
 def get_spark(

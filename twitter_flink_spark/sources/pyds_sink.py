@@ -39,6 +39,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from twitter_flink_spark.commit import write_json
+
 SINK_NAME = "json_dir_sink"
 
 
@@ -96,8 +98,7 @@ class JsonDirBatchWriter(DataSourceWriter):
                 m.staged, os.path.join(self.path, os.path.basename(m.staged))
             )
             total += m.n_rows
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as fh:
-            json.dump({"rows": total}, fh)
+        write_json(os.path.join(self.path, "_SUCCESS"), {"rows": total})
 
     def abort(self, messages) -> None:
         _discard(messages)
@@ -126,8 +127,9 @@ class JsonEpochStreamWriter(DataSourceStreamWriter):
                 os.path.join(self.path, f"epoch-{batchId}-{i:05d}.json"),
             )
             total += m.n_rows
-        with open(marker, "w") as fh:
-            json.dump({"rows": total}, fh)
+        # atomic: a crash mid-write leaves no marker, so the epoch is
+        # republished on replay rather than read as committed
+        write_json(marker, {"rows": total})
 
     def abort(self, messages, batchId: int) -> None:
         _discard(messages)

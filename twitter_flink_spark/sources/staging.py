@@ -245,6 +245,40 @@ def stage_once(
     return dest, meta
 
 
+def _nullable(dt):
+    """``dt`` with every field, element and map value nullable."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def schema_entry(df) -> dict:
+    """The ledger entry a fixture build returns for the frame it wrote:
+    the frame's schema made nullable, which is the schema a parquet read
+    of the staged files infers. `staged_schema` gives it back, so a
+    reader of the layout (a file-stream source needs its schema up
+    front) never pays an inference job."""
+    return {"schema": _nullable(df.schema).jsonValue()}
+
+
+def staged_schema(ledger: dict):
+    """The ``StructType`` a `schema_entry` recorded in ``ledger``."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(ledger["schema"])
+
+
 def build_id(dest: str) -> str:
     """Which build of the staged layout at ``dest`` is committed (its
     marker's mtime). A layout staged FROM another one and storing its

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from twitter_flink_spark.commit import replace_dir, write_json
-from twitter_flink_spark.session import local_frame
+from twitter_flink_spark.session import arrow_table, local_frame
 from twitter_flink_spark.streaming.sources import stream_table
 
 
@@ -392,27 +392,18 @@ class TopNFeedback:
         already here and the log dir is driver-local (the way Spark writes
         its own offset and commit logs). Typed by the log's own schema
         (the column order `windowed_stream_counts` fixes; a non-string
-        key_col logs exactly the type it streams with). Values go through
-        each type's ``toInternal`` — the inverse of what ``collect()``
-        applied — so timestamps land as UTC micros whatever the driver's
-        local time zone. The file is written hidden and renamed into
-        place: readers (Spark's listing, `_restore`) skip dot files, so a
-        crash mid-write leaves nothing they read."""
+        key_col logs exactly the type it streams with). `arrow_table`
+        converts the values with each type's ``toInternal`` — the inverse
+        of what ``collect()`` applied — so timestamps land as UTC micros
+        whatever the driver's local time zone. The file is written hidden
+        and renamed into place: readers (Spark's listing, `_restore`) skip
+        dot files, so a crash mid-write leaves nothing they read."""
         import os
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = to_arrow_schema(self._log_schema)
-        rows = [(*e, frontier) for e in entries]
-        table = pa.Table.from_arrays(
-            [
-                pa.array([f.dataType.toInternal(r[i]) for r in rows],
-                         type=schema.field(i).type)
-                for i, f in enumerate(self._log_schema.fields)
-            ],
-            schema=schema,
+        table = arrow_table(
+            [(*e, frontier) for e in entries], self._log_schema
         )
         name = f"part-{uuid.uuid4()}.parquet"
         tmp = os.path.join(dest_dir, f".{name}.tmp")
