@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import os
 
-from twitter_flink_spark.sources.files import compact_parquet, scratch_dir
+from twitter_flink_spark.sources.files import compact_parquet
+from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"

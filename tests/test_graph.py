@@ -302,7 +302,9 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     commit module) and at three named sites that publish nothing: the
     file-source symlink of `stream_table`, the hardlink copy of a
     drained MV fixture in `_cdf_mv_copy`, and the stats-table hardlink
-    append in the `streaming_dedup_impact_ledger` sink."""
+    append in the `streaming_dedup_impact_ledger` sink, and only
+    `sources/staging.py` asks ``tempfile`` for a dir or a file (shared
+    layouts through `stage_once`, private ones through `scratch_dir`)."""
     import ast
     import pathlib
 
@@ -314,6 +316,10 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
         "symlink": {"commit.py", "stream_table"},
         "link": {"commit.py", "_cdf_mv_copy", "streaming_dedup_impact_ledger"},
         "move": {"commit.py"},
+        "mkdtemp": {"staging.py"},
+        "gettempdir": {"staging.py"},
+        "TemporaryDirectory": {"staging.py"},
+        "NamedTemporaryFile": {"staging.py"},
     }
     root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
     bad = []

@@ -107,10 +107,8 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_partitioned_write_prunes_directories(spark):
     """A filter on the partition column must appear as PartitionFilters
     (directory pruning), not a row-level filter over a full scan."""
-    from twitter_flink_spark.sources.files import (
-        scratch_dir,
-        write_partitioned_parquet,
-    )
+    from twitter_flink_spark.sources.files import write_partitioned_parquet
+    from twitter_flink_spark.sources.staging import scratch_dir
     from twitter_flink_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 

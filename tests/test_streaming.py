@@ -1485,6 +1485,60 @@ def test_incremental_mv_crash_before_manifest_commit(spark):
     assert got == {i: (2, 2.0) for i in range(20)}  # merged exactly once
 
 
+@pytest.mark.parametrize("crash_at", ["first", "last"])
+def test_incremental_mv_crash_between_bucket_renames(
+    spark, monkeypatch, crash_at
+):
+    """A merge that dies between its bucket-version renames, before the
+    manifest commit, leaves the committed state intact: a restarted
+    process (a new IncrementalMV on the same root) replays the batch and
+    its snapshot equals an uninterrupted run's."""
+    import os
+
+    from twitter_flink_spark.streaming.pipeline import IncrementalMV
+
+    schema = "user_id long, value double"
+    b0 = spark.createDataFrame([(i, float(i)) for i in range(40)], schema)
+    b1 = spark.createDataFrame(
+        [(i, 10.0) for i in range(0, 40, 3)]
+        + [(100 + i, 1.0) for i in range(8)],
+        schema,
+    )
+    ref = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    ref.merge_batch(b0, 0)
+    ref.merge_batch(b1, 1)
+    want = sorted(ref.snapshot().collect())
+
+    mv = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    mv.merge_batch(b0, 0)
+    touched = b1.select(
+        F.pmod(F.hash("user_id"), F.lit(4)).alias("b")
+    ).distinct().count()
+    assert touched >= 2, "the batch must touch several buckets"
+    crash_on = 1 if crash_at == "first" else touched
+    real_rename = os.rename
+    renames = []
+
+    def rename(src, dst, *args, **kwargs):
+        if os.path.basename(str(src)).startswith("bucket="):
+            renames.append(src)
+            if len(renames) == crash_on:
+                raise OSError("injected crash between bucket renames")
+        return real_rename(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        mv.merge_batch(b1, 1)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    restarted = IncrementalMV(
+        spark, key_col="user_id", n_buckets=4, root=mv._root
+    )
+    assert restarted._last_batch_id == 0  # the manifest never moved
+    restarted.merge_batch(b1, 1)
+    assert sorted(restarted.snapshot().collect()) == want
+
+
 def test_incremental_mv_rejects_mismatched_bucketing(spark):
     """Resuming an MV root with a different n_buckets (or key_col) must be
     refused: prior rows would sit in buckets the new bucketing never
@@ -1529,6 +1583,30 @@ def test_await_or_raise_times_out_loudly(spark, tmp_path):
     finally:
         if q.isActive:
             q.stop()
+
+
+def test_await_or_raise_records_a_zero_batch_stream(
+    spark, tmp_path, monkeypatch
+):
+    """A stream that ran no batch (empty source) has no physical plan;
+    with plan capture on, `await_or_raise` records Spark's placeholder
+    text for it instead of raising."""
+    from twitter_flink_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "CAPTURE_STREAM_PLANS", True)
+    monkeypatch.setattr(pipeline, "STREAM_PLANS", [])
+    q = (
+        spark.readStream.schema("a long")
+        .parquet(str(tmp_path))
+        .writeStream.format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    pipeline.await_or_raise(q, 120)
+    assert q.lastProgress["numInputRows"] == 0
+    [(label, text)] = pipeline.STREAM_PLANS
+    assert label == str(q.id)
+    assert text.startswith("No physical plan")
 
 
 def test_ensure_split_events_concurrent_build_consistent(

@@ -17,6 +17,7 @@ from twitter_flink_spark.sources.pyds import (
     register_datasource,
     status_oracle_cte,
 )
+from twitter_flink_spark.sources.staging import scratch_dir
 
 _N_ROWS = 20000
 
@@ -117,22 +118,6 @@ def streaming_pyds_tag_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, output_mode="complete")
 
 
-def _scratch_dir(label: str, sf_dir: str) -> str:
-    """Deterministic per-(query, sf) scratch dir, cleared on entry — repeated
-    driver rounds reuse one path instead of leaking a mkdtemp per run."""
-    import os
-    import shutil
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        label + "-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
 def _require_local(spark: SparkSession) -> None:
     master = spark.sparkContext.master
     if not master.startswith("local"):
@@ -165,10 +150,7 @@ def pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _require_local(spark)
     register_sink(spark)
-    # deterministic dir, wiped per invocation — a fresh mkdtemp per run
-    # accumulates across repeated driver rounds (same reuse pattern as
-    # _ensure_split_events)
-    dest = _scratch_dir("tfs-pyds-sink", sf_dir)
+    dest = scratch_dir("pyds-sink")
     (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
@@ -215,9 +197,9 @@ def streaming_pyds_writer_roundtrip(
     _require_local(spark)
     register_sink(spark)
     staged, schema = _stage_split_events(spark, sf_dir)
-    # dest and checkpoint are cleared TOGETHER: a retained checkpoint over a
-    # cleared dest would replay nothing and read back an empty sink
-    dest = _scratch_dir("tfs-pyds-epoch", sf_dir)
+    # dest and checkpoint are both fresh: a retained checkpoint over an
+    # empty dest would replay nothing and read back an empty sink
+    dest = scratch_dir("pyds-epoch")
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -225,9 +207,7 @@ def streaming_pyds_writer_roundtrip(
         .select("event_type", "value")
         .writeStream.format(SINK_NAME)
         .option("path", dest)
-        .option(
-            "checkpointLocation", _scratch_dir("tfs-pyds-epoch-ck", sf_dir)
-        )
+        .option("checkpointLocation", scratch_dir("pyds-epoch-ck"))
         .trigger(availableNow=True)
         .start()
     )

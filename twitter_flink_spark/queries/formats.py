@@ -12,11 +12,11 @@ from twitter_flink_spark.registry import register
 from twitter_flink_spark.sources.files import (
     read_csv,
     read_jsonl,
-    scratch_dir,
     write_csv,
     write_jsonl,
     write_partitioned_parquet,
 )
+from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -268,18 +268,12 @@ def schema_evolution_merged_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns arrive mid-stream, and the engine must union schemas at scan
     time without rewriting petabytes of old files. Footer-level schema
     merge is per-file metadata work; the data path still prunes columns
-    and pushes filters per generation. Scratch layout is deterministic
-    per sf and rewritten per invocation."""
+    and pushes filters per generation. Each invocation writes its own
+    scratch dir, so a concurrent run never deletes this one's files."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "tfs-schemaevo-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("schemaevo")
     v1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "lang")
     v2 = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id",

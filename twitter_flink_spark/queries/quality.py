@@ -646,8 +646,6 @@ def expectations_quarantine_routing(
     recomputing each count independently; `persisted_matches` pins that
     the rows actually ON DISK per route equal the observed ledger —
     enforcement happened, not just measurement."""
-    import tempfile
-
     from twitter_flink_spark.operators.expectations import ROUTE_COL, Rule, route
 
     rules = [

@@ -20,7 +20,12 @@ from twitter_flink_spark.operators.bucketing import read_bucketed, write_buckete
 from twitter_flink_spark.operators.joins import salted_equi_join
 from twitter_flink_spark.registry import register
 from twitter_flink_spark.session import local_frame
-from twitter_flink_spark.sources.staging import FINALIZING
+from twitter_flink_spark.sources.staging import (
+    FINALIZING,
+    build_id,
+    scratch_dir,
+    stage_once,
+)
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -196,8 +201,6 @@ def _ensure_time_sorted_layout(spark: SparkSession, sf_dir: str) -> str:
     a random layout scatters every hour across every file, so a time
     predicate reads everything; range-partitioning clusters each time slice
     into few files. Cross-process write-once (`staging.stage_once`)."""
-    from twitter_flink_spark.sources.staging import stage_once
-
     dest, _ = stage_once(
         "tsorted",
         sf_dir,
@@ -729,8 +732,6 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     that fragments differently flips the row and the driver sees it."""
     import os
 
-    from twitter_flink_spark.sources.files import scratch_dir
-
     ev = load_table(spark, sf_dir, "events")
     base = scratch_dir("compact")
     staged = os.path.join(base, "staged")
@@ -797,25 +798,23 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TYPE_PART_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
+def _ensure_type_partitioned_events(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, str]:
     """events written partitionBy(event_type), plus the tier dimension
-    table (`_DPP_TIERS`) at ``<dest>-tiers``, once per (app, sf)."""
-    from twitter_flink_spark.sources.files import scratch_dir
+    table (`_DPP_TIERS`): (fact dir, tiers dir) of one staged layout."""
+    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TYPE_PART_CACHE:
-        dest = scratch_dir("dpp-events")
+    def _build(p: str) -> None:
         load_table(spark, sf_dir, "events").write.partitionBy(
             "event_type"
-        ).mode("overwrite").parquet(dest)
+        ).mode("overwrite").parquet(os.path.join(p, "fact"))
         local_frame(spark, _DPP_TIERS, _DPP_TIER_SCHEMA).write.mode(
             "overwrite"
-        ).parquet(dest + "-tiers")
-        _TYPE_PART_CACHE[key] = dest
-    return _TYPE_PART_CACHE[key]
+        ).parquet(os.path.join(p, "tiers"))
+
+    dest, _ = stage_once("dppevents", sf_dir, _build)
+    return os.path.join(dest, "fact"), os.path.join(dest, "tiers")
 
 
 _DPP_TIER_SCHEMA = "event_type string, tier string"
@@ -855,13 +854,13 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension, but the fact scan skips whole partitions at run time —
     no manual predicate copying, no full scan. The dim broadcast is
     reused for both the pruning subquery and the join itself."""
-    fact_dir = _ensure_type_partitioned_events(spark, sf_dir)
+    fact_dir, tiers_dir = _ensure_type_partitioned_events(spark, sf_dir)
     fact = spark.read.parquet(fact_dir)
     # the dimension is a TABLE, as in a star schema: over a driver-built
     # local relation the optimizer would evaluate tier='high' at plan
     # time, and with no filter left on the build side Catalyst sees
     # nothing selective to prune the fact with
-    dim = spark.read.schema(_DPP_TIER_SCHEMA).parquet(fact_dir + "-tiers")
+    dim = spark.read.schema(_DPP_TIER_SCHEMA).parquet(tiers_dir)
     return (
         fact.join(F.broadcast(dim), "event_type")
         .where(F.col("tier") == "high")
@@ -1075,35 +1074,30 @@ def stratified_exact_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Partition-layout evolution (two eras, one logical table)
 
-_EVOLVED_LAYOUT_CACHE: dict = {}
-
-
 def _ensure_evolved_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage events as two PARTITION-LAYOUT eras: era 0 (days < 15)
     partitioned by day only — the original layout — and era 1
     (days >= 15) partitioned by (day, event_type) — the evolved layout
-    a growing table migrates to without rewriting history."""
-    from twitter_flink_spark.sources.files import scratch_dir
+    a growing table migrates to without rewriting history. Returns
+    (era 0 dir, era 1 dir); both are read-only once staged."""
+    import datetime
+    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EVOLVED_LAYOUT_CACHE:
+    def _build(p: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "day", F.date_format(F.to_date("ts"), "yyyy-MM-dd")
         )
-        bounds = ev.agg(F.min(F.to_date("ts")).alias("d0")).collect()[0]
-        import datetime
-
-        split = (bounds.d0 + datetime.timedelta(days=14)).isoformat()
-        era0 = scratch_dir("evo-era0")
-        era1 = scratch_dir("evo-era1")
+        d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
+        split = (d0 + datetime.timedelta(days=14)).isoformat()
         ev.where(F.col("day") < split).write.partitionBy("day").mode(
             "overwrite"
-        ).parquet(era0)
+        ).parquet(os.path.join(p, "era0"))
         ev.where(F.col("day") >= split).write.partitionBy(
             "day", "event_type"
-        ).mode("overwrite").parquet(era1)
-        _EVOLVED_LAYOUT_CACHE[key] = (era0, era1)
-    return _EVOLVED_LAYOUT_CACHE[key]
+        ).mode("overwrite").parquet(os.path.join(p, "era1"))
+
+    dest, _ = stage_once("evolved", sf_dir, _build)
+    return os.path.join(dest, "era0"), os.path.join(dest, "era1")
 
 
 @register(
@@ -1201,7 +1195,6 @@ def compact_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from twitter_flink_spark.sources.files import binpack_write
-    from twitter_flink_spark.sources.staging import stage_once
 
     ev = load_table(spark, sf_dir, "events")
 
@@ -1970,13 +1963,8 @@ def era_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     day in the legacy layout flips rows and fails the value hash; the
     aggregate itself must equal the single-table oracle, proving the
     rewrite lost nothing."""
-    import os
-
-    from twitter_flink_spark.sources.files import scratch_dir
-
     era0, era1 = _ensure_evolved_layout(spark, sf_dir)
     mig = scratch_dir("era-mig")
-    os.makedirs(mig, exist_ok=True)
     first = _migrate_era_days(spark, era0, mig, max_days=1)
     rest = _migrate_era_days(spark, era0, mig)
     incremental_ok = len(first) == 1 and not (set(first) & set(rest))
@@ -2091,7 +2079,6 @@ def _ensure_two_era_stats_layout(
     import datetime
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     e = load_table(spark, sf_dir, "events")
     t0 = e.agg(F.min("ts")).first()[0]
@@ -2188,8 +2175,6 @@ def _ensure_cell_clustered_layout(spark: SparkSession, sf_dir: str) -> str:
     Cross-process write-once; the stats manifest is NOT part of the
     staged layout (the consuming query rebuilds it per run at the final
     path, where its stored file paths are valid)."""
-    from twitter_flink_spark.sources.staging import stage_once
-
     e = load_table(spark, sf_dir, "events")
     b = e.agg(
         F.min("user_id").alias("u0"),
@@ -2250,7 +2235,6 @@ def _ensure_conjunction_sidecar(
     them from thrashing against the n_parts=1 histogram sidecar the
     thin-slice query stages over the same data dir."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     idx, _ = stage_once(
         f"cellconj4-{build_id(dest)}",
@@ -2333,7 +2317,6 @@ def _ensure_bloom_indexed_orders(spark: SparkSession, sf_dir: str) -> str:
     Bloom build runs in the finalize phase (its manifest stores absolute
     file paths, so it must see the final path)."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     dest, _ = stage_once(
         "bloomidx",
@@ -2408,7 +2391,6 @@ def _ensure_compacted_vacuumed_layout(
     import shutil
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     def _build(p: str) -> None:
         (
@@ -2512,7 +2494,6 @@ def _ensure_two_era_bloom_orders(
     Bloom-indexed, era 2 arriving after the first manifest commit.
     Returns (dest, freshly_built)."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     o = load_table(spark, sf_dir, "orders")
     b = o.agg(
@@ -2707,7 +2688,6 @@ def _ensure_two_level_layout(spark: SparkSession, sf_dir: str) -> str:
     consumer; cross-process write-once (was: a process-local dict, so
     every bench/driver process re-paid the ~4 s build)."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     e = load_table(spark, sf_dir, "events")
 
@@ -2833,69 +2813,44 @@ def twolevel_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TWOLEVEL_ERA_FOR: dict[str, str] = {}
-
-
 def _ensure_two_level_era_layout(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, bool]:
     """events split at t0+15d: era 1 (32 ts-clustered files) gets the
     TWO-LEVEL manifest; era 2 (32 more files) appends after the build.
-    Returns (dest, freshly_built). "Fresh" means era 2 is still
-    UNINDEXED (stale files exist) — derived from DISK, not a process
-    dict, so a layout whose index an earlier process already refreshed
-    is correctly reported un-fresh and the consumer query pays only the
-    update it is about, never a per-process table rebuild (~5 s that
-    was charged to the bench as query time)."""
+    Returns (dest, fresh). "Fresh" means era 2 is still UNINDEXED (stale
+    files exist) — derived from DISK, so a layout whose index an earlier
+    call or process already refreshed is reported un-fresh and the
+    consumer query pays only the update it is about."""
     import datetime
-    import os
-    import shutil
-    import tempfile
 
     from twitter_flink_spark.operators import skipping
 
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "tfs-twolevelera-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    if _TWOLEVEL_ERA_FOR.get("sf") == sf_dir and os.path.isdir(dest):
-        return dest, False
-    done = dest + ".done"  # atomic-rename marker: build completed
-    if os.path.exists(done) and os.path.isdir(
-        os.path.join(dest, skipping.ROOT_MANIFEST)
-    ):
-        # built by an earlier process: fresh iff era 2 is unindexed
-        _TWOLEVEL_ERA_FOR["sf"] = sf_dir
-        return dest, skipping.stale_file_count(spark, dest) > 0
-    # drop any stale done marker BEFORE tearing dest down: a rebuild
-    # that crashes between the era-1 build (which recreates
-    # ROOT_MANIFEST) and the era-2 append must not leave marker +
-    # manifest coexisting, or the next process early-returns a
-    # half-built layout as complete
-    try:
-        os.remove(done)
-    except FileNotFoundError:
-        pass
-    shutil.rmtree(dest, ignore_errors=True)
     e = load_table(spark, sf_dir, "events")
-    t0 = e.agg(F.min("ts")).first()[0]
-    split = t0 + datetime.timedelta(days=15)
-    for pred, mode in [
-        (F.col("ts") < F.lit(split), "overwrite"),
-        (F.col("ts") >= F.lit(split), "append"),
-    ]:
+    split = []
+
+    def _write(pred, mode: str, path: str) -> None:
         (
             e.where(pred)
             .repartitionByRange(32, "ts")
             .sortWithinPartitions("ts")
             .write.mode(mode)
-            .parquet(dest)
+            .parquet(path)
         )
-        if mode == "overwrite":
-            skipping.build_two_level(spark, dest, "ts", n_parts=8)
-    write_json(done, "ok")
-    _TWOLEVEL_ERA_FOR["sf"] = sf_dir
-    return dest, True
+
+    def _build(p: str) -> None:
+        t0 = e.agg(F.min("ts")).first()[0]
+        split.append(t0 + datetime.timedelta(days=15))
+        _write(F.col("ts") < F.lit(split[0]), "overwrite", p)
+
+    def _finalize(dest: str) -> None:
+        # the manifest stores absolute paths, so it is built at the final
+        # path; era 2 appends after it and stays unindexed
+        skipping.build_two_level(spark, dest, "ts", n_parts=8)
+        _write(F.col("ts") >= F.lit(split[0]), "append", dest)
+
+    dest, _ = stage_once("twolevelera", sf_dir, _build, _finalize)
+    return dest, skipping.stale_file_count(spark, dest) > 0
 
 
 @register(
@@ -2969,7 +2924,6 @@ def _ensure_twolevel_vacuumed_layout(
     import shutil
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     e = load_table(spark, sf_dir, "events")
 
@@ -3095,7 +3049,6 @@ def _ensure_bloom_vacuumed_layout(
     import shutil
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     def _build(p: str) -> None:
         load_table(spark, sf_dir, "orders").repartition(8).write.mode(
@@ -3184,7 +3137,6 @@ def _ensure_bloom2_layout(spark: SparkSession, sf_dir: str) -> str:
     Cross-process write-once; the index build runs in the finalize
     phase (its manifest stores absolute file paths)."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     dest, _ = stage_once(
         "bloom2",
@@ -3317,7 +3269,6 @@ def _ensure_nightly_maintenance_layout(
 
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.sources.files import binpack_write
-    from twitter_flink_spark.sources.staging import stage_once
 
     def _build(p: str) -> None:
         (
@@ -3449,7 +3400,6 @@ def _ensure_twolevel_conjunction_layout(
     (threshold 4 < 8 files), i.e. the flat manifest is gone — the state
     a million-file table lives in permanently."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import stage_once
 
     def _build(p: str) -> None:
         (
@@ -3725,7 +3675,6 @@ def twolevel_hist_thin_slice_order(
     import datetime
 
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_cell_clustered_layout(spark, sf_dir)
     idx, _ = stage_once(
@@ -3825,7 +3774,6 @@ def sidecar_index_readonly_serving(
     from twitter_flink_spark.queries.streaming import (
         _stage_time_split_events3,
     )
-    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _stage_time_split_events3(spark, sf_dir)[0]
 
@@ -3891,7 +3839,6 @@ def _ensure_keycount_sidecar(
     o_orderkey index (`_ensure_bloom2_layout` finalize) is never
     touched."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_bloom2_layout(spark, sf_dir)
 
@@ -4010,7 +3957,6 @@ def _ensure_mixed_sidecar(
     staged once per scale factor — the fixture for the mixed
     point+range planner."""
     from twitter_flink_spark.operators import skipping
-    from twitter_flink_spark.sources.staging import build_id, stage_once
 
     dest = _ensure_cell_clustered_layout(spark, sf_dir)
 
@@ -4116,7 +4062,6 @@ def _ensure_zorder_layouts(spark: SparkSession, sf_dir: str) -> str:
     absolute paths and build in finalize. Cross-process write-once."""
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.operators.zorder import zorder_layout
-    from twitter_flink_spark.sources.staging import stage_once
 
     e = load_table(spark, sf_dir, "events")
     b = e.agg(
@@ -4257,8 +4202,6 @@ def _ensure_smallfiles_table(spark: SparkSession, sf_dir: str) -> str:
     itself stays pristine for every process)."""
     import os
 
-    from twitter_flink_spark.sources.staging import stage_once
-
     e = load_table(spark, sf_dir, "events")
 
     def _build(p: str) -> None:
@@ -4322,7 +4265,6 @@ def compaction_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from twitter_flink_spark.operators.compaction import compact_table
     from twitter_flink_spark.operators.skipping import _norm_path
-    from twitter_flink_spark.sources.staging import scratch_dir
 
     staged = _ensure_smallfiles_table(spark, sf_dir)
     work = os.path.join(scratch_dir("compact"), "table")
@@ -4723,7 +4665,6 @@ def zorder_incremental_recluster(
 
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.operators.zorder import zorder_layout
-    from twitter_flink_spark.sources.staging import scratch_dir
 
     e = load_table(spark, sf_dir, "events")
     b = e.agg(

@@ -547,21 +547,14 @@ def streaming_mv_serve_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a batch_id-keyed directory with OVERWRITE — a batch replayed after a
     crash-before-commit rewrites its own directory instead of appending
     duplicates (the same batch-id keying IncrementalMV uses on the
-    maintain side). Scratch dirs are deterministic per sf and
-    wiped per invocation — no tempdir accumulation across driver
-    rounds."""
+    maintain side). Each invocation works in its own scratch dir, so a
+    concurrent run never deletes the files this one's frame reads."""
     import os
-    import shutil
-    import tempfile
 
     from twitter_flink_spark.streaming.pipeline import IncrementalMV
 
     staged, schema = _stage_split_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "tfs-mvserve-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("mvserve")
     mv = IncrementalMV(spark, key_col="user_id", root=os.path.join(base, "mv"))
     stream = (
         spark.readStream.schema(schema)
@@ -875,18 +868,10 @@ def _drained_join_ckpt(spark: SparkSession, sf_dir: str) -> str:
     """Run the left-outer interval join to completion once per session
     and return its checkpoint path; both join-state introspection
     queries read their side from this one drained checkpoint."""
-    import os
-    import shutil
-    import tempfile
-
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _JOIN_CKPT_DRAINED:
         return _JOIN_CKPT_DRAINED[key]
-    ckpt = os.path.join(
-        tempfile.gettempdir(),
-        "tfs-joinstate-" + sf_dir.strip("/").replace("/", "-"),
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch_dir("joinstate")
     p = (
         stream_table(spark, sf_dir, "events")
         .where((F.col("event_type") == "purchase") & (F.col("value") > 150))

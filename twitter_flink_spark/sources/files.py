@@ -12,7 +12,6 @@ so equality predicates prune entire directories before any IO.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -211,16 +210,6 @@ def binpack_write(
         .mode("overwrite")
         .parquet(dest)
     )
-
-
-def scratch_dir(tag: str) -> str:
-    """Per-run scratch directory for sink round-trips (driver runs queries
-    repeatedly in one process; each run writes fresh). Delegates to the
-    swept ``staging.scratch_dir`` namespace so abandoned run dirs age
-    out instead of accumulating one mkdtemp per query run."""
-    from twitter_flink_spark.sources.staging import scratch_dir as _eph
-
-    return os.path.join(_eph(tag), tag)
 
 
 def partition_listing(

@@ -1,12 +1,21 @@
-"""Cross-process write-once staging for shared fixture layouts.
+"""The one owner of every temp directory the package creates.
 
-Several query fixtures materialize a derived layout of a testdata table
-at a FIXED per-sf path under /tmp (so repeated query runs, the bench, and
-the driver sweep reuse one build). A module-global "built already" dict
-only serializes within ONE process: a concurrent driver sweep and builder
-bench would race a bare ``shutil.rmtree`` + rewrite, each able to delete
-or overwrite a layout the other is mid-read — flaky failures that read as
-correctness regressions.
+Two kinds, two protocols, nothing else (a guard test bans ``mkdtemp``,
+``gettempdir`` and friends everywhere outside this module):
+
+* ``stage_once(tag, sf_dir, build, finalize)`` — a layout SHARED across
+  runs and processes, at the fixed per-(tag, sf) path `fixture_path`
+  (``tfs-<tag>-<sf>``): query fixtures derived from a testdata table,
+  which repeated query runs, the bench and the driver sweep reuse.
+* ``scratch_dir(tag)`` — a dir PRIVATE to one run (streaming
+  checkpoints, sink round trips, an MV root, a file-stream's symlink
+  dir): ``tfs-eph-<tag>-<pid>-<tid>-<seq>``, unique per call and swept
+  once its pid is dead and it is an hour old.
+
+A fixed path wiped on entry serves neither: a second run of the same
+query deletes files the first run's lazy frame has still to read. A
+module-global "built already" dict serializes within ONE process only,
+and a bare ``mkdtemp`` is never removed.
 
 ``stage_once`` is the shared commit protocol: build into a
 pid/thread-unique scratch dir, commit via one atomic ``os.rename``, treat
@@ -69,11 +78,10 @@ _eph_swept = False
 
 def scratch_dir(tag: str) -> str:
     """Ephemeral per-run scratch dir (streaming checkpoints, sink work
-    dirs): ``tfs-eph-<tag>-<pid>-<tid>-<seq>`` under the system tempdir.
-    Unlike `fixture_path` layouts — deterministic names, cross-process,
-    kept on purpose — these are single-process garbage the moment the
-    run ends, and bare ``mkdtemp`` left ~30 of them per bench run with
-    nothing ever sweeping. First call per process sweeps abandoned
+    dirs), created empty: ``tfs-eph-<tag>-<pid>-<tid>-<seq>`` under the
+    system tempdir. Unlike `fixture_path` layouts — deterministic names,
+    cross-process, kept on purpose — these are single-process garbage
+    the moment the run ends. First call per process sweeps abandoned
     siblings the same way `commit.scratch_name` sweeps
     manifest scratch: only the ``tfs-eph-`` namespace (never the staged
     fixtures), only when the embedded pid is DEAD *and* the dir is over

@@ -40,6 +40,7 @@ from pyspark.sql.types import StructType
 
 from twitter_flink_spark.commit import replace_dir, write_json
 from twitter_flink_spark.session import arrow_table, local_frame
+from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.streaming.sources import stream_table
 
 
@@ -88,12 +89,9 @@ def await_or_raise(q, timeout_s: int) -> None:
             f"streaming query {q.name or q.id} still running after {timeout_s}s"
         )
     if CAPTURE_STREAM_PLANS:
-        try:
-            record_stream_plan(
-                q.name or str(q.id), q._jsq.explainInternal(True)
-            )
-        except Exception:  # no batch ever executed — nothing to record
-            pass
+        # a query that ran no batch explains as "No physical plan.
+        # Waiting for data." rather than raising
+        record_stream_plan(q.name or str(q.id), q._jsq.explainInternal(True))
 
 
 def windowed_stream_counts(
@@ -269,9 +267,7 @@ class TopNFeedback:
         self._wend: dict[object, object] = {}
         self._max_ts = None
         self.snapshot: list[str] = []  # latest top-N keys (empty = cold start)
-        import tempfile
-
-        self._out_dir = tempfile.mkdtemp(prefix="tfs-matches-") + "/out"
+        self._out_dir = scratch_dir("matches") + "/out"
         self._log_dir = (
             self.checkpoint_dir + "/counts_log" if self.checkpoint_dir else None
         )
@@ -641,7 +637,6 @@ class IncrementalMV:
     ):
         import json
         import os
-        import tempfile
 
         self.spark = spark
         self.key_col = key_col
@@ -660,7 +655,7 @@ class IncrementalMV:
         #: state), so consumers dedup with one distinct — the standard
         #: at-least-once feed contract.
         self.changelog_dir = changelog_dir
-        self._root = root or tempfile.mkdtemp(prefix="tfs-mv-")
+        self._root = root or scratch_dir("mv")
         #: bucket id -> current committed version (1-based); manifest mirror
         self._buckets: dict[int, int] = {}
         self._last_batch_id: int | None = None

@@ -12,11 +12,11 @@ landing directory; everything downstream is identical.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import TABLES, _ns_long_to_timestamp
 
 
@@ -103,10 +103,11 @@ def stream_table(
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    staged = tempfile.mkdtemp(prefix=f"tfs-stream-{name}-")
-    link = os.path.join(staged, f"{name}.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, f"{name}.parquet"), link)
+    staged = scratch_dir(f"stream-{name}")
+    os.symlink(
+        os.path.join(sf_dir, f"{name}.parquet"),
+        os.path.join(staged, f"{name}.parquet"),
+    )
     schema = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
