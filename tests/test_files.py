@@ -1633,7 +1633,7 @@ def test_replace_dir_pointer_swap_atomic(tmp_path):
     """Commits publish through a symlink pointer renamed in ONE atomic
     step — dest exists (and resolves to a complete generation) at every
     instant, fixing the between-renames window the old rename-aside
-    dance had. Legacy real-dir dests migrate on first commit; superseded
+    dance had. Real-dir dests migrate on first commit; superseded
     generations survive a reader grace; ``rm_committed`` removes both
     pointer and generation."""
     import time
@@ -1665,21 +1665,57 @@ def test_replace_dir_pointer_swap_atomic(tmp_path):
     assert not os.path.isdir(target1)
     assert open(os.path.join(dest, "a")).read() == "2"  # current untouched
 
-    # legacy real-dir dest migrates to the pointer shape on first commit
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(legacy)
-    open(os.path.join(legacy, "a"), "w").write("0")
+    # a real-dir dest migrates to the pointer shape on first commit
+    real = str(tmp_path / "real")
+    os.makedirs(real)
+    open(os.path.join(real, "a"), "w").write("0")
     g3 = str(tmp_path / "g3")
     os.makedirs(g3)
     open(os.path.join(g3, "a"), "w").write("3")
-    sk.replace_dir(g3, legacy)
-    assert os.path.islink(legacy)
-    assert open(os.path.join(legacy, "a")).read() == "3"
+    sk.replace_dir(g3, real)
+    assert os.path.islink(real)
+    assert open(os.path.join(real, "a")).read() == "3"
+    assert not [p for p in os.listdir(tmp_path) if ".gc-" in p]
 
     # removal of a committed dest drops pointer AND generation
     gen = os.path.realpath(dest)
     sk.rm_committed(dest)
     assert not os.path.lexists(dest) and not os.path.isdir(gen)
+
+
+def test_replace_dir_failed_pointer_rename_keeps_real_dir_dest(
+    tmp_path, monkeypatch
+):
+    """When every ``.lnk`` -> dest rename of a first commit over a real
+    dir fails, the commit raises and ``dest`` is still the real dir with
+    its old files: the aside copy is renamed back, not deleted."""
+    import pytest
+
+    from twitter_flink_spark import commit
+
+    class _LinkRenameFails:
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        def rename(self, src, dst):
+            if src.endswith(".lnk"):
+                raise OSError("injected pointer-rename failure")
+            os.rename(src, dst)
+
+    dest = str(tmp_path / "dest")
+    os.makedirs(dest)
+    open(os.path.join(dest, "a"), "w").write("old")
+    gen = str(tmp_path / "gen")
+    os.makedirs(gen)
+    open(os.path.join(gen, "a"), "w").write("new")
+    monkeypatch.setattr(commit, "os", _LinkRenameFails())
+    with pytest.raises(RuntimeError, match="lost 5 swap races"):
+        commit.replace_dir(gen, dest)
+    monkeypatch.setattr(commit, "os", os)
+    assert os.path.isdir(dest) and not os.path.islink(dest)
+    assert os.listdir(dest) == ["a"]
+    assert open(os.path.join(dest, "a")).read() == "old"
+    assert sorted(os.listdir(tmp_path)) == ["dest"]
 
 
 def test_scratch_sweep_gated_on_dead_pid(tmp_path):
@@ -1910,7 +1946,6 @@ def test_parent_histogram_orders_thin_slice_first(spark, tmp_path):
     selection."""
     from pyspark.sql import functions as F
 
-    from twitter_flink_spark.commit import commit_swap
     from twitter_flink_spark.operators import skipping
 
     root = str(tmp_path / "tbl")
@@ -1968,19 +2003,6 @@ def test_parent_histogram_orders_thin_slice_first(spark, tmp_path):
     # edge neighborhood is approximate — the bound is not)
     assert 1 <= est <= 4
     assert est < plan["est_bound_files"]["zslice"]
-
-    # legacy parents (written before histograms) fall back to the
-    # count bound — consult still works, estimate == bound
-    legacy = spark.read.parquet(parent).drop("hist_min", "hist_max")
-    commit_swap(legacy, parent)
-    plan = {}
-    paths, _, _ = skipping.select_files_multi(
-        spark, root, [("zslice", 0, 100)], plan_out=plan
-    )
-    assert len(paths) >= 1
-    assert (
-        plan["est_files"]["zslice"] == plan["est_bound_files"]["zslice"]
-    )
 
 
 def test_sidecar_index_root_indexes_readonly_table(spark, tmp_path):

@@ -77,8 +77,8 @@ def test_incremental_index_recovers_torn_append(spark, tmp_path):
         (F.col("doc_id") != victim) | (F.col("band") == 0)
     )
     tmp = idx + ".rewrite"
-    # keep the segmented layout — this simulates a torn MOVE, not a
-    # legacy index; seg rides along as the partition column
+    # keep the segmented layout — this simulates a torn MOVE; seg
+    # rides along as the partition column
     kept.write.partitionBy("seg").mode("overwrite").parquet(tmp)
     from twitter_flink_spark.commit import rm_committed
 
@@ -300,60 +300,30 @@ def test_staged_pairs_equal_operator_recompute(spark):
     assert staged == direct and len(staged) > 0
 
 
-def test_legacy_index_backfills_markers_once(spark, tmp_path):
-    """A marker-less legacy index must fall back to the all-bands rule
-    exactly ONCE: the first update backfills a coverage marker for
-    every legacy-covered doc, so the next update's fast path sees the
-    whole corpus — not just the batch — and never re-indexes the legacy
-    corpus (the r12 ADVICE defect: batch-only markers made every legacy
-    doc look new, an O(corpus) re-append that doubled the index)."""
-    from twitter_flink_spark.operators.dedup import COVER_BAND
+def test_flat_index_raises_naming_its_dir(spark, tmp_path):
+    """Every maintenance call reads only the segmented layout
+    `lsh_index_build` writes: an index without the ``seg`` partition
+    column raises a ValueError that names its dir."""
+    import pytest
 
-    docs, split = _split_docs(spark)
-    old = docs.where(F.col("doc_id") <= split)
-    new = docs.where(F.col("doc_id") > split)
-    idx = str(tmp_path / "lshidx")
-    n_old = lsh_index_build(spark, old, idx)
-
-    # strip the markers: simulate an index written before COVER_BAND
-    legacy = (
-        spark.read.parquet(idx)
-        .where(F.col("band") != COVER_BAND)
-        .drop("seg", "nseg")  # pre-segmentation layouts had neither
+    from twitter_flink_spark.operators.dedup import (
+        lsh_index_compact,
+        lsh_index_delete,
     )
-    tmp = idx + ".rewrite"
-    legacy.write.mode("overwrite").parquet(tmp)
-    from twitter_flink_spark.commit import rm_committed
 
-    rm_committed(idx)
-    os.rename(tmp, idx)
-    band_rows_before = spark.read.parquet(idx).count()
-
-    # update #1 on the legacy index: counts ONLY the new docs, appends
-    # their bands, and backfills markers for the legacy corpus
-    n1 = lsh_index_update(spark, docs, idx)
-    n_new = new.where(F.size(F.split("text", " ")) >= 3).count()
-    assert n1 == n_new
-    after = spark.read.parquet(idx)
-    assert (
-        after.where(F.col("band") == COVER_BAND).count() == n_old + n_new
-    )
-    # legacy band rows were NOT duplicated: every legacy doc still has
-    # exactly LSH_BANDS band rows
-    legacy_per_doc = (
-        after.where((F.col("doc_id") <= split) & (F.col("band") >= 0))
-        .groupBy("doc_id")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert legacy_per_doc == LSH_BANDS
-
-    # update #2: pure no-op on the fast (marker) path
-    total_rows = after.count()
-    assert total_rows == band_rows_before + n_new * (LSH_BANDS) + n_old + n_new
-    assert lsh_index_update(spark, docs, idx) == 0
-    assert spark.read.parquet(idx).count() == total_rows
+    docs, _ = _split_docs(spark)
+    idx = str(tmp_path / "flat")
+    lsh_index_build(spark, docs, str(tmp_path / "seg"))
+    built = spark.read.parquet(str(tmp_path / "seg"))
+    built.drop("seg", "nseg").write.parquet(idx)
+    doomed = docs.select("doc_id").limit(1)
+    for call in (
+        lambda: lsh_index_update(spark, docs, idx),
+        lambda: lsh_index_delete(spark, doomed, idx),
+        lambda: lsh_index_compact(spark, idx),
+    ):
+        with pytest.raises(ValueError, match=f"LSH index at {idx} has no seg"):
+            call()
 
 
 def test_index_delete_tombstone_then_compact(spark, tmp_path):
@@ -410,39 +380,6 @@ def test_index_delete_tombstone_then_compact(spark, tmp_path):
         for r in lsh_index_candidates(spark, idx).collect()
     ) == served
     assert lsh_index_compact(spark, idx) == 0  # no-op without tombstones
-
-
-def test_legacy_index_delete_uses_fallback_coverage(spark, tmp_path):
-    """Deleting from a marker-less legacy index must fall back to the
-    all-bands coverage rule — not silently tombstone nothing."""
-    from twitter_flink_spark.operators.dedup import (
-        COVER_BAND,
-        lsh_index_delete,
-    )
-
-    docs, split = _split_docs(spark)
-    idx = str(tmp_path / "lshidx")
-    lsh_index_build(spark, docs, idx)
-    legacy = (
-        spark.read.parquet(idx)
-        .where(F.col("band") != COVER_BAND)
-        .drop("seg", "nseg")  # pre-segmentation layouts had neither
-    )
-    tmp = idx + ".rewrite"
-    legacy.write.mode("overwrite").parquet(tmp)
-    from twitter_flink_spark.commit import rm_committed
-
-    rm_committed(idx)
-    os.rename(tmp, idx)
-
-    victim = int(docs.agg(F.min("doc_id")).first()[0])
-    doomed = spark.createDataFrame([(victim,)], "doc_id long")
-    assert lsh_index_delete(spark, doomed, idx) == 1
-    assert lsh_index_delete(spark, doomed, idx) == 0  # still idempotent
-    got = lsh_index_candidates(spark, idx).where(
-        (F.col("doc_a") == victim) | (F.col("doc_b") == victim)
-    )
-    assert got.count() == 0
 
 
 def test_compact_rewrites_only_tombstone_bearing_segments(spark, tmp_path):

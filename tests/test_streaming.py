@@ -391,8 +391,7 @@ def test_feedback_unreadable_log_cold_starts(spark, tmp_path):
     """A crash can leave {checkpoint}/counts_log existing but with no
     committed parquet footers (only a _temporary dir from the first WAL
     write). That must be a recoverable cold start, not a constructor
-    failure; the stranded .gc dir from an interrupted compaction must be
-    re-adopted instead."""
+    failure."""
     import os
 
     ck = str(tmp_path / "ck")
@@ -401,22 +400,6 @@ def test_feedback_unreadable_log_cold_starts(spark, tmp_path):
         spark, SF_DIR, key_col="event_type", n=3, checkpoint_dir=ck,
     )
     assert fb.snapshot == [] and not fb._top  # clean cold start
-
-    # interrupted compaction: log dir gone, .gc generation present
-    ck2 = str(tmp_path / "ck2")
-    full = str(tmp_path / "full")
-    _split_events(spark, full, n_chunks=2)
-    fb1 = TopNFeedback(
-        spark, SF_DIR, key_col="event_type", n=3,
-        src_path=full, checkpoint_dir=ck2,
-    )
-    fb1.run_leaderboard()
-    os.rename(ck2 + "/counts_log", ck2 + "/counts_log.gc")
-    fb2 = TopNFeedback(
-        spark, SF_DIR, key_col="event_type", n=3,
-        src_path=full, checkpoint_dir=ck2,
-    )
-    assert fb2.snapshot == fb1.snapshot  # .gc re-adopted, state recovered
 
 
 def test_feedback_corrupt_log_raises(spark, tmp_path):
@@ -1739,44 +1722,7 @@ def test_incremental_mv_lookup_composite_keys(spark):
     shutil.rmtree(single._root, ignore_errors=True)
 
 
-def _count_sink_jobs(spark, monkeypatch):
-    """Wrap every foreachBatch sink started from here on; the returned
-    list gets one (batch_id, jobs submitted, schema-less parquet reads)
-    triple per micro-batch. A `read.parquet` without a schema is one
-    footer-inference job (launched while the frame is built, before any
-    action), so a read that passes its schema launches none."""
-    from pyspark.sql.readwriter import DataFrameReader
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    real_parquet = DataFrameReader.parquet
-    real_sink = DataStreamWriter.foreachBatch
-    schemaless = []
-    calls = []
-
-    def parquet(self, *paths, **options):
-        if self._jreader.userSpecifiedSchema().isEmpty():
-            schemaless.append(paths)
-        return real_parquet(self, *paths, **options)
-
-    def counting(self, func):
-        def counted(batch_df, batch_id):
-            jobs, reads = dag.numTotalJobs(), len(schemaless)
-            func(batch_df, batch_id)
-            calls.append((
-                batch_id,
-                dag.numTotalJobs() - jobs,
-                schemaless[reads:],
-            ))
-
-        return real_sink(self, counted)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
-    monkeypatch.setattr(DataStreamWriter, "foreachBatch", counting)
-    return calls
-
-
-def test_ivf_sink_job_budget_per_micro_batch(spark, monkeypatch):
+def test_ivf_sink_job_budget_per_micro_batch(spark, sink_jobs):
     """The streaming IVF sink reads only artifacts its own query wrote
     (the `_assign` inverted lists, against the centroids), so it never
     reads without a schema, and a data micro-batch runs at most 4 jobs:
@@ -1785,27 +1731,59 @@ def test_ivf_sink_job_budget_per_micro_batch(spark, monkeypatch):
         streaming_ivf_assign_maintenance,
     )
 
-    calls = _count_sink_jobs(spark, monkeypatch)
     out = streaming_ivf_assign_maintenance(spark, SF_DIR).collect()
     assert out and all(r.streamed_in_batches for r in out)
     assert all(r.redelivery_noop for r in out)
-    assert [b for b, _, _ in calls] == [0, 1, 2]
-    assert all(jobs <= 4 and reads == [] for _, jobs, reads in calls), calls
+    assert [b for b, _, _ in sink_jobs] == [0, 1, 2]
+    assert all(
+        jobs <= 4 and reads == [] for _, jobs, reads in sink_jobs
+    ), sink_jobs
 
 
-def test_mv_merge_job_budget_per_micro_batch(spark, monkeypatch):
+def test_mv_merge_job_budget_per_micro_batch(spark, sink_jobs):
     """`IncrementalMV.merge_batch` reads the prior bucket versions with
     the schema its manifest records: a micro-batch with a prior snapshot
     runs at most 6 jobs and reads nothing without a schema."""
     from twitter_flink_spark.queries.streaming import streaming_incremental_mv
 
-    calls = _count_sink_jobs(spark, monkeypatch)
     assert streaming_incremental_mv(spark, SF_DIR).count() > 0
-    assert [b for b, _, _ in calls] == [0, 1, 2, 3]
+    assert [b for b, _, _ in sink_jobs] == [0, 1, 2, 3]
     # every batch after the first has a prior snapshot
-    assert all(jobs <= 6 and reads == [] for _, jobs, reads in calls[1:]), (
-        calls
+    assert all(
+        jobs <= 6 and reads == [] for _, jobs, reads in sink_jobs[1:]
+    ), sink_jobs
+
+
+def test_lsh_update_job_budget_per_micro_batch(spark, sink_jobs):
+    """A streamed `lsh_index_update` consults the coverage markers with
+    no existence probe: each update batch runs 7 jobs (the index read's
+    footer inference, the parameter ``first()``, and the observed
+    staged write with its shuffle stages)."""
+    from twitter_flink_spark.queries.streaming import (
+        streaming_lsh_index_maintenance,
     )
+
+    out = streaming_lsh_index_maintenance(spark, SF_DIR).collect()
+    assert out and all(
+        r.streamed_in_batches and r.redelivery_noop for r in out
+    )
+    assert [b for b, _, _ in sink_jobs] == [0, 1, 2]
+    assert [jobs for _, jobs, _ in sink_jobs[1:]] == [7, 7], sink_jobs
+
+
+def test_lsh_delete_job_budget_per_micro_batch(spark, sink_jobs):
+    """A streamed `lsh_index_delete` consults the coverage markers with
+    no existence probe: each delete batch runs 7 jobs (the index read's
+    footer inference, the parameter ``first()``, and the observed
+    tombstone write with its shuffle stages)."""
+    from twitter_flink_spark.queries.streaming import (
+        streaming_lsh_delete_maintenance,
+    )
+
+    out = streaming_lsh_delete_maintenance(spark, SF_DIR).collect()
+    assert out and all(r.compact_preserves_serve for r in out)
+    assert [b for b, _, _ in sink_jobs] == [0, 1]
+    assert [jobs for _, jobs, _ in sink_jobs] == [7, 7], sink_jobs
 
 
 def _mv_batches(spark):
@@ -1851,38 +1829,6 @@ def test_incremental_mv_resumes_with_manifest_schema(spark):
     dirs = [mv._bucket_dir(b, v) for b, v in mv._buckets.items()]
     assert snap.schema == spark.read.parquet(*dirs).schema  # as inferred
     assert _snapshot_rows(mv2) == _snapshot_rows(mv)
-
-
-def test_incremental_mv_manifest_without_schema_resumes(spark):
-    """A manifest written before the schema field existed still resumes
-    (reads fall back to inference) and merges to the same snapshot as
-    an MV that never lost the field; its next commit records it again."""
-    import json
-
-    from twitter_flink_spark.streaming.pipeline import IncrementalMV
-
-    b0, b1, b2 = _mv_batches(spark)
-    control = IncrementalMV(spark, key_col="user_id", n_buckets=4)
-    mv = IncrementalMV(spark, key_col="user_id", n_buckets=4)
-    for m in (control, mv):
-        m.merge_batch(b0, 0)
-        m.merge_batch(b1, 1)
-    with open(mv._manifest_path()) as fh:
-        manifest = json.load(fh)
-    del manifest["schema"]
-    with open(mv._manifest_path(), "w") as fh:
-        json.dump(manifest, fh)
-
-    legacy = IncrementalMV(
-        spark, key_col="user_id", n_buckets=4, root=mv._root
-    )
-    assert legacy._schema is None
-    assert _snapshot_rows(legacy) == _snapshot_rows(control)
-    legacy.merge_batch(b2, 2)
-    control.merge_batch(b2, 2)
-    assert _snapshot_rows(legacy) == _snapshot_rows(control)
-    with open(mv._manifest_path()) as fh:
-        assert "schema" in json.load(fh)
 
 
 def test_incremental_mv_schema_recorded_for_every_variant(spark):

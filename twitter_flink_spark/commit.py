@@ -147,10 +147,10 @@ def sweep_gens(dest: str) -> None:
 def pin_generation(dest: str):
     """Hold the CURRENT generation of a committed dest alive for the
     duration of a long scan: yields a stable path to read (the resolved
-    generation for a pointer dest; the dest itself for a legacy real
-    dir) and drops a ``.pin-<pid>-<tid>`` breadcrumb beside the
-    generation so ``sweep_gens`` skips it past the reader grace while
-    this pid lives. Readers that finish inside ``GEN_GRACE_S`` don't
+    generation for a pointer dest; the dest itself for a real dir that
+    no commit has published yet) and drops a ``.pin-<pid>-<tid>``
+    breadcrumb beside the generation so ``sweep_gens`` skips it past
+    the reader grace while this pid lives. Readers that finish inside ``GEN_GRACE_S`` don't
     need this; it exists for scans that legitimately outlive it — a
     full-manifest audit at millions of files, a straggling executor —
     where the post-grace sweep could otherwise delete the generation
@@ -174,7 +174,7 @@ def pin_generation(dest: str):
 
 def rm_committed(path: str) -> None:
     """Remove a committed dest that may be a pointer symlink (the
-    ``replace_dir`` protocol) or a legacy real dir.
+    ``replace_dir`` protocol) or a real dir (a Spark write's output).
     ``shutil.rmtree(link, ignore_errors=True)`` silently no-ops on a
     symlink, which would leak both the pointer and its generation."""
     try:
@@ -197,7 +197,8 @@ def move_committed(src: str, dst: str) -> None:
     link (what ``shutil.move`` does) would strand the generation in the
     swapped-aside dir and the subsequent ``rmtree`` would break the
     pointer. Move the generation first, then the link — its relative
-    target stays valid. Legacy real dirs fall back to a plain move."""
+    target stays valid. A real dir (never published by a pointer swap)
+    is a plain move."""
     if os.path.islink(src):
         gen_name = os.readlink(src)
         if not os.path.isabs(gen_name):
@@ -220,11 +221,14 @@ def replace_dir(tmp: str, dest: str) -> None:
     between-renames window where ``dest`` does not exist (the
     cross-process flake the old rename-aside dance allowed). Concurrent
     commits are last-committer-wins: each writes its own generation and
-    the final pointer rename serializes in the kernel. Legacy real-dir
-    dests (pre-pointer layouts) migrate on first commit — that single
-    migration keeps the rename-aside window; every commit after it is
-    atomic. Superseded generations are swept after a reader grace
-    period (``sweep_gens``)."""
+    the final pointer rename serializes in the kernel. A dest that is
+    still a real dir (the first commit over a dir a Spark write created:
+    LSH segments, IVF cells, the CDF changelog, the counts WAL) is
+    renamed aside first — that first commit keeps a rename-aside window;
+    every commit after it is atomic. The aside copy is removed only
+    after the pointer lands, and renamed back if every attempt fails, so
+    a failed commit leaves ``dest`` as it was. Superseded generations are
+    swept after a reader grace period (``sweep_gens``)."""
     d, base = os.path.split(dest)
     gen = os.path.join(
         d or ".", f".{base}.gen-{os.getpid()}-{time.monotonic_ns():x}"
@@ -236,22 +240,28 @@ def replace_dir(tmp: str, dest: str) -> None:
     except OSError:
         pass
     os.symlink(os.path.basename(gen), lnk)
-    for attempt in range(5):
+    old = None
+    for _ in range(5):
         try:
             os.rename(lnk, dest)  # atomic over absent dest or a symlink
-            sweep_gens(dest)
-            return
         except OSError:
-            # dest is a legacy real dir: migrate it aside, then retry
-            # (the one-time window the pointer protocol removes)
-            old = scratch_name(dest, "gc") + f"-{attempt}"
+            # dest is a real dir: move it aside and retry
+            real = os.path.isdir(dest) and not os.path.islink(dest)
+            if old is None and real:
+                aside = scratch_name(dest, "gc")
+                shutil.rmtree(aside, ignore_errors=True)
+                try:
+                    os.rename(dest, aside)
+                    old = aside
+                except OSError:
+                    pass  # another committer moved it first
+            continue
+        if old is not None:
             shutil.rmtree(old, ignore_errors=True)
-            try:
-                if os.path.isdir(dest) and not os.path.islink(dest):
-                    os.rename(dest, old)
-            except OSError:
-                pass  # another committer moved it first
-            shutil.rmtree(old, ignore_errors=True)
+        sweep_gens(dest)
+        return
+    if old is not None and not os.path.lexists(dest):
+        os.rename(old, dest)  # the failed commit leaves dest as it was
     try:
         os.remove(lnk)
     except OSError:
@@ -313,8 +323,7 @@ def append_files(
     shuffle parallelism — a pinned ``repartition(nseg, seg)`` forced
     ``nseg`` near-empty tasks per append, pure scheduling overhead at
     micro-batch grain (the r15 streaming-maintenance regression).
-    Without ``seg`` the append is flat (legacy LSH indexes keep their
-    layout until a compaction migrates them)."""
+    Without ``seg`` the append is flat (the IVF tombstone files)."""
     tag = uuid.uuid4().hex[:8]
     stage = (
         f"{dest}.stage-{phases[0][0]}-{os.getpid()}-{threading.get_ident()}"

@@ -507,24 +507,24 @@ def _segmented(df: DataFrame, nseg: int) -> DataFrame:
     return df.withColumn("seg", _seg_expr(nseg)).repartition(F.col("seg"))
 
 
-def _index_nseg(idx: DataFrame) -> int | None:
-    """The segment count a segmented index's rows were placed with
-    (None = legacy flat layout). An EMPTY segmented index (everything
-    deleted and compacted away) has no row to read — any placement is
-    vacuously consistent with zero rows, so the module default
-    applies."""
-    return _index_meta(idx)[0]
+def _read_index(spark, index_dir: str) -> DataFrame:
+    """The index at ``index_dir``, which must have the segmented layout
+    `lsh_index_build` writes. The check reads the columns the read has
+    already resolved, so it adds no job."""
+    idx = spark.read.parquet(index_dir)
+    if "seg" not in idx.columns:
+        raise ValueError(
+            f"LSH index at {index_dir} has no seg column; rebuild it with "
+            "lsh_index_build"
+        )
+    return idx
 
 
 def _index_meta(idx: DataFrame):
-    """(seg_nseg, params_row) in ONE job: the stored banding parameters
-    and — for segmented layouts — the placement segment count ride every
-    row, so a single ``first()`` serves both (the previous separate
-    ``_index_nseg`` + params reads paid two driver round-trips per
-    maintenance micro-batch). ``params_row is None`` = the index was
-    compacted to zero rows; ``seg_nseg is None`` = legacy flat layout."""
-    if "seg" not in idx.columns:
-        return None, idx.select("ngram", "k", "bands").first()
+    """(nseg, params_row) in ONE job: the stored banding parameters and
+    the placement segment count ride every row, so a single ``first()``
+    serves both. ``params_row is None`` = the index was compacted to
+    zero rows."""
     row = idx.select("ngram", "k", "bands", "nseg").first()
     if row is None:
         # empty segmented index: any placement is vacuously consistent
@@ -533,38 +533,18 @@ def _index_meta(idx: DataFrame):
     return int(row["nseg"]), row
 
 
-def _param_cols(
-    ngram: int, k: int, bands: int, nseg: int | None
-) -> list:
-    """The per-row parameter literals every index row carries; ``nseg``
-    only in segmented layouts (legacy flat indexes keep their schema so
-    mixed-schema reads can never arise within one layout)."""
-    cols = [
+def _param_cols(ngram: int, k: int, bands: int, nseg: int) -> list:
+    """The per-row parameter literals every index row carries."""
+    return [
         F.lit(ngram).alias("ngram"),
         F.lit(k).alias("k"),
         F.lit(bands).alias("bands"),
+        F.lit(int(nseg)).alias("nseg"),
     ]
-    if nseg is not None:
-        cols.append(F.lit(int(nseg)).alias("nseg"))
-    return cols
-
-
-def _marker_rows(
-    ids: DataFrame, ngram: int, k: int, bands: int, nseg: int | None
-) -> DataFrame:
-    """Marker rows from a bare ``doc_id`` frame (callers guarantee the
-    ids are fully banded — either band-eligible new docs whose band
-    rows land first, or legacy docs whose bands are already on disk)."""
-    return ids.select(
-        "doc_id",
-        F.lit(COVER_BAND).alias("band"),
-        F.col("doc_id").cast("string").alias("band_hash"),
-        *_param_cols(ngram, k, bands, nseg),
-    )
 
 
 def _coverage_rows(
-    docs: DataFrame, ngram: int, k: int, bands: int, nseg: int | None
+    docs: DataFrame, ngram: int, k: int, bands: int, nseg: int
 ) -> DataFrame:
     """One marker row per BAND-ELIGIBLE doc (>= ngram tokens — banding
     is deterministic and total for eligible docs, so eligibility IS
@@ -573,7 +553,12 @@ def _coverage_rows(
     eligible = docs.where(
         F.size(F.split(F.col("text"), " ")) >= ngram
     ).select("doc_id").distinct()
-    return _marker_rows(eligible, ngram, k, bands, nseg)
+    return eligible.select(
+        "doc_id",
+        F.lit(COVER_BAND).alias("band"),
+        F.col("doc_id").cast("string").alias("band_hash"),
+        *_param_cols(ngram, k, bands, nseg),
+    )
 
 
 def _band_parallel(docs: DataFrame) -> DataFrame:
@@ -600,12 +585,8 @@ def _band_parallel(docs: DataFrame) -> DataFrame:
     `streaming_lsh_index_maintenance`. The `.rdd.getNumPartitions()`
     probe translates the (narrow, scan+filter) plan without running a
     job; callers pass scan-backed frames only."""
-    sc = docs.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    try:
-        if docs.rdd.getNumPartitions() >= n:
-            return docs
-    except Exception:
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() >= n:
         return docs
     return docs.repartition(n, F.col("doc_id"))
 
@@ -669,9 +650,7 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
     creates are harmless — candidate pairs are distinct); a crash
     leaves new docs merely not-yet-indexed, never wrong, never
     permanently skipped. The coverage consult is a pushed-filter scan
-    of the marker rows — 1/(bands+1) of the index and NO shuffle, where
-    the previous count-distinct-bands rule paid an O(index) groupBy per
-    crawl (a legacy marker-less index falls back to that rule once).
+    of the marker rows — 1/(bands+1) of the index and NO shuffle.
     Docs with fewer than ``ngram`` tokens can never produce a shingle,
     hence never a band, hence would never become "covered" — they are
     excluded from the new-doc count up front, otherwise a redelivered
@@ -679,52 +658,32 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
     redelivery would never converge to a no-op. Returns the number of
     newly indexed docs; 0 is a pure no-op.
 
-    Layout-preserving: a segmented index (``seg`` partition column)
-    gets segmented appends placed with the index's OWN stored ``nseg``;
-    a legacy flat index keeps flat appends until a compaction migrates
-    it — one layout per index, never a mix.
+    Appends are placed in segments with the index's OWN stored
+    ``nseg``; an index without the segmented layout raises
+    `ValueError`.
 
     Job shape (the r15 streaming-maintenance regression was
     job-submission bound, not data bound): ONE metadata ``first()``
-    (params + nseg ride every row), one marker-existence ``head(1)``,
-    and ONE staged write — band rows and coverage markers union into a
-    single job partitioned by a phase column, renamed bands-first
+    (params + nseg ride every row) and ONE staged write — band rows
+    and coverage markers union into a single job partitioned by a phase
+    column, renamed bands-first
     (`commit.append_files`), with the new-doc count OBSERVED on
     the marker branch during that write instead of paying a separate
     distinct-count job. A redelivered batch evaluates to zero rows and
     appends nothing — still a pure no-op."""
     from pyspark.sql import Observation
 
-    idx = spark.read.parquet(index_dir)
-    seg_nseg, p = _index_meta(idx)
+    idx = _read_index(spark, index_dir)
+    nseg, p = _index_meta(idx)
     if p is None:
         # the index was compacted down to zero rows (every doc deleted):
         # there are no stored parameters left to honor, so re-found it
         return lsh_index_build(spark, docs, index_dir)
-    markers = idx.where(F.col("band") == COVER_BAND).select("doc_id")
-    legacy_fully = None
-    if markers.head(1):
-        fully = markers
-    else:
-        # legacy index written before coverage markers: derive coverage
-        # from the all-bands-present rule once, and BACKFILL a marker
-        # row for every legacy-covered doc below — without the backfill
-        # the next update would see markers exist (just this batch's)
-        # and treat the whole legacy corpus as new: an O(corpus)
-        # re-shingle/re-sign/re-append that roughly doubles the index
-        # and miscounts the return value.
-        fully = (
-            idx.groupBy("doc_id")
-            .agg(F.count_distinct("band").alias("nb"))
-            .where(F.col("nb") >= p["bands"])
-            .select("doc_id")
-        )
-        legacy_fully = fully
+    covered = idx.where(F.col("band") == COVER_BAND).select("doc_id")
     eligible = docs.where(
         F.size(F.split(F.col("text"), " ")) >= int(p["ngram"])
     )
-    new_docs = _band_parallel(eligible).join(fully, "doc_id", "left_anti")
-    seg = None if seg_nseg is None else _seg_expr(seg_nseg)
+    new_docs = _band_parallel(eligible).join(covered, "doc_id", "left_anti")
     sh = doc_shingles(new_docs, ngram=int(p["ngram"]))
     rows = lsh_bands(
         minhash_signature(sh, k=int(p["k"])),
@@ -734,9 +693,7 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
         "doc_id",
         "band",
         "band_hash",
-        *_param_cols(
-            int(p["ngram"]), int(p["k"]), int(p["bands"]), seg_nseg
-        ),
+        *_param_cols(int(p["ngram"]), int(p["k"]), int(p["bands"]), nseg),
     )
     obs = Observation()
     cov = _coverage_rows(
@@ -744,39 +701,15 @@ def lsh_index_update(spark, docs: DataFrame, index_dir: str) -> int:
         int(p["ngram"]),
         int(p["k"]),
         int(p["bands"]),
-        seg_nseg,
+        nseg,
     ).observe(obs, F.count(F.lit(1)).alias("n"))
     # one staged write; markers still rename LAST (the per-doc commit
     # point), and the marker count IS the newly-indexed-doc count
     # (_coverage_rows is one distinct row per band-eligible new doc)
-    append_files([("inc", rows), ("cov", cov)], index_dir, seg=seg)
-    n_new = observed_count(obs)
-    if legacy_fully is not None:
-        # one-time legacy repair: backfill a marker per legacy-covered
-        # doc so the NEXT update's markers.head(1) fast path sees the
-        # whole corpus, not just this batch. Safe ordering for free —
-        # these docs' band rows are already on disk (that is how
-        # `fully` found them). A crash mid-backfill leaves some legacy
-        # docs marker-less; they get harmlessly re-indexed next update
-        # (duplicate band rows never change distinct candidate pairs),
-        # and the backfill then completes for the rest.
-        append_files(
-            [
-                (
-                    "covfill",
-                    _marker_rows(
-                        legacy_fully,
-                        int(p["ngram"]),
-                        int(p["k"]),
-                        int(p["bands"]),
-                        seg_nseg,
-                    ),
-                )
-            ],
-            index_dir,
-            seg=seg,
-        )
-    return n_new
+    append_files(
+        [("inc", rows), ("cov", cov)], index_dir, seg=_seg_expr(nseg)
+    )
+    return observed_count(obs)
 
 
 def lsh_index_delete(spark, doc_ids: DataFrame, index_dir: str) -> int:
@@ -799,22 +732,11 @@ def lsh_index_delete(spark, doc_ids: DataFrame, index_dir: str) -> int:
     must reclaim from the tombstones' own segments."""
     from pyspark.sql import Observation
 
-    idx = spark.read.parquet(index_dir)
-    seg_nseg, p = _index_meta(idx)
+    idx = _read_index(spark, index_dir)
+    nseg, p = _index_meta(idx)
     if p is None:
         return 0  # empty index: nothing is covered, nothing to forget
     covered = idx.where(F.col("band") == COVER_BAND).select("doc_id")
-    if not covered.head(1):
-        # legacy marker-less index: the same all-bands fallback the
-        # update path uses — without it every delete would silently
-        # no-op ("nothing covered") until some update backfills markers
-        covered = (
-            idx.where(F.col("band") >= 0)
-            .groupBy("doc_id")
-            .agg(F.count_distinct("band").alias("nb"))
-            .where(F.col("nb") >= p["bands"])
-            .select("doc_id")
-        )
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id")
     todo = (
         doc_ids.select("doc_id")
@@ -830,12 +752,9 @@ def lsh_index_delete(spark, doc_ids: DataFrame, index_dir: str) -> int:
         "doc_id",
         F.lit(TOMB_BAND).alias("band"),
         F.col("doc_id").cast("string").alias("band_hash"),
-        *_param_cols(
-            int(p["ngram"]), int(p["k"]), int(p["bands"]), seg_nseg
-        ),
+        *_param_cols(int(p["ngram"]), int(p["k"]), int(p["bands"]), nseg),
     )
-    seg = None if seg_nseg is None else _seg_expr(seg_nseg)
-    append_files([("tomb", rows)], index_dir, seg=seg)
+    append_files([("tomb", rows)], index_dir, seg=_seg_expr(nseg))
     return observed_count(obs)
 
 
@@ -854,9 +773,8 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     swaps are atomic and a segment's tombstones are removed by its own
     rewrite, so a crash mid-compact leaves the untouched segments'
     tombstones in place — serving stays correct (the anti-join still
-    hides them) and the next compact finishes the rest. A legacy FLAT
-    index takes the old full anti-join rewrite once, MIGRATING to the
-    segmented layout in the same swap. NOTE: compaction erases the
+    hides them) and the next compact finishes the rest. NOTE:
+    compaction erases the
     "covered" memory of deleted docs along with their tombstones — a
     source that redelivers a compacted-away doc re-indexes it; keeping
     deleted docs out of the SOURCE is the upstream contract, the index
@@ -864,20 +782,11 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     no-op (no rewrite)."""
     import os
 
-    idx = spark.read.parquet(index_dir)
+    idx = _read_index(spark, index_dir)
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id").distinct()
     n = tombs.count()
     if not n:
         return 0
-    if "seg" not in idx.columns:
-        # legacy flat layout: one full rewrite, migrating to segments
-        kept = idx.join(tombs, "doc_id", "left_anti").withColumn(
-            "nseg", F.lit(LSH_SEGMENTS)
-        )
-        commit_swap(
-            _segmented(kept, LSH_SEGMENTS), index_dir, partition_by=["seg"]
-        )
-        return n
     # tombstone rows carry their doc's segment (placed with the index's
     # own stored nseg at delete time) — collecting their distinct segs
     # is a <= nseg-row driver read off a band==TOMB_BAND scan that
@@ -901,7 +810,7 @@ def lsh_index_compact(spark, index_dir: str) -> int:
         # the whole corpus was deleted: leave one empty-but-schema'd
         # segment dir so the index stays readable (and still reads as
         # segmented) instead of a dir Spark cannot infer a schema from;
-        # `_index_nseg` falls back to the module default on zero rows
+        # `_index_meta` falls back to the module default on zero rows
         commit_swap(
             idx.limit(0).drop("seg"), os.path.join(index_dir, "seg=0")
         )

@@ -81,15 +81,6 @@ def _file_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     return _with_zero_file_coverage(df, stats, defaults)
 
 
-def _listed_files(df: DataFrame) -> list[str]:
-    """The scan listing behind ``df``, or [] when it has none (a
-    constructed frame)."""
-    try:
-        return df.inputFiles()
-    except Exception:
-        return []
-
-
 def _with_zero_file_coverage(
     df: DataFrame, per_file: DataFrame, defaults: dict
 ) -> DataFrame:
@@ -104,7 +95,7 @@ def _with_zero_file_coverage(
     real row, keyed on the canonical path (``input_file_name()`` and
     ``inputFiles()`` render schemes differently). This is an O(files)
     manifest-side aggregate — the data scan still runs exactly once."""
-    listed = _listed_files(df)
+    listed = df.inputFiles()
     if not listed:
         return per_file
     spark = df.sparkSession
@@ -1026,12 +1017,9 @@ def _hist_estimate(r, lo, hi) -> int:
     certainly has max < lo, so ``n_files`` minus both whole-bucket
     tails is a sound upper bound on the selection (exact when the
     query boundaries align with bucket boundaries). Falls back to
-    ``n_files`` for unknown-envelope rows and legacy parents written
-    before histograms existed."""
-    fields = r.__fields__ if hasattr(r, "__fields__") else r.asDict()
+    ``n_files`` for unknown-envelope rows."""
     if (
-        "hist_min" not in fields
-        or r["hist_min"] is None
+        r["hist_min"] is None
         or r["hist_max"] is None
         or r["unknown"] == 1
     ):
@@ -1734,7 +1722,7 @@ def _bloom2_shard_rows(
     # the parent's total_files repair never stabilizes). Probes route by
     # key hash into [0, n_shards) and never open shard=-1; the parent
     # excludes it; per-file counts go through the normalized distinct.
-    listed = _listed_files(df)
+    listed = df.inputFiles()
     if listed:
         ghost = (
             local_frame(df.sparkSession, [(p,) for p in listed], "file string")
@@ -2061,15 +2049,14 @@ def point_select_files_multi(
             consults.append((0, col, sid, row["ps"], 0))
             continue
         n_files = int(srow["n_files"])
-        fields = srow.asDict()
-        sum_keys = fields.get("est_sum_file_keys")
-        shard_keys = fields.get("est_shard_keys")
+        sum_keys = srow["est_sum_file_keys"]
+        shard_keys = srow["est_shard_keys"]
         if sum_keys and shard_keys:
             est = min(
                 n_files,
                 max(1, math.ceil(float(sum_keys) / float(shard_keys))),
             )
-        else:  # legacy parent written before the key sketches existed
+        else:  # a shard without keys carries no estimate
             est = n_files
         consults.append((est, col, sid, row["ps"], n_files))
     if not consults:
@@ -2211,10 +2198,7 @@ def select_files_mixed(
             consults.append((0, f"{col}=", 0, lambda: []))
             continue
         n_files = int(srow["n_files"])
-        fields = srow.asDict()
-        sk, uk = fields.get("est_sum_file_keys"), fields.get(
-            "est_shard_keys"
-        )
+        sk, uk = srow["est_sum_file_keys"], srow["est_shard_keys"]
         est = (
             min(n_files, max(1, math.ceil(float(sk) / float(uk))))
             if sk and uk

@@ -215,9 +215,9 @@ def _fresh_lsh_index_copy(spark: SparkSession, sf_dir: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         lsh_index_build(spark, docs, os.path.join(p, "index"))
 
-    # tag bumped when the index layout went SEGMENTED (seg=N/ dirs) so
-    # a stale flat fixture can never serve the legacy-compact path to
-    # the delete/compact lifecycle queries
+    # tag bumped when the index layout went SEGMENTED (seg=N/ dirs):
+    # index maintenance raises on a flat index, so the delete/compact
+    # lifecycle queries must never copy a stale flat fixture
     dest, _ = stage_once("lshpristine-seg", sf_dir, _build)
     work = os.path.join(scratch_dir("lshidxcopy"), "index")
     shutil.copytree(os.path.realpath(os.path.join(dest, "index")), work)

@@ -3139,7 +3139,7 @@ def _ensure_bloom2_layout(spark: SparkSession, sf_dir: str) -> str:
     from twitter_flink_spark.operators import skipping
 
     dest, _ = stage_once(
-        "bloom2",
+        "bloom2sk",
         sf_dir,
         lambda p: load_table(spark, sf_dir, "orders")
         .repartition(16)

@@ -899,12 +899,13 @@ def _drained_join_ckpt(spark: SparkSession, sf_dir: str) -> str:
         & (F.col("c_ts") <= F.col("p_ts")),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with state_partitions(spark):
+        q = (
+            joined.writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
     await_or_raise(q, 300)
     _JOIN_CKPT_DRAINED[key] = ckpt
     return ckpt
@@ -2622,8 +2623,8 @@ def streaming_lsh_index_maintenance(
     and one-shot rebuild must produce the identical verified pairs
     (md5-deterministic bands make this exact). At 100 TB: per-crawl
     cost is O(crawl), the corpus is never re-signed, and the index
-    append is per-file renames, crash-safe by the all-bands-present
-    coverage rule."""
+    append is per-file renames, crash-safe because each doc's coverage
+    marker renames after its band rows."""
     import os
 
     from twitter_flink_spark.operators.dedup import (

@@ -140,10 +140,7 @@ def binpack_write(
         StructType,
     )
 
-    try:
-        file_backed = bool(df.inputFiles())
-    except Exception:
-        file_backed = False
+    file_backed = bool(df.inputFiles())
     # the offset group key: per input file when the frame is file-backed;
     # otherwise input_file_name() is '' for every row and all of a value's
     # rows would share ONE (value, '') window partition — the exact

@@ -94,7 +94,7 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     entirely; the count is conservative (one oversized file splits into
     several partitions at read time), so the worst case is a redundant
     shuffle on a few-huge-files layout, never a missing one. A non-file
-    input (memory relation, stream) reports no files and is left alone —
+    input (a memory relation) reports no files and is left alone —
     its partitioning came from the session, not a file layout.
 
     Caller contract for NON-FILE inputs: because the file heuristic cannot
@@ -104,10 +104,7 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     feeding e.g. ``topk_neighbors`` a memory relation must pre-partition
     (`df.repartition(n, key)`) themselves."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
+    files = df.inputFiles()
     if not files or len(files) >= n:
         return df
     return df.repartition(n, key)

@@ -305,16 +305,7 @@ class TopNFeedback:
         ever run."""
         import os
 
-        if not self._log_dir:
-            return
-        # a log compacted by the old rename-aside protocol (before the
-        # pointer swap) could be left between its two directory renames,
-        # with the .gc dir holding the last complete log generation; such
-        # logs can still exist on disk, so the re-adoption stays
-        gc_dir = self._log_dir + ".gc"
-        if not os.path.isdir(self._log_dir) and os.path.isdir(gc_dir):
-            os.rename(gc_dir, self._log_dir)
-        if not os.path.isdir(self._log_dir):
+        if not self._log_dir or not os.path.isdir(self._log_dir):
             return
         # A crash can leave the log dir existing but with NO committed
         # parquet part files (only a hidden .part-*.parquet.tmp from the
@@ -622,8 +613,7 @@ class IncrementalMV:
     The manifest also records the snapshot ``schema``, and every read of
     a bucket version goes through `_read` with it: the engine wrote those
     files, so a schema-less read (one footer-inference job per call) would
-    only re-derive what is already known. A manifest written without the
-    field falls back to inference until the next merge records it.
+    only re-derive what is already known.
     """
 
     def __init__(
@@ -670,7 +660,7 @@ class IncrementalMV:
             # with a different n_buckets (or key) would route keys to buckets
             # the merge never reads, silently accumulating duplicate keys
             for attr in ("n_buckets", "key_col"):
-                if attr in m and m[attr] != getattr(self, attr):
+                if m[attr] != getattr(self, attr):
                     raise ValueError(
                         f"IncrementalMV manifest at {self._root} was written "
                         f"with {attr}={m[attr]!r}; resuming with "
@@ -678,8 +668,7 @@ class IncrementalMV:
                     )
             self._last_batch_id = m["last_batch_id"]
             self._buckets = {int(b): v for b, v in m["buckets"].items()}
-            if "schema" in m:
-                self._schema = StructType.fromJson(m["schema"])
+            self._schema = StructType.fromJson(m["schema"])
 
     # -- layout helpers ----------------------------------------------------
     def _bucket_dir(self, b: int, v: int) -> str:
@@ -719,12 +708,8 @@ class IncrementalMV:
 
     def _read(self, dirs: list[str]):
         """Bucket-version dirs as one frame, read with the manifest's
-        schema when it records one (no inference job), inferred
-        otherwise. The only reader of bucket versions."""
-        reader = self.spark.read
-        if self._schema is not None:
-            reader = reader.schema(self._schema)
-        return reader.parquet(*dirs)
+        schema (no inference job). The only reader of bucket versions."""
+        return self.spark.read.schema(self._schema).parquet(*dirs)
 
     def _bucket_expr(self):
         from pyspark.sql import functions as F
@@ -1039,9 +1024,9 @@ class IncrementalMV:
         invariant (distinct + max_by(batch_id) sees the same winners),
         so the log stays O(keys + post-checkpoint changes) instead of
         growing with every batch ever merged — the same at-rest bound
-        the counts WAL gets, via the same crash-safe two-rename
-        protocol (``.compact`` staged, old generation to ``.gc``,
-        swap).
+        the counts WAL gets, via the same crash-safe commit: the
+        compacted log is staged as ``.compact`` and published by the
+        pointer swap (`commit.replace_dir`).
 
         With ``upto_batch=None`` the checkpoint DERIVES from the durable
         consumer registry: the slowest registered consumer's committed
