@@ -532,6 +532,71 @@ def test_two_level_metadata_count_exact(spark, tmp_path):
     assert cnt3 == 0 and scanned3 == 0 and pr3 == 0
 
 
+def test_two_level_update_crash_between_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `update_two_level` at the first and at the last rename of
+    its parent commit (the shard rows are a Spark append; the parent
+    swap is the commit point), then re-run it: the parent and the
+    shards read exactly what an uninterrupted update leaves, and
+    selection serves the new era."""
+    import datetime
+
+    import pytest
+    from crash import CrashAfter
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators import skipping
+
+    base = datetime.datetime(2024, 1, 1)
+
+    def era(lo: int, hi: int, n_files: int):
+        return spark.createDataFrame(
+            [
+                (base + datetime.timedelta(hours=h), float(h))
+                for h in range(lo, hi)
+            ],
+            "ts timestamp, value double",
+        ).repartitionByRange(n_files, "ts")
+
+    def fresh(name: str) -> str:
+        root = str(tmp_path / name)
+        era(0, 96, 4).write.parquet(root)
+        skipping.build_two_level(spark, root, "ts", n_parts=4)
+        era(200, 248, 2).write.mode("append").parquet(root)
+        return root
+
+    def state(root: str):
+        """Parent and shard rows; file names are per-write unique, so
+        the shards compare without them."""
+        def rows(p):
+            df = spark.read.parquet(os.path.join(root, p))
+            return sorted(tuple(r) for r in df.drop("file").collect())
+
+        return rows(skipping.ROOT_MANIFEST), rows(skipping.PARTS_DIR)
+
+    clean = fresh("clean")
+    counting = CrashAfter(1 << 30)
+    monkeypatch.setattr(commit, "os", counting)
+    assert skipping.update_two_level(spark, clean, "ts") == 2
+    monkeypatch.setattr(commit, "os", os)
+    want = state(clean)
+    n_all = len(counting.moved)
+    assert n_all > 1
+
+    for k in (0, n_all - 1):
+        root = fresh(f"crash-{k}")
+        monkeypatch.setattr(commit, "os", CrashAfter(k))
+        with pytest.raises((OSError, RuntimeError)):
+            skipping.update_two_level(spark, root, "ts")
+        monkeypatch.setattr(commit, "os", os)
+        # the shard rows landed before the crash: the re-run finds no
+        # new file and repairs the parent from the shards
+        assert skipping.update_two_level(spark, root, "ts") == 0
+        assert state(root) == want, k
+        assert skipping.update_two_level(spark, root, "ts") == 0
+
+
 def test_two_level_incremental_update(spark, tmp_path):
     """`update_two_level` must stat only manifest-absent files, bucket
     them with the parent's STORED bounds (a file beyond the original
@@ -1740,6 +1805,27 @@ def test_scratch_sweep_gated_on_dead_pid(tmp_path):
     assert not os.path.isdir(dead), "dead pid's stale scratch is swept"
 
 
+def test_scratch_sweep_restores_dead_committers_aside(tmp_path):
+    """A committer that died between moving a real-dir dest aside and the
+    pointer rename leaves the dest missing and its old files only in the
+    ``.gc-`` aside: the sweep renames that aside back to the dest (files
+    intact) instead of deleting it as litter."""
+    import time
+
+    from twitter_flink_spark import commit as sk
+
+    dest = str(tmp_path / "cells")
+    aside = f"{dest}.gc-99999999-1"  # above the default pid_max: dead
+    os.makedirs(aside)
+    open(os.path.join(aside, "part-0.parquet"), "w").write("old")
+    old = time.time() - 7200
+    os.utime(aside, (old, old))
+    sk.scratch_name(dest, "gc")
+    assert os.path.isdir(dest) and not os.path.lexists(aside)
+    assert os.listdir(dest) == ["part-0.parquet"]
+    assert open(os.path.join(dest, "part-0.parquet")).read() == "old"
+
+
 def test_select_files_multi_selectivity_order_and_early_exit(
     spark, tmp_path, monkeypatch
 ):
@@ -2485,6 +2571,57 @@ def test_compact_table_preserves_rows_and_inodes(spark, tmp_path):
         if os.path.basename(_norm_path(f)) == os.path.basename(big)
     ]
     assert kept and os.stat(kept[0]).st_ino == ino
+
+
+def test_compact_table_crash_between_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `compact_table` at the first rename of its commit (the new
+    generation moving into place) and at the last (the pointer rename,
+    after the first compaction moved the real-dir table aside), then
+    re-run it: the table reads exactly the rows and files of an
+    uninterrupted compaction."""
+    import pytest
+    from crash import CrashAfter
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators.compaction import compact_table
+
+    e = load_table(spark, SF_DIR, "events")
+
+    def fresh(name: str) -> str:
+        t = str(tmp_path / name)
+        for i in range(4):
+            e.where(e["event_id"] % 4 == i).coalesce(1).write.mode(
+                "append"
+            ).parquet(t)
+        return t
+
+    def state(t: str):
+        rows = sorted(tuple(r) for r in spark.read.parquet(t).collect())
+        names = sorted(
+            f for f in os.listdir(t) if f.endswith(".parquet")
+        )
+        return rows, names
+
+    target = 1 << 30  # everything merges into one file
+    clean = fresh("clean")
+    counting = CrashAfter(1 << 30)
+    monkeypatch.setattr(commit, "os", counting)
+    assert compact_table(spark, clean, target)[2] == 1
+    monkeypatch.setattr(commit, "os", os)
+    want = state(clean)
+    n_all = len(counting.moved)
+    assert n_all > 1 and want[0]
+
+    for k in (0, n_all - 1):
+        t = fresh(f"crash-{k}")
+        monkeypatch.setattr(commit, "os", CrashAfter(k))
+        with pytest.raises((OSError, RuntimeError)):
+            compact_table(spark, t, target)
+        monkeypatch.setattr(commit, "os", os)
+        assert compact_table(spark, t, target)[2] == 1
+        assert state(t) == want, k
 
 
 def test_compact_table_repeat_no_generation_clobber(spark, tmp_path):

@@ -346,6 +346,24 @@ def test_no_slow_frame_or_global_rdd_diff_in_package():
     assert bad == []
 
 
+def _read_without_schema(expr) -> bool:
+    """``expr`` (an AST expression) is a ``read`` chain with no
+    ``.schema(...)`` on it."""
+    import ast
+
+    seen_read = False
+    while isinstance(expr, (ast.Attribute, ast.Call)):
+        if isinstance(expr, ast.Call):
+            f = expr.func
+            if isinstance(f, ast.Attribute) and f.attr == "schema":
+                return False
+            expr = f
+            continue
+        seen_read = seen_read or expr.attr == "read"
+        expr = expr.value
+    return seen_read
+
+
 def test_staged_replays_declare_their_schema_from_the_ledger():
     """Guard: the streaming and connector queries never infer a staged
     fixture's schema with ``spark.read.parquet(staged).schema`` — each
@@ -357,20 +375,6 @@ def test_staged_replays_declare_their_schema_from_the_ledger():
     root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
     bad = []
 
-    def read_chain(expr) -> bool:
-        """``expr`` is a `read` chain with no ``.schema(...)`` on it."""
-        seen_read = False
-        while isinstance(expr, (ast.Attribute, ast.Call)):
-            if isinstance(expr, ast.Call):
-                f = expr.func
-                if isinstance(f, ast.Attribute) and f.attr == "schema":
-                    return False
-                expr = f
-                continue
-            seen_read = seen_read or expr.attr == "read"
-            expr = expr.value
-        return seen_read
-
     for name in ("streaming.py", "connectors.py"):
         path = root / "queries" / name
         for node in ast.walk(ast.parse(path.read_text())):
@@ -380,7 +384,7 @@ def test_staged_replays_declare_their_schema_from_the_ledger():
                 and isinstance(node.value, ast.Call)
                 and isinstance(node.value.func, ast.Attribute)
                 and node.value.func.attr == "parquet"
-                and read_chain(node.value.func.value)
+                and _read_without_schema(node.value.func.value)
             ):
                 bad.append(f"{name}:{node.lineno}")
     assert bad == []
@@ -495,3 +499,53 @@ def test_broad_handlers_reraise_or_give_a_reason():
         visit(ast.parse(path.read_text()), path, None)
     assert bad == []
     assert seen == set(allowed)  # no stale entry
+
+
+def test_ivf_layout_is_named_only_in_its_module():
+    """Guard: the IVF inverted-list layout (``_centroids``, ``_assign``,
+    ``_meta``, ``_tombs`` and the ``cid=`` cell dirs) is a format the
+    engine defined, so only `operators/ivf.py` names it; every other
+    module goes through that module's builder, appender, router, fetch
+    and readers. Docstrings may describe the layout. In `ivf.py` every
+    ``read...parquet`` passes the artifact's ``.schema(...)`` — a
+    schema-less read is one footer-inference job."""
+    import ast
+    import pathlib
+    import re
+
+    layout = re.compile(r"(?<!\w)(_centroids|_assign|_meta|_tombs)(?!\w)|cid=")
+    root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
+    owner = root / "operators" / "ivf.py"
+    bad = []
+
+    def docstrings(tree):
+        for node in ast.walk(tree):
+            scopes = (
+                ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef
+            )
+            if (
+                isinstance(node, scopes)
+                and ast.get_docstring(node, clean=False) is not None
+            ):
+                yield node.body[0].value
+
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        docs = set(map(id, docstrings(tree)))
+        for node in ast.walk(tree):
+            if path == owner:
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and _read_without_schema(node.func.value)
+                ):
+                    bad.append(f"ivf.py:{node.lineno} schema-less read")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+                and layout.search(node.value)
+            ):
+                bad.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert bad == []

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from crash import CrashAfter
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.operators.dedup import (
@@ -548,24 +549,6 @@ def test_observed_count_zero_rows_only_for_missing_metrics(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-class _CrashAfter:
-    """Stands in for the ``os`` module inside `twitter_flink_spark.commit`:
-    the first ``k`` renames succeed and every later one raises — a crash
-    between two renames. Records the basenames it moved."""
-
-    def __init__(self, k: int):
-        self.k, self.moved = k, []
-
-    def __getattr__(self, name):
-        return getattr(os, name)
-
-    def rename(self, src, dst):
-        if len(self.moved) >= self.k:
-            raise OSError("injected crash")
-        os.rename(src, dst)
-        self.moved.append(os.path.basename(dst))
-
-
 def _pairs(spark, idx):
     return sorted(
         (r["doc_a"], r["doc_b"])
@@ -600,7 +583,7 @@ def test_update_crash_between_any_two_renames_recovers(
         return d
 
     clean = fresh("clean")
-    counting = _CrashAfter(1 << 30)
+    counting = CrashAfter(1 << 30)
     monkeypatch.setattr(commit, "os", counting)
     n_clean = lsh_index_update(spark, new, clean)
     monkeypatch.setattr(commit, "os", os)
@@ -612,7 +595,7 @@ def test_update_crash_between_any_two_renames_recovers(
 
     for k in sorted({0, n_bands - 1, n_bands, n_all - 1}):
         idx = fresh(f"crash-{k}")
-        monkeypatch.setattr(commit, "os", _CrashAfter(k))
+        monkeypatch.setattr(commit, "os", CrashAfter(k))
         with pytest.raises(OSError, match="injected crash"):
             lsh_index_update(spark, new, idx)
         monkeypatch.setattr(commit, "os", os)
@@ -652,7 +635,7 @@ def test_ivf_delete_crash_between_renames_recovers(
     try:
         doomed = spark.range(0, 400, 3).withColumnRenamed("id", "vec_id")
         clean = fresh("clean")
-        counting = _CrashAfter(1 << 30)
+        counting = CrashAfter(1 << 30)
         monkeypatch.setattr(commit, "os", counting)
         n_clean = ivf_index_delete(spark, doomed, clean)
         monkeypatch.setattr(commit, "os", os)
@@ -662,7 +645,7 @@ def test_ivf_delete_crash_between_renames_recovers(
 
         for k in (0, n_files - 1):
             idx = fresh(f"crash-{k}")
-            monkeypatch.setattr(commit, "os", _CrashAfter(k))
+            monkeypatch.setattr(commit, "os", CrashAfter(k))
             with pytest.raises(OSError, match="injected crash"):
                 ivf_index_delete(spark, doomed, idx)
             monkeypatch.setattr(commit, "os", os)

@@ -443,9 +443,11 @@ def test_ivf_refit_on_drift_fires_heals_and_noops(spark, tmp_path):
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         assigned_mean_dist,
+        kmeans_fit,
+    )
+    from twitter_flink_spark.operators.ivf import (
         ivf_meta_df,
         ivf_refit_on_drift,
-        kmeans_fit,
     )
 
     def vecs(lo, hi, shift=0.0):
@@ -526,7 +528,7 @@ def test_ivf_full_refit_scratch_is_writer_unique(
     import os
     import threading
 
-    from twitter_flink_spark.operators import clustering
+    from twitter_flink_spark.operators import ivf
 
     vecs = spark.range(0, 40).select(
         F.col("id").alias("vec_id"),
@@ -537,7 +539,7 @@ def test_ivf_full_refit_scratch_is_writer_unique(
     idx = str(tmp_path / "idx")
     os.makedirs(idx)
     staged, resume = threading.Event(), threading.Event()
-    measure = clustering.assigned_mean_dist
+    measure = ivf.assigned_mean_dist
 
     def paused_measure(*args, **kwargs):
         if threading.current_thread().name == "refit-b":
@@ -545,12 +547,12 @@ def test_ivf_full_refit_scratch_is_writer_unique(
             resume.wait(300)
         return measure(*args, **kwargs)
 
-    monkeypatch.setattr(clustering, "assigned_mean_dist", paused_measure)
+    monkeypatch.setattr(ivf, "assigned_mean_dist", paused_measure)
     out = {}
 
     def refit_b():
         try:
-            out["b"] = clustering._ivf_full_refit(spark, idx, vecs, 3, 2)
+            out["b"] = ivf._ivf_full_refit(spark, idx, vecs, 3, 2)
         except Exception as exc:  # noqa: BLE001
             out["b"] = exc
 
@@ -558,7 +560,7 @@ def test_ivf_full_refit_scratch_is_writer_unique(
     b.start()
     try:
         assert staged.wait(300)
-        a = clustering._ivf_full_refit(spark, idx, vecs, 3, 2)
+        a = ivf._ivf_full_refit(spark, idx, vecs, 3, 2)
     finally:
         resume.set()
         b.join(timeout=300)
@@ -646,10 +648,12 @@ def test_ivf_refit_on_imbalance_fires_and_noops(spark, tmp_path):
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         assigned_mean_dist,
+        kmeans_fit,
+    )
+    from twitter_flink_spark.operators.ivf import (
         ivf_imbalance_factor,
         ivf_meta_df,
         ivf_refit_on_imbalance,
-        kmeans_fit,
     )
 
     def vecs(lo, hi, shift=0.0):

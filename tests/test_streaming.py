@@ -71,6 +71,30 @@ def test_feedback_snapshot_and_kv(spark):
     assert types <= set(fb.snapshot)
 
 
+def test_feedback_filter_output_plans_without_a_job(spark, monkeypatch):
+    """`run_filter` reads its output back with the schema of the columns
+    its batches wrote: once the stream has drained, building the
+    returned frame runs no schema-inference job, and the frame has the
+    schema inference would give."""
+    from twitter_flink_spark.streaming import pipeline
+
+    fb = TopNFeedback(spark, SF_DIR, key_col="event_type", n=3)
+    fb.run_leaderboard()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    drained = []
+    real_await = pipeline.await_or_raise
+
+    def await_and_mark(q, timeout_s):
+        real_await(q, timeout_s)
+        drained.append(dag.numTotalJobs())
+
+    monkeypatch.setattr(pipeline, "await_or_raise", await_and_mark)
+    out = fb.run_filter()
+    assert drained and dag.numTotalJobs() == drained[-1]
+    assert out.schema == spark.read.parquet(fb._out_dir).schema
+    assert out.count() > 0
+
+
 def test_feedback_state_bounded_by_watermark(spark):
     """Driver-side leaderboard state must not retain every (window, key) ever
     seen (round-1 leak): after the stream drains, the mirror holds only
@@ -1756,9 +1780,9 @@ def test_mv_merge_job_budget_per_micro_batch(spark, sink_jobs):
 
 def test_lsh_update_job_budget_per_micro_batch(spark, sink_jobs):
     """A streamed `lsh_index_update` consults the coverage markers with
-    no existence probe: each update batch runs 7 jobs (the index read's
-    footer inference, the parameter ``first()``, and the observed
-    staged write with its shuffle stages)."""
+    no existence probe and reads the index with its schema: each update
+    batch runs 6 jobs (the parameter ``first()`` and the observed staged
+    write with its shuffle stages) and no schema-less read."""
     from twitter_flink_spark.queries.streaming import (
         streaming_lsh_index_maintenance,
     )
@@ -1768,14 +1792,15 @@ def test_lsh_update_job_budget_per_micro_batch(spark, sink_jobs):
         r.streamed_in_batches and r.redelivery_noop for r in out
     )
     assert [b for b, _, _ in sink_jobs] == [0, 1, 2]
-    assert [jobs for _, jobs, _ in sink_jobs[1:]] == [7, 7], sink_jobs
+    assert [jobs for _, jobs, _ in sink_jobs[1:]] == [6, 6], sink_jobs
+    assert [reads for _, _, reads in sink_jobs[1:]] == [[], []], sink_jobs
 
 
 def test_lsh_delete_job_budget_per_micro_batch(spark, sink_jobs):
     """A streamed `lsh_index_delete` consults the coverage markers with
-    no existence probe: each delete batch runs 7 jobs (the index read's
-    footer inference, the parameter ``first()``, and the observed
-    tombstone write with its shuffle stages)."""
+    no existence probe and reads the index with its schema: each delete
+    batch runs 6 jobs (the parameter ``first()`` and the observed
+    tombstone write with its shuffle stages) and no schema-less read."""
     from twitter_flink_spark.queries.streaming import (
         streaming_lsh_delete_maintenance,
     )
@@ -1783,7 +1808,8 @@ def test_lsh_delete_job_budget_per_micro_batch(spark, sink_jobs):
     out = streaming_lsh_delete_maintenance(spark, SF_DIR).collect()
     assert out and all(r.compact_preserves_serve for r in out)
     assert [b for b, _, _ in sink_jobs] == [0, 1]
-    assert [jobs for _, jobs, _ in sink_jobs] == [7, 7], sink_jobs
+    assert [jobs for _, jobs, _ in sink_jobs] == [6, 6], sink_jobs
+    assert [reads for _, _, reads in sink_jobs] == [[], []], sink_jobs
 
 
 def _mv_batches(spark):

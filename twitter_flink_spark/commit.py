@@ -25,7 +25,8 @@ commits; each has ONE implementation here:
 Scratch names embed the writer's pid and thread (`scratch_name`), so two
 processes committing one dest never write into each other's scratch, and
 crashed writers leave uniquely-named litter that is swept only once its
-pid is dead. On an object store (no symlinks, no atomic dir rename) the
+pid is dead (`sweep_scratch`; an aside copy whose dest is missing is
+renamed back instead). On an object store (no symlinks, no atomic dir rename) the
 pointer maps to immutable generation prefixes plus a tiny pointer
 manifest updated by conditional put — the layouts port unchanged.
 """
@@ -63,21 +64,43 @@ def pid_alive(pid: int) -> bool:
 def scratch_name(dest: str, kind: str) -> str:
     """Pid/thread-unique scratch sibling for ``dest`` (`.tmp-…`/`.gc-…`):
     two processes maintaining one shared manifest must never write into
-    the same scratch dir. Crashed processes leave uniquely-named litter;
-    sweep it only when it is unambiguously abandoned — the embedded pid
-    is DEAD *and* the dir is >1 h old — so a legitimately long-running
-    commit (a huge manifest write) can never lose its live scratch to an
-    unrelated committer."""
+    the same scratch dir. Abandoned siblings are swept first
+    (`sweep_scratch`)."""
+    sweep_scratch(dest)
+    return f"{dest}.{kind}-{os.getpid()}-{threading.get_ident()}"
+
+
+def sweep_scratch(dest: str) -> None:
+    """Sweep the scratch siblings of ``dest`` that crashed committers
+    left. Litter is swept only when it is unambiguously abandoned — the
+    embedded pid is DEAD *and* the dir is >1 h old — so a legitimately
+    long-running commit (a huge manifest write) can never lose its live
+    scratch to an unrelated committer. A ``.gc-`` aside while ``dest``
+    is missing is the last committed generation (its writer died
+    between moving a real-dir dest aside and the pointer rename): it is
+    renamed back to ``dest``, not deleted — at once when it is this
+    thread's own (a thread runs one commit at a time, so its aside from
+    an earlier call is abandoned)."""
+    me = (os.getpid(), threading.get_ident())
     for leftover in glob.glob(f"{dest}.tmp-*") + glob.glob(f"{dest}.gc-*"):
         try:
-            m = re.search(r"\.(?:tmp|gc)-(\d+)-", leftover)
-            if m is not None and pid_alive(int(m.group(1))):
+            m = re.search(r"\.(?:tmp|gc)-(\d+)-(\d+)", leftover)
+            writer = m and (int(m.group(1)), int(m.group(2)))
+            restore = leftover.startswith(f"{dest}.gc-") and not (
+                os.path.lexists(dest)
+            )
+            if restore and writer == me:
+                pass  # this thread's aside from an earlier call
+            elif writer and pid_alive(writer[0]):
                 continue
-            if time.time() - os.lstat(leftover).st_mtime > 3600:
+            elif time.time() - os.lstat(leftover).st_mtime <= 3600:
+                continue
+            if restore:
+                os.rename(leftover, dest)
+            else:
                 shutil.rmtree(leftover, ignore_errors=True)
         except OSError:
             pass
-    return f"{dest}.{kind}-{os.getpid()}-{threading.get_ident()}"
 
 
 def commit_swap(df: DataFrame, dest: str, partition_by=()) -> None:

@@ -258,23 +258,6 @@ def kmeans_fit(
     return local_frame(spark, rows, cent_schema)
 
 
-# -- drift-triggered refit (the incremental IVF index's weekly fit) ---------
-
-
-def ivf_meta_df(
-    spark, fit_mean_dist: float, k: int, iters: int
-) -> DataFrame:
-    """One-row `_meta` manifest for a persisted IVF index: the fit-time
-    mean assignment distance (the drift baseline) plus the fit
-    parameters, riding the index like the Bloom manifest's m/k so a
-    refit can never re-fit with skewed settings."""
-    return local_frame(
-        spark,
-        [(float(fit_mean_dist), int(k), int(iters))],
-        "fit_mean_dist double, k int, iters int",
-    )
-
-
 def assigned_mean_dist(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -301,180 +284,3 @@ def assigned_mean_dist(
     if not row["n"]:
         return 0.0
     return float(row["s"]) / int(row["n"])
-
-
-def ivf_refit_on_drift(
-    spark,
-    index_dir: str,
-    vectors: DataFrame,
-    threshold: float = 4.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Close the loop the drift monitor opens: measure the index's
-    serving quality (mean distance of every indexed vector to its
-    STORED centroid, `assigned_mean_dist`) against the fit-time baseline
-    in `_meta`; if the ratio exceeds ``threshold``, refit the centroids
-    on ``vectors`` (the same deterministic Lloyd as the original build),
-    reassign everything, and atomically cut the index over — new
-    `_assign` (partitioned by cid), new `_centroids`, new `_meta`
-    baseline, each committed by the tmp-write + rename-swap protocol.
-    Below the threshold the call is a PURE no-op (no write, no swap).
-
-    The production cadence this encodes: assignments stream in against
-    frozen centroids (`O(new)` appends); this job runs on the weekly
-    timer and only pays the full refit when the data actually moved.
-
-    Crash posture: swaps run assign -> centroids -> meta. Any mixed
-    generation a crash leaves behind measures as INFLATED drift on the
-    next call (distances are taken against the stored cid through the
-    current centroids), so the refit simply refires — deterministic
-    Lloyd makes the redo idempotent — and the final meta swap restores
-    ratio ~1. Returns {fired, ratio, measured, baseline}."""
-    import os
-
-    meta = spark.read.parquet(os.path.join(index_dir, "_meta")).first()
-    k, iters = int(meta["k"]), int(meta["iters"])
-    baseline = float(meta["fit_mean_dist"])
-    cents = spark.read.parquet(os.path.join(index_dir, "_centroids"))
-    assigned = spark.read.parquet(os.path.join(index_dir, "_assign"))
-    v = vectors.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("e")
-    )
-    measured = assigned_mean_dist(v, cents, assigned, id_col=id_col)
-    ratio = (measured / baseline) if baseline > 0 else (
-        float("inf") if measured > 0 else 1.0
-    )
-    out = {"ratio": ratio, "measured": measured, "baseline": baseline}
-    if ratio <= threshold:
-        return {"fired": False, **out}
-    new_baseline = _ivf_full_refit(
-        spark, index_dir, vectors, k, iters, id_col, vec_col
-    )
-    return {"fired": True, **out, "baseline_after": new_baseline}
-
-
-def _ivf_full_refit(
-    spark,
-    index_dir: str,
-    vectors: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """The shared FIRING body of every refit trigger (drift- and
-    imbalance-based): deterministic Lloyd on ``vectors``, reassign
-    everything to the frozen on-disk doubles, and atomically cut the
-    index over assign -> centroids -> meta (each a tmp-write +
-    rename-swap; a crash-torn mix measures as inflated drift/skew on
-    the next run and the deterministic refit refires idempotently).
-    The scratch generations are pid/thread-unique, so two concurrent
-    refits of one index never delete each other's staged output.
-    Returns the new `_meta` baseline mean distance."""
-    import os
-    import shutil
-
-    from twitter_flink_spark.commit import replace_dir, scratch_name
-
-    v = vectors.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("e")
-    )
-    cents_dir = os.path.join(index_dir, "_centroids")
-    assign_dir = os.path.join(index_dir, "_assign")
-    meta_dir = os.path.join(index_dir, "_meta")
-    tmp_c, tmp_a, tmp_m = (
-        scratch_name(d, "tmp") for d in (cents_dir, assign_dir, meta_dir)
-    )
-    new_cents = kmeans_fit(
-        vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    ).select("cid", "cent")
-    for t in (tmp_c, tmp_a, tmp_m):
-        shutil.rmtree(t, ignore_errors=True)
-    new_cents.write.mode("overwrite").parquet(tmp_c)
-    disk_cents = spark.read.parquet(tmp_c)  # freeze doubles on disk
-    new_assign = assign_clusters(v, disk_cents, id_col=id_col)
-    new_assign.write.mode("overwrite").partitionBy("cid").parquet(tmp_a)
-    new_baseline = assigned_mean_dist(
-        v, disk_cents, spark.read.parquet(tmp_a), id_col=id_col
-    )
-    ivf_meta_df(spark, new_baseline, k, iters).write.mode(
-        "overwrite"
-    ).parquet(tmp_m)
-    replace_dir(tmp_a, assign_dir)
-    replace_dir(tmp_c, cents_dir)
-    replace_dir(tmp_m, meta_dir)
-    return new_baseline
-
-
-def ivf_imbalance_factor(spark, index_dir: str) -> float:
-    """max cell / mean cell over the persisted assignment table — the
-    skew statistic `ivf_cell_balance_report` surfaces (1.0 = perfectly
-    balanced; the biggest cell bounds worst-case probe latency). One
-    groupBy at the index's metadata grain (k cells), no vector math.
-
-    The mean divides by the index's FITTED k (from `_meta`), not the
-    observed non-empty cell count: an index degenerated into one cell
-    (deletes/compaction emptied the rest) is the WORST imbalance, but a
-    non-empty-cells mean would score it exactly 1.0 and the refit
-    trigger would never fire on the index it exists to rescue. Falls
-    back to observed cells for indexes without a `_meta`."""
-    import os
-
-    counts = (
-        spark.read.parquet(os.path.join(index_dir, "_assign"))
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-    )
-    t = counts.agg(
-        F.sum("n_vecs").alias("n"),
-        F.count(F.lit(1)).alias("k"),
-        F.max("n_vecs").alias("mx"),
-    ).first()
-    if not t["n"]:
-        return 1.0
-    k = int(t["k"])
-    meta_path = os.path.join(index_dir, "_meta")
-    if os.path.isdir(meta_path):
-        k = max(k, int(spark.read.parquet(meta_path).first()["k"]))
-    return int(t["mx"]) * k / int(t["n"])
-
-
-def ivf_refit_on_imbalance(
-    spark,
-    index_dir: str,
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """The SKEW-triggered sibling of `ivf_refit_on_drift` — closing the
-    loop `ivf_cell_balance_report` opened: when the imbalance factor
-    (max cell / mean cell) of the persisted assignment table exceeds
-    ``threshold``, the index's whole reason to exist (scanning ~N/k per
-    probe instead of N) is compromised, so refit on ``vectors`` with
-    the same deterministic Lloyd and atomically cut over (shared
-    `_ivf_full_refit` body — identical crash posture and idempotence).
-    At or below the threshold the call is a PURE no-op: the trigger
-    reads only the k-cell occupancy aggregate, never a vector. Returns
-    {fired, imbalance[, baseline_after]}."""
-    imb = ivf_imbalance_factor(spark, index_dir)
-    if imb <= threshold:
-        return {"fired": False, "imbalance": imb}
-    import os
-
-    meta = spark.read.parquet(os.path.join(index_dir, "_meta")).first()
-    new_baseline = _ivf_full_refit(
-        spark,
-        index_dir,
-        vectors,
-        int(meta["k"]),
-        int(meta["iters"]),
-        id_col,
-        vec_col,
-    )
-    return {
-        "fired": True,
-        "imbalance": imb,
-        "baseline_after": new_baseline,
-    }

@@ -40,6 +40,7 @@ from twitter_flink_spark.commit import (
     new_generation,
     replace_dir,
     scratch_name,
+    sweep_scratch,
 )
 from twitter_flink_spark.operators.skipping import _norm_path
 from twitter_flink_spark.session import local_frame
@@ -106,6 +107,9 @@ def compact_table(
     swept. Unique-per-generation names make that collision impossible.
     """
     global LAST_MERGE_JOBS
+    # a compaction that died between moving the real-dir table aside and
+    # its pointer rename left no table dir: put the aside back first
+    sweep_scratch(root)
     live = [
         _norm_path(f) for f in spark.read.parquet(root).inputFiles()
     ]

@@ -507,17 +507,26 @@ def _segmented(df: DataFrame, nseg: int) -> DataFrame:
     return df.withColumn("seg", _seg_expr(nseg)).repartition(F.col("seg"))
 
 
+#: the rows `lsh_index_build` writes, ``seg`` being the partition dirs
+INDEX_SCHEMA = (
+    "doc_id long, band int, band_hash string, ngram int, k int, "
+    "bands int, nseg int, seg int"
+)
+
+
 def _read_index(spark, index_dir: str) -> DataFrame:
     """The index at ``index_dir``, which must have the segmented layout
-    `lsh_index_build` writes. The check reads the columns the read has
-    already resolved, so it adds no job."""
-    idx = spark.read.parquet(index_dir)
-    if "seg" not in idx.columns:
+    `lsh_index_build` writes, read with that layout's schema (a
+    schema-less read is one footer-inference job per call). The layout
+    check lists the dir for its ``seg=N`` dirs, so it adds no job."""
+    import os
+
+    if not any(d.startswith("seg=") for d in os.listdir(index_dir)):
         raise ValueError(
             f"LSH index at {index_dir} has no seg column; rebuild it with "
             "lsh_index_build"
         )
-    return idx
+    return spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
 
 
 def _index_meta(idx: DataFrame):
@@ -826,7 +835,7 @@ def lsh_index_candidates(spark, index_dir: str) -> DataFrame:
     are anti-joined out — a deleted doc serves in no pair). Callers
     restrict the pair set (e.g. at-least-one-side-new) and verify with
     exact Jaccard."""
-    idx = spark.read.parquet(index_dir)
+    idx = _read_index(spark, index_dir)
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id")
     return lsh_candidate_pairs(
         idx.where(F.col("band") >= 0).join(tombs, "doc_id", "left_anti")
@@ -845,7 +854,7 @@ def lsh_index_probe(spark, docs: DataFrame, index_dir: str) -> DataFrame:
     probes over batches equals the batch pipeline's full candidate set
     (md5-deterministic banding). Returns distinct (doc_a < doc_b);
     tombstoned docs pair on neither side."""
-    idx = spark.read.parquet(index_dir)
+    idx = _read_index(spark, index_dir)
     p = idx.select("ngram", "k", "bands").first()
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id")
     sh = doc_shingles(

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from twitter_flink_spark.operators import ivf
 from twitter_flink_spark.operators.similarity import (
     cosine,
     dot,
@@ -2500,12 +2501,6 @@ def _ensure_ivf_inc_index(
     counts ride the staged ledger (cross-process write-once via
     `staging.stage_once` — the index stores ids and centroids, never
     file paths, so the commit rename relocates it safely)."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        kmeans_fit,
-    )
     from twitter_flink_spark.sources.staging import stage_once
     from twitter_flink_spark.sources.tables import spread
 
@@ -2516,41 +2511,16 @@ def _ensure_ivf_inc_index(
     split = (int(b["mn"]) + int(b["mx"])) // 2
 
     def _build(p: str) -> dict:
-        corpus = spread(emb, "vec_id").where(F.col("vec_id") <= split)
-        vecs = corpus.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-        cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        )
-        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
-        disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
-        assign_dir = os.path.join(p, "_assign")
-        assign_clusters(vecs, disk_cents).write.mode(
-            "overwrite"
-        ).partitionBy("cid").parquet(assign_dir)
-        n_corpus = spark.read.parquet(assign_dir).count()
-
-        def _update(new_vecs) -> int:
-            known = spark.read.parquet(assign_dir).select("vec_id")
-            todo = new_vecs.join(known, "vec_id", "left_anti")
-            n = todo.count()
-            if not n:
-                return 0
-            fresh = assign_clusters(todo, disk_cents)
-            # partitioned append: only the touched cell dirs grow
-            fresh.write.mode("append").partitionBy("cid").parquet(
-                assign_dir
-            )
-            return n
-
-        all_vecs = spread(emb, "vec_id").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
+        allv = spread(emb, "vec_id")
+        ivf.ivf_build(
+            spark, p, allv.where(F.col("vec_id") <= split), _KM_K, _KM_ITERS
         )
         return {
-            "n_corpus": n_corpus,
-            "n_new": _update(all_vecs.where(F.col("vec_id") > split)),
-            "n_again": _update(all_vecs),
+            "n_corpus": ivf.ivf_assignments(spark, p).count(),
+            "n_new": ivf.ivf_append(
+                spark, p, allv.where(F.col("vec_id") > split)
+            ),
+            "n_again": ivf.ivf_append(spark, p, allv),
         }
 
     dest, meta = stage_once("ivfinc", sf_dir, _build)
@@ -2585,44 +2555,13 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ONE cid=<cell> directory (inputFiles-pinned in
     tests/test_similarity.py)."""
     dest, split, (n0, n1, n2) = _ensure_ivf_inc_index(spark, sf_dir)
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
     ok = n0 > 0 and n1 > 0 and n2 == 0
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # route: k-row broadcast argmin on the ONE probe row — the same
-    # expression as the stored assignment, so the cell always agrees
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    cands = (
-        spark.read.parquet(
-            os.path.join(dest, "_assign", f"cid={pcid}")
-        )  # ONE inverted-list dir, corpus/k bytes
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(emb, "vec_id")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+    return ivf.ivf_search(dest, emb, probe_id).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
-    )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(bool(ok)).alias("incrementally_assigned"),
-        )
+        "cosine",
+        F.lit(bool(ok)).alias("incrementally_assigned"),
     )
 
 
@@ -2660,12 +2599,6 @@ def ivf_index_delete_compact(
     import os
     import shutil
 
-    from twitter_flink_spark.operators.clustering import assign_clusters
-    from twitter_flink_spark.operators.ivf import (
-        ivf_index_compact,
-        ivf_index_delete,
-        ivf_tombstones,
-    )
     from twitter_flink_spark.sources.staging import scratch_dir
 
     staged, split, _led = _ensure_ivf_inc_index(spark, sf_dir)
@@ -2677,63 +2610,39 @@ def ivf_index_delete_compact(
     doomed = emb.where(
         (F.col("vec_id") % 9 == 3) & (F.col("vec_id") != probe_id)
     ).select("vec_id")
-    n_del = ivf_index_delete(spark, doomed, work)
-    n_again = ivf_index_delete(spark, doomed, work)
-    assign_dir = os.path.join(work, "_assign")
+    n_del = ivf.ivf_index_delete(spark, doomed, work)
+    n_again = ivf.ivf_index_delete(spark, doomed, work)
     doomed_cells = sorted(
         int(r["cid"])
-        for r in spark.read.parquet(assign_dir)
-        .join(ivf_tombstones(spark, work), "vec_id", "left_semi")
+        for r in ivf.ivf_assignments(spark, work)
+        .join(ivf.ivf_tombstones(spark, work), "vec_id", "left_semi")
         .select("cid")
         .distinct()
         .collect()
     )
-    listing_before = {
-        d: sorted(os.listdir(os.path.join(assign_dir, d)))
-        for d in os.listdir(assign_dir)
-        if d.startswith("cid=")
-    }
-
-    cents = spark.read.parquet(os.path.join(work, "_centroids"))
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
+    listing_before = ivf.ivf_cell_files(work)
+    probe = ivf.ivf_probe(emb, probe_id)
+    cells = ivf.ivf_route(probe, work)
 
     def _serve() -> DataFrame:
-        cands = (
-            spark.read.parquet(os.path.join(assign_dir, f"cid={pcid}"))
-            .join(ivf_tombstones(spark, work), "vec_id", "left_anti")
-            .where(F.col("vec_id") != probe_id)
-            .select("vec_id")
-            .join(emb, "vec_id")
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
-        )
-        scored = cands.crossJoin(F.broadcast(probe_vec)).select(
-            "vec_id",
-            F.round(cosine("e", "pe"), 6).alias("cosine"),
-        )
-        return scored.orderBy(F.desc("cosine"), "vec_id").limit(5)
+        ids = ivf.ivf_fetch(spark, work, cells)
+        return ivf.ivf_topk(ivf.ivf_candidates(ids, emb, probe_id), probe)
 
     before = [tuple(r) for r in _serve().collect()]  # 5 rows
-    n_reclaimed, n_cells = ivf_index_compact(spark, work)
+    n_reclaimed, n_cells = ivf.ivf_index_compact(spark, work)
     after = _serve()
     after_rows = [tuple(r) for r in after.collect()]
+    listing_after = ivf.ivf_cell_files(work)
     untouched_same = all(
-        sorted(os.listdir(os.path.join(assign_dir, d)))
-        == listing_before[d]
-        for d in listing_before
-        if int(d.split("=", 1)[1]) not in doomed_cells
+        listing_after.get(c) == files
+        for c, files in listing_before.items()
+        if c not in doomed_cells
     )
     cells_local = (
         n_reclaimed == n_del
         and n_cells == len(doomed_cells)
         and untouched_same
-        and not os.path.isdir(os.path.join(work, "_tombs"))
+        and not ivf.ivf_has_tombstones(work)
     )
     return after.select(
         "vec_id",
@@ -2792,8 +2701,6 @@ def ivf_assignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness discipline as the Lloyd oracle itself. The oracle refits
     and re-derives every distance from scratch; matching totals prove
     the persisted index's assignments are exactly the full rebuild's."""
-    import os
-
     from twitter_flink_spark.operators.clustering import assign_clusters
     from twitter_flink_spark.sources.tables import spread
 
@@ -2802,7 +2709,7 @@ def ivf_assignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = spread(emb, "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
+    cents = ivf.ivf_centroids(spark, dest)
     assigned = assign_clusters(vecs, cents, keep_dist=True)
     return (
         assigned.withColumn(
@@ -2841,27 +2748,30 @@ def _refit_vectors(emb, split: int):
 
 
 def _ensure_ivf_refit_index(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, trigger
 ) -> tuple[str, int, dict]:
-    """The refit lifecycle fixture: corpus-half fit with a `_meta`
-    baseline, DRIFTED new era streamed in against the frozen centroids
-    (`O(new)` appends), then the weekly `ivf_refit_on_drift` job run
-    twice — the first fires (measured drift far above threshold,
-    full-data refit atomically cut over), the second is a pure no-op
-    (post-refit ratio is exactly 1). The two outcomes ride the staged
-    ledger so every process replays the builder's lifecycle."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        assigned_mean_dist,
-        ivf_meta_df,
-        ivf_refit_on_drift,
-        kmeans_fit,
-    )
+    """A refit lifecycle fixture: corpus-half fit with a `_meta`
+    baseline, the DRIFTED new era streamed in against the frozen
+    centroids (`O(new)` appends), then the refit ``trigger`` run twice —
+    the first fires (drift: measured distance far above the baseline;
+    imbalance: the drifted era piles into the few cells nearest the
+    shifted cloud, spiking max-cell/mean-cell above `_IMBAL_THRESHOLD`
+    with no vector math in the trigger) and cuts the index over, the
+    second is a pure no-op on the refitted index. The two outcomes ride
+    the staged ledger so every process replays the builder's
+    lifecycle."""
     from twitter_flink_spark.sources.staging import stage_once
     from twitter_flink_spark.sources.tables import spread
 
+    # (staged tag, threshold, trigger statistic, its ledger key)
+    tag, threshold, stat, key = {
+        ivf.ivf_refit_on_drift: (
+            "ivfrefit", _REFIT_THRESHOLD, "ratio", "ratio"
+        ),
+        ivf.ivf_refit_on_imbalance: (
+            "ivfimbal", _IMBAL_THRESHOLD, "imbalance", "imb"
+        ),
+    }[trigger]
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")
@@ -2871,45 +2781,18 @@ def _ensure_ivf_refit_index(
     def _build(p: str) -> dict:
         allv = _refit_vectors(spread(emb, "vec_id"), split)
         corpus = allv.where(F.col("vec_id") <= split)
-        cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        )
-        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
-        disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
-        vc = corpus.select("vec_id", F.col("embedding").alias("e"))
-        assign_dir = os.path.join(p, "_assign")
-        assign_clusters(vc, disk_cents).write.mode(
-            "overwrite"
-        ).partitionBy("cid").parquet(assign_dir)
-        baseline = assigned_mean_dist(
-            vc, disk_cents, spark.read.parquet(assign_dir)
-        )
-        ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(p, "_meta"))
-        # the streaming path: drifted arrivals assigned to the FROZEN
-        # centroids, appended into their cell dirs
-        newv = allv.where(F.col("vec_id") > split).select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-        assign_clusters(newv, disk_cents).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
-        # the weekly job, twice: fire, then clean no-op
-        r1 = ivf_refit_on_drift(
-            spark, p, allv, threshold=_REFIT_THRESHOLD
-        )
-        r2 = ivf_refit_on_drift(
-            spark, p, allv, threshold=_REFIT_THRESHOLD
-        )
+        ivf.ivf_build(spark, p, corpus, _KM_K, _KM_ITERS, meta=True)
+        ivf.ivf_append(spark, p, allv.where(F.col("vec_id") > split))
+        r1 = trigger(spark, p, allv, threshold=threshold)
+        r2 = trigger(spark, p, allv, threshold=threshold)
         return {
             "fired1": bool(r1["fired"]),
-            "ratio1": float(r1["ratio"]),
+            f"{key}1": float(r1[stat]),
             "fired2": bool(r2["fired"]),
-            "ratio2": float(r2["ratio"]),
+            f"{key}2": float(r2[stat]),
         }
 
-    dest, meta = stage_once("ivfrefit", sf_dir, _build)
+    dest, meta = stage_once(tag, sf_dir, _build)
     return dest, split, meta
 
 
@@ -2941,119 +2824,24 @@ def ivf_index_refit_on_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutover state equals a from-scratch rebuild. At 100 TB this is the
     difference between re-fitting on a timer (wasted fits) and
     re-fitting exactly when the data moved."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
-    dest, split, led = _ensure_ivf_refit_index(spark, sf_dir)
+    dest, split, led = _ensure_ivf_refit_index(
+        spark, sf_dir, ivf.ivf_refit_on_drift
+    )
     fired_ok = bool(led["fired1"]) and led["ratio1"] > _REFIT_THRESHOLD
     clean_ok = (not led["fired2"]) and abs(led["ratio2"] - 1.0) < 1e-9
     emb = load_table(spark, sf_dir, "embeddings")
-    allv = _refit_vectors(emb, split)
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    probe = allv.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").alias("e")
-    )
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    cands = (
-        spark.read.parquet(os.path.join(dest, "_assign", f"cid={pcid}"))
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(allv, "vec_id")
-        .select("vec_id", F.col("embedding").alias("e"))
-    )
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+    return ivf.ivf_search(dest, _refit_vectors(emb, split), probe_id).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
-    )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(bool(fired_ok)).alias("refit_fired"),
-            F.lit(bool(clean_ok)).alias("refit_clean"),
-        )
+        "cosine",
+        F.lit(bool(fired_ok)).alias("refit_fired"),
+        F.lit(bool(clean_ok)).alias("refit_clean"),
     )
 
 
 _IMBAL_THRESHOLD = 2.25  #: refit when max-cell/mean-cell exceeds this
 #: measured margins (deterministic data): pre-refit imbalance 2.48-2.62
 #: across sf0.001/0.01/0.1, post-refit exactly 2.0 — >= 0.22 on each side
-
-
-def _ensure_ivf_imbal_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, int, dict]:
-    """The imbalance-refit lifecycle fixture — `_ensure_ivf_refit_index`'s
-    skew-triggered twin: corpus-half fit, the DRIFTED new era streamed
-    in against frozen centroids (it piles into the few cells nearest
-    the shifted cloud, spiking max-cell/mean-cell well above
-    `_IMBAL_THRESHOLD`), then `ivf_refit_on_imbalance` run twice — the
-    first fires on the occupancy statistic alone (no vector math in
-    the trigger), the second is a pure no-op on the rebalanced index."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        assigned_mean_dist,
-        ivf_meta_df,
-        ivf_refit_on_imbalance,
-        kmeans_fit,
-    )
-    from twitter_flink_spark.sources.staging import stage_once
-    from twitter_flink_spark.sources.tables import spread
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.agg(
-        F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")
-    ).first()
-    split = (int(b["mn"]) + int(b["mx"])) // 2
-
-    def _build(p: str) -> dict:
-        allv = _refit_vectors(spread(emb, "vec_id"), split)
-        corpus = allv.where(F.col("vec_id") <= split)
-        cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        )
-        cents.write.mode("overwrite").parquet(os.path.join(p, "_centroids"))
-        disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
-        vc = corpus.select("vec_id", F.col("embedding").alias("e"))
-        assign_dir = os.path.join(p, "_assign")
-        assign_clusters(vc, disk_cents).write.mode(
-            "overwrite"
-        ).partitionBy("cid").parquet(assign_dir)
-        baseline = assigned_mean_dist(
-            vc, disk_cents, spark.read.parquet(assign_dir)
-        )
-        ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(p, "_meta"))
-        newv = allv.where(F.col("vec_id") > split).select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-        assign_clusters(newv, disk_cents).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
-        # the maintenance job, twice: fire on skew, then clean no-op
-        r1 = ivf_refit_on_imbalance(
-            spark, p, allv, threshold=_IMBAL_THRESHOLD
-        )
-        r2 = ivf_refit_on_imbalance(
-            spark, p, allv, threshold=_IMBAL_THRESHOLD
-        )
-        return {
-            "fired1": bool(r1["fired"]),
-            "imb1": float(r1["imbalance"]),
-            "fired2": bool(r2["fired"]),
-            "imb2": float(r2["imbalance"]),
-        }
-
-    dest, meta = stage_once("ivfimbal", sf_dir, _build)
-    return dest, split, meta
 
 
 @register(
@@ -3086,11 +2874,9 @@ def ivf_index_refit_on_imbalance(
     catches the data moving away from the centroids, imbalance catches
     the centroids failing to SPLIT the data — a hot cell inflates every
     probe that routes to it even when distances still look fine."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
-    dest, split, led = _ensure_ivf_imbal_index(spark, sf_dir)
+    dest, split, led = _ensure_ivf_refit_index(
+        spark, sf_dir, ivf.ivf_refit_on_imbalance
+    )
     fired_ok = bool(led["fired1"]) and led["imb1"] > _IMBAL_THRESHOLD
     noop_ok = (
         (not led["fired2"])
@@ -3098,34 +2884,12 @@ def ivf_index_refit_on_imbalance(
         and led["imb2"] < led["imb1"]
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    allv = _refit_vectors(emb, split)
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    probe = allv.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").alias("e")
-    )
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    cands = (
-        spark.read.parquet(os.path.join(dest, "_assign", f"cid={pcid}"))
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(allv, "vec_id")
-        .select("vec_id", F.col("embedding").alias("e"))
-    )
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+    return ivf.ivf_search(dest, _refit_vectors(emb, split), probe_id).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
-    )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(bool(fired_ok)).alias("refit_fired"),
-            F.lit(bool(noop_ok)).alias("refit_noop_second"),
-        )
+        "cosine",
+        F.lit(bool(fired_ok)).alias("refit_fired"),
+        F.lit(bool(noop_ok)).alias("refit_noop_second"),
     )
 
 
@@ -3150,51 +2914,13 @@ def ivf_inverted_nprobe_serving(
     probe cell the same (dist, cid)-ranked way over the
     from-scratch-refit centroids, so a hash match proves routing,
     layout, and scoring all agree with the full rebuild."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
-    dest, split, (n0, n1, n2) = _ensure_ivf_inc_index(spark, sf_dir)
+    dest, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cells = [
-        int(r["cid"])
-        for r in assign_clusters(probe, cents, top_n=2).collect()
-    ]  # 2-row collect: the probed cell ids
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    # empty cells were never written as cid dirs — skip, don't raise
-    dirs = [
-        p
-        for p in (os.path.join(dest, "_assign", f"cid={c}") for c in cells)
-        if os.path.isdir(p)
-    ]
-    cands = (
-        spark.read.parquet(
-            *dirs
-        )  # exactly the non-empty probed inverted-list dirs
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(emb, "vec_id")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+    return ivf.ivf_search(dest, emb, probe_id, nprobe=2).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
-    )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(2).cast("int").alias("n_cells_probed"),
-        )
+        "cosine",
+        F.lit(2).cast("int").alias("n_cells_probed"),
     )
 
 
@@ -3228,59 +2954,18 @@ def ivf_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering, and scoring all agree with a full rebuild.
     `filter_as_residual` pins that every returned row actually carries
     the probe's label while the on-disk index stayed label-agnostic."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
-    dest, split, _led = _ensure_ivf_inc_index(spark, sf_dir)
+    dest, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    prow = (
-        emb.where(F.col("vec_id") == probe_id)
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("e"),
-            "label",
-        )
-        .first()
-    )  # 1-row: probe vector + its label (the filter literal)
-    probe = local_frame(
-        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
-    )
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    cells = [
-        int(r["cid"])
-        for r in assign_clusters(probe, cents, top_n=2).collect()
-    ]  # 2-row collect: over-fetch cells for the filtered search
-    dirs = [
-        p
-        for p in (os.path.join(dest, "_assign", f"cid={c}") for c in cells)
-        if os.path.isdir(p)
-    ]
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    cands = (
-        spark.read.parquet(*dirs)
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(emb, "vec_id")
-        .where(F.col("label") == F.lit(prow["label"]))  # the residual
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+    label = emb.where(F.col("vec_id") == probe_id).first()["label"]
+    residual = F.col("label") == F.lit(label)
+    return ivf.ivf_search(
+        dest, emb, probe_id, nprobe=2, where=residual
+    ).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
-    )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(True).alias("filter_as_residual"),
-            F.lit(2).cast("int").alias("n_cells_probed"),
-        )
+        "cosine",
+        F.lit(True).alias("filter_as_residual"),
+        F.lit(2).cast("int").alias("n_cells_probed"),
     )
 
 
@@ -3318,91 +3003,43 @@ def ivf_filtered_ann_escalating(
     stopping rule, filtering, and scoring all agree with a full
     rebuild. `n_cells_probed` returns the escalated count — the
     observable the serving dashboard would alert on."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
-    dest, split, _led = _ensure_ivf_inc_index(spark, sf_dir)
+    dest, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    prow = (
-        emb.where(F.col("vec_id") == probe_id)
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("e"),
-            "label",
-        )
-        .first()
-    )  # 1-row: probe vector + its label (the filter literal)
-    probe = local_frame(
-        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
-    )
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
-    n_cells = cents.count()  # tiny: the codebook
-    ranked = assign_clusters(
-        probe, cents, top_n=n_cells, keep_dist=True
-    ).collect()  # k rows: every cell, distance-ranked below
-    order = [
-        int(r["cid"])
-        for r in sorted(ranked, key=lambda r: (r["dist"], r["cid"]))
-    ]
-    residual = (F.col("label") == F.lit(prow["label"])) & (
+    label = emb.where(F.col("vec_id") == probe_id).first()["label"]
+    residual = (F.col("label") == F.lit(label)) & (
         F.col("vec_id") % 7 == F.lit(probe_id % 7)
     )
+    probe = ivf.ivf_probe(emb, probe_id)
+    order = ivf.ivf_route(probe, dest, nprobe=None)  # every cell, ranked
 
-    def _cands(cids: list[int]) -> DataFrame | None:
-        dirs = [
-            p
-            for p in (
-                os.path.join(dest, "_assign", f"cid={c}") for c in cids
-            )
-            if os.path.isdir(p)  # empty cells never wrote a dir
-        ]
-        if not dirs:
-            return None
-        return (
-            spark.read.parquet(*dirs)
-            .where(F.col("vec_id") != probe_id)
-            .select("vec_id")
-            .join(emb, "vec_id")
-            .where(residual)
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
-        )
+    def _cands(cids: list[int]) -> DataFrame:
+        ids = ivf.ivf_fetch(spark, dest, cids)
+        return ivf.ivf_candidates(ids, emb, probe_id, where=residual)
 
     # escalate with a RUNNING count: each step opens and counts ONLY the
     # newly added cell dir (a prefix re-count would make escalation
     # O(nprobe^2) reads); the chosen prefix is then read once, lazily,
     # for the final scoring pass — every cell dir is touched at most
     # twice total (once counted, once scored), independent of nprobe
-    def _count_cell(cid: int) -> int:
-        one = _cands([cid])
-        return one.count() if one is not None else 0
-
     nprobe = 1
-    n_match = _count_cell(order[0]) if order else 0
+    n_match = _cands(order[:1]).count()
     while n_match < 5 and nprobe < len(order):
         nprobe += 1  # one more cell dir, never a rescan of rejects
-        n_match += _count_cell(order[nprobe - 1])
-    cands = _cands(order[:nprobe])
-    if cands is None:
-        cands = local_frame(spark, [], "vec_id long, e array<double>")
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    scored = cands.crossJoin(F.broadcast(probe_vec)).select(
+        n_match += _cands([order[nprobe - 1]]).count()
+    return ivf.ivf_topk(_cands(order[:nprobe]), probe).select(
         "vec_id",
-        F.round(cosine("e", "pe"), 6).alias("cosine"),
+        "cosine",
+        F.lit(int(nprobe)).cast("int").alias("n_cells_probed"),
+        F.lit(True).alias("filter_as_residual"),
     )
-    return (
-        scored.orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(int(nprobe)).cast("int").alias("n_cells_probed"),
-            F.lit(True).alias("filter_as_residual"),
-        )
+
+
+def _brute_candidates(emb: DataFrame, probe_id: int) -> DataFrame:
+    """(vec_id, e) of every vector but the probe: the exhaustive
+    baseline the IVF recall measurements score against."""
+    return emb.where(F.col("vec_id") != probe_id).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
 
 
@@ -3488,68 +3125,23 @@ def ann_recall_curve_ivf_inverted(
     the candidate generation and scoring stay distributed and read
     exactly nprobe cid=<cell> dirs each. At 100 TB this is the query
     you run after every refit to choose nprobe from data, not faith."""
-    import os
     from decimal import Decimal
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
 
     dest, _split, _counts = _ensure_ivf_inc_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    probe_vec = probe.select(F.col("e").alias("pe"))
+    probe = ivf.ivf_probe(emb, probe_id)
 
-    def topk(cands: DataFrame) -> list:
-        scored = cands.crossJoin(F.broadcast(probe_vec)).select(
-            "vec_id",
-            F.round(cosine("e", "pe"), 6).alias("cosine"),
-        )
-        rows = scored.orderBy(F.desc("cosine"), "vec_id").limit(5)
+    def ranks(top: DataFrame) -> list:
         return [
             (r["vec_id"], i + 1)  # k=5 rows: bounded driver read
-            for i, r in enumerate(rows.collect())
+            for i, r in enumerate(top.collect())
         ]
-
-    brute = topk(
-        emb.where(F.col("vec_id") != probe_id).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
 
     def serve(nprobe: int) -> list:
-        cells = [
-            int(r["cid"])
-            for r in assign_clusters(
-                probe, cents, top_n=nprobe
-            ).collect()  # nprobe rows: the probed cell ids
-        ]
-        # A centroid with zero assigned vectors has no cid=<c> dir
-        # (dynamic-partition writes emit only non-empty cells); probing
-        # it is a no-op, not an error — skip missing dirs.
-        dirs = [
-            p
-            for p in (
-                os.path.join(dest, "_assign", f"cid={c}") for c in cells
-            )
-            if os.path.isdir(p)
-        ]
-        cands = (
-            spark.read.parquet(
-                *dirs
-            )  # exactly the non-empty probed inverted-list dirs
-            .where(F.col("vec_id") != probe_id)
-            .select("vec_id")
-            .join(emb, "vec_id")
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
-        )
-        return topk(cands)
+        return ranks(ivf.ivf_search(dest, emb, probe_id, nprobe=nprobe))
 
+    brute = ranks(ivf.ivf_topk(_brute_candidates(emb, probe_id), probe))
     bmap = dict(brute)
     cw = _rbo_tail_weights()
     metrics: dict[int, tuple[int, Decimal]] = {}
@@ -3876,66 +3468,20 @@ def ivf_nprobe_autoselect(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one extra brute pass over the index corpus (the price of a
     measured knob; amortized over every query served at the chosen
     depth until the next refit)."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import assign_clusters
-
     target = 0.8
     dest, _split, _counts = _ensure_ivf_inc_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     probe_id = int(emb.agg(F.max("vec_id")).first()[0])
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    probe_vec = probe.select(F.col("e").alias("pe"))
-
-    def scored_topk(cands: DataFrame) -> DataFrame:
-        return (
-            cands.crossJoin(F.broadcast(probe_vec))
-            .select(
-                "vec_id",
-                F.round(cosine("e", "pe"), 6).alias("cosine"),
-            )
-            .orderBy(F.desc("cosine"), "vec_id")
-            .limit(5)
-        )
-
+    probe = ivf.ivf_probe(emb, probe_id)
     brute_ids = {
         r["vec_id"]
-        for r in scored_topk(
-            emb.where(F.col("vec_id") != probe_id).select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
+        for r in ivf.ivf_topk(
+            _brute_candidates(emb, probe_id), probe
         ).collect()  # k=5 rows
     }
-    cents = spark.read.parquet(os.path.join(dest, "_centroids"))
 
     def serve(nprobe: int) -> DataFrame:
-        cells = [
-            int(r["cid"])
-            for r in assign_clusters(
-                probe, cents, top_n=nprobe
-            ).collect()  # nprobe rows
-        ]
-        # Empty cells were never written as cid dirs — skip, don't raise.
-        dirs = [
-            p
-            for p in (
-                os.path.join(dest, "_assign", f"cid={c}") for c in cells
-            )
-            if os.path.isdir(p)
-        ]
-        return scored_topk(
-            spark.read.parquet(*dirs)
-            .where(F.col("vec_id") != probe_id)
-            .select("vec_id")
-            .join(emb, "vec_id")
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
-        )
+        return ivf.ivf_search(dest, emb, probe_id, nprobe=nprobe)
 
     hits1 = sum(
         1 for r in serve(1).collect() if r["vec_id"] in brute_ids
@@ -4140,14 +3686,8 @@ def ivf_cell_balance_report(
     per ingest. Oracle recomputes occupancy from the from-scratch refit
     chain — a hash match proves the incremental index's cells are the
     rebuild's cells, occupancy included."""
-    import os
-
     dest, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
-    counts = (
-        spark.read.parquet(os.path.join(dest, "_assign"))
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
-    )
+    counts = ivf.ivf_cell_counts(spark, dest)
     t = counts.agg(
         F.sum("n_vecs").alias("n"),
         F.count(F.lit(1)).alias("k"),

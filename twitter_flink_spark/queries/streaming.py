@@ -2434,16 +2434,7 @@ def streaming_ivf_assign_maintenance(
     the weekly job, the assignment stream is O(arrivals/batch), and the
     inverted-list append touches k dirs at most — no maintenance step
     ever scales with the table."""
-    import os
-
-    from pyspark.sql.types import StructField, StructType
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        kmeans_fit,
-    )
-    from twitter_flink_spark.commit import has_parquet, observed_count
-    from twitter_flink_spark.operators.similarity import cosine
+    from twitter_flink_spark.operators import ivf
     from twitter_flink_spark.queries.similarity import _KM_ITERS, _KM_K
     from twitter_flink_spark.sources.tables import load_table, spread
 
@@ -2453,45 +2444,16 @@ def streaming_ivf_assign_maintenance(
     b = _stage_vecid_split_embeddings(spark, sf_dir)[1]
     split = (b["mn"] + b["mx"]) // 2
     emb = load_table(spark, sf_dir, "embeddings")
-    # every artifact below is written here, so every read passes its
-    # known schema: a schema-less read is one footer-inference job
-    ids = StructType([StructField("vec_id", emb.schema["vec_id"].dataType)])
 
     # the offline fit: corpus half, frozen to disk before the stream
     work = scratch_dir("ivfstream")
     corpus = spread(emb, "vec_id").where(F.col("vec_id") <= split)
-    fit = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select("cid", "cent")
-    fit.write.mode("overwrite").parquet(os.path.join(work, "_centroids"))
-    cents = spark.read.schema(fit.schema).parquet(
-        os.path.join(work, "_centroids")
-    )
-    assign_dir = os.path.join(work, "_assign")
+    ivf.ivf_build(spark, work, corpus, _KM_K, _KM_ITERS, assign=False)
 
     ledger: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        vecs = batch_df.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("e"),
-        )
-        if has_parquet(assign_dir):  # a zero-row batch leaves _SUCCESS
-            known = spark.read.schema(ids).parquet(assign_dir).select(
-                "vec_id"
-            )
-            vecs = vecs.join(known, "vec_id", "left_anti")
-        fresh = assign_clusters(vecs, cents)
-        # the freshly-indexed count is OBSERVED during the append write:
-        # one job per micro-batch, and the window assignment evaluates
-        # ONCE (the previous count-then-write ran it twice — half the
-        # r15 regression on this query). A redelivered batch evaluates
-        # to zero rows and appends no files: still a pure no-op.
-        obs = Observation()
-        fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
-        ledger.append(observed_count(obs))
+        ledger.append(ivf.ivf_append(spark, work, batch_df))
 
     q = (
         spark.readStream.schema(emb.schema)
@@ -2515,38 +2477,11 @@ def streaming_ivf_assign_maintenance(
     # redeliver the whole table: the anti-join must make it a no-op
     sink(emb, batch_id=-1)
     redelivery_noop = ledger[-1] == 0
-
-    probe_id = b["mx"]
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
-    cands = (
-        spark.read.schema(ids)
-        .parquet(os.path.join(assign_dir, f"cid={pcid}"))
-        .where(F.col("vec_id") != probe_id)
-        .select("vec_id")
-        .join(emb, "vec_id")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("e"),
-        )
-    )
-    return (
-        cands.crossJoin(F.broadcast(probe_vec))
-        .select(
-            "vec_id",
-            F.round(cosine("e", "pe"), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select(
-            "vec_id",
-            "cosine",
-            F.lit(bool(streamed_ok)).alias("streamed_in_batches"),
-            F.lit(bool(redelivery_noop)).alias("redelivery_noop"),
-        )
+    return ivf.ivf_search(work, emb, b["mx"]).select(
+        "vec_id",
+        "cosine",
+        F.lit(bool(streamed_ok)).alias("streamed_in_batches"),
+        F.lit(bool(redelivery_noop)).alias("redelivery_noop"),
     )
 
 
@@ -3190,26 +3125,19 @@ def streaming_ivf_delete_maintenance(
     import os
     import shutil
 
-    from twitter_flink_spark.operators.clustering import assign_clusters
-    from twitter_flink_spark.operators.ivf import (
-        ivf_index_compact,
-        ivf_index_delete,
-        ivf_tombstones,
-    )
-    from twitter_flink_spark.operators.similarity import cosine
+    from twitter_flink_spark.operators import ivf
     from twitter_flink_spark.queries.similarity import _ensure_ivf_inc_index
     from twitter_flink_spark.sources.tables import load_table
 
     staged_idx, _split, _led = _ensure_ivf_inc_index(spark, sf_dir)
     work = os.path.join(scratch_dir("ivfdelstream"), "index")
     shutil.copytree(os.path.realpath(staged_idx), work)
-    assign_dir = os.path.join(work, "_assign")
 
     staged, schema = _stage_vec_delete_stream(spark, sf_dir)
     ledger: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
-        ledger.append(ivf_index_delete(spark, batch_df, work))
+        ledger.append(ivf.ivf_index_delete(spark, batch_df, work))
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -3226,39 +3154,17 @@ def streaming_ivf_delete_maintenance(
     doomed = emb.where(
         (F.col("vec_id") % 9 == 3) & (F.col("vec_id") != probe_id)
     ).select("vec_id")
-    redelivery_noop = ivf_index_delete(spark, doomed, work) == 0
+    redelivery_noop = ivf.ivf_index_delete(spark, doomed, work) == 0
 
-    cents = spark.read.parquet(os.path.join(work, "_centroids"))
-    probe = emb.where(F.col("vec_id") == probe_id).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    pcid = int(assign_clusters(probe, cents).first()["cid"])
-    probe_vec = probe.select(F.col("e").alias("pe"))
+    probe = ivf.ivf_probe(emb, probe_id)
+    cells = ivf.ivf_route(probe, work)
 
     def _serve() -> DataFrame:
-        cands = (
-            spark.read.parquet(os.path.join(assign_dir, f"cid={pcid}"))
-            .join(ivf_tombstones(spark, work), "vec_id", "left_anti")
-            .where(F.col("vec_id") != probe_id)
-            .select("vec_id")
-            .join(emb, "vec_id")
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("e"),
-            )
-        )
-        return (
-            cands.crossJoin(F.broadcast(probe_vec))
-            .select(
-                "vec_id",
-                F.round(cosine("e", "pe"), 6).alias("cosine"),
-            )
-            .orderBy(F.desc("cosine"), "vec_id")
-            .limit(5)
-        )
+        ids = ivf.ivf_fetch(spark, work, cells)
+        return ivf.ivf_topk(ivf.ivf_candidates(ids, emb, probe_id), probe)
 
     before = [tuple(r) for r in _serve().collect()]  # 5 rows
-    n_reclaimed, _cells = ivf_index_compact(spark, work)
+    n_reclaimed, _cells = ivf.ivf_index_compact(spark, work)
     after = _serve()
     compact_ok = n_reclaimed == sum(ledger) and [
         tuple(r) for r in after.collect()

@@ -577,9 +577,11 @@ class TopNFeedback:
         await_or_raise(q, timeout_s)
         import os
 
-        if os.path.isdir(self._out_dir):
-            return self.spark.read.parquet(self._out_dir)
+        # the batches wrote exactly these columns: read them back with
+        # their schema, not with a footer-inference job
         schema = src.select(*self._out_cols()).schema
+        if os.path.isdir(self._out_dir):
+            return self.spark.read.schema(schema).parquet(self._out_dir)
         return local_frame(self.spark, [], schema)
 
 
