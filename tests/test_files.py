@@ -570,10 +570,11 @@ def test_two_level_update_crash_between_renames_recovers(
         """Parent and shard rows; file names are per-write unique, so
         the shards compare without them."""
         def rows(p):
-            df = spark.read.parquet(os.path.join(root, p))
+            df = spark.read.parquet(p)
             return sorted(tuple(r) for r in df.drop("file").collect())
 
-        return rows(skipping.ROOT_MANIFEST), rows(skipping.PARTS_DIR)
+        parts, parent = skipping.two_level_columns(root)["ts"]
+        return rows(parent), rows(parts)
 
     clean = fresh("clean")
     counting = CrashAfter(1 << 30)
@@ -595,6 +596,124 @@ def test_two_level_update_crash_between_renames_recovers(
         assert skipping.update_two_level(spark, root, "ts") == 0
         assert state(root) == want, k
         assert skipping.update_two_level(spark, root, "ts") == 0
+
+
+def test_two_level_vacuum_crash_inside_shard_rewrite_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `vacuum_two_level` inside its first shard rewrite, between
+    moving the Spark-written ``part=<p>`` dir aside and the pointer
+    rename: the shard dir is missing while the parent still lists it.
+    A re-run puts the aside back before it lists the shards and leaves
+    the parent, the shards and the selection of an uninterrupted
+    vacuum."""
+    import datetime
+
+    import pytest
+    from crash import CrashAfter
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators import skipping
+
+    base = datetime.datetime(2024, 1, 1)
+    lo = base + datetime.timedelta(hours=10)
+    hi = base + datetime.timedelta(hours=90)
+
+    def fresh(name: str) -> str:
+        root = str(tmp_path / name)
+        spark.createDataFrame(
+            [
+                (base + datetime.timedelta(hours=h), float(h))
+                for h in range(96)
+            ],
+            "ts timestamp, value double",
+        ).repartitionByRange(8, "ts").write.parquet(root)
+        skipping.build_two_level(spark, root, "ts", n_parts=4)
+        files = sorted(f for f in os.listdir(root) if f.endswith(".parquet"))
+        for f in (files[0], files[-1]):  # the first and the last shard
+            os.remove(os.path.join(root, f))
+        return root
+
+    def state(root: str):
+        parts, parent = skipping.two_level_columns(root)["ts"]
+        df, fr, ft, pr, pt = skipping.read_between_two_level(
+            spark, root, "ts", lo, hi
+        )
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(parent).collect()),
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(parts).drop("file").collect()
+            ),
+            (df.count(), fr, ft, pr, pt),
+        )
+
+    clean = fresh("clean")
+    assert skipping.vacuum_two_level(spark, clean, "ts") == 2
+    want = state(clean)
+
+    root = fresh("crash")
+    parts = skipping.two_level_columns(root)["ts"][0]
+    # renames of the first shard swap: staged dir -> generation, the
+    # real dir -> its aside, then the pointer; crash at the pointer
+    monkeypatch.setattr(commit, "os", CrashAfter(2))
+    with pytest.raises(OSError, match="injected crash"):
+        skipping.vacuum_two_level(spark, root, "ts")
+    monkeypatch.setattr(commit, "os", os)
+    assert not os.path.isdir(os.path.join(parts, "part=0"))
+    skipping.vacuum_two_level(spark, root, "ts")
+    assert state(root) == want
+    assert skipping.vacuum_two_level(spark, root, "ts") == 0
+
+
+def test_swap_table_dir_crash_keeps_carried_manifests(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `commit.swap_table_dir` at each of its renames with a
+    non-empty carry, then sweep the table's scratch: the table dir
+    exists, holds the old or the new table, and every carried manifest
+    reads its committed rows."""
+    import pytest
+    from crash import CrashAfter
+
+    from twitter_flink_spark import commit
+
+    def fresh(name: str) -> tuple[str, str]:
+        dest, tmp = str(tmp_path / name), str(tmp_path / f"{name}.new")
+        spark.range(10).write.parquet(dest)
+        commit.commit_swap(spark.range(3), os.path.join(dest, "_idx"))
+        spark.range(10, 20).write.parquet(tmp)
+        return dest, tmp
+
+    def state(dest: str):
+        return (
+            sorted(r["id"] for r in spark.read.parquet(dest).collect()),
+            sorted(
+                r["id"]
+                for r in spark.read.parquet(
+                    os.path.join(dest, "_idx")
+                ).collect()
+            ),
+        )
+
+    old, new = (list(range(10)), [0, 1, 2]), (list(range(10, 20)), [0, 1, 2])
+    dest, tmp = fresh("clean")
+    counting = CrashAfter(1 << 30)
+    monkeypatch.setattr(commit, "os", counting)
+    commit.swap_table_dir(tmp, dest, ["_idx"])
+    monkeypatch.setattr(commit, "os", os)
+    assert state(dest) == new
+    n_all = len(counting.moved)
+    assert n_all >= 2
+
+    for k in range(n_all):
+        dest, tmp = fresh(f"crash-{k}")
+        monkeypatch.setattr(commit, "os", CrashAfter(k))
+        with pytest.raises(OSError, match="injected crash"):
+            commit.swap_table_dir(tmp, dest, ["_idx"])
+        monkeypatch.setattr(commit, "os", os)
+        commit.sweep_scratch(dest)
+        assert state(dest) in (old, new), k
 
 
 def test_two_level_incremental_update(spark, tmp_path):
@@ -620,7 +739,7 @@ def test_two_level_incremental_update(spark, tmp_path):
         "overwrite"
     ).parquet(root)
     skipping.build_two_level(spark, root, "ts", n_parts=4)
-    parts = os.path.join(root, skipping.PARTS_DIR)
+    parts = skipping.two_level_columns(root)["ts"][0]
     shard_files_before = {
         p: set(spark.read.parquet(os.path.join(parts, p)).inputFiles())
         for p in os.listdir(parts)
@@ -648,7 +767,7 @@ def test_two_level_incremental_update(spark, tmp_path):
     assert changed == ["part=3"]
 
     parent = spark.read.parquet(
-        os.path.join(root, skipping.ROOT_MANIFEST)
+        skipping.two_level_columns(root)["ts"][1]
     ).collect()
     assert sum(r["n_files"] for r in parent) == 10
     edge = next(r for r in parent if r["part"] == 3)
@@ -665,7 +784,7 @@ def test_two_level_incremental_update(spark, tmp_path):
 
 
 def test_norm_path_agrees_with_sql_on_authority_uris(spark):
-    """Reconciliation joins normalize the Python side with `_norm_path`
+    """Reconciliation joins normalize the Python side with `norm_path`
     and the SQL side with `_norm_sql`; the two MUST agree on every URI
     shape — authority-bearing (s3a/hdfs/abfs), file:/ vs file:///, and
     bare paths — or vacuum silently drops live manifest rows wholesale
@@ -673,7 +792,7 @@ def test_norm_path_agrees_with_sql_on_authority_uris(spark):
     regex kept it, so on s3a NOTHING matched)."""
     from pyspark.sql import functions as F
 
-    from twitter_flink_spark.operators.skipping import _norm_path, _norm_sql
+    from twitter_flink_spark.operators.skipping import _norm_sql, norm_path
 
     uris = [
         "s3a://bucket/warehouse/part-0.parquet",
@@ -689,13 +808,13 @@ def test_norm_path_agrees_with_sql_on_authority_uris(spark):
         .select(_norm_sql("file").alias("n"))
         .collect()
     ]
-    assert sql_side == [_norm_path(u) for u in uris]
+    assert sql_side == [norm_path(u) for u in uris]
     # authority is KEPT (two buckets' same-keyed files must not collide)
-    assert _norm_path("s3a://bucket-a/k.parquet") != _norm_path(
+    assert norm_path("s3a://bucket-a/k.parquet") != norm_path(
         "s3a://bucket-b/k.parquet"
     )
     # the file:/ vs file:/// renderings of one local path agree
-    assert _norm_path(uris[3]) == _norm_path(uris[4]) == uris[5]
+    assert norm_path(uris[3]) == norm_path(uris[4]) == uris[5]
 
 
 def test_keep_live_reconciles_authority_uris(spark):
@@ -778,7 +897,7 @@ def test_two_level_vacuum_rewrites_only_touched_shards(spark, tmp_path):
     skipping.build_two_level(spark, root, "ts", n_parts=4)
     assert skipping.vacuum_two_level(spark, root, "ts") == 0  # all live
 
-    parts = os.path.join(root, skipping.PARTS_DIR)
+    parts = skipping.two_level_columns(root)["ts"][0]
     shard_files_before = {
         p: set(spark.read.parquet(os.path.join(parts, p)).inputFiles())
         for p in os.listdir(parts)
@@ -792,10 +911,10 @@ def test_two_level_vacuum_rewrites_only_touched_shards(spark, tmp_path):
     )
     victim_row = manifest.where(
         skipping._norm_sql("file")
-        == skipping._norm_path(victim)
+        == skipping.norm_path(victim)
     ).first()
     victim_part = victim_row["part"]
-    os.remove(skipping._norm_path(victim))
+    os.remove(skipping.norm_path(victim))
 
     assert skipping.vacuum_two_level(spark, root, "ts") == 1
     assert skipping.vacuum_two_level(spark, root, "ts") == 0  # idempotent
@@ -808,7 +927,7 @@ def test_two_level_vacuum_rewrites_only_touched_shards(spark, tmp_path):
             assert now == before  # byte-identical
 
     parent = spark.read.parquet(
-        os.path.join(root, skipping.ROOT_MANIFEST)
+        skipping.two_level_columns(root)["ts"][1]
     ).collect()
     live = len(spark.read.parquet(root).inputFiles())
     assert sum(r["n_files"] for r in parent) == live == 7
@@ -847,9 +966,9 @@ def test_two_level_vacuum_fully_dead_shard(spark, tmp_path):
     ).parquet(root)
     skipping.build_two_level(spark, root, "ts", n_parts=4)
 
-    parts = os.path.join(root, skipping.PARTS_DIR)
+    parts = skipping.two_level_columns(root)["ts"][0]
     shard0 = spark.read.parquet(os.path.join(parts, "part=0"))
-    dead = [skipping._norm_path(r["file"]) for r in shard0.collect()]
+    dead = [skipping.norm_path(r["file"]) for r in shard0.collect()]
     n_dead = len(dead)
     assert n_dead >= 2
     for f in dead:
@@ -857,7 +976,7 @@ def test_two_level_vacuum_fully_dead_shard(spark, tmp_path):
 
     assert skipping.vacuum_two_level(spark, root, "ts") == n_dead
     parent = spark.read.parquet(
-        os.path.join(root, skipping.ROOT_MANIFEST)
+        skipping.two_level_columns(root)["ts"][1]
     ).collect()
     assert all(r["part"] != 0 for r in parent)
     assert sum(r["n_files"] for r in parent) == len(
@@ -916,19 +1035,19 @@ def test_update_two_level_repairs_crashed_parent(spark, tmp_path):
 
     # ...and the updating run CRASHES after the shard append, before the
     # parent swap: replay exactly the pre-commit half of update_two_level
-    parent_path = os.path.join(root, skipping.ROOT_MANIFEST)
-    parts_path = os.path.join(root, skipping.PARTS_DIR)
+    parent_path = skipping.two_level_columns(root)["ts"][1]
+    parts_path = skipping.two_level_columns(root)["ts"][0]
     meta = spark.read.parquet(parent_path).select(
         "bucket_lo", "bucket_hi", "n_parts"
     ).first()
     known = {
-        skipping._norm_path(r["file"])
+        skipping.norm_path(r["file"])
         for r in spark.read.parquet(parts_path).select("file").collect()
     }
     new = [
         f
         for f in spark.read.parquet(root).inputFiles()
-        if skipping._norm_path(f) not in known
+        if skipping.norm_path(f) not in known
     ]
     assert len(new) == 2
     fresh = skipping._file_stats(spark.read.parquet(*new), ["ts"]).withColumn(
@@ -1064,7 +1183,7 @@ def test_bloom_two_level_incremental_update_and_vacuum(spark, tmp_path):
     assert ft2 == 7 and [r["key"] for r in hit2.collect()] == [key]
 
 
-def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
+def test_flat_index_auto_cutover_to_two_level(spark, tmp_path, monkeypatch):
     """A flat index grown past the file-count threshold must upgrade to
     the two-level manifest on `update` (and `build` above threshold must
     go two-level directly), after which the SAME flat entry points
@@ -1075,6 +1194,8 @@ def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
 
     from twitter_flink_spark.operators import skipping
 
+    monkeypatch.setattr(skipping, "AUTO_TWO_LEVEL_FILES", 4)
+
     root = str(tmp_path / "tbl")
     base = datetime.datetime(2024, 1, 1)
     spark.createDataFrame(
@@ -1083,7 +1204,7 @@ def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
     ).repartitionByRange(2, "ts").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(root)
-    skipping.build(spark, root, ["ts"], two_level_threshold=4)
+    skipping.build(spark, root, ["ts"])
     assert os.path.isdir(os.path.join(root, skipping.STATS_DIR))  # flat
 
     # growth: 6 more files pushes past the threshold; update upgrades
@@ -1096,9 +1217,9 @@ def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
     ).repartitionByRange(6, "ts").sortWithinPartitions("ts").write.mode(
         "append"
     ).parquet(root)
-    assert skipping.update(spark, root, ["ts"], two_level_threshold=4) == 6
+    assert skipping.update(spark, root, ["ts"]) == 6
     assert not os.path.isdir(os.path.join(root, skipping.STATS_DIR))
-    assert os.path.isdir(os.path.join(root, skipping.ROOT_MANIFEST))
+    assert os.path.isdir(skipping.two_level_columns(root)["ts"][1])
     assert skipping.stale_file_count(spark, root) == 0
 
     # the flat entry points now consult the shards transparently
@@ -1120,7 +1241,7 @@ def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
         "ts timestamp, value double",
     ).repartitionByRange(2, "ts").write.mode("append").parquet(root)
     assert skipping.stale_file_count(spark, root) == 2
-    assert skipping.update(spark, root, ["ts"], two_level_threshold=4) == 2
+    assert skipping.update(spark, root, ["ts"]) == 2
     assert skipping.stale_file_count(spark, root) == 0
     df2, fr2, ft3 = skipping.read_between(
         spark,
@@ -1139,9 +1260,9 @@ def test_flat_index_auto_cutover_to_two_level(spark, tmp_path):
     ).repartitionByRange(8, "ts").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(root2)
-    skipping.build(spark, root2, ["ts"], two_level_threshold=4)
+    skipping.build(spark, root2, ["ts"])
     assert not os.path.isdir(os.path.join(root2, skipping.STATS_DIR))
-    assert os.path.isdir(os.path.join(root2, skipping.ROOT_MANIFEST))
+    assert os.path.isdir(skipping.two_level_columns(root2)["ts"][1])
     df3, fr3, ft4 = skipping.read_between(spark, root2, "ts", lo, hi)
     assert ft4 == 8 and 0 < fr3 < ft4 and df3.count() == 20
 
@@ -1253,7 +1374,7 @@ def test_two_level_metadata_minmax_exact(spark, tmp_path):
     assert mn3 is None and mx3 is None and s3 == 0 and pr3 == 0
 
 
-def test_bloom_auto_cutover_to_two_level(spark, tmp_path):
+def test_bloom_auto_cutover_to_two_level(spark, tmp_path, monkeypatch):
     """A flat Bloom manifest grown past the file-count threshold must
     upgrade to the sharded form on `update_bloom` (and `build_bloom`
     above threshold goes sharded directly), after which the SAME flat
@@ -1265,12 +1386,14 @@ def test_bloom_auto_cutover_to_two_level(spark, tmp_path):
 
     from twitter_flink_spark.operators import skipping
 
+    monkeypatch.setattr(skipping, "AUTO_TWO_LEVEL_FILES", 4)
+
     root = str(tmp_path / "tbl")
     spark.range(0, 1000).select(F.col("id").alias("key")).repartition(
         2
     ).write.mode("overwrite").parquet(root)
     skipping.build_bloom(
-        spark, root, "key", m=1 << 13, k=3, two_level_threshold=4
+        spark, root, "key", m=1 << 13, k=3
     )
     assert os.path.isdir(skipping._bloom_dir(root, "key"))  # flat
 
@@ -1278,7 +1401,7 @@ def test_bloom_auto_cutover_to_two_level(spark, tmp_path):
         6
     ).write.mode("append").parquet(root)
     assert (
-        skipping.update_bloom(spark, root, "key", two_level_threshold=4)
+        skipping.update_bloom(spark, root, "key")
         == 6
     )
     assert not os.path.isdir(skipping._bloom_dir(root, "key"))
@@ -1307,7 +1430,7 @@ def test_bloom_auto_cutover_to_two_level(spark, tmp_path):
         8
     ).write.mode("overwrite").parquet(root2)
     skipping.build_bloom(
-        spark, root2, "key", m=1 << 13, k=3, two_level_threshold=4
+        spark, root2, "key", m=1 << 13, k=3
     )
     assert not os.path.isdir(skipping._bloom_dir(root2, "key"))
     hit3, fr3, ft3 = skipping.point_read(spark, root2, "key", 777)
@@ -1315,7 +1438,7 @@ def test_bloom_auto_cutover_to_two_level(spark, tmp_path):
     assert [r["key"] for r in hit3.collect()] == [777]
 
 
-def test_vacuum_routes_through_cutover(spark, tmp_path):
+def test_vacuum_routes_through_cutover(spark, tmp_path, monkeypatch):
     """On tables that auto-cut over to two-level manifests, the FLAT
     vacuum entry points (`vacuum_manifest`, `vacuum_bloom`) must route
     to the sharded vacuums — maintenance callers keep one API across
@@ -1327,6 +1450,8 @@ def test_vacuum_routes_through_cutover(spark, tmp_path):
 
     from twitter_flink_spark.operators import skipping
 
+    monkeypatch.setattr(skipping, "AUTO_TWO_LEVEL_FILES", 4)
+
     # envelope index, built two-level by threshold
     root = str(tmp_path / "tbl")
     base = datetime.datetime(2024, 1, 1)
@@ -1336,7 +1461,7 @@ def test_vacuum_routes_through_cutover(spark, tmp_path):
     ).repartitionByRange(8, "ts").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(root)
-    skipping.build(spark, root, ["ts"], two_level_threshold=4)
+    skipping.build(spark, root, ["ts"])
     assert skipping.vacuum_manifest(spark, root) == 0  # routed no-op
     victim = sorted(
         f for f in os.listdir(root) if f.endswith(".parquet")
@@ -1344,7 +1469,7 @@ def test_vacuum_routes_through_cutover(spark, tmp_path):
     os.remove(os.path.join(root, victim))
     assert skipping.vacuum_manifest(spark, root) == 1  # routed reconcile
     parent = spark.read.parquet(
-        os.path.join(root, skipping.ROOT_MANIFEST)
+        skipping.two_level_columns(root)["ts"][1]
     ).collect()
     assert sum(r["n_files"] for r in parent) == 7
 
@@ -1354,7 +1479,7 @@ def test_vacuum_routes_through_cutover(spark, tmp_path):
         8
     ).write.mode("overwrite").parquet(root2)
     skipping.build_bloom(
-        spark, root2, "key", m=1 << 13, k=3, two_level_threshold=4
+        spark, root2, "key", m=1 << 13, k=3
     )
     assert skipping.vacuum_bloom(spark, root2, "key") == 0
     victim2 = sorted(
@@ -1464,7 +1589,7 @@ def test_zero_row_file_coverage_bloom_manifests(spark, tmp_path):
     assert ft == 9 and sr == 1 and st == 8 and df.count() == 1
 
 
-def test_two_level_multipredicate_select(spark, tmp_path):
+def test_two_level_multipredicate_select(spark, tmp_path, monkeypatch):
     """On a cut-over (two-level) table, a multi-range conjunction must
     intersect per-predicate selections on the indexed column, keep
     candidacy for non-indexed columns (no stats — the residual decides),
@@ -1476,6 +1601,8 @@ def test_two_level_multipredicate_select(spark, tmp_path):
 
     from twitter_flink_spark.operators import skipping
 
+    monkeypatch.setattr(skipping, "AUTO_TWO_LEVEL_FILES", 4)
+
     root = str(tmp_path / "tbl")
     # time-clustered layout so envelopes prune
     spark.range(0, 1600).select(
@@ -1483,8 +1610,8 @@ def test_two_level_multipredicate_select(spark, tmp_path):
     ).repartitionByRange(8, "ts").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(root)
-    skipping.build(spark, root, ["ts"], two_level_threshold=4)  # cuts over
-    assert os.path.isdir(os.path.join(root, skipping.ROOT_MANIFEST))
+    skipping.build(spark, root, ["ts"])  # cuts over
+    assert os.path.isdir(skipping.two_level_columns(root)["ts"][1])
 
     # conjunction of two ranges on the indexed column: intersection
     paths, total = skipping.select_files(
@@ -1647,7 +1774,7 @@ def test_per_column_two_level_lifecycle(spark, tmp_path):
         spark, root, ["a", "b"], n_parts=4
     )
     assert set(built) == {"a", "b"}
-    assert set(skipping.two_level_columns(spark, root)) == {"a", "b"}
+    assert set(skipping.two_level_columns(root)) == {"a", "b"}
 
     sel_a, total, _ = skipping.select_files_multi(
         spark, root, [("a", 0, 400)]
@@ -1900,8 +2027,7 @@ def test_select_files_multi_selectivity_order_and_early_exit(
     spark.range(1600, 1700).select(
         F.col("id").alias("a"), ((F.col("id") * 7) % 1600).alias("b")
     ).coalesce(1).write.mode("append").parquet(root)
-    parts, parent = skipping.two_level_columns(spark, root)["a"]
-    skipping._update_two_level_at(spark, root, "a", parts, parent)
+    skipping.update_two_level(spark, root, "a")
     _, t1, _ = skipping.select_files_multi(
         spark, root, [("a", 0, 1600), ("b", 0, 1600)]
     )
@@ -2075,8 +2201,7 @@ def test_parent_histogram_orders_thin_slice_first(spark, tmp_path):
         ((F.col("id") * 7) % 1600).alias("wide"),
         F.col("id").alias("zslice"),
     ).coalesce(1).write.mode("append").parquet(root)
-    parts, parent = skipping.two_level_columns(spark, root)["zslice"]
-    skipping._update_two_level_at(spark, root, "zslice", parts, parent)
+    skipping.update_two_level(spark, root, "zslice")
     plan = {}
     paths, _, _ = skipping.select_files_multi(
         spark, root, [("zslice", 1600, 1700)], plan_out=plan
@@ -2120,8 +2245,8 @@ def test_sidecar_index_root_indexes_readonly_table(spark, tmp_path):
         spark, root, ["a"], n_parts=2, index_root=side
     )
     assert sorted(os.listdir(root)) == before  # data dir untouched
-    assert skipping.two_level_columns(spark, root) == {}
-    assert set(skipping.two_level_columns(spark, root, side)) == {"a"}
+    assert skipping.two_level_columns(root) == {}
+    assert set(skipping.two_level_columns(root, side)) == {"a"}
 
     paths, total, used = skipping.select_files_multi(
         spark, root, [("a", 0, 100)], index_root=side
@@ -2245,7 +2370,9 @@ def test_flat_index_root_sidecar_readonly_table(spark, tmp_path):
     assert sliced.count() == 20
 
 
-def test_flat_index_root_cutover_lands_in_sidecar(spark, tmp_path):
+def test_flat_index_root_cutover_lands_in_sidecar(
+    spark, tmp_path, monkeypatch
+):
     """A sidecar flat index that grows past the two-level threshold
     upgrades IN THE SIDECAR: the data dir stays untouched through the
     cutover and the two-level reader serves through the same
@@ -2256,6 +2383,8 @@ def test_flat_index_root_cutover_lands_in_sidecar(spark, tmp_path):
 
     from twitter_flink_spark.operators import skipping
 
+    monkeypatch.setattr(skipping, "AUTO_TWO_LEVEL_FILES", 4)
+
     root = str(tmp_path / "tbl")
     side = str(tmp_path / "idx")
     spark.range(0, 300).select(F.col("id").alias("a")).repartitionByRange(
@@ -2264,10 +2393,10 @@ def test_flat_index_root_cutover_lands_in_sidecar(spark, tmp_path):
     before = sorted(os.listdir(root))
     os.makedirs(side)
     skipping.build(
-        spark, root, ["a"], two_level_threshold=4, index_root=side
+        spark, root, ["a"], index_root=side
     )  # 6 files > 4: builds two-level directly, in the sidecar
     assert sorted(os.listdir(root)) == before
-    assert os.path.isdir(os.path.join(side, skipping.ROOT_MANIFEST))
+    assert set(skipping.two_level_columns(root, side)) == {"a"}
     paths, total = skipping.select_files(
         spark, root, [("a", 0, 50)], index_root=side
     )
@@ -2394,14 +2523,14 @@ def test_point_multi_no_false_negatives_every_key(spark, tmp_path):
         .collect()
     )
     for r in rows:
-        truth[int(r["v"])].add(skipping._norm_path(r["f"]))
+        truth[int(r["v"])].add(skipping.norm_path(r["f"]))
 
     for key in range(7):
         plan: dict = {}
         paths, total, used = skipping.point_select_files_multi(
             spark, root, [("v", key)], plan_out=plan
         )
-        got = {skipping._norm_path(p) for p in paths}
+        got = {skipping.norm_path(p) for p in paths}
         assert truth[key] <= got, f"false negative for v={key}"
         assert plan["est_files"]["v"] >= 1
         assert used == 1 and total == 6
@@ -2505,7 +2634,7 @@ def test_zorder_layout_tightens_both_envelopes(spark, tmp_path):
     ).drop("ts_us").write.parquet(zd)
 
     def mean_u_width(root):
-        skipping.build(spark, root, ["user_id"], two_level_threshold=10**6)
+        skipping.build(spark, root, ["user_id"])
         m = spark.read.parquet(
             f"{root}/{skipping.STATS_DIR}"
         )
@@ -2543,7 +2672,7 @@ def test_compact_table_preserves_rows_and_inodes(spark, tmp_path):
     import os
 
     from twitter_flink_spark.operators.compaction import compact_table
-    from twitter_flink_spark.operators.skipping import _norm_path
+    from twitter_flink_spark.operators.skipping import norm_path
     from twitter_flink_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 
@@ -2558,7 +2687,7 @@ def test_compact_table_preserves_rows_and_inodes(spark, tmp_path):
             & ((F.col("event_id") / 2).cast("long") % 6 == i)
         ).coalesce(1).write.mode("append").parquet(t)
     rows_before = e.count()
-    files = [_norm_path(f) for f in spark.read.parquet(t).inputFiles()]
+    files = [norm_path(f) for f in spark.read.parquet(t).inputFiles()]
     sizes = {p: os.stat(p).st_size for p in files}
     big = max(sizes, key=lambda p: sizes[p])
     ino = os.stat(big).st_ino
@@ -2566,9 +2695,9 @@ def test_compact_table_preserves_rows_and_inodes(spark, tmp_path):
     assert ng >= 1 and na < nb == len(files)
     assert spark.read.parquet(t).count() == rows_before
     kept = [
-        _norm_path(f)
+        norm_path(f)
         for f in spark.read.parquet(t).inputFiles()
-        if os.path.basename(_norm_path(f)) == os.path.basename(big)
+        if os.path.basename(norm_path(f)) == os.path.basename(big)
     ]
     assert kept and os.stat(kept[0]).st_ino == ino
 
@@ -2635,7 +2764,7 @@ def test_compact_table_repeat_no_generation_clobber(spark, tmp_path):
     import os
 
     from twitter_flink_spark.operators.compaction import compact_table
-    from twitter_flink_spark.operators.skipping import _norm_path
+    from twitter_flink_spark.operators.skipping import norm_path
     from twitter_flink_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 
@@ -2652,15 +2781,15 @@ def test_compact_table_repeat_no_generation_clobber(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(t)
     rows1 = e.count()
     files = {
-        _norm_path(f): os.stat(_norm_path(f)).st_size
+        norm_path(f): os.stat(norm_path(f)).st_size
         for f in spark.read.parquet(t).inputFiles()
     }
     nb, na, ng = compact_table(spark, t, max(files.values()))
     assert ng >= 1 and spark.read.parquet(t).count() == rows1
     merged = [
-        _norm_path(f)
+        norm_path(f)
         for f in spark.read.parquet(t).inputFiles()
-        if "compacted-" in os.path.basename(_norm_path(f))
+        if "compacted-" in os.path.basename(norm_path(f))
     ]
     assert merged, "pass 1 produced a merged file"
     m = min(merged, key=lambda p: os.stat(p).st_size)
@@ -2677,10 +2806,10 @@ def test_compact_table_repeat_no_generation_clobber(spark, tmp_path):
     rows2 = spark.read.parquet(t).count()
     assert rows2 == rows1 + 40
     tiny_sizes = [
-        os.stat(_norm_path(f)).st_size
+        os.stat(norm_path(f)).st_size
         for f in spark.read.parquet(t).inputFiles()
-        if _norm_path(f) not in files and _norm_path(f) != m
-        and "compacted-" not in os.path.basename(_norm_path(f))
+        if norm_path(f) not in files and norm_path(f) != m
+        and "compacted-" not in os.path.basename(norm_path(f))
     ]
     assert tiny_sizes and all(s < m_size for s in tiny_sizes), (
         "fixture precondition: appended files must be smaller than the "
@@ -2691,9 +2820,9 @@ def test_compact_table_repeat_no_generation_clobber(spark, tmp_path):
     # the old naming lost m's rows here; exact count is the pin
     assert spark.read.parquet(t).count() == rows2
     kept = [
-        _norm_path(f)
+        norm_path(f)
         for f in spark.read.parquet(t).inputFiles()
-        if os.path.basename(_norm_path(f)) == os.path.basename(m)
+        if os.path.basename(norm_path(f)) == os.path.basename(m)
     ]
     assert kept and os.stat(kept[0]).st_ino == m_ino
 
@@ -2710,7 +2839,7 @@ def test_compact_table_one_job_for_all_groups(spark, tmp_path):
         compact_table,
         compaction_plan,
     )
-    from twitter_flink_spark.operators.skipping import _norm_path
+    from twitter_flink_spark.operators.skipping import norm_path
     from twitter_flink_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 
@@ -2723,7 +2852,7 @@ def test_compact_table_one_job_for_all_groups(spark, tmp_path):
         ).write.mode("append").parquet(t)
     rows = spark.read.parquet(t).count()
     sizes = [
-        (_norm_path(f), os.stat(_norm_path(f)).st_size)
+        (norm_path(f), os.stat(norm_path(f)).st_size)
         for f in spark.read.parquet(t).inputFiles()
     ]
     target = max(s for _, s in sizes)
@@ -2751,7 +2880,7 @@ def test_compact_table_reader_snapshot_across_swap(spark, tmp_path):
 
     from twitter_flink_spark import commit as sk
     from twitter_flink_spark.operators.compaction import compact_table
-    from twitter_flink_spark.operators.skipping import _norm_path
+    from twitter_flink_spark.operators.skipping import norm_path
     from twitter_flink_spark.sources.tables import load_table
     from pyspark.sql import functions as F
 
@@ -2767,7 +2896,7 @@ def test_compact_table_reader_snapshot_across_swap(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(t)
     rows = e.count()
     sizes = {
-        _norm_path(f): os.stat(_norm_path(f)).st_size
+        norm_path(f): os.stat(norm_path(f)).st_size
         for f in spark.read.parquet(t).inputFiles()
     }
     target = max(sizes.values())
@@ -2825,3 +2954,54 @@ def test_compact_table_rejects_duplicate_basenames(spark, tmp_path):
         compact_table(spark, t, 1 << 30)
     # the live table is untouched
     assert spark.read.parquet(t).count() == 200
+
+
+def test_skipping_layout_is_named_only_in_its_module():
+    """Guard: the data-skipping manifest layouts (``_filestats``,
+    ``_filestats2_<col>_*``, ``_filebloom_<col>``, ``_filebloom2_*``)
+    are formats the engine defined, so only `operators/skipping.py`
+    names them; every other module goes through that module's public
+    functions (``manifest_dirs``, ``manifest_rows``, ...) and never
+    touches one of its private names — no ``skipping._x`` attribute and
+    no ``_x`` imported from it. Docstrings may describe the layouts."""
+    import ast
+    import pathlib
+    import re
+
+    layout = re.compile(r"(?<!\w)_file(?:stats|bloom)")
+    root = pathlib.Path(__file__).resolve().parents[1] / "twitter_flink_spark"
+    owner = root / "operators" / "skipping.py"
+    scopes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, scopes)
+            and ast.get_docstring(n, clean=False) is not None
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant):
+                hit = (
+                    isinstance(node.value, str)
+                    and id(node) not in docs
+                    and layout.search(node.value)
+                )
+            elif isinstance(node, ast.Attribute):
+                hit = (
+                    isinstance(node.value, ast.Name)
+                    and node.value.id == "skipping"
+                    and node.attr.startswith("_")
+                )
+            elif isinstance(node, ast.ImportFrom):
+                hit = (node.module or "").endswith("skipping") and any(
+                    a.name.startswith("_") for a in node.names
+                )
+            else:
+                hit = False
+            if hit:
+                bad.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert bad == []

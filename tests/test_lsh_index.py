@@ -653,3 +653,112 @@ def test_ivf_delete_crash_between_renames_recovers(
             assert tombs(idx) == want, k
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
+
+
+def test_compact_crash_inside_segment_rewrite_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `lsh_index_compact` inside its first segment rewrite,
+    between moving the Spark-written ``seg=<n>`` dir aside and the
+    pointer rename: the segment dir is missing. A re-run puts the aside
+    back before it reads the index and serves exactly the candidate
+    pairs and rows of an uninterrupted compaction."""
+    import shutil
+
+    import pytest
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators.dedup import (
+        lsh_index_compact,
+        lsh_index_delete,
+    )
+
+    docs, _ = _split_docs(spark)
+    base = str(tmp_path / "base")
+    lsh_index_build(spark, docs, base)
+    doomed_ids = sorted({a for a, _ in _pairs(spark, base)})[:3]
+    lsh_index_delete(
+        spark,
+        spark.createDataFrame([(i,) for i in doomed_ids], "doc_id long"),
+        base,
+    )
+
+    def fresh(name: str) -> str:
+        d = str(tmp_path / name)
+        shutil.copytree(base, d)  # Spark-written (real-dir) segments
+        return d
+
+    def state(d: str):
+        rows = sorted(tuple(r) for r in spark.read.parquet(d).collect())
+        return _pairs(spark, d), rows
+
+    clean = fresh("clean")
+    n = lsh_index_compact(spark, clean)
+    want = state(clean)
+    assert n == len(doomed_ids)
+
+    idx = fresh("crash")
+    segs = sorted(d for d in os.listdir(idx) if d.startswith("seg="))
+    # renames of the first segment swap: staged dir -> generation, the
+    # real dir -> its aside, then the pointer; crash at the pointer
+    monkeypatch.setattr(commit, "os", CrashAfter(2))
+    with pytest.raises(OSError, match="injected crash"):
+        lsh_index_compact(spark, idx)
+    monkeypatch.setattr(commit, "os", os)
+    now = sorted(d for d in os.listdir(idx) if d.startswith("seg="))
+    assert len([d for d in now if ".gc-" not in d]) == len(segs) - 1
+    assert lsh_index_compact(spark, idx) == n
+    assert state(idx) == want
+
+
+def test_ivf_compact_crash_inside_cell_rewrite_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash `ivf_index_compact` inside its first cell rewrite, between
+    moving the Spark-written ``cid=<c>`` dir aside and the pointer
+    rename: the cell dir is missing, so serving would drop its members.
+    A re-run puts the aside back before it reads the assignments and
+    leaves exactly the assignments of an uninterrupted compaction."""
+    import pytest
+
+    from twitter_flink_spark import commit
+    from twitter_flink_spark.operators.ivf import (
+        ivf_assignments,
+        ivf_index_compact,
+        ivf_index_delete,
+        ivf_tombstones,
+    )
+
+    doomed = spark.range(0, 400, 3).withColumnRenamed("id", "vec_id")
+
+    def fresh(name: str) -> str:
+        d = str(tmp_path / name)
+        spark.range(400).select(
+            F.col("id").alias("vec_id"), (F.col("id") % 4).alias("cid")
+        ).write.partitionBy("cid").parquet(os.path.join(d, "_assign"))
+        ivf_index_delete(spark, doomed, d)
+        return d
+
+    def state(d: str):
+        return (
+            sorted(tuple(r) for r in ivf_assignments(spark, d).collect()),
+            ivf_tombstones(spark, d).count(),
+        )
+
+    clean = fresh("clean")
+    assert ivf_index_compact(spark, clean) == (134, 4)
+    want = state(clean)
+
+    idx = fresh("crash")
+    # renames of the first cell swap: staged dir -> generation, the real
+    # dir -> its aside, then the pointer; crash at the pointer
+    monkeypatch.setattr(commit, "os", CrashAfter(2))
+    with pytest.raises(OSError, match="injected crash"):
+        ivf_index_compact(spark, idx)
+    monkeypatch.setattr(commit, "os", os)
+    cells = os.listdir(os.path.join(idx, "_assign"))
+    assert sorted(
+        c for c in cells if c.startswith("cid=") and ".gc-" not in c
+    ) == ["cid=1", "cid=2", "cid=3"]
+    assert ivf_index_compact(spark, idx) == (134, 4)
+    assert state(idx) == want

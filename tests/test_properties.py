@@ -664,10 +664,10 @@ _schemes = st.sampled_from(
 @settings(**_SETTINGS)
 @given(paths=_uri_paths, scheme=_schemes)
 def test_norm_path_sql_twin_property(spark, paths, scheme):
-    """`_norm_path` (Python) and `_norm_sql` (SQL) must agree on EVERY
+    """`norm_path` (Python) and `_norm_sql` (SQL) must agree on EVERY
     generated URI shape — the invariant under all manifest
     reconciliation joins (a disagreement mass-drops live rows)."""
-    from twitter_flink_spark.operators.skipping import _norm_path, _norm_sql
+    from twitter_flink_spark.operators.skipping import _norm_sql, norm_path
 
     uris = [f"{scheme}/{p}" for p in paths]
     sql_side = [
@@ -676,7 +676,7 @@ def test_norm_path_sql_twin_property(spark, paths, scheme):
         .select(_norm_sql("file").alias("n"))
         .collect()
     ]
-    assert sql_side == [_norm_path(u) for u in uris]
+    assert sql_side == [norm_path(u) for u in uris]
 
 
 _binpack_counts = st.lists(
@@ -755,7 +755,7 @@ def test_hist_estimate_is_sound_upper_bound(envs, q):
     ORDERING, but an unsound one would also poison the plan audit
     flags. Histograms are built with the same clamped floor bucketing
     `_parent_manifest` uses; the build bounds come from the min values
-    (exactly like `_build_two_level_at`), so envelopes straddling or
+    (exactly like `build_two_level`), so envelopes straddling or
     exceeding the bounds exercise the open edge buckets."""
     from twitter_flink_spark.operators.skipping import (
         HIST_BUCKETS,

@@ -119,3 +119,45 @@ def test_local_frame_plans_a_local_relation(spark):
     assert "LocalRelation" in plan
     assert "LogicalRDD" not in plan
     assert df.rdd.getNumPartitions() == 1
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver that found the package on its own ``sys.path`` (not
+    through its cwd or ``PYTHONPATH``) runs a Python UDF that imports
+    the package on a worker: `get_spark` puts the package root on the
+    workers' path. The driver runs in a subprocess whose cwd is outside
+    the repo."""
+    import os
+    import subprocess
+    import sys
+
+    from twitter_flink_spark.session import PACKAGE_ROOT
+
+    script = f"""
+import sys
+sys.path.insert(0, {PACKAGE_ROOT!r})
+from pyspark.sql import functions as F
+from twitter_flink_spark.session import get_spark
+
+spark = get_spark(app_name="tfs-cwd", master="local[1]")
+
+@F.udf("string")
+def imported(_):
+    import twitter_flink_spark
+    return twitter_flink_spark.__name__
+
+print(spark.range(1).select(imported("id")).first()[0])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "twitter_flink_spark"

@@ -94,7 +94,7 @@ def test_two_level_era_layout_concurrent_staging(
     dest = results[0][0]
     assert all(fresh for _, fresh in results)  # era 2 not yet indexed
     assert os.path.isfile(os.path.join(dest, staging.MARKER))
-    assert os.path.isdir(os.path.join(dest, skipping.ROOT_MANIFEST))
+    assert set(skipping.two_level_columns(dest)) == {"ts"}
     assert not [d for d in os.listdir(tmp_path) if ".build-" in d]
     events = load_table(spark, SF_DIR, "events")
     assert spark.read.parquet(dest).count() == events.count()

@@ -7,8 +7,10 @@ commits; each has ONE implementation here:
   is renamed to a hidden sibling and ``dest`` becomes a symlink renamed
   over in one atomic step; superseded generations are swept after a
   reader grace (`sweep_gens`) unless a long scan pins them
-  (`pin_generation`). `rm_committed` and `move_committed` remove and
-  relocate such a dest without stranding its generation.
+  (`pin_generation`). `rm_committed` and `link_committed` remove and
+  copy such a dest without stranding its generation;
+  `sweep_partitions` puts back a partition a crashed rewrite left
+  aside.
 - **staged append** (`append_files`): one Spark write into a
   pid/thread-unique stage dir, then a rename per file, phase by phase —
   readers see whole files or nothing, and the phase order is the commit
@@ -19,7 +21,7 @@ commits; each has ONE implementation here:
   table with the untouched files hardlinked in, for a compactor to add
   its merged files to and `replace_dir` into place.
 - **table dir swap** (`swap_table_dir`): a rewritten table dir replaces
-  the live one, carrying its committed manifests across.
+  the live one, its committed manifests hardlinked across first.
 - **atomic JSON** (`write_json`): markers, ledgers and manifests.
 
 Scratch names embed the writer's pid and thread (`scratch_name`), so two
@@ -101,6 +103,26 @@ def sweep_scratch(dest: str) -> None:
                 shutil.rmtree(leftover, ignore_errors=True)
         except OSError:
             pass
+
+
+_SCRATCH_RE = re.compile(r"(.+)\.(?:tmp|gc)-\d+-\d+")
+
+
+def sweep_partitions(root: str) -> None:
+    """`sweep_scratch` for every partition of the partitioned dir
+    ``root`` that has scratch siblings. A partition rewrite (a shard
+    `commit_swap`, `publish_partitions`) that died between moving a
+    real-dir partition aside and its pointer rename left the partition
+    missing while its parent manifest still lists it: call this before
+    listing the partitions, so the aside is back in place."""
+    try:
+        entries = os.listdir(root)
+    except OSError:
+        return
+    for name in sorted(
+        {m.group(1) for m in map(_SCRATCH_RE.fullmatch, entries) if m}
+    ):
+        sweep_scratch(os.path.join(root, name))
 
 
 def commit_swap(df: DataFrame, dest: str, partition_by=()) -> None:
@@ -211,27 +233,27 @@ def rm_committed(path: str) -> None:
         pass
 
 
-def move_committed(src: str, dst: str) -> None:
-    """Relocate a committed manifest from ``src`` to ``dst`` — the
-    carry-across a data-dir-level compaction swap performs when it
-    renames the whole table dir aside and moves the manifests into the
-    rewritten dir. A committed dest is a pointer SYMLINK whose hidden
-    generation dir lives beside it (``replace_dir``): moving only the
-    link (what ``shutil.move`` does) would strand the generation in the
-    swapped-aside dir and the subsequent ``rmtree`` would break the
-    pointer. Move the generation first, then the link — its relative
-    target stays valid. A real dir (never published by a pointer swap)
-    is a plain move."""
+def link_committed(src: str, dst: str) -> None:
+    """Hardlink a committed manifest from ``src`` to ``dst`` — the
+    carry-across of a table-dir swap (`swap_table_dir`), zero bytes
+    copied (manifest files are immutable). A committed dest is a
+    pointer SYMLINK whose hidden generation dir lives beside it
+    (``replace_dir``): the generation is linked first, then a pointer
+    with the same relative target; pointers nested inside (rewritten
+    partitions) stay pointers. A file (a breadcrumb) is linked as it
+    is."""
     if os.path.islink(src):
         gen_name = os.readlink(src)
         if not os.path.isabs(gen_name):
-            os.rename(
+            shutil.copytree(
                 os.path.join(os.path.dirname(src), gen_name),
                 os.path.join(os.path.dirname(dst), gen_name),
+                symlinks=True,
+                copy_function=os.link,
             )
-        os.rename(src, dst)
+        os.symlink(gen_name, dst)
     else:
-        shutil.move(src, dst)
+        os.link(src, dst)
 
 
 def replace_dir(tmp: str, dest: str) -> None:
@@ -419,16 +441,20 @@ def new_generation(root: str, keep) -> str:
 
 def swap_table_dir(tmp: str, dest: str, carry) -> None:
     """Replace the table dir ``dest`` by the rewritten ``tmp`` — the
-    compactor's dir-level swap: the live dir renames aside, ``tmp``
-    takes its place, each committed manifest named in ``carry`` moves
-    across (`move_committed`, generation and pointer), and the old dir
-    is removed."""
+    compactor's dir-level swap. Each committed manifest named in
+    ``carry`` is first hardlinked into ``tmp`` (`link_committed`), then
+    the live dir renames aside, ``tmp`` takes its place, and the old dir
+    is removed. Every carried manifest is in ``dest`` or ``tmp`` at
+    every rename: a crash before the second rename leaves ``dest``
+    missing and its aside holding the old table WITH its manifests,
+    which `sweep_scratch` renames back; a crash after it leaves the new
+    table complete."""
+    for name in carry:
+        link_committed(os.path.join(dest, name), os.path.join(tmp, name))
     gc = scratch_name(dest, "gc")
     shutil.rmtree(gc, ignore_errors=True)
     os.rename(dest, gc)
     os.rename(tmp, dest)
-    for name in carry:
-        move_committed(os.path.join(gc, name), os.path.join(dest, name))
     shutil.rmtree(gc, ignore_errors=True)
 
 

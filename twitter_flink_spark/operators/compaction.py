@@ -42,7 +42,7 @@ from twitter_flink_spark.commit import (
     scratch_name,
     sweep_scratch,
 )
-from twitter_flink_spark.operators.skipping import _norm_path
+from twitter_flink_spark.operators.skipping import norm_path
 from twitter_flink_spark.session import local_frame
 
 #: Diagnostic: Spark job count of the LAST ``compact_table`` merge write
@@ -111,7 +111,7 @@ def compact_table(
     # its pointer rename left no table dir: put the aside back first
     sweep_scratch(root)
     live = [
-        _norm_path(f) for f in spark.read.parquet(root).inputFiles()
+        norm_path(f) for f in spark.read.parquet(root).inputFiles()
     ]
     # FLAT-LAYOUT PRECONDITION, checked loudly up front: both the merge
     # tagging (broadcast basename->gid join) and the untouched-file

@@ -28,6 +28,7 @@ from twitter_flink_spark.commit import (
     commit_swap,
     observed_count,
     publish_partitions,
+    sweep_partitions,
 )
 
 MINHASH_K = 16  #: number of hash functions (signature length)
@@ -787,10 +788,12 @@ def lsh_index_compact(spark, index_dir: str) -> int:
     "covered" memory of deleted docs along with their tombstones — a
     source that redelivers a compacted-away doc re-indexes it; keeping
     deleted docs out of the SOURCE is the upstream contract, the index
-    only forgets. Returns the number of docs reclaimed; 0 is a pure
-    no-op (no rewrite)."""
+    only forgets. A segment a crashed rewrite left aside is put back
+    first. Returns the number of docs reclaimed; 0 is a pure no-op (no
+    rewrite)."""
     import os
 
+    sweep_partitions(index_dir)
     idx = _read_index(spark, index_dir)
     tombs = idx.where(F.col("band") == TOMB_BAND).select("doc_id").distinct()
     n = tombs.count()

@@ -65,6 +65,7 @@ from twitter_flink_spark.commit import (
     publish_partitions,
     replace_dir,
     scratch_name,
+    sweep_partitions,
 )
 from twitter_flink_spark.operators.clustering import (
     assign_clusters,
@@ -349,7 +350,9 @@ def ivf_index_compact(spark: SparkSession, index_dir: str) -> tuple[int, int]:
     crash mid-compact leaves some cells rewritten and the tombstones
     still in place, so serving stays correct (the anti-join still hides
     the not-yet-reclaimed rows) and the next compact finishes the rest.
+    A cell a crashed rewrite left aside is put back first.
     Returns (vectors reclaimed, cells rewritten); (0, 0) is a no-op."""
+    sweep_partitions(_path(index_dir, ASSIGN))
     tombs = ivf_tombstones(spark, index_dir)
     assign = ivf_assignments(spark, index_dir)
     doomed = assign.join(tombs, "vec_id", "left_semi").select("vec_id", "cid")

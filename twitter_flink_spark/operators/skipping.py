@@ -19,15 +19,37 @@ plain parquet directories, two index kinds:
   layout): ~m bits per file regardless of row count, k xxhash64 probes
   select candidate files. The Iceberg-puffin / Delta bloom sidecar story.
 
+The manifests live under the data root (or a sidecar ``index_root``)
+with an underscore prefix, so Spark's input listing ignores them — the
+``_manifests`` convention. Four layouts, named only in this module:
+
+- ``_filestats`` — the flat stats manifest, one row per file with every
+  indexed column's envelope. Written by ``build`` and ``update``.
+- ``_filestats2_<col>_parts`` / ``_filestats2_<col>_root`` — the
+  two-level stats manifest on one column: per-file rows partitioned by
+  a range bucket of the envelope min (``part=<p>``), and a parent row
+  per bucket. Written by ``build_two_level`` (and
+  ``build_two_level_columns``, one per column), maintained by
+  ``update_two_level`` / ``vacuum_two_level``; a single-column
+  ``build``/``update`` past ``AUTO_TWO_LEVEL_FILES`` files cuts over to
+  it and removes the flat manifest.
+- ``_filebloom_<col>`` — the flat Bloom manifest, one word map per
+  file. Written by ``build_bloom`` and ``update_bloom``.
+- ``_filebloom2_<col>_parts`` / ``_filebloom2_<col>_root`` — the
+  key-hash-sharded Bloom manifest (``shard=<s>``) and its parent.
+  Written by ``build_bloom_two_level``, maintained by
+  ``update_bloom_two_level`` / ``vacuum_bloom_two_level``; the flat
+  Bloom build/update cuts over to it the same way.
+
+Other modules reach them only through this module's functions
+(``manifest_dirs`` names what a table-dir swap must carry).
+
 All manifests commit through `twitter_flink_spark.commit` (write a
 complete generation to pid/thread-unique scratch, publish it with the
 atomic pointer swap, ``commit_swap``), so a concurrent reader never sees
-a half manifest. They live under the data root with an underscore
-prefix (``_filestats``, ``_filebloom_<col>``) so Spark's input listing
-ignores them — the ``_manifests`` convention. ``update`` maintains
-the stats manifest INCREMENTALLY on append: only files absent from the
-committed manifest are scanned, O(new data) not O(table), the maintenance
-shape a streaming sink needs.
+a half manifest. ``update`` maintains the stats manifest INCREMENTALLY
+on append: only files absent from the committed manifest are scanned,
+O(new data) not O(table), the maintenance shape a streaming sink needs.
 
 Every index is candidate-level: readers re-apply the exact predicate as a
 residual filter, so over the INDEXED files a lossy selection can only cost
@@ -50,16 +72,35 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_flink_spark.commit import commit_swap, rm_committed
+from twitter_flink_spark.commit import (
+    commit_swap,
+    rm_committed,
+    sweep_partitions,
+)
 from twitter_flink_spark.session import local_frame
 
 STATS_DIR = "_filestats"
 BLOOM_DIR = "_filebloom"  #: per-column suffix appended: _filebloom_<col>
 
-#: flat manifests past this many files auto-cut over to the two-level
-#: (manifest-of-manifests) shape — beyond it the O(files) flat consult
-#: on the driver is the planning bottleneck the sharded form exists for.
+#: single-column manifests past this many files auto-cut over to the
+#: two-level (manifest-of-manifests) shape — beyond it the O(files) flat
+#: consult on the driver is the planning bottleneck the sharded form
+#: exists for.
 AUTO_TWO_LEVEL_FILES = 65536
+
+_MANIFEST_RE = re.compile(r"_file(?:stats|bloom)\w*")
+_STATS2_RE = re.compile(r"_filestats2_(\w+)_parts")
+
+
+def _at(root: str, index_root: str | None) -> str:
+    return index_root if index_root is not None else root
+
+
+def manifest_dirs(root: str) -> list[str]:
+    """Names of the committed manifests under ``root`` (every layout
+    above; scratch and generation siblings excluded) — what a swap of
+    the whole table dir must carry across (`commit.swap_table_dir`)."""
+    return sorted(d for d in os.listdir(root) if _MANIFEST_RE.fullmatch(d))
 
 
 def _file_stats(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -126,94 +167,96 @@ def build(
     spark: SparkSession,
     root: str,
     cols: list[str],
-    two_level_threshold: int | None = None,
     index_root: str | None = None,
 ) -> str:
     """Compute and commit the per-file stats manifest for ``cols`` in ONE
     column-pruned scan (hash aggregate on ``input_file_name()`` — as many
-    groups as files). Past ``two_level_threshold`` files (default
-    ``AUTO_TWO_LEVEL_FILES``) a SINGLE-column build cuts over to the
-    two-level manifest instead — no caller inherits the O(files) flat
-    driver consult at the scale it stops being viable; the range
-    readers (``select_files`` / ``read_where`` / ``read_between`` /
-    ``count_between``) route through the shards transparently.
-    ASYMMETRY: a multi-column build NEVER cuts over (the two-level
-    shape range-buckets one column); past the threshold it stays flat
-    by design — split the columns into per-column indexes if the flat
-    consult becomes the bottleneck. ``index_root`` writes the manifest
-    under a SIDECAR prefix instead of ``root`` (the read-only-lake
-    contract of ``build_two_level_columns``); every reader and the
-    update/vacuum sweeps take the same parameter, and an auto-cutover
-    lands its two-level dirs under the same sidecar."""
-    threshold = (
-        AUTO_TWO_LEVEL_FILES if two_level_threshold is None
-        else two_level_threshold
-    )
-    at = index_root if index_root is not None else root
+    groups as files). Past ``AUTO_TWO_LEVEL_FILES`` files a SINGLE-column
+    build cuts over to the two-level manifest on that column instead —
+    no caller inherits the O(files) flat driver consult at the scale it
+    stops being viable; the range readers (``select_files`` /
+    ``read_where`` / ``read_between`` / ``count_between``) route through
+    the shards transparently. ASYMMETRY: a multi-column build NEVER cuts
+    over (the two-level shape range-buckets one column); past the
+    threshold it stays flat by design — split the columns into
+    per-column indexes if the flat consult becomes the bottleneck.
+    ``index_root`` writes the manifest under a SIDECAR prefix instead of
+    ``root`` (the read-only-lake contract of ``build_two_level_columns``);
+    every reader and the update/vacuum sweeps take the same parameter,
+    and an auto-cutover lands its two-level dirs under the same
+    sidecar."""
+    dest = os.path.join(_at(root, index_root), STATS_DIR)
     reader = spark.read.parquet(root)
-    if len(cols) == 1 and len(reader.inputFiles()) > threshold:
+    if len(cols) == 1 and len(reader.inputFiles()) > AUTO_TWO_LEVEL_FILES:
         _, parent = build_two_level(
             spark, root, cols[0], index_root=index_root
         )
-        rm_committed(os.path.join(at, STATS_DIR))
+        rm_committed(dest)
         return parent
-    dest = os.path.join(at, STATS_DIR)
     commit_swap(_file_stats(reader, cols), dest)
     return dest
+
+
+def _cut_over(
+    root: str, index_root: str | None
+) -> dict[str, tuple[str, str]]:
+    """The two-level stats manifests a flat entry point routes to: every
+    one on the table when it has no flat manifest (it cut over, or was
+    indexed per column only), none when the flat manifest exists."""
+    if os.path.isdir(os.path.join(_at(root, index_root), STATS_DIR)):
+        return {}
+    return two_level_columns(root, index_root)
 
 
 def update(
     spark: SparkSession,
     root: str,
     cols: list[str],
-    two_level_threshold: int | None = None,
     index_root: str | None = None,
 ) -> int:
     """Incrementally maintain the stats manifest after appends: scan ONLY
     files absent from the committed manifest (O(new data), not O(table)),
     union their stats with the existing rows, swap. Returns the number of
-    newly indexed files; 0 is a pure no-op (no write, no swap). Files
-    deleted since the last build simply linger as envelopes of nothing —
+    newly indexed files; 0 is a pure no-op (no write, no swap). A table
+    with no manifest yet is indexed whole — the first refresh is the
+    build, so a sink can call this after every commit. Files deleted
+    since the last build simply linger as envelopes of nothing —
     candidate-level selection tolerates them; ``vacuum_manifest`` is the
     reconciliation. If the table has already cut over to the two-level
-    manifest, this delegates to ``update_two_level``; a flat index grown
-    past ``two_level_threshold`` files (default ``AUTO_TWO_LEVEL_FILES``)
-    upgrades to the two-level shape after the refresh."""
-    threshold = (
-        AUTO_TWO_LEVEL_FILES if two_level_threshold is None
-        else two_level_threshold
-    )
-    at = index_root if index_root is not None else root
-    dest = os.path.join(at, STATS_DIR)
-    reader = spark.read.parquet(root)
-    if not os.path.isdir(dest) and os.path.isdir(
-        os.path.join(at, ROOT_MANIFEST)
-    ):
-        if len(cols) != 1:
+    manifest, this delegates to ``update_two_level``; a single-column
+    index grown past ``AUTO_TWO_LEVEL_FILES`` files is rebuilt in the
+    two-level shape instead of refreshed flat."""
+    cut = _cut_over(root, index_root)
+    if cut:
+        if len(cols) != 1 or cols[0] not in cut:
             raise ValueError(
-                f"table at {root} cut over to a two-level manifest "
-                "(single-column by construction); update it with its "
-                "one indexed column, not a multi-column refresh"
+                f"table at {root} cut over to two-level manifests on "
+                f"{sorted(cut)} (single-column by construction); update "
+                f"one indexed column, not a refresh of {cols}"
             )
         return update_two_level(
             spark, root, cols[0], index_root=index_root
         )
+    dest = os.path.join(_at(root, index_root), STATS_DIR)
+    indexed = os.path.isdir(dest)
     known = {
-        _norm_path(r["file"])
+        norm_path(r["file"])
         for r in spark.read.parquet(dest).select("file").collect()
-    }  # O(files)
+    } if indexed else set()  # O(files)
     # inputFiles() and input_file_name() render the scheme differently
     # (file:/ vs file:///) — compare on the normalized path
-    live = reader.inputFiles()
-    new = [f for f in live if _norm_path(f) not in known]
-    if new:
-        fresh = _file_stats(spark.read.parquet(*new), cols)
-        commit_swap(spark.read.parquet(dest).unionByName(fresh), dest)
-    if len(cols) == 1 and len(live) > threshold:
-        # grown past flat viability: upgrade so the NEXT consult is
+    live = spark.read.parquet(root).inputFiles()
+    new = [f for f in live if norm_path(f) not in known]
+    if len(cols) == 1 and len(live) > AUTO_TWO_LEVEL_FILES:
+        # grown past flat viability: rebuild so the NEXT consult is
         # O(parent + touched shards), not O(files) on the driver
         build_two_level(spark, root, cols[0], index_root=index_root)
         rm_committed(dest)
+    elif new:
+        fresh = _file_stats(spark.read.parquet(*new), cols)
+        if indexed:
+            fresh = spark.read.parquet(dest).unionByName(fresh)
+        commit_swap(fresh, dest)
     return len(new)
 
 
@@ -228,11 +271,10 @@ def select_files(
     with a NULL min/max keep candidacy (an all-null envelope is unknown —
     never drop what you cannot prove out); rows are decided by the
     caller's residual predicate, the index only decides FILES. On a
-    table that has cut over to the two-level manifest (single-column by
-    construction — ``build`` with multiple cols stays flat forever, see
-    its docstring), ranges on the INDEXED column route through the
-    shards and intersect; ranges on other columns have no stats there
-    and prune nothing (their files stay candidates — the residual
+    table that has cut over to two-level manifests this is
+    ``select_files_multi``: ranges on indexed columns route through
+    their shards and intersect; ranges on other columns have no stats
+    there and prune nothing (their files stay candidates — the residual
     decides rows), and a conjunction touching ONLY non-indexed columns
     raises rather than misreading the deleted flat manifest. NOTE the
     index serves an INDEXED VIEW of the table: files appended since the
@@ -240,53 +282,32 @@ def select_files(
     refreshed — run ``update`` after appends (or check
     ``stale_file_count``). ``index_root`` consults a sidecar index
     (see ``build``)."""
-    at = index_root if index_root is not None else root
-    if not os.path.isdir(
-        os.path.join(at, STATS_DIR)
-    ) and os.path.isdir(os.path.join(at, ROOT_MANIFEST)):
-        indexed = next(
-            f[4:]
-            for f in spark.read.parquet(
-                os.path.join(at, PARTS_DIR)
-            ).columns
-            if f.startswith("min_")
+    if _cut_over(root, index_root):
+        paths, total, _ = select_files_multi(
+            spark, root, preds, index_root=index_root
         )
-        on_index = [p for p in preds if p[0] == indexed]
-        if not on_index:
-            raise ValueError(
-                f"table at {root} cut over to a two-level manifest on "
-                f"column {indexed!r}; no stats exist for predicate "
-                f"columns {sorted({c for c, _, _ in preds})} — include a "
-                f"range on {indexed!r}, or rebuild flat with "
-                "build(spark, root, cols, two_level_threshold=<large>)"
-            )
-        sel: dict[str, str] | None = None
-        total = 0
-        for col, lo, hi in on_index:
-            paths, total, _, _ = select_files_two_level(
-                spark, root, col, lo, hi, index_root=index_root
-            )
-            cur = {_norm_path(p): p for p in paths}
-            sel = (
-                cur
-                if sel is None
-                else {n: p for n, p in sel.items() if n in cur}
-            )
-        return list(sel.values()), total
-    manifest = spark.read.parquet(os.path.join(at, STATS_DIR))
+        return paths, total
+    manifest = spark.read.parquet(
+        os.path.join(_at(root, index_root), STATS_DIR)
+    )
     total = manifest.count()
     keep = manifest
     for col, lo, hi in preds:
-        keep = keep.where(
-            (F.col(f"min_{col}").isNull())
-            | (F.col(f"max_{col}").isNull())
-            | (
-                (F.col(f"min_{col}") < F.lit(hi))
-                & (F.col(f"max_{col}") >= F.lit(lo))
-            )
-        )
+        keep = keep.where(_may_intersect(col, lo, hi))
     paths = [r["file"] for r in keep.select("file").collect()]  # O(files)
     return paths, total
+
+
+def _may_intersect(col: str, lo, hi) -> F.Column:
+    """A manifest row's envelope may hold a ``lo <= col < hi`` row: it
+    intersects the range, or it is unknown (NULL)."""
+    mn, mx = F.col(f"min_{col}"), F.col(f"max_{col}")
+    return mn.isNull() | mx.isNull() | ((mn < F.lit(hi)) & (mx >= F.lit(lo)))
+
+
+def _in_range(col: str, lo, hi) -> F.Column:
+    """The exact residual ``lo <= col < hi`` over data rows."""
+    return (F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi))
 
 
 def _empty_like(spark: SparkSession, root: str) -> DataFrame:
@@ -308,7 +329,7 @@ def read_where(
         return _empty_like(spark, root), 0, total
     df = spark.read.parquet(*paths)
     for col, lo, hi in preds:
-        df = df.where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
+        df = df.where(_in_range(col, lo, hi))
     return df, len(paths), total
 
 
@@ -322,6 +343,94 @@ def read_between(
 ) -> tuple[DataFrame, int, int]:
     """Single-column form of ``read_where``."""
     return read_where(spark, root, [(col, lo, hi)], index_root=index_root)
+
+
+def _split(spark: SparkSession, manifest: DataFrame, col: str, lo, hi, meta):
+    """The containment split under every metadata answer, flat or
+    two-level. Over ``manifest``'s per-file envelopes, a file fully
+    CONTAINED in ``lo <= col < hi`` is answered by the ``meta``
+    aggregates (``meta(contained)`` builds them from the contained-row
+    condition) and never opened; a file that only intersects the range,
+    or carries a NULL envelope (it proves nothing), is a BOUNDARY file,
+    returned in one exact-predicate reader (None when there are none).
+    One manifest job, which also counts the manifest's files. Returns
+    (meta row, boundary reader, files_scanned, manifest_files)."""
+    mn, mx = F.col(f"min_{col}"), F.col(f"max_{col}")
+    contained = (
+        mn.isNotNull() & mx.isNotNull()
+        & (mn >= F.lit(lo)) & (mx < F.lit(hi))
+    )
+    agg = manifest.agg(
+        *meta(contained),
+        F.count(F.lit(1)).alias("__files"),
+        F.collect_list(
+            F.when(_may_intersect(col, lo, hi) & ~contained, F.col("file"))
+        ).alias("__boundary"),  # O(files), the planner's listing cost
+    ).first()
+    boundary = list(agg["__boundary"])
+    scan = (
+        spark.read.parquet(*boundary).where(_in_range(col, lo, hi))
+        if boundary
+        else None
+    )
+    return agg, scan, len(boundary), int(agg["__files"])
+
+
+def _count_split(
+    spark: SparkSession, manifest: DataFrame, col: str, lo, hi
+) -> tuple[int, int, int]:
+    """COUNT(*) over the range: a contained file contributes
+    ``rows - nulls_col`` from the manifest (a null never satisfies a
+    range predicate — still provable from metadata), the boundary
+    files are scanned. Returns (count, files_scanned, manifest_files)."""
+    agg, scan, scanned, files = _split(
+        spark,
+        manifest,
+        col,
+        lo,
+        hi,
+        lambda c: [
+            F.sum(F.when(c, F.col("rows") - F.col(f"nulls_{col}"))).alias(
+                "meta_rows"
+            )
+        ],
+    )
+    count = int(agg["meta_rows"] or 0)
+    if scan is not None:
+        count += scan.count()
+    return count, scanned, files
+
+
+def _minmax_split(
+    spark: SparkSession, manifest: DataFrame, col: str, lo, hi
+) -> tuple[object, object, int, int]:
+    """MIN/MAX over the range: a contained file's envelope IS its
+    contribution (parquet stats already exclude nulls), the boundary
+    files are scanned, and the extrema combine one candidate pair from
+    each side. Returns (min, max, files_scanned, manifest_files)."""
+    agg, scan, scanned, files = _split(
+        spark,
+        manifest,
+        col,
+        lo,
+        hi,
+        lambda c: [
+            F.min(F.when(c, F.col(f"min_{col}"))).alias("mn"),
+            F.max(F.when(c, F.col(f"max_{col}"))).alias("mx"),
+        ],
+    )
+    pairs = [(agg["mn"], agg["mx"])]
+    if scan is not None:
+        b = scan.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).first()
+        pairs.append((b["mn"], b["mx"]))
+    mns = [p[0] for p in pairs if p[0] is not None]
+    mxs = [p[1] for p in pairs if p[1] is not None]
+    return (
+        min(mns) if mns else None,
+        max(mxs) if mxs else None,
+        scanned,
+        files,
+    )
 
 
 def count_between(
@@ -339,50 +448,21 @@ def count_between(
     (intersecting but not contained) are scanned with the exact
     predicate. At scale this is the Iceberg/Delta metadata-only count: a
     15-day slice of a year-partitioned corpus reads two boundary files'
-    worth of data instead of 15 days' worth. A contained file's null
-    rows are subtracted, not scanned (a null never satisfies a range
-    predicate — still provable from metadata); a file with a NULL
-    envelope routes to the scan side — metadata answers only what it can
-    PROVE. Counts the INDEXED VIEW: refresh with ``update`` after
+    worth of data instead of 15 days' worth. A file with a NULL
+    envelope routes to the scan side — metadata answers only what it
+    can PROVE. Counts the INDEXED VIEW: refresh with ``update`` after
     appends. On a two-level-cutover table this routes through
     ``count_between_two_level``. Returns
     (count, files_scanned, files_total)."""
-    at = index_root if index_root is not None else root
-    if not os.path.isdir(os.path.join(at, STATS_DIR)) and os.path.isdir(
-        os.path.join(at, ROOT_MANIFEST)
-    ):
+    if _cut_over(root, index_root):
         cnt, scanned, files_total, _, _ = count_between_two_level(
             spark, root, col, lo, hi, index_root=index_root
         )
         return cnt, scanned, files_total
-    manifest = spark.read.parquet(os.path.join(at, STATS_DIR))
-    total = manifest.count()
-    known = F.col(f"min_{col}").isNotNull() & F.col(f"max_{col}").isNotNull()
-    contained = (
-        known
-        & (F.col(f"min_{col}") >= F.lit(lo))
-        & (F.col(f"max_{col}") < F.lit(hi))
+    manifest = spark.read.parquet(
+        os.path.join(_at(root, index_root), STATS_DIR)
     )
-    intersects = ~known | (
-        (F.col(f"min_{col}") < F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo))
-    )
-    agg = manifest.agg(
-        F.sum(
-            F.when(contained, F.col("rows") - F.col(f"nulls_{col}"))
-        ).alias("meta_rows"),
-        F.collect_list(
-            F.when(intersects & ~contained, F.col("file"))
-        ).alias("boundary"),  # O(files), the planner's listing cost
-    ).first()
-    count = int(agg["meta_rows"] or 0)
-    boundary = list(agg["boundary"])
-    if boundary:
-        count += (
-            spark.read.parquet(*boundary)
-            .where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
-            .count()
-        )
-    return count, len(boundary), total
+    return _count_split(spark, manifest, col, lo, hi)
 
 
 def minmax_between(
@@ -394,55 +474,21 @@ def minmax_between(
     index_root: str | None = None,
 ) -> tuple[object, object, int, int]:
     """MIN/MAX of ``col`` over ``lo <= col < hi`` with the same
-    containment split as ``count_between``: a CONTAINED file's envelope
-    IS its min/max contribution (parquet stats already exclude nulls),
-    so only boundary files are scanned with the exact predicate; the
-    final extrema combine one candidate pair from metadata with one from
-    the boundary scan. Serves the INDEXED VIEW (refresh with ``update``
-    after appends); on a two-level-cutover table this routes through
+    containment split as ``count_between``: only boundary files are
+    scanned. Serves the INDEXED VIEW (refresh with ``update`` after
+    appends); on a two-level-cutover table this routes through
     ``minmax_between_two_level``. Returns
     (min, max, files_scanned, files_total);
     (None, None, ...) when the range is empty."""
-    at = index_root if index_root is not None else root
-    if not os.path.isdir(os.path.join(at, STATS_DIR)) and os.path.isdir(
-        os.path.join(at, ROOT_MANIFEST)
-    ):
+    if _cut_over(root, index_root):
         mn, mx, scanned, files_total, _, _ = minmax_between_two_level(
             spark, root, col, lo, hi, index_root=index_root
         )
         return mn, mx, scanned, files_total
-    manifest = spark.read.parquet(os.path.join(at, STATS_DIR))
-    total = manifest.count()
-    known = F.col(f"min_{col}").isNotNull() & F.col(f"max_{col}").isNotNull()
-    contained = (
-        known
-        & (F.col(f"min_{col}") >= F.lit(lo))
-        & (F.col(f"max_{col}") < F.lit(hi))
+    manifest = spark.read.parquet(
+        os.path.join(_at(root, index_root), STATS_DIR)
     )
-    intersects = ~known | (
-        (F.col(f"min_{col}") < F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo))
-    )
-    agg = manifest.agg(
-        F.min(F.when(contained, F.col(f"min_{col}"))).alias("mn"),
-        F.max(F.when(contained, F.col(f"max_{col}"))).alias("mx"),
-        F.collect_list(
-            F.when(intersects & ~contained, F.col("file"))
-        ).alias("boundary"),
-    ).first()
-    mn, mx = agg["mn"], agg["mx"]
-    boundary = list(agg["boundary"])
-    if boundary:
-        b = (
-            spark.read.parquet(*boundary)
-            .where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
-            .agg(F.min(col).alias("mn"), F.max(col).alias("mx"))
-            .first()
-        )
-        cands_mn = [v for v in (mn, b["mn"]) if v is not None]
-        cands_mx = [v for v in (mx, b["mx"]) if v is not None]
-        mn = min(cands_mn) if cands_mn else None
-        mx = max(cands_mx) if cands_mx else None
-    return mn, mx, len(boundary), total
+    return _minmax_split(spark, manifest, col, lo, hi)
 
 
 def _keep_live(
@@ -450,11 +496,11 @@ def _keep_live(
 ) -> tuple[DataFrame, int]:
     """Manifest rows whose ``file`` is in ``live``, plus the count of
     rows that are NOT (the dead entries). Both sides normalize through
-    the same canonical form (``_norm_path`` / ``_norm_sql``), so the
+    the same canonical form (``norm_path`` / ``_norm_sql``), so the
     semi-join agrees on any filesystem — authority-bearing URIs
     included."""
     live_df = local_frame(
-        spark, [(_norm_path(f),) for f in live], "path string"
+        spark, [(norm_path(f),) for f in live], "path string"
     )
     keep = manifest.join(
         F.broadcast(live_df), _norm_sql("file") == F.col("path"), "left_semi"
@@ -472,20 +518,26 @@ def stale_file_count(
     gets silently stale (never wrong-for-indexed-rows) results. A
     monitoring job asserts this is 0, or a cautious reader calls
     ``update`` when it isn't. Costs the same O(files) listing a scan
-    plan pays. Counts ALL files as stale when no index exists."""
-    at = index_root if index_root is not None else root
-    live = {_norm_path(f) for f in spark.read.parquet(root).inputFiles()}
-    flat = os.path.join(at, STATS_DIR)
-    parts = os.path.join(at, PARTS_DIR)
+    plan pays. On a cut-over table a file is stale unless EVERY
+    two-level manifest covers it. Counts ALL files as stale when no
+    index exists."""
+    live = {norm_path(f) for f in spark.read.parquet(root).inputFiles()}
+    flat = os.path.join(_at(root, index_root), STATS_DIR)
     if os.path.isdir(flat):
-        src = spark.read.parquet(flat)
-    elif os.path.isdir(parts):
-        src = spark.read.parquet(parts)
+        srcs = [flat]
     else:
+        srcs = [p for p, _ in two_level_columns(root, index_root).values()]
+    if not srcs:
         return len(live)
-    known = {
-        _norm_path(r["file"]) for r in src.select("file").collect()
-    }
+    known = set.intersection(
+        *(
+            {
+                norm_path(r["file"])
+                for r in spark.read.parquet(s).select("file").collect()
+            }
+            for s in srcs
+        )
+    )
     return len(live - known)
 
 
@@ -497,22 +549,19 @@ def vacuum_manifest(
     selection is candidate-level, but they cost dead-path read attempts
     and manifest bloat). The live file list is the same O(files) driver
     listing every scan plan pays; the reconciliation is a semi-join on
-    paths normalized identically on both sides (``_norm_path`` in
+    paths normalized identically on both sides (``norm_path`` in
     Python, its SQL twin ``_norm_sql`` in the join — the two must never
     diverge or vacuum would drop live rows wholesale). Routes to
-    ``vacuum_two_level`` on a table that has cut over to the sharded
-    manifest (the indexed column is recovered from the shard schema).
-    Returns the number of rows dropped; 0 is a pure no-op (no swap)."""
-    at = index_root if index_root is not None else root
-    dest = os.path.join(at, STATS_DIR)
-    if not os.path.isdir(dest) and os.path.isdir(
-        os.path.join(at, ROOT_MANIFEST)
-    ):
-        shard_fields = spark.read.parquet(
-            os.path.join(at, PARTS_DIR)
-        ).columns
-        col = next(f[4:] for f in shard_fields if f.startswith("min_"))
-        return vacuum_two_level(spark, root, col, index_root=index_root)
+    ``vacuum_two_level`` for each manifest of a table that has cut over
+    to the sharded shape. Returns the number of rows dropped; 0 is a
+    pure no-op (no swap)."""
+    cut = _cut_over(root, index_root)
+    if cut:
+        return sum(
+            vacuum_two_level(spark, root, c, index_root=index_root)
+            for c in cut
+        )
+    dest = os.path.join(_at(root, index_root), STATS_DIR)
     manifest = spark.read.parquet(dest)
     keep, dropped = _keep_live(
         spark, manifest, spark.read.parquet(root).inputFiles()
@@ -537,7 +586,7 @@ def vacuum_bloom(
     Routes to ``vacuum_bloom_two_level`` on a table that has cut over
     to the sharded manifest. Returns rows dropped; 0 is a pure no-op
     (no swap)."""
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     dest = _bloom_dir(at, col)
     if not os.path.isdir(dest) and os.path.isdir(
         _bloom2_root_dir(at, col)
@@ -555,10 +604,46 @@ def vacuum_bloom(
     return dropped
 
 
+def manifest_rows(
+    spark: SparkSession, root: str, bloom_col: str | None = None
+) -> int:
+    """Rows of the flat stats manifest — or, with ``bloom_col``, of that
+    column's flat Bloom manifest: one per indexed file, so a vacuumed
+    manifest's count equals the live file count."""
+    dest = (
+        os.path.join(root, STATS_DIR)
+        if bloom_col is None
+        else _bloom_dir(root, bloom_col)
+    )
+    return spark.read.parquet(dest).count()
+
+
+def two_level_file_count(spark: SparkSession, root: str, col: str) -> int:
+    """Files the two-level stats manifest on ``col`` covers, as its
+    parent counts them (a vacuumed manifest's count equals the live
+    file count)."""
+    _, parent = _two_level_dirs(root, col)
+    return int(
+        spark.read.parquet(parent).agg(F.sum("n_files")).first()[0] or 0
+    )
+
+
+def bloom_indexed_files(spark: SparkSession, root: str, col: str) -> set[str]:
+    """The files ``col``'s flat Bloom manifest covers, as ``norm_path``
+    renders them — compare with a normalized listing to find the files
+    an ``update_bloom`` would hash."""
+    return {
+        norm_path(r["file"])
+        for r in spark.read.parquet(_bloom_dir(root, col))
+        .select("file")
+        .collect()
+    }
+
+
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:")
 
 
-def _norm_path(p: str) -> str:
+def norm_path(p: str) -> str:
     """Canonical path form for reconciliation joins: strip the URI
     scheme, collapse leading slashes to one. `input_file_name()` renders
     file:/// where `inputFiles()` renders file:/ — both reduce to the
@@ -571,7 +656,7 @@ def _norm_path(p: str) -> str:
 
 
 def _norm_sql(c) -> F.Column:
-    """SQL twin of ``_norm_path`` — the SAME two rewrites, so a
+    """SQL twin of ``norm_path`` — the SAME two rewrites, so a
     reconciliation that normalizes one side in Python and the other in
     SQL can never disagree on any URI scheme or authority."""
     col = F.col(c) if isinstance(c, str) else c
@@ -581,9 +666,25 @@ def _norm_sql(c) -> F.Column:
 
 
 # -- two-level manifest (manifest-of-manifests, the Iceberg shape) ----------
+#
+# One two-level manifest per indexed column, each under its own
+# ``_filestats2_<col>_{parts,root}`` dirs. A z-order/cell layout keeps
+# SEVERAL columns' per-file envelopes tight at once, and the matching
+# planning shape at millions of files is one manifest PER indexed column,
+# intersected at plan time (``select_files_multi``): each range predicate
+# pays its own KB parent read + touched shards — multi-dimensional
+# skipping whose planning cost never touches a flat O(files) manifest.
 
-PARTS_DIR = "_filestats_parts"
-ROOT_MANIFEST = "_filestats_root"
+
+def _two_level_dirs(
+    root: str, col: str, index_root: str | None = None
+) -> tuple[str, str]:
+    """(parts, parent) dirs of the two-level stats manifest on ``col``."""
+    at = _at(root, index_root)
+    return (
+        os.path.join(at, f"_filestats2_{col}_parts"),
+        os.path.join(at, f"_filestats2_{col}_root"),
+    )
 
 
 def build_two_level(
@@ -607,26 +708,8 @@ def build_two_level(
     the parent test is conservative by construction. Null-envelope
     files land in partition -1, whose parent row is always selected.
     ``index_root`` writes both levels under a sidecar prefix (see
-    ``build_two_level_columns``)."""
-    at = index_root if index_root is not None else root
-    return _build_two_level_at(
-        spark,
-        root,
-        col,
-        os.path.join(at, PARTS_DIR),
-        os.path.join(at, ROOT_MANIFEST),
-        n_parts,
-    )
-
-
-def _build_two_level_at(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    parts_dest: str,
-    root_dest: str,
-    n_parts: int,
-) -> tuple[str, str]:
+    ``build_two_level_columns``). Returns (parts_dir, parent_dir)."""
+    parts_dest, root_dest = _two_level_dirs(root, col, index_root)
     stats = _file_stats(spark.read.parquet(root), [col])
     b = stats.agg(
         F.min(f"min_{col}").alias("lo"), F.max(f"min_{col}").alias("hi")
@@ -817,33 +900,18 @@ def update_two_level(
     this repair a crashed run's files would stay in shards the parent
     envelope never covers and selection would silently miss their rows
     forever."""
-    at = index_root if index_root is not None else root
-    return _update_two_level_at(
-        spark,
-        root,
-        col,
-        os.path.join(at, PARTS_DIR),
-        os.path.join(at, ROOT_MANIFEST),
-    )
-
-
-def _update_two_level_at(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    parts_path: str,
-    parent_path: str,
-) -> int:
+    parts_path, parent_path = _two_level_dirs(root, col, index_root)
+    sweep_partitions(parts_path)  # a shard a crashed vacuum left aside
     parent = spark.read.parquet(parent_path)
     meta = parent.select("bucket_lo", "bucket_hi", "n_parts").first()
     shards = spark.read.parquet(parts_path)
     known = {
-        _norm_path(r["file"]) for r in shards.select("file").collect()
+        norm_path(r["file"]) for r in shards.select("file").collect()
     }  # O(files), maintenance-time only — planning never reads this flat
     new = [
         f
         for f in spark.read.parquet(root).inputFiles()
-        if _norm_path(f) not in known
+        if norm_path(f) not in known
     ]
     if not new:
         covered = parent.agg(F.sum("n_files")).first()[0] or 0
@@ -895,25 +963,11 @@ def vacuum_two_level(
     SUPERSET of its children (dropping children only shrinks the true
     union), so selection stays lossless, and the next
     ``update_two_level`` detects the shards/parent count disagreement
-    and repairs the parent. Returns shard rows dropped; 0 is a pure
-    no-op (no swap, no parent recommit)."""
-    at = index_root if index_root is not None else root
-    return _vacuum_two_level_at(
-        spark,
-        root,
-        col,
-        os.path.join(at, PARTS_DIR),
-        os.path.join(at, ROOT_MANIFEST),
-    )
-
-
-def _vacuum_two_level_at(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    parts_path: str,
-    parent_path: str,
-) -> int:
+    and repairs the parent; a crash inside a shard's first swap leaves
+    that shard aside, and the next maintenance call puts it back.
+    Returns shard rows dropped; 0 is a pure no-op (no swap, no parent
+    recommit)."""
+    parts_path, parent_path = _two_level_dirs(root, col, index_root)
     meta = spark.read.parquet(parent_path).select(
         "bucket_lo", "bucket_hi", "n_parts"
     ).first()
@@ -942,12 +996,14 @@ def _vacuum_shards(
     ``root``, rewrite ONLY those shard dirs without their dead rows
     (atomic swap each; a fully-dead shard rewrites to an empty
     schema-bearing dir so partition discovery keeps working), leave
-    every other shard byte-identical. Returns rows dropped; the caller
+    every other shard byte-identical. A shard a crashed rewrite left
+    aside is put back first. Returns rows dropped; the caller
     recommits its parent manifest."""
+    sweep_partitions(parts_path)
     live_df = local_frame(
         spark,
         [
-            (_norm_path(f),)
+            (norm_path(f),)
             for f in spark.read.parquet(root).inputFiles()
         ],
         "path string",
@@ -997,15 +1053,12 @@ def select_files_two_level(
     manifest shards. Returns (paths, files_total, parts_read,
     parts_total); files_total comes from the parent's counts, not a
     manifest scan."""
-    at = index_root if index_root is not None else root
-    return _select_two_level_at(
-        spark,
-        col,
-        lo,
-        hi,
-        os.path.join(at, PARTS_DIR),
-        os.path.join(at, ROOT_MANIFEST),
+    parts, parent = _two_level_dirs(root, col, index_root)
+    chosen, files_total, parts_total, _, _ = _parent_plan(
+        spark, parent, lo, hi
     )
+    paths = _shard_select(spark, col, lo, hi, parts, chosen)
+    return paths, files_total, len(chosen), parts_total
 
 
 def _hist_estimate(r, lo, hi) -> int:
@@ -1077,31 +1130,22 @@ def _parent_plan(
     )
 
 
+def _shards(spark: SparkSession, parts_dir: str, chosen: list) -> DataFrame:
+    """Phase 2 of a two-level consult reads ONLY the chosen shards."""
+    return spark.read.parquet(
+        *[os.path.join(parts_dir, f"part={p}") for p in chosen]
+    )
+
+
 def _shard_select(
     spark: SparkSession, col: str, lo, hi, parts_dir: str, chosen: list
 ) -> list[str]:
-    """Phase 2 of a two-level consult: read ONLY the chosen manifest
-    shards and apply the per-file envelope test."""
+    """Phase 2 of a two-level selection: the per-file envelope test over
+    the chosen manifest shards."""
     if not chosen:
         return []
-    dirs = [os.path.join(parts_dir, f"part={p}") for p in chosen]
-    shard = spark.read.parquet(*dirs)
-    keep = shard.where(
-        (F.col(f"min_{col}").isNull())
-        | (F.col(f"max_{col}").isNull())
-        | ((F.col(f"min_{col}") < F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo)))
-    )
+    keep = _shards(spark, parts_dir, chosen).where(_may_intersect(col, lo, hi))
     return [r["file"] for r in keep.select("file").collect()]
-
-
-def _select_two_level_at(
-    spark: SparkSession, col: str, lo, hi, parts_dir: str, parent_dir: str
-) -> tuple[list[str], int, int, int]:
-    chosen, files_total, parts_total, _, _ = _parent_plan(
-        spark, parent_dir, lo, hi
-    )
-    paths = _shard_select(spark, col, lo, hi, parts_dir, chosen)
-    return paths, files_total, len(chosen), parts_total
 
 
 def count_between_two_level(
@@ -1120,48 +1164,16 @@ def count_between_two_level(
     manifest shards + only the boundary data files; neither the flat
     manifest nor any interior file is ever read. Returns
     (count, files_scanned, files_total, parts_read, parts_total)."""
-    at = index_root if index_root is not None else root
-    parent = spark.read.parquet(os.path.join(at, ROOT_MANIFEST))
-    rows = parent.collect()  # O(partitions)
-    parts_total = len(rows)
-    files_total = sum(r["n_files"] for r in rows)
-    chosen = [
-        r["part"]
-        for r in rows
-        if r["unknown"] == 1
-        or (r["part_min"] is not None and r["part_min"] < hi and r["part_max"] >= lo)
-    ]
+    parts, parent = _two_level_dirs(root, col, index_root)
+    chosen, files_total, parts_total, _, _ = _parent_plan(
+        spark, parent, lo, hi
+    )
     if not chosen:
         return 0, 0, files_total, 0, parts_total
-    shard = spark.read.parquet(
-        *[os.path.join(at, PARTS_DIR, f"part={p}") for p in chosen]
+    cnt, scanned, _ = _count_split(
+        spark, _shards(spark, parts, chosen), col, lo, hi
     )
-    known = F.col(f"min_{col}").isNotNull() & F.col(f"max_{col}").isNotNull()
-    contained = (
-        known
-        & (F.col(f"min_{col}") >= F.lit(lo))
-        & (F.col(f"max_{col}") < F.lit(hi))
-    )
-    intersects = ~known | (
-        (F.col(f"min_{col}") < F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo))
-    )
-    agg = shard.agg(
-        F.sum(
-            F.when(contained, F.col("rows") - F.col(f"nulls_{col}"))
-        ).alias("meta_rows"),
-        F.collect_list(
-            F.when(intersects & ~contained, F.col("file"))
-        ).alias("boundary"),
-    ).first()
-    count = int(agg["meta_rows"] or 0)
-    boundary = list(agg["boundary"])
-    if boundary:
-        count += (
-            spark.read.parquet(*boundary)
-            .where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
-            .count()
-        )
-    return count, len(boundary), files_total, len(chosen), parts_total
+    return cnt, scanned, files_total, len(chosen), parts_total
 
 
 def minmax_between_two_level(
@@ -1180,52 +1192,16 @@ def minmax_between_two_level(
     read + touched shards + only boundary data files. Returns
     (min, max, files_scanned, files_total, parts_read, parts_total);
     (None, None, ...) when the range is empty."""
-    at = index_root if index_root is not None else root
-    parent = spark.read.parquet(os.path.join(at, ROOT_MANIFEST))
-    rows = parent.collect()  # O(partitions)
-    parts_total = len(rows)
-    files_total = sum(r["n_files"] for r in rows)
-    chosen = [
-        r["part"]
-        for r in rows
-        if r["unknown"] == 1
-        or (r["part_min"] is not None and r["part_min"] < hi and r["part_max"] >= lo)
-    ]
+    parts, parent = _two_level_dirs(root, col, index_root)
+    chosen, files_total, parts_total, _, _ = _parent_plan(
+        spark, parent, lo, hi
+    )
     if not chosen:
         return None, None, 0, files_total, 0, parts_total
-    shard = spark.read.parquet(
-        *[os.path.join(at, PARTS_DIR, f"part={p}") for p in chosen]
+    mn, mx, scanned, _ = _minmax_split(
+        spark, _shards(spark, parts, chosen), col, lo, hi
     )
-    known = F.col(f"min_{col}").isNotNull() & F.col(f"max_{col}").isNotNull()
-    contained = (
-        known
-        & (F.col(f"min_{col}") >= F.lit(lo))
-        & (F.col(f"max_{col}") < F.lit(hi))
-    )
-    intersects = ~known | (
-        (F.col(f"min_{col}") < F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo))
-    )
-    agg = shard.agg(
-        F.min(F.when(contained, F.col(f"min_{col}"))).alias("mn"),
-        F.max(F.when(contained, F.col(f"max_{col}"))).alias("mx"),
-        F.collect_list(
-            F.when(intersects & ~contained, F.col("file"))
-        ).alias("boundary"),
-    ).first()
-    mn, mx = agg["mn"], agg["mx"]
-    boundary = list(agg["boundary"])
-    if boundary:
-        b = (
-            spark.read.parquet(*boundary)
-            .where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
-            .agg(F.min(col).alias("mn"), F.max(col).alias("mx"))
-            .first()
-        )
-        cands_mn = [v for v in (mn, b["mn"]) if v is not None]
-        cands_mx = [v for v in (mx, b["mx"]) if v is not None]
-        mn = min(cands_mn) if cands_mn else None
-        mx = max(cands_mx) if cands_mx else None
-    return mn, mx, len(boundary), files_total, len(chosen), parts_total
+    return mn, mx, scanned, files_total, len(chosen), parts_total
 
 
 def read_between_two_level(
@@ -1243,29 +1219,8 @@ def read_between_two_level(
     )
     if not paths:
         return _empty_like(spark, root), 0, files_total, parts_read, parts_total
-    df = spark.read.parquet(*paths).where(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi))
-    )
+    df = spark.read.parquet(*paths).where(_in_range(col, lo, hi))
     return df, len(paths), files_total, parts_read, parts_total
-
-
-# -- per-COLUMN two-level manifests (multi-dimensional conjunctions) --------
-#
-# The fixed-name two-level manifest serves ONE column. A z-order/cell
-# layout keeps SEVERAL columns' per-file envelopes tight at once, and the
-# matching planning shape at millions of files is one two-level manifest
-# PER indexed column, intersected at plan time: each range predicate pays
-# its own KB parent read + touched shards, and the candidate set is the
-# intersection of the per-column selections — multi-dimensional skipping
-# whose planning cost never touches a flat O(files) manifest.
-
-
-def _col2_parts_dir(root: str, col: str) -> str:
-    return os.path.join(root, f"_filestats2_{col}_parts")
-
-
-def _col2_root_dir(root: str, col: str) -> str:
-    return os.path.join(root, f"_filestats2_{col}_root")
 
 
 def build_two_level_columns(
@@ -1275,10 +1230,8 @@ def build_two_level_columns(
     n_parts: int = 16,
     index_root: str | None = None,
 ) -> dict[str, tuple[str, str]]:
-    """One two-level manifest per column, each under its own
-    ``_filestats2_<col>_{parts,root}`` dirs (the fixed-name single-index
-    dirs stay untouched — both shapes can coexist). One build scan per
-    column, column-pruned to it.
+    """One two-level manifest per column (``build_two_level`` each): one
+    build scan per column, column-pruned to it.
 
     ``index_root`` detaches the index LOCATION from the data: manifests
     are written under it instead of ``root`` while their ``file``
@@ -1289,53 +1242,31 @@ def build_two_level_columns(
     `read_where_multi`, the update/vacuum sweeps) takes the same
     parameter; a sidecar index is otherwise indistinguishable from an
     embedded one."""
-    at = index_root if index_root is not None else root
     return {
-        c: _build_two_level_at(
-            spark,
-            root,
-            c,
-            _col2_parts_dir(at, c),
-            _col2_root_dir(at, c),
-            n_parts,
-        )
+        c: build_two_level(spark, root, c, n_parts, index_root=index_root)
         for c in cols
     }
 
 
 def two_level_columns(
-    spark: SparkSession, root: str, index_root: str | None = None
+    root: str, index_root: str | None = None
 ) -> dict[str, tuple[str, str]]:
-    """Discover every two-level manifest on ``root`` (or the sidecar
-    ``index_root`` when the index lives beside a read-only table): the
-    per-column ``_filestats2_*`` family plus the legacy fixed-name
-    single index (its column recovered from the shard schema).
-    Directory listing only — no data read."""
-    at = index_root if index_root is not None else root
-    out: dict[str, tuple[str, str]] = {}
+    """Discover every two-level stats manifest on ``root`` (or the
+    sidecar ``index_root`` when the index lives beside a read-only
+    table): col -> (parts_dir, parent_dir). Directory listing only — no
+    data read."""
+    at = _at(root, index_root)
     try:
         entries = os.listdir(at)
     except OSError:
-        return out
-    for d in entries:
-        if d.startswith("_filestats2_") and d.endswith("_parts"):
-            col = d[len("_filestats2_") : -len("_parts")]
-            parent = _col2_root_dir(at, col)
+        return {}
+    out: dict[str, tuple[str, str]] = {}
+    for d in sorted(entries):
+        m = _STATS2_RE.fullmatch(d)
+        if m is not None:
+            parts, parent = _two_level_dirs(root, m.group(1), index_root)
             if os.path.isdir(parent):
-                out[col] = (os.path.join(at, d), parent)
-    legacy_parts = os.path.join(at, PARTS_DIR)
-    legacy_parent = os.path.join(at, ROOT_MANIFEST)
-    if os.path.isdir(legacy_parts) and os.path.isdir(legacy_parent):
-        col = next(
-            (
-                f[4:]
-                for f in spark.read.parquet(legacy_parts).columns
-                if f.startswith("min_")
-            ),
-            None,
-        )
-        if col is not None and col not in out:
-            out[col] = (legacy_parts, legacy_parent)
+                out[m.group(1)] = (parts, parent)
     return out
 
 
@@ -1345,10 +1276,8 @@ def update_two_level_columns(
     """Incremental refresh of EVERY discovered two-level manifest after
     appends — per column, O(new files) each. Returns col -> new files."""
     return {
-        c: _update_two_level_at(spark, root, c, parts, parent)
-        for c, (parts, parent) in two_level_columns(
-            spark, root, index_root
-        ).items()
+        c: update_two_level(spark, root, c, index_root=index_root)
+        for c in two_level_columns(root, index_root)
     }
 
 
@@ -1358,10 +1287,8 @@ def vacuum_two_level_columns(
     """Per-shard reconciliation of EVERY discovered two-level manifest.
     Returns col -> shard rows dropped."""
     return {
-        c: _vacuum_two_level_at(spark, root, c, parts, parent)
-        for c, (parts, parent) in two_level_columns(
-            spark, root, index_root
-        ).items()
+        c: vacuum_two_level(spark, root, c, index_root=index_root)
+        for c in two_level_columns(root, index_root)
     }
 
 
@@ -1407,7 +1334,7 @@ def select_files_multi(
     (actual per-col selections, for consults that ran), and
     ``shards_skipped`` (count of parent-chosen shards never read
     thanks to the empty-intersection early exit)."""
-    indexes = two_level_columns(spark, root, index_root)
+    indexes = two_level_columns(root, index_root)
     consults = []
     files_total = 0
     for col, lo, hi in preds:
@@ -1435,7 +1362,7 @@ def select_files_multi(
             continue
         paths = _shard_select(spark, col, lo, hi, parts, chosen)
         selected[col] = len(paths)
-        cur = {_norm_path(p): p for p in paths}
+        cur = {norm_path(p): p for p in paths}
         sel = cur if sel is None else {
             n: p for n, p in sel.items() if n in cur
         }
@@ -1464,7 +1391,7 @@ def read_where_multi(
         return _empty_like(spark, root), 0, total
     df = spark.read.parquet(*paths)
     for col, lo, hi in preds:
-        df = df.where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
+        df = df.where(_in_range(col, lo, hi))
     return df, len(paths), total
 
 
@@ -1505,7 +1432,6 @@ def build_bloom(
     col: str,
     m: int = 1 << 17,
     k: int = 3,
-    two_level_threshold: int | None = None,
     index_root: str | None = None,
 ) -> str:
     """Commit a per-file Bloom manifest for ``col``: each file's keys set
@@ -1515,20 +1441,16 @@ def build_bloom(
     and sparse files pay only their touched words. The whole build is one
     column-pruned scan + two hash aggregates; nothing returns to the
     driver. m, k ride along as manifest columns so lookups can never
-    probe with mismatched parameters. Past ``two_level_threshold`` files
-    (default ``AUTO_TWO_LEVEL_FILES``) the build cuts over to the
+    probe with mismatched parameters. Past ``AUTO_TWO_LEVEL_FILES``
+    files the build cuts over to the
     SHARDED Bloom manifest — every point read would otherwise scan all
     files' word maps — and ``point_read``/``bloom_select_files`` route
     through the shards transparently."""
     if m % 64:
         raise ValueError(f"m must be a multiple of 64, got {m}")
-    threshold = (
-        AUTO_TWO_LEVEL_FILES if two_level_threshold is None
-        else two_level_threshold
-    )
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     reader = spark.read.parquet(root)
-    if len(reader.inputFiles()) > threshold:
+    if len(reader.inputFiles()) > AUTO_TWO_LEVEL_FILES:
         _, parent = build_bloom_two_level(
             spark, root, col, m=m, k=k, index_root=index_root
         )
@@ -1564,7 +1486,6 @@ def update_bloom(
     spark: SparkSession,
     root: str,
     col: str,
-    two_level_threshold: int | None = None,
     index_root: str | None = None,
 ) -> int:
     """Incrementally maintain the Bloom manifest after appends: hash ONLY
@@ -1573,14 +1494,9 @@ def update_bloom(
     so a refresh can never probe-skew the index), union, swap. Returns
     the number of newly indexed files; 0 is a pure no-op. Delegates to
     ``update_bloom_two_level`` on a table that has cut over to the
-    sharded manifest; a flat manifest grown past ``two_level_threshold``
-    files (default ``AUTO_TWO_LEVEL_FILES``) upgrades after the
-    refresh."""
-    threshold = (
-        AUTO_TWO_LEVEL_FILES if two_level_threshold is None
-        else two_level_threshold
-    )
-    at = index_root if index_root is not None else root
+    sharded manifest; a flat manifest grown past
+    ``AUTO_TWO_LEVEL_FILES`` files upgrades after the refresh."""
+    at = _at(root, index_root)
     dest = _bloom_dir(at, col)
     if not os.path.isdir(dest) and os.path.isdir(
         _bloom2_root_dir(at, col)
@@ -1591,16 +1507,16 @@ def update_bloom(
     manifest = spark.read.parquet(dest)
     m, k = manifest.select("m", "k").first()
     known = {
-        _norm_path(r["file"]) for r in manifest.select("file").collect()
+        norm_path(r["file"]) for r in manifest.select("file").collect()
     }  # O(files)
     live = spark.read.parquet(root).inputFiles()
-    new = [f for f in live if _norm_path(f) not in known]
+    new = [f for f in live if norm_path(f) not in known]
     if new:
         fresh = _bloom_manifest(
             spark.read.parquet(*new), col, int(m), int(k)
         )
         commit_swap(manifest.unionByName(fresh), dest)
-    if len(live) > threshold:
+    if len(live) > AUTO_TWO_LEVEL_FILES:
         # grown past flat viability: upgrade so the NEXT probe reads one
         # shard dir instead of every file's word map
         build_bloom_two_level(
@@ -1624,7 +1540,7 @@ def bloom_select_files(
     (the bucket-routing idiom of `IncrementalMV.lookup`). On a table that
     has cut over to the sharded Bloom manifest, routes through the
     one-shard probe transparently."""
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     if not os.path.isdir(_bloom_dir(at, col)) and os.path.isdir(
         _bloom2_root_dir(at, col)
     ):
@@ -1806,7 +1722,7 @@ def build_bloom_two_level(
     df = spark.read.parquet(root)
     total_files = len(df.inputFiles())
     rows = _bloom2_shard_rows(df, col, m, k, n_shards)
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     parts_dest = _bloom2_parts_dir(at, col)
     commit_swap(rows, parts_dest, partition_by=["shard"])
     parent_dest = _bloom2_root_dir(at, col)
@@ -1833,21 +1749,22 @@ def update_bloom_two_level(
     crashed between append and parent swap) recommits the parent, since
     recovery derives ``known`` from the shards. Returns newly indexed
     files; 0 is a pure no-op."""
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     parent_path = _bloom2_root_dir(at, col)
     parts_path = _bloom2_parts_dir(at, col)
+    sweep_partitions(parts_path)  # a shard a crashed vacuum left aside
     parent = spark.read.parquet(parent_path)
     meta = parent.select("m", "k", "n_shards").first()
     m, k, n_shards = int(meta["m"]), int(meta["k"]), int(meta["n_shards"])
     shards = spark.read.parquet(parts_path)
     known = {
-        _norm_path(r["file"])
+        norm_path(r["file"])
         for r in shards.select("file").distinct().collect()
     }  # O(files), maintenance-time only
     new = [
         f
         for f in spark.read.parquet(root).inputFiles()
-        if _norm_path(f) not in known
+        if norm_path(f) not in known
     ]
     if not new:
         covered = parent.select("total_files").first()[0] or 0
@@ -1879,7 +1796,7 @@ def vacuum_bloom_two_level(
     parent recommit leaves stale counts the next update repairs, and
     dead rows are never a correctness issue (candidate-level). Returns
     rows dropped; 0 is a pure no-op."""
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     parent_path = _bloom2_root_dir(at, col)
     parts_path = _bloom2_parts_dir(at, col)
     parent = spark.read.parquet(parent_path)
@@ -1928,7 +1845,7 @@ def bloom2_select_files(
     column type, so probe and index can never skew. Returns
     (paths, total_files, shards_read, shards_total). ``index_root``
     probes a sidecar index (see ``build_two_level_columns``)."""
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     parent_rows = spark.read.parquet(_bloom2_root_dir(at, col)).collect()
     if not parent_rows:
         # an empty table, or every file vacuumed away: nothing can match
@@ -2015,7 +1932,7 @@ def point_select_files_multi(
     ``selected_files`` / ``shards_skipped`` for audit."""
     import math
 
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     schema = spark.read.parquet(root).schema
     consults = []
     files_total = 0
@@ -2088,7 +2005,7 @@ def point_select_files_multi(
             .collect()
         ]
         selected[col] = len(paths)
-        cur = {_norm_path(p): p for p in paths}
+        cur = {norm_path(p): p for p in paths}
         sel = cur if sel is None else {
             n: p for n, p in sel.items() if n in cur
         }
@@ -2151,10 +2068,10 @@ def select_files_mixed(
     ``shards_skipped``."""
     import math
 
-    at = index_root if index_root is not None else root
+    at = _at(root, index_root)
     consults = []  # (est, key, bound, runner)
     files_total = 0
-    indexes = two_level_columns(spark, root, index_root)
+    indexes = two_level_columns(root, index_root)
     for col, lo, hi in range_preds:
         if col not in indexes:
             continue
@@ -2236,7 +2153,7 @@ def select_files_mixed(
             continue
         paths = run()
         selected[key] = len(paths)
-        cur = {_norm_path(p): p for p in paths}
+        cur = {norm_path(p): p for p in paths}
         sel = cur if sel is None else {
             n: p for n, p in sel.items() if n in cur
         }
@@ -2273,7 +2190,7 @@ def read_where_mixed(
         return _empty_like(spark, root), 0, total
     df = spark.read.parquet(*paths)
     for col, lo, hi in range_preds:
-        df = df.where((F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi)))
+        df = df.where(_in_range(col, lo, hi))
     for col, value in eq_preds:
         df = df.where(F.col(col) == F.lit(value))
     return df, len(paths), total

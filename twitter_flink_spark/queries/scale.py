@@ -2416,9 +2416,11 @@ def _ensure_compacted_vacuumed_layout(
         )
         # the staging marker does not exist yet (stage_once writes it
         # after finalize returns, into the post-swap dest); the
-        # finalizing breadcrumb moves across first, so a concurrent
-        # stager keeps awaiting this live finalize
-        swap_table_dir(tmp, dest, [FINALIZING, skipping.STATS_DIR])
+        # finalizing breadcrumb is carried across with the manifests, so
+        # a concurrent stager keeps awaiting this live finalize
+        swap_table_dir(
+            tmp, dest, [FINALIZING, *skipping.manifest_dirs(dest)]
+        )
         return {
             "n_new": skipping.update(spark, dest, ["ts"]),
             "n_dead": skipping.vacuum_manifest(spark, dest),
@@ -2459,14 +2461,11 @@ def filestats_vacuum_after_compact(
     still bites), and the oracle over the original table proves the
     whole rewrite lost nothing."""
     import datetime
-    import os
 
     from twitter_flink_spark.operators import skipping
 
     dest, n_new, n_dead = _ensure_compacted_vacuumed_layout(spark, sf_dir)
-    manifest_rows = spark.read.parquet(
-        os.path.join(dest, skipping.STATS_DIR)
-    ).count()
+    manifest_rows = skipping.manifest_rows(spark, dest)
     live_files = len(spark.read.parquet(dest).inputFiles())
     reconciled = (
         n_new == 2 and n_dead == 8 and manifest_rows == live_files == 2
@@ -2521,16 +2520,9 @@ def _ensure_two_era_bloom_orders(
     # exist, so the FIRST consumer (in any process) sees n_new > 0 and
     # every later one sees the no-op — the era-layout convention.
     dest, _ = stage_once("bloomera2", sf_dir, _build, _finalize)
-    known = {
-        skipping._norm_path(r["file"])
-        for r in spark.read.parquet(
-            skipping._bloom_dir(dest, "o_orderkey")
-        )
-        .select("file")
-        .collect()
-    }
+    known = skipping.bloom_indexed_files(spark, dest, "o_orderkey")
     live = {
-        skipping._norm_path(f)
+        skipping.norm_path(f)
         for f in spark.read.parquet(dest).inputFiles()
     }
     return dest, bool(live - known)
@@ -2703,7 +2695,7 @@ def _ensure_two_level_layout(spark: SparkSession, sf_dir: str) -> str:
         # manifests store absolute file paths: build at the final path
         skipping.build_two_level(spark, dest, "ts", n_parts=8)
 
-    dest, _ = stage_once("twolayout64", sf_dir, _build, _finalize)
+    dest, _ = stage_once("twolayout64c", sf_dir, _build, _finalize)
     return dest
 
 
@@ -2849,7 +2841,7 @@ def _ensure_two_level_era_layout(
         skipping.build_two_level(spark, dest, "ts", n_parts=8)
         _write(F.col("ts") >= F.lit(split[0]), "append", dest)
 
-    dest, _ = stage_once("twolevelera", sf_dir, _build, _finalize)
+    dest, _ = stage_once("twolevelera2", sf_dir, _build, _finalize)
     return dest, skipping.stale_file_count(spark, dest) > 0
 
 
@@ -2949,9 +2941,7 @@ def _ensure_twolevel_vacuumed_layout(
             .parquet(tmp)
         )
         swap_table_dir(
-            tmp,
-            dest,
-            [FINALIZING, skipping.PARTS_DIR, skipping.ROOT_MANIFEST],
+            tmp, dest, [FINALIZING, *skipping.manifest_dirs(dest)]
         )
         return {
             "n_new": skipping.update_two_level(spark, dest, "ts"),
@@ -2962,7 +2952,7 @@ def _ensure_twolevel_vacuumed_layout(
     # bench/driver process re-ran the ~10 s lifecycle; the stage_once
     # ledger replays (n_new, n_dead) instead — the r12
     # twolevel_incremental_update precedent)
-    dest, meta = stage_once("vactwo", sf_dir, _build, _finalize)
+    dest, meta = stage_once("vactwo2", sf_dir, _build, _finalize)
     return dest, int(meta["n_new"]), int(meta["n_dead"])
 
 
@@ -2997,20 +2987,13 @@ def twolevel_vacuum_after_compact(
     slice serves from the vacuumed index; the oracle over the original
     table proves the whole rewrite lost nothing."""
     import datetime
-    import os
 
     from twitter_flink_spark.operators import skipping
 
     dest, n_new, n_dead = _ensure_twolevel_vacuumed_layout(spark, sf_dir)
-    parent = spark.read.parquet(
-        os.path.join(dest, skipping.ROOT_MANIFEST)
-    ).collect()
+    indexed = skipping.two_level_file_count(spark, dest, "ts")
     live = len(spark.read.parquet(dest).inputFiles())
-    reconciled = (
-        n_new == 4
-        and n_dead == 16
-        and sum(r["n_files"] for r in parent) == live == 4
-    )
+    reconciled = n_new == 4 and n_dead == 16 and indexed == live == 4
     t0 = spark.read.parquet(dest).agg(F.min("ts")).first()[0]  # 1-row
     lo = t0 + datetime.timedelta(days=3)
     hi = t0 + datetime.timedelta(days=10)
@@ -3045,7 +3028,6 @@ def _ensure_bloom_vacuumed_layout(
     point reads stopped pruning. At 100 TB this is a real operating
     rule: size Bloom m for the file size your compaction TARGETS, not
     the splinter files you ingest."""
-    import os
     import shutil
 
     from twitter_flink_spark.operators import skipping
@@ -3065,12 +3047,7 @@ def _ensure_bloom_vacuumed_layout(
             "overwrite"
         ).parquet(tmp)
         swap_table_dir(
-            tmp,
-            dest,
-            [
-                FINALIZING,
-                os.path.basename(skipping._bloom_dir(dest, "o_orderkey")),
-            ],
+            tmp, dest, [FINALIZING, *skipping.manifest_dirs(dest)]
         )
         return {
             "n_new": skipping.update_bloom(spark, dest, "o_orderkey"),
@@ -3109,9 +3086,9 @@ def filebloom_vacuum_after_compact(
     from twitter_flink_spark.operators import skipping
 
     dest, n_new, n_dead = _ensure_bloom_vacuumed_layout(spark, sf_dir)
-    manifest_rows = spark.read.parquet(
-        skipping._bloom_dir(dest, "o_orderkey")
-    ).count()
+    manifest_rows = skipping.manifest_rows(
+        spark, dest, bloom_col="o_orderkey"
+    )
     live = len(spark.read.parquet(dest).inputFiles())
     reconciled = (
         n_new == 2 and n_dead == 8 and manifest_rows == live == 2
@@ -3295,9 +3272,7 @@ def _ensure_nightly_maintenance_layout(
             order_col="ts",
         )
         swap_table_dir(
-            tmp,
-            dest,
-            [FINALIZING, skipping.STATS_DIR, "_filebloom_user_id"],
+            tmp, dest, [FINALIZING, *skipping.manifest_dirs(dest)]
         )
         files_after = len(spark.read.parquet(dest).inputFiles())
         return {
@@ -3396,9 +3371,9 @@ def nightly_maintenance_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_twolevel_conjunction_layout(
     spark: SparkSession, sf_dir: str
 ) -> str:
-    """events as 8 ts-clustered files CUT OVER to the two-level manifest
-    (threshold 4 < 8 files), i.e. the flat manifest is gone — the state
-    a million-file table lives in permanently."""
+    """events as 8 ts-clustered files indexed by the two-level manifest
+    on ts with no flat manifest — the state a million-file table lives
+    in permanently once ``build`` cut it over."""
     from twitter_flink_spark.operators import skipping
 
     def _build(p: str) -> None:
@@ -3411,12 +3386,10 @@ def _ensure_twolevel_conjunction_layout(
         )
 
     dest, _ = stage_once(
-        "conjstats",
+        "conjstats2",
         sf_dir,
         _build,
-        finalize=lambda d: skipping.build(
-            spark, d, ["ts"], two_level_threshold=4
-        )
+        finalize=lambda d: skipping.build_two_level(spark, d, "ts")
         and None,
     )
     return dest
@@ -3768,7 +3741,6 @@ def sidecar_index_readonly_serving(
     serving must lose nothing. At 100 TB this is how a serving team
     indexes a lake path it has read-only credentials for."""
     import datetime
-    import os
 
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.queries.streaming import (
@@ -3789,10 +3761,7 @@ def sidecar_index_readonly_serving(
     # the tag names the base's build: a staged sidecar's manifests
     # reference the files of the build they were indexed against
     idx, _ = stage_once(f"sidecaridx3-{build_id(dest)}", sf_dir, _build)
-    data_untouched = not any(
-        d.startswith(("_filestats", "_filebloom"))
-        for d in os.listdir(dest)
-    )
+    data_untouched = not skipping.manifest_dirs(dest)
     b = (
         spark.read.parquet(dest)
         .agg(
@@ -3814,8 +3783,8 @@ def sidecar_index_readonly_serving(
     point_cnt = point.where(F.col("user_id") == uid).count()
     sidecar_only = (
         data_untouched
-        and skipping.two_level_columns(spark, dest) == {}
-        and set(skipping.two_level_columns(spark, dest, idx)) == {"ts"}
+        and skipping.two_level_columns(dest) == {}
+        and set(skipping.two_level_columns(dest, idx)) == {"ts"}
     )
     return sliced.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
@@ -4264,14 +4233,14 @@ def compaction_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from twitter_flink_spark.operators.compaction import compact_table
-    from twitter_flink_spark.operators.skipping import _norm_path
+    from twitter_flink_spark.operators.skipping import norm_path
 
     staged = _ensure_smallfiles_table(spark, sf_dir)
     work = os.path.join(scratch_dir("compact"), "table")
     shutil.copytree(os.path.realpath(staged), work)
 
     files = [
-        _norm_path(f) for f in spark.read.parquet(work).inputFiles()
+        norm_path(f) for f in spark.read.parquet(work).inputFiles()
     ]
     sizes = {p: os.stat(p).st_size for p in files}
     big = max(sizes, key=lambda p: sizes[p])
@@ -4288,7 +4257,7 @@ def compaction_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.append(a)
     b2, a2, g2 = compact_table(spark, work, target)  # one-more: no-op
     after_files = {
-        os.path.basename(_norm_path(f)): _norm_path(f)
+        os.path.basename(norm_path(f)): norm_path(f)
         for f in spark.read.parquet(work).inputFiles()
     }
     reduced = counts[-1] < n_initial and total_groups >= 1 and counts[
@@ -4690,7 +4659,7 @@ def zorder_incremental_recluster(
         24,
     ).drop("ts_us").write.mode("overwrite").parquet(work)
     era1_paths = {
-        skipping._norm_path(f)
+        skipping.norm_path(f)
         for f in spark.read.parquet(work).inputFiles()
     }  # captured BEFORE the append: era 2 = live minus this set
     skipping.build(spark, work, ["user_id", "ts"])
@@ -4710,7 +4679,7 @@ def zorder_incremental_recluster(
     # recluster ONLY the appended files: read them, Z-write, swap via a
     # new generation hardlinking the untouched era-1 tiles
     live = sorted(
-        skipping._norm_path(f)
+        skipping.norm_path(f)
         for f in spark.read.parquet(work).inputFiles()
     )
     appended = [p for p in live if p not in era1_paths]
@@ -4740,7 +4709,7 @@ def zorder_incremental_recluster(
     skipping.build(spark, work, ["user_id", "ts"])  # fresh manifest
     files_after, total_after = skipping.select_files(spark, work, preds)
     after_live = {
-        os.path.basename(skipping._norm_path(f)): skipping._norm_path(f)
+        os.path.basename(skipping.norm_path(f)): skipping.norm_path(f)
         for f in spark.read.parquet(work).inputFiles()
     }
     local_ok = all(

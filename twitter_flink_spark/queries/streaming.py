@@ -1955,14 +1955,8 @@ def _drained_sink_indexes(
 
     def sink(batch_df, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(dest)
-        if os.path.isdir(os.path.join(dest, skipping.STATS_DIR)):
-            flat_ledger.append(skipping.update(spark, dest, ["ts"]))
-        else:
-            skipping.build(spark, dest, ["ts"])
-            flat_ledger.append(
-                len(spark.read.parquet(dest).inputFiles())
-            )
-        if skipping.two_level_columns(spark, dest):
+        flat_ledger.append(skipping.update(spark, dest, ["ts"]))
+        if skipping.two_level_columns(dest):
             col_ledger.append(
                 skipping.update_two_level_columns(spark, dest)
             )
@@ -2256,13 +2250,7 @@ def streaming_quarantine_repair(
             for o in (q_obs, pre, post)
             for k, v in o.get.items()
         }
-        if os.path.isdir(os.path.join(good, skipping.STATS_DIR)):
-            led["n_new_files"] = skipping.update(spark, good, ["ts"])
-        else:
-            skipping.build(spark, good, ["ts"])
-            led["n_new_files"] = len(
-                spark.read.parquet(good).inputFiles()
-            )
+        led["n_new_files"] = skipping.update(spark, good, ["ts"])
         led["stale_after"] = skipping.stale_file_count(spark, good)
         write_json(mark, led)  # ledger commit = the batch's commit point
         batches.append(led)

@@ -45,15 +45,30 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: the dir holding the ``twitter_flink_spark`` package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-created session (e.g. the
     driver's). Never raises: confs that cannot be set at runtime are skipped.
+
+    Also puts ``PACKAGE_ROOT`` first on the Python workers' path:
+    pandas UDFs, Python data sources and ``applyInPandasWithState``
+    functions import the package on the workers, which start in the
+    driver's cwd, not where the driver found the package. Every Python
+    function carries ``sc.environment`` to its workers, so the entry
+    added here reaches every worker started from now on.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
         except Exception:
             pass
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
     return spark
 
 
